@@ -7,14 +7,17 @@ means ``get`` blocks FOREVER even though the action completed, turning
 a zero-cost counter into a pipeline hang. Every engine read of
 observed metrics goes through :func:`get_metrics`, which bounds the
 wait and either degrades to a caller-supplied explicit aggregate (one
-extra job — see ``operators/dedup.connected_components``) or raises a
-loud ``TimeoutError`` instead of hanging.
+extra job — see :func:`observed_checkpoint`) or raises a loud
+``TimeoutError`` instead of hanging.
 """
 
 from __future__ import annotations
 
 import threading
+import uuid
 from typing import Any, Callable
+
+from pyspark.sql import Column, DataFrame, Observation
 
 #: Default bound on waiting for listener-bus delivery. Metrics for an
 #: already-finished action normally arrive within milliseconds; 30 s
@@ -72,4 +75,29 @@ def get_metrics(
         f"Observation metrics not delivered within {timeout}s (async "
         "SQL listener event lost?) — the action may have completed; "
         "re-run or recompute the aggregate explicitly"
+    )
+
+
+def observed_checkpoint(
+    df: DataFrame, name: str, **aggs: Column
+) -> tuple[DataFrame, dict[str, Any]]:
+    """Eagerly ``localCheckpoint`` ``df``; return it and the ``aggs``
+    metrics (name → aggregate column) over its rows."""
+    # the metrics ride the SAME job that materializes the checkpoint
+    # (``observe`` + eager ``localCheckpoint`` — verified to fire the
+    # CollectMetrics listener), so a loop round costs ONE job, not a
+    # checkpoint job plus a separate scalar-aggregate job. Listener
+    # events match on the observation name: the suffix keeps two
+    # concurrent loops in one session from cross-talking.
+    cols = [c.alias(k) for k, c in aggs.items()]
+    obs = Observation(f"{name}_{uuid.uuid4().hex[:8]}")
+    ck = df.observe(obs, *cols).localCheckpoint(eager=True)
+    # The checkpoint job has ALREADY run, so metrics normally arrive
+    # within milliseconds; a lost listener event degrades to ONE
+    # explicit aggregate over the materialized checkpoint (no
+    # recompute) instead of hanging the loop.
+    return ck, get_metrics(
+        obs,
+        timeout=DEFAULT_TIMEOUT_S,
+        fallback=lambda: ck.agg(*cols).first().asDict(),
     )

@@ -219,6 +219,7 @@ def lloyd_train(
     rows = _collect_centroids(init_centroids)
     last_rows = rows
     rounds_run = 0
+    # not fixpoint(): driver-literal state has nothing to cache, checkpoint or release
     for _ in range(iterations):
         # two steps: a generator (posexplode) and the argmin struct
         # access cannot share one select — the Generate analysis path

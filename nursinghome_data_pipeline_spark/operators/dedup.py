@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .fixpoint import both_directions, fixpoint
+
 
 def exact_dedup(df: DataFrame, keys: list[str]) -> DataFrame:
     """Keep one arbitrary row per key (pandas drop_duplicates analog)."""
@@ -52,11 +54,6 @@ def _shingles(text: Column | str, k: int = 3) -> Column:
 
 
 _MAX_LONG = (1 << 63) - 1
-
-# Bound on waiting for ``Observation`` metrics (async SQL listener bus
-# — can drop events under load); past it, connected_components falls
-# back to an explicit aggregate over the materialized checkpoint.
-_OBS_TIMEOUT_S = 30.0
 
 
 def _perm_constants(n: int, seed: int = 0x9E3779B97F4A7C15) -> list[int]:
@@ -887,12 +884,12 @@ def connected_components(
             max_iter=max_iter,
         )
         return labels
-    # Symmetrize in ONE pass: exploding each pair into its two
-    # directed rows runs the (possibly expensive — LSH/Jaccard join)
-    # edge subtree exactly once. The former union-of-two-references
-    # needed its own eager checkpoint of the raw pairs first (two
-    # barriers, two scans); map-side explode needs neither. Same
-    # multiset of directed edges, then the same dedup.
+    # Symmetrize in ONE pass (fixpoint.both_directions): the (possibly
+    # expensive — LSH/Jaccard join) edge subtree runs exactly once. The
+    # former union-of-two-references needed its own eager checkpoint of
+    # the raw pairs first (two barriers, two scans); map-side explode
+    # needs neither. Same multiset of directed edges, then the same
+    # dedup.
     #
     # r13 (§2.4, r12 verdict #7): the adjacency is REPARTITIONED BY
     # THE JOIN KEY and PERSISTED instead of localCheckpoint'd — a
@@ -914,25 +911,23 @@ def connected_components(
     # rejected it because their big side is broadcast-streamed, never
     # shuffled — see operators/graph.py.)
     e = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(src_col).alias("src"),
-                        F.col(dst_col).alias("dst"),
-                    ),
-                    F.struct(
-                        F.col(dst_col).alias("src"),
-                        F.col(src_col).alias("dst"),
-                    ),
-                )
-            ).alias("_e")
-        )
-        .select("_e.src", "_e.dst")
+        both_directions(edges, src_col, dst_col)
         .repartition("src")
         .dropDuplicates(["src", "dst"])
         .persist()
     )
+
+    def _propagate(labels: DataFrame) -> DataFrame:
+        prop = e.join(
+            labels.select(F.col("node").alias("src"), F.col("component_id")),
+            "src",
+        ).select(F.col("dst").alias("node"), "component_id")
+        return (
+            labels.union(prop)
+            .groupBy("node")
+            .agg(F.min("component_id").alias("component_id"))
+        )
+
     # label base = nodes ∪ edge endpoints: an id appearing only in the
     # edge list still belongs to a component (and may BE its minimum),
     # so seeding from `nodes` alone would both drop it from the output
@@ -944,85 +939,28 @@ def connected_components(
     # (decimal(38,0) so huge id sums cannot overflow under ANSI); the
     # count guards the invariant — a count change means the node set
     # moved and sums are incomparable, so iterate. The (count, sum)
-    # metrics ride the SAME job that materializes each round's
-    # checkpoint (``observe`` + eager ``localCheckpoint`` — verified to
-    # fire the CollectMetrics listener), so a round costs ONE job, not
-    # a checkpoint job plus a separate scalar-aggregate job.
-    import uuid
-
-    from pyspark.sql import Observation
-
-    run_tag = uuid.uuid4().hex[:8]  # listener events match on metric
-    # name — two concurrent CC runs in one session must not cross-talk
-
-    from ..functions.obs import get_metrics
-
-    def _observed_checkpoint(lbl: DataFrame, name: str):
-        obs = Observation(f"{name}_{run_tag}")
-        ck = lbl.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("component_id").cast("decimal(38,0)")).alias("s"),
-        ).localCheckpoint(eager=True)
-
-        # The eager checkpoint job has ALREADY run, so metrics normally
-        # arrive within milliseconds; a lost listener event degrades to
-        # ONE explicit aggregate over the materialized checkpoint (no
-        # recompute) instead of hanging the round (functions/obs.py).
-        def _explicit() -> dict:
-            row = ck.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("component_id").cast("decimal(38,0)")).alias("s"),
-            ).first()
-            return {"n": row["n"], "s": row["s"]}
-
-        state = get_metrics(obs, timeout=_OBS_TIMEOUT_S, fallback=_explicit)
-        return ck, (state["n"], state["s"])
-
+    # metrics ride each round's checkpoint job (observed_checkpoint).
     try:
-        labels, prev = _observed_checkpoint(
+        labels, _ = fixpoint(
             nodes.select(F.col(id_col).alias("node"))
             .union(e.select(F.col("src").alias("node")))
             .distinct()
             .select("node", F.col("node").alias("component_id")),
-            "cc_seed",
+            _propagate,
+            max_rounds=max_iter,
+            name="connected_components",
+            aggs={
+                "n": F.count(F.lit(1)),
+                "s": F.sum(F.col("component_id").cast("decimal(38,0)")),
+            },
+            done=lambda _prev, _new, prev_m, new_m: new_m == prev_m,
         )
-        converged = False
-        for rnd in range(max_iter):
-            prop = e.join(
-                labels.select(
-                    F.col("node").alias("src"), F.col("component_id")
-                ),
-                "src",
-            ).select(F.col("dst").alias("node"), "component_id")
-            labels, new = _observed_checkpoint(
-                labels.union(prop)
-                .groupBy("node")
-                .agg(F.min("component_id").alias("component_id")),
-                f"cc_round_{rnd}",
-            )
-            if new == prev:
-                converged = True
-                break
-            prev = new
     finally:
         # rounds are eagerly materialized above, so nothing downstream
         # re-reads e — release the cached adjacency before returning
         # (long-lived sessions run CC per ingest batch; leaking one
         # cache entry per call would accumulate)
         e.unpersist(blocking=False)
-    if not converged:
-        # Partial labels are silently WRONG (nodes mid-chain still carry
-        # a non-minimum label) — never return them. A graph that needs
-        # more than max_iter label-propagation rounds has a component
-        # diameter of that order, which is the exact case the O(log n)
-        # star variant exists for.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            "label-propagation rounds (component diameter exceeds "
-            'max_iter); use algorithm="star" for long-chain graphs '
-            "or raise max_iter"
-        )
     return labels.select(F.col("node").alias(id_col), "component_id")
 
 
@@ -1056,18 +994,10 @@ def connected_components_star(
     truncates lineage per round (see :func:`connected_components`).
 
     Returns ``(labels, rounds)`` so callers/tests can assert the
-    logarithmic round bound.
+    logarithmic round bound; raises ``RuntimeError`` instead of
+    returning partial labels when ``max_iter`` rounds do not converge.
     """
-    e = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    rounds = 0
-    while rounds < max_iter:
-        rounds += 1
+    def _star_round(e: DataFrame) -> DataFrame:
         # large-star over the symmetric closure
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = (
@@ -1085,22 +1015,30 @@ def connected_components_star(
         )
         # small-star on the directed (u > v) set
         mins2 = e_ls.groupBy("u").agg(F.min("v").alias("m"))
-        new_e = (
+        return (
             e_ls.join(mins2, "u")
             .select(F.col("v").alias("n"), "m")
             .union(mins2.select(F.col("u").alias("n"), "m"))
             .where(F.col("n") != F.col("m"))
             .select(F.col("n").alias("u"), F.col("m").alias("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        converged = (
-            new_e.count() == e.count()
-            and new_e.join(e, ["u", "v"], "left_anti").isEmpty()
-        )
-        e = new_e
-        if converged:
-            break
+
+    # converged ⟺ the distinct edge set is unchanged: equal observed
+    # counts, then the exact anti-join emptiness test
+    e, rounds = fixpoint(
+        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+        .distinct(),
+        _star_round,
+        max_rounds=max_iter,
+        name="connected_components_star",
+        aggs={"n": F.count(F.lit(1))},
+        done=lambda prev, new, prev_m, new_m: new_m == prev_m
+        and new.join(prev, ["u", "v"], "left_anti").isEmpty(),
+    )
+
     # label base = nodes ∪ edge endpoints (same output contract as the
     # label-propagation path — see connected_components docstring).
     # The original e is endpoint-complete; the converged star edges

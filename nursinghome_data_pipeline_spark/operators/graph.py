@@ -28,6 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .fixpoint import both_directions
+
+
 def cooccurrence_edges(
     df: DataFrame, *, node_col: str, bucket_cols: list[str]
 ) -> DataFrame:
@@ -96,22 +99,7 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, *, max_hops: int) -> DataFrame:
     # checkpoint streams raw blocks — interleaved probe at 900k edges:
     # wall 5.2/5.8 s (checkpoint) vs 8.9/9.3 s (cache), plans
     # confirming identical BroadcastHashJoin rounds on both sides.
-    bidir = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("u").alias("src"), F.col("v").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("v").alias("src"), F.col("u").alias("dst")
-                    ),
-                )
-            ).alias("_e")
-        )
-        .select("_e.src", "_e.dst")
-        .localCheckpoint(eager=True)
-    )
+    bidir = both_directions(edges, "u", "v").localCheckpoint(eager=True)
     visited = seeds.select(
         F.col("node").cast("long").alias("node"), F.lit(0).alias("hops")
     ).distinct()
@@ -232,9 +220,11 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
         )
         counts = deg.agg(
             F.count(F.lit(1)).alias("n_nodes"),
-            (F.sum(F.col("d") * (F.col("d") - 1)) / F.lit(2))
-            .cast("bigint")
-            .alias("n_wedges"),
+            # an edge-free graph has no degree rows: 0 wedges, not NULL
+            F.coalesce(
+                (F.sum(F.col("d") * (F.col("d") - 1)) / F.lit(2)).cast("bigint"),
+                F.lit(0),
+            ).alias("n_wedges"),
         )
         n_edges = edges.agg(F.count(F.lit(1)).alias("n_edges"))
         result = (
@@ -323,21 +313,7 @@ def pagerank(
     if directed:
         adj = edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
     else:
-        # map-side explode symmetrization: one pass over the edge
-        # subtree instead of a union referencing it twice (same
-        # one-scan rewrite as bfs_hops / connected_components)
-        adj = edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("u").alias("src"), F.col("v").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("v").alias("src"), F.col("u").alias("dst")
-                    ),
-                )
-            ).alias("_e")
-        ).select("_e.src", "_e.dst")
+        adj = both_directions(edges, "u", "v")
     # r13 (§2.4): the adjacency KEEPS the raw eager checkpoint — the
     # executed per-iteration plans show the ranks⋈adj join broadcasts
     # the |V|-sized rank vector and STREAMS adj (one BroadcastHashJoin
@@ -370,7 +346,7 @@ def pagerank(
             )
         ranks = vertices.withColumn("rank", F.lit(1.0 / n))
         teleport = (1.0 - damping) / n
-        for it in range(max_iter):
+        for _ in range(max_iter):
             src_rank = ranks.join(out_deg, "node", "left")
             dangling = 0.0
             if directed:
@@ -402,12 +378,12 @@ def pagerank(
                         )
                     ).alias("rank"),
                 )
-                # final iteration is EAGER: materializes the whole
-                # cascade so the finally-unpersist below never exposes
-                # the returned relation to a cache-less recompute
-                .localCheckpoint(eager=(it == max_iter - 1))
+                .localCheckpoint(eager=False)
             )
-        return ranks
+        # EAGER on every path, max_iter=0 included: materializes the
+        # whole cascade so the finally-unpersist below never exposes
+        # the returned relation to a cache-less recompute
+        return ranks.localCheckpoint(eager=True)
     finally:
         vertices.unpersist(blocking=False)
         out_deg.unpersist(blocking=False)

@@ -5365,10 +5365,8 @@ def orc_roundtrip_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     "+ quantized-sum are built-in aggregates — JVM state store, zero "
     "Python workers on the plan, guide §4); the GroupState API twin "
     "(applyInPandasWithState — the arbitrary-stateful shape for folds "
-    "built-ins cannot express) and the Spark 4 "
-    "transformWithStateInPandas twin ship alongside, emission-"
-    "identical (differential-pinned in tests/test_running_totals.py; "
-    "the TWS twin is import-gated on protobuf, absent here).",
+    "built-ins cannot express) ships alongside, emission-identical "
+    "(differential-pinned in tests/test_running_totals.py).",
 )
 def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.running_totals import (
@@ -5444,7 +5442,8 @@ def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFram
     )
     SELECT (SELECT COUNT(*) FROM deg) AS n_nodes,
            (SELECT COUNT(*) FROM pairs) AS n_edges,
-           (SELECT CAST(SUM(d * (d - 1)) / 2 AS BIGINT) FROM deg) AS n_wedges,
+           COALESCE((SELECT CAST(SUM(d * (d - 1)) / 2 AS BIGINT) FROM deg), 0)
+             AS n_wedges,
            n_triangles,
            CAST(n_triangles * 3 AS DOUBLE)
            / CAST(NULLIF((SELECT CAST(SUM(d * (d - 1)) / 2 AS BIGINT) FROM deg), 0)

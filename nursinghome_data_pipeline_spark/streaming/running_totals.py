@@ -4,7 +4,7 @@ The online-feature-store shape: maintain PER-USER cumulative totals
 across micro-batches and emit the updated row for every user touched by
 a batch ("events and spend per user so far", updated as data arrives).
 
-Three implementations of the same fold:
+Two implementations of the same fold:
 
 - :func:`running_totals_stream_agg` — a Catalyst-native streaming
   aggregation (``groupBy().agg()`` in update mode). THIS particular
@@ -19,12 +19,6 @@ Three implementations of the same fold:
   GroupState API, Spark 3.4+): the ARBITRARY-stateful shape for folds
   that are not expressible as built-in aggregates. No extra Python
   dependencies; differential-tested against the native twin.
-- :func:`running_totals_stream_tws` — Spark 4's
-  ``transformWithStateInPandas`` successor API (typed ValueState on the
-  RocksDB state backend, timers/TTL capable). Its Python state-server
-  protocol requires the ``protobuf`` package, which this container does
-  not ship, so the path is import-gated and covered by a skip-marked
-  test — the code is the real Spark 4 wiring, not a stub.
 
 Determinism at 100 TB: state carries the event count and the QUANTIZED
 value sum (``floor(value * 2^Q_BITS)`` summed as exact integers —
@@ -51,10 +45,6 @@ from ..functions.exprs import Q_BITS, q_sum_term
 _STATE_SCHEMA = "n long, vq long"
 #: cumulative totals per key; value_q is the exact quantized integer sum
 OUTPUT_SCHEMA = "user_id long, n_events long, value_q long"
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
 
 
 def _fold_batch(n: int, vq: int, pdf: pd.DataFrame) -> tuple[int, int]:
@@ -168,66 +158,6 @@ def running_totals_stream(events: DataFrame, *, key_col: str = "user_id") -> Dat
             stateStructType=_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def running_totals_stream_tws(
-    events: DataFrame, *, key_col: str = "user_id"
-) -> DataFrame:
-    """Same fold on Spark 4's ``transformWithStateInPandas``.
-
-    Requires the ``protobuf`` package (the TWS Python worker speaks a
-    proto-based state-server protocol) and the RocksDB state-store
-    provider (set ``spark.sql.streaming.stateStore.providerClass`` to
-    :data:`ROCKSDB_PROVIDER` before starting the query). Import-gated:
-    raises ImportError where protobuf is unavailable.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401 — availability gate
-    except ImportError as exc:
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(the TWS Python worker speaks a proto-based state-server "
-            "protocol); use running_totals_stream (applyInPandasWithState) "
-            "where protobuf is unavailable"
-        ) from exc
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("vq", LongType())]
-    )
-
-    class RunningTotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
-            cur = self._totals.get()
-            n, vq = (int(cur[0]), int(cur[1])) if cur else (0, 0)
-            for pdf in rows:
-                n, vq = _fold_batch(n, vq, pdf)
-            self._totals.update((n, vq))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "value_q": [vq]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.where(F.col(key_col).isNotNull())
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotalsProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
         )
     )
 

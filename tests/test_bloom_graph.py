@@ -4,6 +4,7 @@ shapes (their value parity is covered by test_oracle_parity)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from nursinghome_data_pipeline_spark import registry
@@ -75,6 +76,37 @@ def test_bfs_min_hops_over_multiple_paths(spark):
         r["node"]: r["hops"] for r in bfs_hops(edges, seeds, max_hops=2).collect()
     }
     assert got == {1: 0, 2: 1, 3: 1, 4: 1}
+
+
+@pytest.mark.parametrize(
+    "edge_list, seed_ids, max_hops, want",
+    [
+        ([], [1], 3, {1: 0}),
+        ([(2, 3)], [1], 3, {1: 0}),
+        ([(1, 1)], [1], 3, {1: 0}),
+        ([(1, 1), (1, 2)], [1], 3, {1: 0, 2: 1}),
+        ([(1, 2)], [1], 0, {1: 0}),
+        ([(1, 2)], [], 3, {}),
+    ],
+    ids=[
+        "empty_graph",
+        "seed_without_edges",
+        "self_loop",
+        "self_loop_and_edge",
+        "max_hops_0",
+        "no_seeds",
+    ],
+)
+def test_bfs_hops_edge_inputs(spark, edge_list, seed_ids, max_hops, want):
+    """An empty graph or a seed with no edges gives an empty first
+    frontier: the seed alone, at hop 0, whatever max_hops is."""
+    edges = spark.createDataFrame(edge_list, "u long, v long")
+    seeds = spark.createDataFrame([(i,) for i in seed_ids], "node long")
+    got = {
+        r["node"]: r["hops"]
+        for r in bfs_hops(edges, seeds, max_hops=max_hops).collect()
+    }
+    assert got == want
 
 
 def test_reservoir_plan_uses_window_group_limit(spark, sf_dir):

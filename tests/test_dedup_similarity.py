@@ -164,6 +164,20 @@ def test_connected_components_nonconvergence_raises(spark):
     labels, rounds = connected_components_star(nodes, chain, max_iter=10)
     assert rounds <= 6
     assert {r.component_id for r in labels.collect()} == {0}
+    # ... and raises too when its own round budget runs out: a 20-chain
+    # with one round, and the chain 1-2-3 with none, used to return
+    # wrong labels (node 3 → 1, node 3 → 2) without error
+    n20 = spark.createDataFrame([(i,) for i in range(20)], "doc_id long")
+    chain20 = spark.createDataFrame(
+        [(i, i + 1) for i in range(19)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_star(n20, chain20, max_iter=1)
+    n3 = spark.createDataFrame([(1,), (2,), (3,)], "doc_id long")
+    chain3 = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    for algorithm in ("label_propagation", "star"):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(n3, chain3, max_iter=0, algorithm=algorithm)
 
 
 def test_connected_components_edge_only_nodes_both_algorithms(spark):
@@ -202,6 +216,34 @@ def test_connected_components_edge_only_nodes_both_algorithms(spark):
     assert lp2 == expect2
     star2, _ = connected_components_star(nodes2, edges2)
     assert {r.doc_id: r.component_id for r in star2.collect()} == expect2
+
+
+@pytest.mark.parametrize("algorithm", ["label_propagation", "star"])
+@pytest.mark.parametrize(
+    "node_ids, edge_list, want",
+    [
+        ([], [], {}),
+        ([1, 2], [], {1: 1, 2: 2}),
+        ([1], [], {1: 1}),
+        ([1], [(1, 1)], {1: 1}),
+        ([2], [(2, 2), (2, 1)], {1: 1, 2: 1}),
+    ],
+    ids=["empty_graph", "no_edges", "single_node", "self_loop", "self_loop_and_edge"],
+)
+def test_connected_components_edge_inputs(spark, algorithm, node_ids, edge_list, want):
+    """Edge inputs pinned for both algorithms: an empty graph, isolated
+    nodes, and self-loops, which add no neighbor."""
+    from nursinghome_data_pipeline_spark.operators.dedup import (
+        connected_components,
+    )
+
+    nodes = spark.createDataFrame([(i,) for i in node_ids], "doc_id long")
+    edges = spark.createDataFrame(edge_list, "id_a long, id_b long")
+    got = {
+        r.doc_id: r.component_id
+        for r in connected_components(nodes, edges, algorithm=algorithm).collect()
+    }
+    assert got == want
 
 
 def test_knn_brute_force_self_similarity(spark, sf_dir):
@@ -525,9 +567,12 @@ def test_connected_components_survives_lost_observation(spark, monkeypatch):
     """Observed metrics ride the async SQL listener bus, which can drop
     SQLExecutionEnd events under load — ``Observation.get`` then blocks
     forever. The bounded-wait fallback must degrade to one explicit
-    aggregate job (correct labels, no hang) when metrics never arrive."""
+    aggregate job (correct labels, no hang) when metrics never arrive,
+    for both algorithms (both run their rounds through
+    ``functions/obs.observed_checkpoint``)."""
     import pyspark.sql
 
+    from nursinghome_data_pipeline_spark.functions import obs
     from nursinghome_data_pipeline_spark.operators import dedup
 
     class _DeafObservation(pyspark.sql.Observation):
@@ -537,17 +582,20 @@ def test_connected_components_survives_lost_observation(spark, monkeypatch):
 
             time.sleep(3600)
 
-    monkeypatch.setattr(dedup, "_OBS_TIMEOUT_S", 0.25)
-    monkeypatch.setattr(pyspark.sql, "Observation", _DeafObservation)
+    monkeypatch.setattr(obs, "DEFAULT_TIMEOUT_S", 0.25)
+    monkeypatch.setattr(obs, "Observation", _DeafObservation)
     nodes = spark.createDataFrame([(i,) for i in range(5)], "doc_id long")
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (3, 4)], "id_a long, id_b long"
     )
-    comp = {
-        r.doc_id: r.component_id
-        for r in dedup.connected_components(nodes, edges).collect()
-    }
-    assert comp == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3}
+    for algorithm in ("label_propagation", "star"):
+        comp = {
+            r.doc_id: r.component_id
+            for r in dedup.connected_components(
+                nodes, edges, algorithm=algorithm
+            ).collect()
+        }
+        assert comp == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3}, algorithm
 
 
 def test_append_to_ann_index_routes_with_sidecar_geometry(spark, sf_dir, tmp_path):

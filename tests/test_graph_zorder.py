@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from nursinghome_data_pipeline_spark.functions.zorder import (
@@ -40,9 +41,13 @@ def test_triangle_with_hub(spark):
 
 
 def test_triangle_free_graph_null_clustering(spark):
-    r = _stats(spark, [(0, 1)])  # single edge: no wedge at all
-    assert r.n_triangles == 0 and r.n_wedges == 0
-    assert r.clustering is None
+    # a single edge and an edge-free graph: no wedge at all (the
+    # edge-free graph's n_wedges is 0, not NULL, like the oracle's)
+    for edge_list in ([(0, 1)], []):
+        r = _stats(spark, edge_list)
+        assert r.n_edges == len(edge_list)
+        assert r.n_triangles == 0 and r.n_wedges == 0
+        assert r.clustering is None
 
 
 def test_triangle_large_path_matches_small_and_releases_caches(spark, monkeypatch):
@@ -77,23 +82,61 @@ def test_triangle_large_path_matches_small_and_releases_caches(spark, monkeypatc
         )
 
 
-def test_pagerank_releases_caches(spark):
+@pytest.mark.parametrize("max_iter", [0, 4])
+def test_pagerank_releases_caches(spark, max_iter):
     """r13: pagerank persists vertices/out_deg per call and must
     release them before returning (the result is eagerly checkpointed,
-    so the unpersist can never expose a recompute)."""
+    so the unpersist can never expose a recompute) — on every path,
+    ``max_iter=0`` included: its uniform ranks used to be a lazy
+    relation over the released caches."""
 
     from nursinghome_data_pipeline_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3), (0, 3), (1, 3)], "u long, v long"
     )
+    tracker = spark.sparkContext.statusTracker()
+
+    def _collect(df) -> tuple[list, int]:
+        # max job id, not len(): the tracker evicts old ids late in a
+        # long session (see tests/test_pagerank.py)
+        before = max(tracker.getJobIdsForGroup(None) or [-1])
+        rows = df.collect()
+        return rows, max(tracker.getJobIdsForGroup(None) or [-1]) - before
+
     cm = spark._jsparkSession.sharedState().cacheManager()
     was_empty = cm.isEmpty()
-    ranks = pagerank(edges, max_iter=4)
+    ranks = pagerank(edges, max_iter=max_iter)
     if was_empty:
         assert cm.isEmpty(), "pagerank leaked df caches"
     # the returned relation is materialized — collect works post-release
-    assert abs(sum(r["rank"] for r in ranks.collect()) - 1.0) < 1e-9
+    # and re-reads the checkpoint: no more jobs than the max_iter=4
+    # result costs (a lazy relation re-runs the vertex aggregate)
+    rows, jobs = _collect(ranks)
+    assert abs(sum(r["rank"] for r in rows) - 1.0) < 1e-9
+    if max_iter == 0:
+        assert all(r["rank"] == pytest.approx(0.25, abs=1e-15) for r in rows)
+    assert jobs <= _collect(pagerank(edges, max_iter=4))[1]
+
+
+@pytest.mark.parametrize(
+    "edge_list, directed, want",
+    [
+        ([], False, {}),
+        ([(1, 1)], False, {1: 1.0}),
+        ([(1, 1)], True, {1: 1.0}),
+    ],
+    ids=["empty_graph", "self_loop", "self_loop_directed"],
+)
+def test_pagerank_edge_inputs(spark, edge_list, directed, want):
+    from nursinghome_data_pipeline_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame(edge_list, "u long, v long")
+    got = {
+        r["node"]: r["rank"]
+        for r in pagerank(edges, max_iter=3, directed=directed).collect()
+    }
+    assert got == pytest.approx(want, abs=1e-15)
 
 
 def test_cooccurrence_edges_dedup_and_order(spark):

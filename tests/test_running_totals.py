@@ -133,32 +133,3 @@ def test_native_agg_twin_nonfinite_values(spark, tmp_path):
         (1, 1, 0),
         (1, 3, 2 * q),
     ]
-
-
-def test_tws_variant_gated_on_protobuf(spark):
-    """transformWithStateInPandas needs protobuf (not shipped in this
-    container, and the environment forbids installing it — documented
-    env constraint). The testable contract is therefore the GATE: where
-    protobuf is absent the wiring must raise a clean, actionable
-    ImportError instead of a deep Py4J failure mid-stream; where it is
-    present, this test fails loudly so the real run path gets enabled.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        protobuf_available = False
-    else:
-        protobuf_available = True
-    assert not protobuf_available, (
-        "protobuf became available — enable the TWS run path and assert "
-        "batch-equivalence like the applyInPandasWithState twin"
-    )
-
-    from nursinghome_data_pipeline_spark.streaming.running_totals import (
-        running_totals_stream_tws,
-    )
-
-    ratestream = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-    df = ratestream.selectExpr("value AS user_id", "CAST(value AS DOUBLE) AS value")
-    with pytest.raises(ImportError, match="protobuf"):
-        running_totals_stream_tws(df)
