@@ -14,8 +14,17 @@ semantics (upload_to_s3.py's HEAD/skip dance, K8) for free.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+#: Serializes appends. Two Hadoop-committer jobs appending to one table
+#: directory share ``<table>/_temporary/0``, and the first commit's
+#: cleanup deletes the other job's pending files. Overwrites of
+#: different tables need no lock.
+_APPEND_LOCK = threading.Lock()
 
 
 def stage_overwrite(df: DataFrame, table: str) -> None:
@@ -25,7 +34,8 @@ def stage_overwrite(df: DataFrame, table: str) -> None:
 
 def stage_append(df: DataFrame, table: str) -> None:
     """K2: append-mode metrics/audit table write."""
-    df.write.mode("append").format("parquet").saveAsTable(table)
+    with _APPEND_LOCK:
+        df.write.mode("append").format("parquet").saveAsTable(table)
 
 
 def create_table_as(spark: SparkSession, table: str, select_sql: str) -> None:
@@ -88,5 +98,6 @@ def write_audit_row(
     df = spark.createDataFrame(
         [row], schema=AUDIT_SCHEMA.replace(", created_at timestamp", "")
     ).withColumn("created_at", F.current_timestamp())
-    spark.sql(f"CREATE TABLE IF NOT EXISTS {table} ({AUDIT_SCHEMA}) USING parquet")
-    df.write.mode("append").format("parquet").saveAsTable(table)
+    with _APPEND_LOCK:
+        spark.sql(f"CREATE TABLE IF NOT EXISTS {table} ({AUDIT_SCHEMA}) USING parquet")
+        df.write.mode("append").format("parquet").saveAsTable(table)

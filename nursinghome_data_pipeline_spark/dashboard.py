@@ -33,6 +33,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .parallel import map_actions
+
 #: Line-series cap: 7 named facilities + the folded neutral "Other"
 #: stays within the validated 8-slot categorical budget (the hex
 #: values — light and dark steps of the same hues — live in ``_CSS``
@@ -44,23 +46,26 @@ def metrics_payload(metrics: DataFrame) -> dict[str, Any]:
     """Per-state chart data from the staffing-metrics frame.
 
     One pass for the facility aggregates (mean ratios per PROVNUM) and
-    one for the quarter × facility hours matrix — the same shapes the
-    reference computes per interaction (``metrics_dashboard.py:28-45``),
-    for every state at once. Output is deterministic: states,
-    facilities, and quarters all sorted.
+    one for the quarter × facility hours matrix, run concurrently — the
+    same shapes the reference computes per interaction
+    (``metrics_dashboard.py:28-45``), for every state at once. Rows
+    with a NULL group key are dropped, as pandas ``groupby`` does by
+    default. Output is deterministic: states, facilities, and quarters
+    all sorted.
     """
-    by_fac = (
-        metrics.groupBy("STATE", "PROVNUM")
-        .agg(
-            F.avg("nurse_to_patient_ratio").alias("ratio"),
-            F.avg("contract_vs_employed_ratio").alias("contract"),
-        )
-        .collect()
-    )
-    by_qtr = (
-        metrics.groupBy("STATE", "CY_Qtr", "PROVNUM")
-        .agg(F.sum("total_nurse_hours").alias("hours"))
-        .collect()
+    by_fac, by_qtr = map_actions(
+        DataFrame.collect,
+        [
+            metrics.na.drop(subset=["STATE", "PROVNUM"])
+            .groupBy("STATE", "PROVNUM")
+            .agg(
+                F.avg("nurse_to_patient_ratio").alias("ratio"),
+                F.avg("contract_vs_employed_ratio").alias("contract"),
+            ),
+            metrics.na.drop(subset=["STATE", "CY_Qtr", "PROVNUM"])
+            .groupBy("STATE", "CY_Qtr", "PROVNUM")
+            .agg(F.sum("total_nurse_hours").alias("hours")),
+        ],
     )
     states: dict[str, dict[str, Any]] = {}
     for r in by_fac:
@@ -99,40 +104,38 @@ def overview_payload(
 ) -> dict[str, Any]:
     """Catalog overview data: per-table preview, numeric means, and
     completeness — the ``streamlit_app.py`` query set, one entry per
-    catalog table (all precomputed, selector is client-side)."""
+    catalog table (all precomputed, selector is client-side). The
+    completeness of all tables is one query; each table's preview and
+    means run concurrently with the other tables'."""
     from .query_layer import numeric_means, preview
 
-    names = tables or sorted(
-        t.name for t in spark.catalog.listTables() if t.name != "dq_completeness"
-    )
-    have_dq = any(
-        t.name == "dq_completeness" for t in spark.catalog.listTables()
-    )
-    out: dict[str, Any] = {}
-    for name in names:
+    listed = [t.name for t in spark.catalog.listTables()]
+    names = tables or sorted(n for n in listed if n != "dq_completeness")
+    completeness: dict[str, dict[str, float]] = {name: {} for name in names}
+    if names and "dq_completeness" in listed:
+        for r in (
+            spark.table("dq_completeness")
+            .where(F.col("table_name").isin(names))
+            .select("table_name", "column_name", "pct_not_null")
+            .collect()
+        ):
+            completeness[r.table_name][r.column_name] = r.pct_not_null
+
+    def entry(name: str) -> dict[str, Any]:
         df = spark.table(name)
         head = [
             {c: (None if row[c] is None else str(row[c])) for c in df.columns}
             for row in preview(df, preview_rows).collect()
         ]
         means = numeric_means(df).collect()
-        mean_cols = means[0].asDict() if means else {}
-        completeness: dict[str, float] = {}
-        if have_dq:
-            completeness = {
-                r.column_name: r.pct_not_null
-                for r in spark.table("dq_completeness")
-                .where(F.col("table_name") == name)
-                .select("column_name", "pct_not_null")
-                .collect()
-            }
-        out[name] = {
+        return {
             "columns": df.columns,
             "preview": head,
-            "numeric_means": {k: v for k, v in mean_cols.items()},
-            "completeness": completeness,
+            "numeric_means": means[0].asDict() if means else {},
+            "completeness": completeness[name],
         }
-    return out
+
+    return dict(zip(names, map_actions(entry, names)))
 
 
 # --------------------------------------------------------------------------

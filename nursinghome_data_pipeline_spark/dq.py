@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import write_audit_row
+from .parallel import map_actions
 
 
 @dataclass
@@ -39,9 +40,9 @@ def duplicate_key_check(
     sample = dups.limit(sample_rows).select(
         F.to_json(F.struct(*[F.col(k) for k in keys], F.col("n"))).alias("j")
     )
-    rows = sample.collect()
-    # one aggregate job for the count; the sample rides a limit() job
-    n = dups.count()
+    # one aggregate job for the count and a limit() job for the sample,
+    # issued concurrently
+    rows, n = map_actions(lambda action: action(), [sample.collect, dups.count])
     return DupCheckResult(
         dup_key_count=n,
         sample_json="[" + ",".join(r.j for r in rows) + "]" if rows else None,
@@ -75,11 +76,21 @@ def audit_duplicate_keys(
     return res
 
 
+#: the ``dq_completeness`` row layout :func:`completeness_profile` emits
+PROFILE_SCHEMA = (
+    "table_name string, column_name string, row_count long, "
+    "non_null_count long, pct_not_null double"
+)
+
+
 def completeness_profile(df: DataFrame, *, table_name: str) -> DataFrame:
     """A6: one-pass per-column completeness (row_count, non_null_count,
     pct_not_null), long format, for the ``dq_completeness`` table
-    (load_nursing_home_data.py:20-36,41-49). pct is 0 for empty input."""
+    (load_nursing_home_data.py:20-36,41-49). pct is 0 for empty input;
+    a frame without columns (a zero-byte CSV) profiles to no rows."""
     cols = df.columns
+    if not cols:
+        return df.sparkSession.createDataFrame([], PROFILE_SCHEMA)
     agg = df.agg(
         F.count(F.lit(1)).alias("row_count"),
         *[F.count(F.col(c)).alias(f"nn_{i}") for i, c in enumerate(cols)],

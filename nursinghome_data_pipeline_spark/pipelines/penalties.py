@@ -4,11 +4,15 @@ End-to-end re-expression of ``/root/reference/build.py:55-111``:
 config-driven CSV ingest, staging tables, duplicate-key audits, then
 the curated ``fact_penalty`` table and ``v_penalties_by_state`` view.
 
-Execution shape vs the reference: each dataset is ONE lazy DataFrame
-chain (read→conform→union→write) planned by Catalyst — no per-step
-materialization; the only shuffles are the dup-check and view group-bys.
-The reference's destructive DB rebuild (``ensure_db``, build.py:14-25)
-maps to overwrite-mode writes, which are idempotent per table.
+Execution shape vs the reference: each dataset is one unit — a lazy
+DataFrame chain (read→conform→union) written once, its row count
+observed on that write, then its duplicate-key audit — and the units of
+all datasets run concurrently from driver threads
+(``parallel.map_actions``). The fact CTAS and the view run after
+every unit has finished. The only shuffles are the dup-check and view
+group-bys. The reference's destructive DB rebuild (``ensure_db``,
+build.py:14-25) maps to overwrite-mode writes, which are idempotent per
+table.
 """
 
 from __future__ import annotations
@@ -19,7 +23,9 @@ from pyspark.sql import SparkSession
 
 from ..catalog import create_table_as, create_view, stage_overwrite
 from ..config import DatasetSpec, load_config
-from ..dq import audit_duplicate_keys
+from ..dq import audit_duplicate_keys, observe_counts
+from ..functions.obs import get_metrics
+from ..parallel import map_actions
 from ..sources.csv_source import ingest_dataset, list_matching_files
 
 log = logging.getLogger(__name__)
@@ -66,22 +72,14 @@ def run_build(
         if config_path is None:
             raise ValueError("pass config_path or specs")
         specs = load_config(config_path)
-    staged: dict[str, int] = {}
+    present = {}
     for name, spec in specs.items():
-        if not list_matching_files(csv_dir, spec.filename_pattern):
+        if list_matching_files(csv_dir, spec.filename_pattern):
+            present[name] = spec
+        else:
             log.warning("no files for dataset %s", name)
-            continue
-        df = ingest_dataset(spark, spec, csv_dir)
-        stage_overwrite(df, spec.staging_table)
-        staged[name] = spark.table(spec.staging_table).count()
-        if spec.natural_key:
-            audit_duplicate_keys(
-                spark,
-                spark.table(spec.staging_table),
-                spec.natural_key,
-                table_name=spec.staging_table,
-            )
-        log.info("loaded %s -> %s rows=%d", name, spec.staging_table, staged[name])
+    counts = map_actions(lambda spec: _stage_dataset(spark, spec, csv_dir), present.values())
+    staged = dict(zip(present, counts))
     if "penalties" in specs and "penalties" in staged:
         create_table_as(
             spark,
@@ -92,3 +90,24 @@ def run_build(
         )
         create_view(spark, "v_penalties_by_state", PENALTIES_BY_STATE_SQL)
     return staged
+
+
+def _stage_dataset(spark: SparkSession, spec: DatasetSpec, csv_dir: str) -> int:
+    """One dataset's unit: ingest → stage → duplicate-key audit; returns
+    the staged row count, observed on the staging write."""
+    df, obs = observe_counts(
+        ingest_dataset(spark, spec, csv_dir), f"staged_{spec.staging_table}"
+    )
+    stage_overwrite(df, spec.staging_table)
+    rows = get_metrics(
+        obs, fallback=lambda: {"rows": spark.table(spec.staging_table).count()}
+    )["rows"]
+    if spec.natural_key:
+        audit_duplicate_keys(
+            spark,
+            spark.table(spec.staging_table),
+            spec.natural_key,
+            table_name=spec.staging_table,
+        )
+    log.info("loaded %s -> %s rows=%d", spec.name, spec.staging_table, rows)
+    return rows

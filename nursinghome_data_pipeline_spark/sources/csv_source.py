@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ColumnSpec, DatasetSpec
+from ..parallel import map_actions
 
 #: normalization regex — lowercase, non-alphanumerics collapsed to _
 #: (parity: norm(), build.py:7-8; e.g. "CMS Certification Number (CCN)"
@@ -160,11 +161,20 @@ def ingest_dataset(
 def read_inferred_csvs(spark: SparkSession, directory: str) -> dict[str, DataFrame]:
     """Directory scan with schema inference (S2,
     load_nursing_home_data.py:50-51): one DataFrame per CSV, table name
-    from the normalized file stem."""
-    out: dict[str, DataFrame] = {}
+    from the normalized file stem. The frames (and their inference
+    jobs) are built concurrently. Two files whose stems normalize to
+    the same name raise ``ValueError`` instead of one replacing the
+    other."""
+    paths: dict[str, str] = {}
     for p in sorted(_glob.glob(os.path.join(directory, "*.csv"))):
         stem = norm_name(os.path.splitext(os.path.basename(p))[0])
-        out[stem] = (
-            spark.read.option("header", True).option("inferSchema", True).csv(p)
-        )
-    return out
+        if stem in paths:
+            raise ValueError(
+                f"{paths[stem]!r} and {p!r} both map to table name {stem!r}"
+            )
+        paths[stem] = p
+    frames = map_actions(
+        lambda p: spark.read.option("header", True).option("inferSchema", True).csv(p),
+        paths.values(),
+    )
+    return dict(zip(paths, frames))

@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import tempfile
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -37,3 +39,50 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def fresh_database(spark):
+    """``with fresh_database(name):`` runs the block with a new, empty
+    database ``name`` as the current one, then switches back to
+    ``default``."""
+
+    @contextmanager
+    def use(name: str):
+        spark.sql(f"DROP DATABASE IF EXISTS {name} CASCADE")
+        spark.sql(f"CREATE DATABASE {name}")
+        spark.catalog.setCurrentDatabase(name)
+        try:
+            yield name
+        finally:
+            spark.catalog.setCurrentDatabase("default")
+
+    return use
+
+
+@pytest.fixture
+def run_in_job_group(spark):
+    """``run_in_job_group(fn)`` calls ``fn()`` under a fresh job group
+    and returns ``(result, jobs launched, jobs in that group)``; jobs
+    launched is the job-id delta read from the status store."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def last_job_id() -> int:
+        jsc.listenerBus().waitUntilEmpty(30_000)
+        jobs = jsc.statusStore().jobsList(None)  # a Scala Seq
+        return -1 if jobs.isEmpty() else max(jobs.head().jobId(), jobs.last().jobId())
+
+    def run(fn):
+        group = f"g-{uuid.uuid4().hex[:8]}"
+        before = last_job_id()
+        sc.setJobGroup(group, "concurrency contract")
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        launched = last_job_id() - before
+        in_group = [j for j in sc.statusTracker().getJobIdsForGroup(group) if j > before]
+        return out, launched, len(in_group)
+
+    return run

@@ -166,3 +166,41 @@ def test_charts_render_negative_values_inside_viewbox():
     # positive-only inputs keep the baseline at the bottom (bot == 0)
     top2, bot2, _ = dash._y_scale(4.0, 0.5)
     assert bot2 == 0.0
+
+
+def test_metrics_payload_drops_null_group_keys(spark):
+    # pandas groupby(dropna=True): a NULL key drops the row from that
+    # grouping only — a NULL quarter still counts toward the ratios
+    m = spark.createDataFrame(
+        [
+            ("P001", "TX", "2024-Q1", 0.5, 0.1, 10.0),
+            ("P001", "TX", None, 0.7, 0.3, 5.0),
+            (None, "TX", "2024-Q1", 9.0, 9.0, 99.0),
+            ("P009", None, "2024-Q1", 9.0, 9.0, 99.0),
+        ],
+        "PROVNUM string, STATE string, CY_Qtr string, nurse_to_patient_ratio double, "
+        "contract_vs_employed_ratio double, total_nurse_hours double",
+    )
+    p = dash.metrics_payload(m)
+    assert list(p) == ["TX"]
+    tx = p["TX"]
+    assert tx["facilities"] == ["P001"] and tx["quarters"] == ["2024-Q1"]
+    assert tx["ratio"] == [pytest.approx(0.6)]
+    assert tx["contract"] == [pytest.approx(0.2)]
+    assert tx["hours"] == {"P001": [pytest.approx(10.0)]}
+
+
+def test_overview_jobs_stay_in_caller_job_group(spark, fresh_database, run_in_job_group):
+    with fresh_database("overview_job_group"):
+        spark.createDataFrame([(1, "a"), (2, None)], "id long, name string") \
+            .write.saveAsTable("t_one")
+        spark.createDataFrame([("x", 1.5)], "k string, v double").write.saveAsTable("t_two")
+        spark.createDataFrame(
+            [("t_one", "name", 50.0), ("t_two", "v", 100.0), ("gone", "c", 0.0)],
+            "table_name string, column_name string, pct_not_null double",
+        ).write.saveAsTable("dq_completeness")
+        p, launched, in_group = run_in_job_group(lambda: dash.overview_payload(spark))
+    assert list(p) == ["t_one", "t_two"]
+    assert p["t_one"]["completeness"] == {"name": 50.0}
+    assert p["t_two"]["numeric_means"] == {"v": 1.5}
+    assert launched > 0 and in_group == launched

@@ -136,3 +136,36 @@ def test_get_metrics_bounded_wait_and_fallback():
     }
     with pytest.raises(TimeoutError, match="listener"):
         get_metrics(_Deaf(), timeout=0.2)
+
+
+def test_concurrent_audit_rows_all_land(spark):
+    # concurrent appends to one table directory would share the
+    # committer's _temporary/0 and lose each other's files
+    import sys
+    import threading
+    import uuid
+
+    from nursinghome_data_pipeline_spark.catalog import write_audit_row
+
+    table = f"audit_race_{uuid.uuid4().hex[:8]}"
+    start = threading.Barrier(8, timeout=60)
+
+    def write(i: int) -> None:
+        start.wait()
+        write_audit_row(spark, table_name=f"t{i}", check_name="race",
+                        status="ok", metric_value=i, table=table)
+
+    threads = [threading.Thread(target=write, args=(i,)) for i in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    rows = spark.table(table).collect()
+    assert sorted(r.table_name for r in rows) == [f"t{i}" for i in range(8)]
+    spark.sql(f"DROP TABLE {table}")

@@ -114,3 +114,49 @@ def test_duplicate_key_audit(spark, built):
     assert audit.status == "warn"
     assert audit.metric_value == 1.0  # one duplicated natural key
     assert audit.notes and "015009" in audit.notes
+
+
+def test_build_jobs_stay_in_caller_job_group(spark, tmp_path, fresh_database, run_in_job_group):
+    # the per-dataset units run on driver threads; their jobs (staging
+    # writes, dup audits, audit rows) and the fact CTAS keep the group
+    (tmp_path / "NH_Penalties_a.csv").write_text(FILE_A)
+    (tmp_path / "NH_Penalties_b.csv").write_text(FILE_B)
+    with fresh_database("build_job_group"):
+        staged, launched, in_group = run_in_job_group(
+            lambda: run_build(spark, specs=specs_from_dict(CONFIG), csv_dir=str(tmp_path))
+        )
+    assert staged == {"penalties": 6}
+    assert launched > 0 and in_group == launched
+
+
+def _two_dataset_config() -> dict:
+    pen = CONFIG["datasets"]["penalties"]
+    return {
+        "datasets": {
+            name: {**pen, "filename_pattern": f"NH_Penalties_{name}.csv",
+                   "staging_table": f"staging_{name}"}
+            for name in ("a", "b")
+        }
+    }
+
+
+def test_build_failure_in_one_dataset_lets_the_other_finish(spark, tmp_path, monkeypatch, fresh_database):
+    from nursinghome_data_pipeline_spark.pipelines import penalties
+
+    (tmp_path / "NH_Penalties_a.csv").write_text(FILE_A)
+    (tmp_path / "NH_Penalties_b.csv").write_text(FILE_B)
+    real = penalties.ingest_dataset
+
+    def ingest(spark_, spec, base_dir):
+        if spec.name == "a":
+            raise RuntimeError("ingest of a failed")
+        return real(spark_, spec, base_dir)
+
+    monkeypatch.setattr(penalties, "ingest_dataset", ingest)
+    with fresh_database("build_partial_failure"):
+        with pytest.raises(RuntimeError, match="ingest of a failed"):
+            run_build(spark, specs=specs_from_dict(_two_dataset_config()), csv_dir=str(tmp_path))
+        assert spark.table("staging_b").count() == 1
+        audit = spark.table("dq_audit").collect()
+        assert [r.table_name for r in audit] == ["staging_b"]
+        assert not spark.catalog.tableExists("staging_a")
