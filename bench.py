@@ -635,7 +635,9 @@ def _trailing_medians(bench_dir: str, cpus: int | None = None) -> dict[str, floa
     count they ran at, and the medians only aggregate lines matching
     the CURRENT count — an 8-core window must not seed 32-core retry
     gates (or vice versa). Legacy lines without the field predate the
-    change and were all recorded at 32 cores, so they count as 32.
+    change and were all recorded at 32 cores, so they count as 32. The
+    ``bench_full.json`` fallback is filtered the same way, by its
+    ``host_load.spark_cpus``.
     """
     import statistics
 
@@ -661,7 +663,8 @@ def _trailing_medians(bench_dir: str, cpus: int | None = None) -> dict[str, floa
             try:
                 with open(full, encoding="utf-8") as f:
                     rec = json.load(f)
-                if isinstance(rec.get("queries"), dict):
+                rec_cpus = int((rec.get("host_load") or {}).get("spark_cpus", 32))
+                if isinstance(rec.get("queries"), dict) and cpus in (None, rec_cpus):
                     runs.append(rec)
             except ValueError:
                 pass

@@ -304,101 +304,50 @@ def _cmd_ann_index(args: argparse.Namespace) -> int:
         )
         return 0
     if args.action == "dedup":
-        from .operators.dedup_index import (
-            dedup_batch_against_index,
-            simhash_batch_against_index,
-        )
+        from .operators.dedup_index import batch_against_index, family
 
         if args.batch_path:
             batch = spark.read.parquet(args.batch_path)
         else:
             batch = load_tables(spark, args.sf_dir, [args.table])[args.table]
         meta = load_ann_meta(args.path)
-        if meta.get("kind") not in ("minhash", "simhash", "srp"):
-            # mirror the build/--kind validation style: a clean
-            # stderr+2, not _require_kind's raw traceback
-            print(
-                f"ann-index dedup: index at {args.path} is "
-                f"kind={meta.get('kind')!r} — dedup probes need a "
-                "minhash, simhash, or srp index (build one with "
-                "ann-index build --kind minhash|simhash|srp)",
-                file=sys.stderr,
-            )
-            return 2
-        payload_col = (
-            "vec_col" if meta["kind"] == "srp" else "text_col"
-        )
-        missing = {meta.get("id_col"), meta.get(payload_col)} - set(
-            batch.columns
-        )
-        if missing:
-            print(
-                f"ann-index dedup: batch lacks the index's column(s) "
-                f"{sorted(missing)} (sidecar: id_col={meta['id_col']!r}, "
-                f"{payload_col}={meta[payload_col]!r}) — point "
-                "--batch-path/--table at "
-                + ("embedding" if meta["kind"] == "srp" else "document")
-                + " rows",
-                file=sys.stderr,
-            )
-            return 2
-        if meta["kind"] == "srp":
-            from .operators.embedding_index import (
-                embedding_batch_against_index,
-            )
-
-            # threshold None -> the sidecar's design threshold (the
-            # boundary the geometry's recall was sized for)
-            pairs = embedding_batch_against_index(
-                spark, batch, args.path, threshold=args.threshold
+        # the flag default is None so srp can mean "use the sidecar's
+        # design threshold"; minhash keeps its historical 0.8
+        threshold = {
+            "minhash": 0.8 if args.threshold is None else args.threshold,
+            "simhash": args.max_hamming,
+        }.get(meta.get("kind"), args.threshold)
+        try:
+            # count + top-20 share one run
+            pairs = batch_against_index(
+                spark, batch, args.path, threshold=threshold,
+                caller="ann-index dedup",
             ).localCheckpoint(eager=False)
-            rows = pairs.orderBy(F.desc("cosine_sim")).limit(20).collect()
-            thr = (
-                meta["design_threshold"]
-                if args.threshold is None
-                else args.threshold
-            )
-            print(
-                f"{pairs.count()} near-dup pairs >= cosine {thr} "
-                f"(top {len(rows)} shown)"
-            )
-            for r in rows:
-                print(f"  batch={r['batch_id']} corpus={r['corpus_id']} "
-                      f"cosine={r['cosine_sim']:.4f}")
-            return 0
-        if meta["kind"] == "simhash":
-            pairs = simhash_batch_against_index(
-                spark, batch, args.path, max_hamming=args.max_hamming
-            ).localCheckpoint(eager=False)
-            rows = pairs.orderBy("hamming").limit(20).collect()
-            print(
-                f"{pairs.count()} near-dup pairs <= hamming "
-                f"{args.max_hamming} (top {len(rows)} shown)"
-            )
-            for r in rows:
-                print(f"  batch={r['batch_id']} corpus={r['corpus_id']} "
-                      f"hamming={r['hamming']}")
-            return 0
-        # the flag default is None so the srp branch can mean "use the
-        # sidecar's design threshold"; minhash keeps its historical 0.8
-        threshold = 0.8 if args.threshold is None else args.threshold
-        pairs = dedup_batch_against_index(
-            spark, batch, args.path, threshold=threshold
-        ).localCheckpoint(eager=False)  # count + top-20 share one run
-        rows = pairs.orderBy(F.desc("jaccard")).limit(20).collect()
+        except ValueError as e:
+            # a non-near-dup index kind, batch columns missing, no
+            # threshold: a clean stderr+2, not a raw traceback
+            print(e, file=sys.stderr)
+            return 2
+        fam = family(meta)
+        name = fam.score_name
+        rows = pairs.orderBy(
+            F.col(name) if fam.at_most else F.desc(name)
+        ).limit(20).collect()
+        if threshold is None:
+            threshold = meta["design_threshold"]
         print(
-            f"{pairs.count()} near-dup pairs >= {threshold} "
-            f"(top {len(rows)} shown)"
+            f"{pairs.count()} near-dup pairs {'<=' if fam.at_most else '>='} "
+            f"{fam.measure} {threshold} (top {len(rows)} shown)"
         )
         for r in rows:
             print(f"  batch={r['batch_id']} corpus={r['corpus_id']} "
-                  f"jaccard={r['jaccard']:.4f}")
+                  f"{fam.measure}={r[name]:.4g}")
         return 0
     if args.action == "stats":
-        from .operators.dedup_index import dedup_index_bucket_stats
+        from .operators.dedup_index import FAMILIES, dedup_index_bucket_stats
 
         meta = load_ann_meta(args.path)
-        if meta.get("kind") not in ("minhash", "simhash", "srp"):
+        if meta.get("kind") not in FAMILIES:
             print(
                 f"ann-index stats: index at {args.path} is "
                 f"kind={meta.get('kind')!r} — bucket stats apply to "
@@ -420,10 +369,11 @@ def _cmd_ann_index(args: argparse.Namespace) -> int:
             )
         return 0
     if args.action == "compact":
+        from .operators.dedup_index import FAMILIES, family
         from .operators.similarity import compact_ann_index
 
         kind = load_ann_meta(args.path).get("kind")
-        if args.regeometry and kind not in ("minhash", "simhash", "srp"):
+        if args.regeometry and kind not in FAMILIES:
             # same kinds compact_ann_index itself accepts for the flag
             print(
                 f"ann-index compact --regeometry: index at {args.path} "
@@ -448,18 +398,12 @@ def _cmd_ann_index(args: argparse.Namespace) -> int:
         if args.regeometry:
             meta = load_ann_meta(args.path)
             # minhash dirs = bands × n_buckets; srp = tables ×
-            # n_buckets; simhash has no band dimension (pb is a plain
-            # mod over the packed keys)
-            geom = (
-                f"{meta['bands']}x{meta['n_buckets']}"
-                if "bands" in meta
-                else f"{meta['n_tables']}x{meta['n_buckets']}"
-                if "n_tables" in meta
-                else f"{meta['n_buckets']}"
-            )
+            # n_buckets; simhash has no fan-out dimension
+            fan = family(meta).fanout_key
             print(
                 f"compacted index at {args.path}: {n_files} data files, "
-                f"regeometry -> {geom} bucket dirs"
+                f"regeometry -> {f'{meta[fan]}x' if fan else ''}"
+                f"{meta['n_buckets']} bucket dirs"
             )
         else:
             print(f"compacted index at {args.path}: {n_files} data files")

@@ -8,8 +8,19 @@ the one that actually hurts at 100 TB, because the in-memory
 ENTIRE corpus on every call: a daily 0.1% increment would pay a
 99.9%-redundant full-corpus pass, every day.
 
-Layout (``write_dedup_index``): one parquet table partitioned by
-``pb = band · n_buckets + (band_key mod n_buckets)`` — a bounded
+Three index kinds share one lifecycle: ``"minhash"`` (Jaccard),
+``"simhash"`` (Hamming) and ``"srp"`` (embedding cosine,
+``operators/embedding_index.py``). Each kind is one :class:`Family`
+record holding only what differs — its projection, bucket join keys,
+verify score, ``pb`` routing formula and bucket sizing — and every
+kind-independent step is written once against it:
+:func:`route_append` (append routing), :func:`probe_index_with_rows`
+(the batch probe), :func:`pairs_from_rows` (the in-batch pair pass),
+and, in ``similarity.py``, ``compact_ann_index``. :data:`FAMILIES` is
+the one list of kinds.
+
+Minhash layout (``write_dedup_index``): one parquet table partitioned
+by ``pb = band · n_buckets + (band_key mod n_buckets)`` — a bounded
 directory count (``bands × n_buckets``) with uniform hash occupancy.
 Each row carries the doc's id, its band key, AND its distinct shingle
 hashes (``sh``), so a probe is ONE pruned scan + band-key join + exact
@@ -25,32 +36,29 @@ duplication would have co-located. The srp index's 10×-duplicated
 fixed-width vectors cut the other way (7.9× storage for +16% probe) —
 the trade is payload-size- and fan-out-dependent, not doctrine.
 Shingle hashes, not text — the index never stores corpus text at all.
+The simhash layout is the same table partitioned by
+``pb = xxhash64(bucket) mod n_buckets``, rows carrying the packed
+chunk-bucket key and the full 64-bit fingerprint.
 
-Probe (``dedup_batch_against_index``): the batch's band keys pick the
-``pb`` partitions to read — at the default 4×64 geometry a small batch
-touches a bounded set of directories and the scan's
-``PartitionFilters`` prune everything else at FILE level (same
-mechanism, and the same plan gate in tests, as the IVF/LSH ANN
-indexes). Candidates then verify with the exact same Jaccard formula
-as :func:`~.dedup.near_duplicate_pairs`, so the result is
-BIT-IDENTICAL to running the in-memory operator over corpus ∪ batch
-and keeping the cross pairs (pinned by ``tests/test_dedup_index.py``).
+Probe: the batch's routing keys pick the ``pb`` partitions to read —
+at the default 4×64 geometry a small batch touches a bounded set of
+directories and the scan's ``PartitionFilters`` prune everything else
+at FILE level (same mechanism, and the same plan gate in tests, as the
+IVF/LSH ANN indexes). Candidates then verify with the exact same score
+as the in-memory operator, so the result is BIT-IDENTICAL to running
+that operator over corpus ∪ batch and keeping the cross pairs (pinned
+by ``tests/test_dedup_index.py``, ``test_simhash_index.py`` and
+``test_srp_index.py``).
 
-Lifecycle: the index is ``kind="minhash"`` under the SAME sidecar +
-append/compact protocol as the ANN indexes
-(:func:`~.similarity.append_to_ann_index` bands new docs with the
-sidecar's own geometry; :func:`~.similarity.compact_ann_index` bounds
-files per directory under the Dekker intent/lock handshake) — one
-lifecycle implementation, five index kinds (r8 adds
-``kind="simhash"``: the same incremental-dedup story for the Hamming
-family — :func:`write_simhash_index` / :func:`simhash_batch_against_index`,
-pinned bit-equal to ``simhash_near_duplicate_pairs`` cross pairs;
-r9 adds ``kind="srp"`` for the cosine family —
-``operators/embedding_index.py``).
-Appends are LSM-style (r9): each batch lands as ONE file in a
-``pb=-1`` delta directory (:data:`DELTA_PB`) that every probe also
-reads, and compaction merges deltas into their true buckets — append
-cost ∝ batch instead of ∝ ``bands × n_buckets`` file creations.
+Lifecycle: the near-dup kinds ride the SAME sidecar + append/compact
+protocol as the ANN indexes (:func:`~.similarity.append_to_ann_index`
+routes new docs with the sidecar's own geometry;
+:func:`~.similarity.compact_ann_index` bounds files per directory
+under the Dekker intent/lock handshake). Appends are LSM-style (r9):
+each batch lands as ONE file in a ``pb=-1`` delta directory
+(:data:`DELTA_PB`) that every probe also reads, and compaction merges
+deltas into their true buckets — append cost ∝ batch instead of ∝
+``bands × n_buckets`` file creations.
 
 The same probe is decontamination-at-rest: index the TRAINING corpus
 once, probe with the evaluation/benchmark set — every returned pair is
@@ -65,7 +73,10 @@ incremental-ingest shape a training-data pipeline needs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from dataclasses import dataclass
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import (
@@ -76,6 +87,7 @@ from .dedup import (
     shingle_hash_col,
 )
 from .similarity import (
+    _compact_for_write,
     _require_kind,
     _write_ann_meta,
     active_data_root,
@@ -86,12 +98,12 @@ from .similarity import (
 from .. import fs
 
 
-#: Internal projection names (`sig` is _banded_rows-local; pb/band/
-#: bkey/sh persist in the minhash index; bucket/sh in the simhash
-#: index; batch_id/corpus_id/hamming are probe output aliases). A
-#: caller id_col with one of these names would silently collide or
-#: misbind — same guard as ``skew.bucketed_global_order``'s reserved
-#: columns.
+#: Internal projection names of the text kinds (`sig` is
+#: _banded_rows-local; pb/band/bkey/sh persist in the minhash index;
+#: bucket/sh in the simhash index; batch_id/corpus_id/hamming are probe
+#: output aliases). A caller id_col with one of these names would
+#: silently collide or misbind — same guard as
+#: ``skew.bucketed_global_order``'s reserved columns.
 _RESERVED_COLS = frozenset(
     {"pb", "band", "bkey", "sh", "sig", "bucket",
      "batch_id", "corpus_id", "hamming"}
@@ -112,25 +124,90 @@ _RESERVED_COLS = frozenset(
 DELTA_PB = -1
 
 
+@dataclass(frozen=True)
+class Family:
+    """One near-dup index kind: only what differs between kinds.
+
+    ``project(df, meta)`` is the kind's routed-row projection at the
+    sidecar's geometry (``pb``, the join ``keys``, the id, and the
+    ``members(meta)`` payload columns the ``score`` verifies —
+    ``score(a, b)`` takes the two sides' member columns in that
+    order). A pair passes when its score is ``<=`` the threshold for
+    an ``at_most`` family (Hamming) and ``>=`` otherwise. ``pb(nb)``
+    recomputes the partition value from the STORED routing columns;
+    ``rows_per_doc(meta)`` is how many rows one doc posts into one
+    fan-out group (the ``auto_dedup_buckets`` input per doc) and
+    ``fanout_key`` names the sidecar value multiplying ``n_buckets``
+    into the directory count. ``check_threshold(meta, threshold,
+    caller)`` resolves and sanity-checks a probe threshold against the
+    geometry; ``fetch`` is the srp-only step between candidates and
+    scoring."""
+
+    kind: str
+    payload_key: str
+    project: Callable[[DataFrame, dict], DataFrame]
+    keys: tuple[str, ...]
+    members: Callable[[dict], tuple[str, ...]]
+    score: Callable[[list[Column], list[Column]], Column]
+    score_name: str
+    measure: str
+    at_most: bool
+    pb: Callable[[int], Column]
+    fanout_key: str | None
+    rows_per_doc: Callable[[dict], int] = lambda meta: 1
+    check_threshold: Callable = lambda meta, threshold, caller: threshold
+    fetch: Callable | None = None
+
+    def passes(self, score: Column, threshold) -> Column:
+        return score <= F.lit(threshold) if self.at_most else score >= F.lit(threshold)
+
+    def dirs(self, meta: dict) -> int:
+        """Posting directory count of the sidecar's geometry."""
+        fan = int(meta[self.fanout_key]) if self.fanout_key else 1
+        return fan * int(meta["n_buckets"])
+
+    def auto_buckets(self, n_docs: int, meta: dict) -> int:
+        return auto_dedup_buckets(n_docs * self.rows_per_doc(meta))
+
+
+def side_col(member: str, side: str) -> str:
+    """Probe alias of a member column on the batch (``b``) or corpus
+    (``c``) side of a candidate pair."""
+    return f"_{member}_{side}"
+
+
 def as_delta_append(rows: DataFrame) -> DataFrame:
-    """Stamp a routed ``_banded_rows``/``_simhash_rows`` projection as
-    one LSM delta append: every row goes to the ``pb=-1`` directory in
-    a single file (micro-batch appends are small by contract — a bulk
-    backfill should use ``write_dedup_index`` or compact right after).
-    The routing columns (band/bkey or bucket) stay untouched — they
-    are what compaction re-routes from and what probes join on, so
-    delta rows match candidates exactly like base rows."""
+    """Stamp a routed family projection as one LSM delta append: every
+    row goes to the ``pb=-1`` directory in a single file (micro-batch
+    appends are small by contract — a bulk backfill should use the
+    kind's writer or compact right after). The routing columns stay
+    untouched — they are what compaction re-routes from and what
+    probes join on, so delta rows match candidates exactly like base
+    rows."""
     return rows.withColumn(
         "pb", F.lit(DELTA_PB).cast("int")
     ).repartition(1)
 
 
-def _require_unreserved(id_col: str, caller: str) -> None:
-    if id_col in _RESERVED_COLS:
+def _require_unreserved(reserved, caller: str, **cols: str) -> None:
+    for role, name in cols.items():
+        if name in reserved:
+            raise ValueError(
+                f"{caller}: {role} {name!r} collides with an internal "
+                f"index column — rename it (reserved: {sorted(reserved)})"
+            )
+
+
+def _require_columns(df: DataFrame, meta: dict, what: str) -> None:
+    """A batch lacking the sidecar's id/payload columns fails with the
+    columns NAMED, not a raw AnalysisException from the projection."""
+    pk = family(meta).payload_key
+    missing = {meta["id_col"], meta[pk]} - set(df.columns)
+    if missing:
         raise ValueError(
-            f"{caller}: id_col {id_col!r} collides with an internal "
-            f"index column — rename it (reserved: "
-            f"{sorted(_RESERVED_COLS)})"
+            f"{what} {meta['kind']} index: batch lacks column(s) "
+            f"{sorted(missing)} — the sidecar expects "
+            f"id_col={meta['id_col']!r}, {pk}={meta[pk]!r}"
         )
 
 
@@ -147,7 +224,7 @@ def _banded_rows(
     """(pb, band, bkey, <id>, sh) rows — bands rows per doc, the shared
     projection for index build, append routing, and the batch side of
     the probe. One pass: tokenize/shingle once, signature once."""
-    _require_unreserved(id_col, "_banded_rows")
+    _require_unreserved(_RESERVED_COLS, "_banded_rows", id_col=id_col)
     if n_hashes % bands != 0:
         raise ValueError(
             f"bands ({bands}) must divide n_hashes ({n_hashes})"
@@ -188,57 +265,152 @@ def _banded_rows(
     )
 
 
-def pairs_from_banded_rows(
-    banded: DataFrame, *, id_col: str, threshold: float
+def _simhash_rows(
+    df: DataFrame,
+    *,
+    id_col: str,
+    text_col: str,
+    hash_family: str,
+    n_chunks: int,
+    chunks_per_key: int,
+    n_buckets: int,
 ) -> DataFrame:
-    """Within-set near-dup pairs from a precomputed ``_banded_rows``
-    projection — ``(id_a, id_b, jaccard)`` with ``id_a < id_b`` and
-    jaccard ≥ threshold, identical (as a set) to
-    :func:`~.dedup.near_duplicate_pairs` over the same docs at the
-    same geometry (pinned by ``tests/test_dedup_index.py``): the band
-    keys are the same :func:`~.dedup.band_key_col` values and the
-    verify is the same :func:`~.dedup.jaccard_verify_col` over the
-    same distinct-shingle arrays, just read from the rows instead of
-    recomputed from text. This is the streaming ingest loop's
-    in-batch pass (r9): one fingerprint pass feeds in-batch pairing,
-    the index probe, AND the append routing. Verification happens
-    inside the bucket (before the pair explode), so sub-threshold
-    candidates are pruned without a second sets-join."""
-    return _intra_bucket_pairs(
-        banded,
-        ["band", "bkey"],
-        [id_col, "sh"],
-        lambda x, y: F.struct(
-            x[id_col].alias("id_a"),
-            y[id_col].alias("id_b"),
-            jaccard_verify_col(x["sh"], y["sh"]).alias("jaccard"),
-        ),
-        lambda p: (p["id_a"] < p["id_b"])
-        & (p["jaccard"] >= F.lit(threshold)),
+    """(pb, bucket, <id>, sh) rows — keys_per_doc rows per doc, the
+    shared projection for build, append routing, and the probe's batch
+    side. Fingerprint once, explode the packed keys once. The bucket
+    formula is owned by :func:`~.dedup.simhash_bucket_keys` (byte-
+    identical to the in-memory operator); ``pb`` mixes the packed key
+    through xxhash64 before the mod because the key's low bits are raw
+    chunk bits (a plain mod would route every combo's chunk-value
+    residue to the same few directories)."""
+    from .dedup import simhash_bucket_keys, simhash_col
+
+    _require_unreserved(_RESERVED_COLS, "_simhash_rows", id_col=id_col)
+    sig = df.select(
+        F.col(id_col),
+        simhash_col(text_col, hash_family=hash_family).alias("sh"),
+    )
+    keys = simhash_bucket_keys(
+        F.col("sh"), n_chunks=n_chunks, chunks_per_key=chunks_per_key
+    )
+    banded = sig.select(
+        id_col, "sh", F.explode(F.array(*keys)).alias("bucket")
+    )
+    return banded.select(
+        F.pmod(F.xxhash64(F.col("bucket")), F.lit(n_buckets))
+        .cast("int")
+        .alias("pb"),
+        "bucket",
+        id_col,
+        "sh",
     )
 
 
-def pairs_from_simhash_rows(
-    rows: DataFrame, *, id_col: str, max_hamming: int
-) -> DataFrame:
-    """Within-set near-dup pairs from a precomputed ``_simhash_rows``
-    projection — ``(id_a, id_b, hamming)``, identical (as a set) to
-    :func:`~.dedup.simhash_near_duplicate_pairs` over the same docs at
-    the same geometry (same :func:`~.dedup.simhash_bucket_keys`
-    buckets, same ``bit_count`` verify — pinned). The Hamming-family
-    twin of :func:`pairs_from_banded_rows`."""
-    return _intra_bucket_pairs(
-        rows,
-        ["bucket"],
-        [id_col, "sh"],
-        lambda x, y: F.struct(
-            x[id_col].alias("id_a"),
-            y[id_col].alias("id_b"),
-            F.bit_count(x["sh"].bitwiseXOR(y["sh"])).alias("hamming"),
-        ),
-        lambda p: (p["id_a"] < p["id_b"])
-        & (p["hamming"] <= F.lit(max_hamming)),
-    )
+def simhash_keys_per_doc(n_chunks: int, chunks_per_key: int) -> int:
+    """Rows each doc posts: n_chunks single-chunk keys, or
+    C(n_chunks, 2) pair-chunk keys."""
+    if chunks_per_key == 1:
+        return n_chunks
+    return n_chunks * (n_chunks - 1) // 2
+
+
+def _warn_if_beyond_pigeonhole(meta: dict, max_hamming: int, caller: str):
+    """The simhash banding guarantees candidate generation only for
+    pairs within ``n_chunks − chunks_per_key`` bits (the pigeonhole
+    bound — see ``dedup.simhash_near_duplicate_pairs``); a looser
+    ``max_hamming`` is a verify threshold, not a recall promise. Warn,
+    mirroring the srp looser-than-design warning. Returns
+    ``max_hamming`` (the :attr:`Family.check_threshold` contract)."""
+    guarantee = int(meta["n_chunks"]) - int(meta["chunks_per_key"])
+    if max_hamming > guarantee:
+        import warnings
+
+        warnings.warn(
+            f"{caller}: max_hamming={max_hamming} "
+            f"exceeds the index geometry's pigeonhole guarantee "
+            f"(h <= {guarantee} for {meta['n_chunks']} chunks x "
+            f"{meta['chunks_per_key']}-chunk keys) — pairs at "
+            f"Hamming {guarantee + 1}..{max_hamming} may be missed "
+            "by banding",
+            UserWarning,
+            stacklevel=3,
+        )
+    return max_hamming
+
+
+MINHASH = Family(
+    kind="minhash",
+    payload_key="text_col",
+    project=lambda df, m: _banded_rows(
+        df,
+        id_col=m["id_col"],
+        text_col=m["text_col"],
+        n_hashes=int(m["n_hashes"]),
+        bands=int(m["bands"]),
+        shingle_k=int(m["shingle_k"]),
+        n_buckets=int(m["n_buckets"]),
+    ),
+    keys=("band", "bkey"),
+    members=lambda m: ("sh",),
+    score=lambda a, b: jaccard_verify_col(a[0], b[0]),
+    score_name="jaccard",
+    measure="jaccard",
+    at_most=False,
+    pb=lambda nb: F.col("band") * nb + F.pmod(F.col("bkey"), F.lit(nb)),
+    fanout_key="bands",
+)
+
+SIMHASH = Family(
+    kind="simhash",
+    payload_key="text_col",
+    project=lambda df, m: _simhash_rows(
+        df,
+        id_col=m["id_col"],
+        text_col=m["text_col"],
+        hash_family=m["hash_family"],
+        n_chunks=int(m["n_chunks"]),
+        chunks_per_key=int(m["chunks_per_key"]),
+        n_buckets=int(m["n_buckets"]),
+    ),
+    keys=("bucket",),
+    members=lambda m: ("sh",),
+    score=lambda a, b: F.bit_count(a[0].bitwiseXOR(b[0])),
+    score_name="hamming",
+    measure="hamming",
+    at_most=True,
+    pb=lambda nb: F.pmod(F.xxhash64(F.col("bucket")), F.lit(nb)),
+    fanout_key=None,
+    rows_per_doc=lambda m: simhash_keys_per_doc(
+        int(m["n_chunks"]), int(m["chunks_per_key"])
+    ),
+    check_threshold=_warn_if_beyond_pigeonhole,
+)
+
+#: THE near-dup index kinds. The srp record lives in embedding_index
+#: (which imports this module), so :func:`family` resolves it lazily.
+FAMILIES: dict[str, Family | None] = {
+    "minhash": MINHASH,
+    "simhash": SIMHASH,
+    "srp": None,
+}
+
+
+def family(meta: dict, caller: str = "near-dup index") -> Family:
+    """The :class:`Family` of a sidecar; a non-near-dup kind (ivf/lsh,
+    a foreign sidecar) fails with the kinds named, not later with a
+    KeyError on a missing geometry field."""
+    kind = meta.get("kind")
+    if kind not in FAMILIES:
+        *head, last = [repr(k) for k in FAMILIES]
+        raise ValueError(
+            f"{caller}: kind={kind!r} is not supported — the near-dup "
+            f"index kinds are {', '.join(head)}, or {last}"
+        )
+    if kind == "srp":
+        from .embedding_index import SRP
+
+        return SRP
+    return FAMILIES[kind]
 
 
 def dedup_index_bucket_stats(
@@ -272,25 +444,12 @@ def dedup_index_bucket_stats(
     ``{kind, n_postings, n_keys, max_postings_per_key,
     mean_postings_per_key, top: [(band, bkey, n_postings), ...]}``."""
     meta = load_ann_meta(path)
-    if meta.get("kind") not in ("minhash", "simhash", "srp"):
-        raise ValueError(
-            f"dedup_index_bucket_stats: index kind {meta.get('kind')!r} "
-            "not supported — expected one of ['minhash', 'simhash', "
-            "'srp']"
-        )
-    rows = spark.read.parquet(active_data_root(path))
-    if meta["kind"] == "minhash":
-        keyed = rows.select("band", "bkey")
-    elif meta["kind"] == "srp":
-        # normalized layout: vector rows (tbl NULL) are storage, not
-        # postings — only posting rows feed the hot-key stat
-        keyed = rows.where(F.col("tbl").isNotNull()).select(
-            F.col("tbl").alias("band"), F.col("bucket").alias("bkey")
-        )
-    else:
-        keyed = rows.select(
-            F.lit(-1).alias("band"), F.col("bucket").alias("bkey")
-        )
+    keys = family(meta, "dedup_index_bucket_stats").keys
+    band = F.col(keys[0]) if len(keys) == 2 else F.lit(-1)
+    # srp vector rows (NULL tbl/bucket) are storage, not postings
+    keyed = spark.read.parquet(active_data_root(path)).dropna(
+        subset=list(keys)
+    ).select(band.alias("band"), F.col(keys[-1]).alias("bkey"))
     counts = keyed.groupBy("band", "bkey").agg(
         F.count(F.lit(1)).alias("n_postings")
     )
@@ -322,7 +481,6 @@ def dedup_index_bucket_stats(
 def auto_dedup_buckets(
     n_docs: int,
     *,
-    bands: int = 4,
     target_docs_per_dir: int = 4096,
     lo: int = 16,
     hi: int = 4096,
@@ -330,16 +488,17 @@ def auto_dedup_buckets(
     """Corpus-size-adaptive ``n_buckets``: hold directory payload
     constant as the corpus grows — the same sizing logic as
     :func:`~.similarity.auto_lsh_planes`, applied to the dedup index's
-    partition geometry. Each band spreads its ``n_docs`` rows over
-    ``n_buckets`` directories, so ``n_buckets ≈ n_docs /
-    target_docs_per_dir`` keeps one directory a comfortable scan-task
-    unit at any corpus size (the fixed 64-bucket default reads 15M
-    rows/dir at a 10⁹-doc corpus). Rounded up to a power of two so
-    bucket populations stay uniform under the pmod; clamped: below
-    ``lo`` the probe reads most of the index anyway, above ``hi``
-    (4 096 dirs ≈ the measured discovery-tax regime the matched-dirs
-    read already absorbs) size by hand. Pure driver arithmetic —
-    pin-testable."""
+    partition geometry. Each fan-out group (band / srp table) spreads
+    its ``n_docs`` rows over ``n_buckets`` directories, so
+    ``n_buckets ≈ n_docs / target_docs_per_dir`` keeps one directory a
+    comfortable scan-task unit at any corpus size (the fixed 64-bucket
+    default reads 15M rows/dir at a 10⁹-doc corpus); callers pass rows
+    per group (:meth:`Family.auto_buckets`). Rounded up to a power of
+    two so bucket populations stay uniform under the pmod; clamped:
+    below ``lo`` the probe reads most of the index anyway, above
+    ``hi`` (4 096 dirs ≈ the measured discovery-tax regime the
+    matched-dirs read already absorbs) size by hand. Pure driver
+    arithmetic — pin-testable."""
     import math
 
     if n_docs <= 0:
@@ -348,9 +507,9 @@ def auto_dedup_buckets(
     return max(lo, min(hi, 1 << max(0, (want - 1).bit_length())))
 
 
-def route_dedup_append(df: DataFrame, meta: dict) -> tuple[DataFrame, str]:
-    """Append routing for ``kind="minhash"`` — called by
-    :func:`~.similarity.append_to_ann_index` so new batches band with
+def route_append(df: DataFrame, meta: dict) -> DataFrame:
+    """Append routing for the near-dup kinds — called by
+    :func:`~.similarity.append_to_ann_index` so new batches route with
     the SIDECAR's geometry (never recomputed parameters).
 
     Appends are LSM-style deltas (r9, see :data:`DELTA_PB`): the whole
@@ -362,25 +521,19 @@ def route_dedup_append(df: DataFrame, meta: dict) -> tuple[DataFrame, str]:
     small extra directory scan bounded by the compaction cadence.
     **Compact every ~32 appends** still — compaction
     (``compact_ann_index``) re-routes delta rows to their true buckets
-    from the stored band/bkey columns, bit-identical to a fresh
+    from the stored routing columns, bit-identical to a fresh
     rebuild."""
-    missing = {meta["id_col"], meta["text_col"]} - set(df.columns)
-    if missing:
-        raise ValueError(
-            f"append to minhash index: batch lacks column(s) "
-            f"{sorted(missing)} — the sidecar expects "
-            f"id_col={meta['id_col']!r}, text_col={meta['text_col']!r}"
-        )
-    routed = _banded_rows(
-        df,
-        id_col=meta["id_col"],
-        text_col=meta["text_col"],
-        n_hashes=int(meta["n_hashes"]),
-        bands=int(meta["bands"]),
-        shingle_k=int(meta["shingle_k"]),
-        n_buckets=int(meta["n_buckets"]),
-    )
-    return as_delta_append(routed), "pb"
+    _require_columns(df, meta, "append to")
+    return as_delta_append(family(meta).project(df, meta))
+
+
+def _write_rows(rows: DataFrame, path: str, meta: dict, files_per_partition) -> None:
+    """Overwrite ``path`` with routed rows partitioned by ``pb``, then
+    its sidecar."""
+    _compact_for_write(rows, "pb", files_per_partition, meta["id_col"]).write.mode(
+        "overwrite"
+    ).partitionBy("pb").parquet(path)
+    _write_ann_meta(path, meta)
 
 
 def write_dedup_index(
@@ -437,46 +590,56 @@ def write_dedup_index(
     (SCALE.md r7). One build-time shuffle bounds it to
     ``bands × n_buckets × files_per_partition`` files forever. Pass
     ``None`` only when the caller compacts separately."""
-    from .similarity import _compact_for_write
-
     fs.check_fs(path, "write_dedup_index")
     # before the auto-sizing count — a reserved id_col must not cost
     # a full corpus scan to discover
-    _require_unreserved(id_col, "write_dedup_index")
+    _require_unreserved(_RESERVED_COLS, "write_dedup_index", id_col=id_col)
     if n_hashes % bands != 0:
         # validate BEFORE the auto-sizing count — invalid parameters
         # must not cost a full corpus scan to discover
         raise ValueError(
             f"bands ({bands}) must divide n_hashes ({n_hashes})"
         )
+    meta = {
+        "kind": "minhash",
+        "id_col": id_col,
+        "text_col": text_col,
+        "n_hashes": n_hashes,
+        "bands": bands,
+        "shingle_k": shingle_k,
+    }
     if n_buckets == "auto":
-        n_buckets = auto_dedup_buckets(
-            n_docs if n_docs is not None else docs.count(), bands=bands
+        n_buckets = MINHASH.auto_buckets(
+            n_docs if n_docs is not None else docs.count(), meta
         )
-    n_buckets = int(n_buckets)
-    rows = _banded_rows(
-        docs,
-        id_col=id_col,
-        text_col=text_col,
-        n_hashes=n_hashes,
-        bands=bands,
-        shingle_k=shingle_k,
-        n_buckets=n_buckets,
-    )
-    _compact_for_write(rows, "pb", files_per_partition, id_col).write.mode(
-        "overwrite"
-    ).partitionBy("pb").parquet(path)
-    _write_ann_meta(
-        path,
-        {
-            "kind": "minhash",
-            "id_col": id_col,
-            "text_col": text_col,
-            "n_hashes": n_hashes,
-            "bands": bands,
-            "shingle_k": shingle_k,
-            "n_buckets": n_buckets,
-        },
+    meta["n_buckets"] = int(n_buckets)
+    _write_rows(MINHASH.project(docs, meta), path, meta, files_per_partition)
+
+
+def batch_against_index(
+    spark,
+    batch: DataFrame,
+    path: str,
+    *,
+    threshold,
+    kind: str | None = None,
+    caller: str = "batch_against_index",
+    plan_probe: dict | None = None,
+) -> DataFrame:
+    """The one body of the public ``*_batch_against_index`` probes:
+    load the sidecar (requiring ``kind`` when given), name missing
+    batch columns, resolve/check the threshold against the geometry
+    (:attr:`Family.check_threshold`), project the batch ONCE (pinned:
+    the pb collect and the candidate join both read it) and probe."""
+    meta = load_ann_meta(path)
+    if kind is not None:
+        _require_kind(meta, kind, caller)
+    fam = family(meta, caller)
+    _require_columns(batch, meta, "probe")
+    threshold = fam.check_threshold(meta, threshold, caller)
+    b = fam.project(batch, meta).localCheckpoint(eager=False)
+    return probe_index_with_rows(
+        spark, b, path, meta, threshold=threshold, plan_probe=plan_probe
     )
 
 
@@ -519,43 +682,42 @@ def dedup_batch_against_index(
     geometry growing 4×16 → 4×256 holds rows-behind-matched-dirs
     bounded).
     """
-    meta = load_ann_meta(path)
-    _require_kind(meta, "minhash", "dedup_batch_against_index")
-    b = _banded_rows(
-        batch,
-        id_col=meta["id_col"],
-        text_col=meta["text_col"],
-        n_hashes=int(meta["n_hashes"]),
-        bands=int(meta["bands"]),
-        shingle_k=int(meta["shingle_k"]),
-        n_buckets=int(meta["n_buckets"]),
-    ).localCheckpoint(eager=False)
-    return probe_index_with_banded_rows(
-        spark, b, path, meta, threshold=threshold
+    return batch_against_index(
+        spark, batch, path, threshold=threshold, kind="minhash",
+        caller="dedup_batch_against_index",
     )
 
 
-def probe_index_with_banded_rows(
+def probe_index_with_rows(
     spark,
-    b: DataFrame,
+    rows: DataFrame,
     path: str,
     meta: dict,
     *,
-    threshold: float,
+    threshold,
+    plan_probe: dict | None = None,
 ) -> DataFrame:
-    """The probe body of :func:`dedup_batch_against_index`, taking the
-    batch side as an ALREADY-COMPUTED ``_banded_rows`` projection (at
-    the sidecar's geometry — the caller's contract). Exists so the
-    streaming ingest loop can fingerprint each micro-batch ONCE and
-    feed the same projection to the in-batch pass, this probe, and the
-    append routing (r9 — the fixed per-batch fingerprint redundancy
-    measured as part of the loop's ~7 s cadence). ``b`` should be
-    pinned (localCheckpoint) by the caller: the pb collect below and
-    the candidate join both consume it."""
-    # bounded driver collect: ≤ bands × n_buckets ints (256 at the
-    # default geometry) — the partition-pruning literal, same shape as
-    # the ANN probes' cell/bucket lists
-    pbs = [r["pb"] for r in b.select("pb").distinct().collect()]
+    """The probe body of every near-dup kind, taking the batch side as
+    an ALREADY-COMPUTED family projection (at the sidecar's geometry —
+    the caller's contract). Exists so the streaming ingest loop can
+    fingerprint each micro-batch ONCE and feed the same projection to
+    the in-batch pass, this probe, and the append routing (r9 — the
+    fixed per-batch fingerprint redundancy measured as part of the
+    loop's ~7 s cadence). ``rows`` should be pinned (localCheckpoint)
+    by the caller: the pb collect below and the candidate join both
+    consume it. Returns ``(batch_id, corpus_id, <score_name>)``.
+
+    ``plan_probe`` is a test seam: when a dict is passed, the
+    candidate frame (before the srp vector fetch pins it) is stored
+    under ``plan_probe["candidates"]`` so plan gates can assert the
+    posting scan's ``PartitionFilters``."""
+    fam = family(meta)
+    id_col = meta["id_col"]
+    members = fam.members(meta)
+    # bounded driver collect: ≤ the geometry's directory count ints
+    # (256 at the default minhash geometry) — the partition-pruning
+    # literal, same shape as the ANN probes' cell/bucket lists
+    pbs = [r["pb"] for r in rows.select("pb").distinct().collect()]
     # the active generation dir after a generational compaction (r12),
     # the index root before one
     droot = active_data_root(path)
@@ -564,7 +726,6 @@ def probe_index_with_banded_rows(
     # single small directory bounded by the compaction cadence
     if fs.is_dir(fs.join(droot, f"pb={DELTA_PB}")):
         pbs = pbs + [DELTA_PB]
-    id_col = meta["id_col"]
     # Matched-directories-only read: above ~32 directories Spark's
     # partition discovery launches a listing JOB over every directory
     # — measured 7.4 s of the probe's 8.1 s at a 4×1024 geometry
@@ -572,145 +733,96 @@ def probe_index_with_banded_rows(
     # bytes. See read_matched_partitions; the redundant isin filter
     # below still lands in PartitionFilters (plan-gated) as a guard.
     # total_partitions arms the flat-read crossover (r9 verdict #3):
-    # a batch matching > half the bands×n_buckets directories reads
-    # the index flat instead of listing ~every directory explicitly.
+    # a batch matching > half the directories reads the index flat
+    # instead of listing ~every directory explicitly.
     rel = read_matched_partitions(
-        spark,
-        droot,
-        "pb",
-        pbs,
-        total_partitions=int(meta["bands"]) * int(meta["n_buckets"]),
+        spark, droot, "pb", pbs, total_partitions=fam.dirs(meta)
     )
-    if rel is None:
-        from pyspark.sql.types import DoubleType, StructField, StructType
 
-        idt = b.schema[id_col].dataType
+    def side(df: DataFrame, id_alias: str, s: str) -> DataFrame:
+        return df.select(
+            *fam.keys,
+            F.col(id_col).alias(id_alias),
+            *[F.col(m).alias(side_col(m, s)) for m in members],
+        )
+
+    def scored(s_b: str, s_c: str) -> Column:
+        return fam.score(
+            [F.col(side_col(m, s_b)) for m in members],
+            [F.col(side_col(m, s_c)) for m in members],
+        ).alias(fam.score_name)
+
+    if rel is None:
+        from pyspark.sql.types import StructField, StructType
+
+        # the typed empty result: score type read off the analyzed
+        # batch projection (no job)
+        score_t = side(rows, "batch_id", "b").select(scored("b", "b")).schema[0]
+        idt = rows.schema[id_col].dataType
         return spark.createDataFrame(
             [],
             StructType(
                 [
                     StructField("batch_id", idt),
                     StructField("corpus_id", idt),
-                    StructField("jaccard", DoubleType()),
+                    StructField(fam.score_name, score_t.dataType),
                 ]
             ),
         )
-    corpus = (
-        rel
-        .where(F.col("pb").isin(pbs))
-        .select(
-            F.col("band").alias("band"),
-            F.col("bkey").alias("bkey"),
-            F.col(id_col).alias("corpus_id"),
-            F.col("sh").alias("_sh_c"),
-        )
-    )
-    bb = b.select(
-        "band",
-        "bkey",
-        F.col(id_col).alias("batch_id"),
-        F.col("sh").alias("_sh_b"),
-    )
     cands = (
-        bb.join(corpus, ["band", "bkey"])
+        side(rows, "batch_id", "b")
+        .join(side(rel.where(F.col("pb").isin(pbs)), "corpus_id", "c"), list(fam.keys))
         # a re-probed doc whose id already lives in the index would
-        # match its own postings (jaccard 1.0) — the in-memory twin
-        # over corpus ∪ batch can never emit a self-pair (id_a < id_b),
-        # so neither does this probe
+        # match its own postings — the in-memory twin over
+        # corpus ∪ batch can never emit a self-pair (id_a < id_b), so
+        # neither does this probe
         .where(F.col("batch_id") != F.col("corpus_id"))
-        .select("batch_id", "corpus_id", "_sh_b", "_sh_c")
-        # a pair sharing several bands must verify once, not per band
+        .select(
+            "batch_id", "corpus_id",
+            *[side_col(m, s) for s in "bc" for m in members],
+        )
+        # a pair sharing several keys must verify once, not per key
         .dropDuplicates(["batch_id", "corpus_id"])
     )
-    return cands.select(
-        "batch_id",
-        "corpus_id",
-        jaccard_verify_col(F.col("_sh_b"), F.col("_sh_c")).alias("jaccard"),
-    ).where(F.col("jaccard") >= threshold)
-
-
-# ---------------------------------------------------------------------------
-# SimHash at rest — the same incremental-dedup story for the Hamming
-# family (near_duplicate_pairs ↔ write_dedup_index is the Jaccard
-# pair). One parquet table partitioned by pb = xxhash64(bucket) mod
-# n_buckets, rows carrying the packed chunk-bucket key AND the full
-# 64-bit fingerprint, so a probe is one pruned scan + bucket equi-join
-# + bit_count verify — never a corpus re-fingerprint. Rides the SAME
-# sidecar/append/compact lifecycle (kind="simhash"), including
-# regeometry (pb recomputes from the stored bucket column).
-# ---------------------------------------------------------------------------
-
-
-def _simhash_rows(
-    df: DataFrame,
-    *,
-    id_col: str,
-    text_col: str,
-    hash_family: str,
-    n_chunks: int,
-    chunks_per_key: int,
-    n_buckets: int,
-) -> DataFrame:
-    """(pb, bucket, <id>, sh) rows — keys_per_doc rows per doc, the
-    shared projection for build, append routing, and the probe's batch
-    side. Fingerprint once, explode the packed keys once. The bucket
-    formula is owned by :func:`~.dedup.simhash_bucket_keys` (byte-
-    identical to the in-memory operator); ``pb`` mixes the packed key
-    through xxhash64 before the mod because the key's low bits are raw
-    chunk bits (a plain mod would route every combo's chunk-value
-    residue to the same few directories)."""
-    from .dedup import simhash_bucket_keys, simhash_col
-
-    _require_unreserved(id_col, "_simhash_rows")
-    sig = df.select(
-        F.col(id_col),
-        simhash_col(text_col, hash_family=hash_family).alias("sh"),
-    )
-    keys = simhash_bucket_keys(
-        F.col("sh"), n_chunks=n_chunks, chunks_per_key=chunks_per_key
-    )
-    banded = sig.select(
-        id_col, "sh", F.explode(F.array(*keys)).alias("bucket")
-    )
-    return banded.select(
-        F.pmod(F.xxhash64(F.col("bucket")), F.lit(n_buckets))
-        .cast("int")
-        .alias("pb"),
-        "bucket",
-        id_col,
-        "sh",
+    if plan_probe is not None:
+        plan_probe["candidates"] = cands
+    if fam.fetch is not None:
+        cands = fam.fetch(spark, cands, rel, pbs, droot, path, meta)
+    return cands.select("batch_id", "corpus_id", scored("b", "c")).where(
+        fam.passes(F.col(fam.score_name), threshold)
     )
 
 
-def simhash_keys_per_doc(n_chunks: int, chunks_per_key: int) -> int:
-    """Rows each doc posts: n_chunks single-chunk keys, or
-    C(n_chunks, 2) pair-chunk keys."""
-    if chunks_per_key == 1:
-        return n_chunks
-    return n_chunks * (n_chunks - 1) // 2
-
-
-def route_simhash_append(df: DataFrame, meta: dict) -> tuple[DataFrame, str]:
-    """Append routing for ``kind="simhash"`` — sidecar geometry only,
-    same contract (and the same LSM delta form) as
-    :func:`route_dedup_append`."""
-    missing = {meta["id_col"], meta["text_col"]} - set(df.columns)
-    if missing:
-        raise ValueError(
-            f"append to simhash index: batch lacks column(s) "
-            f"{sorted(missing)} — the sidecar expects "
-            f"id_col={meta['id_col']!r}, text_col={meta['text_col']!r}"
-        )
-    routed = _simhash_rows(
-        df,
-        id_col=meta["id_col"],
-        text_col=meta["text_col"],
-        hash_family=meta["hash_family"],
-        n_chunks=int(meta["n_chunks"]),
-        chunks_per_key=int(meta["chunks_per_key"]),
-        n_buckets=int(meta["n_buckets"]),
+def pairs_from_rows(rows: DataFrame, meta: dict, *, threshold) -> DataFrame:
+    """Within-set near-dup pairs from a precomputed family projection —
+    ``(id_a, id_b, <score_name>)`` with ``id_a < id_b`` and the score
+    passing ``threshold``, identical (as a set) to the kind's in-memory
+    operator over the same docs at the same geometry (pinned by the
+    per-kind index tests): the bucket keys are the same values and the
+    verify is the same score over the same payload, just read from the
+    rows instead of recomputed. This is the streaming ingest loop's
+    in-batch pass (r9): one fingerprint pass feeds in-batch pairing,
+    the index probe, AND the append routing. Verification happens
+    inside the bucket (before the pair explode), so sub-threshold
+    candidates are pruned without a second sets-join. ``meta`` needs
+    only ``kind`` and ``id_col`` (plus ``vec_col`` for srp)."""
+    fam = family(meta)
+    id_col = meta["id_col"]
+    members = fam.members(meta)
+    return _intra_bucket_pairs(
+        rows,
+        list(fam.keys),
+        [id_col, *members],
+        lambda x, y: F.struct(
+            x[id_col].alias("id_a"),
+            y[id_col].alias("id_b"),
+            fam.score([x[m] for m in members], [y[m] for m in members]).alias(
+                fam.score_name
+            ),
+        ),
+        lambda p: (p["id_a"] < p["id_b"])
+        & fam.passes(p[fam.score_name], threshold),
     )
-    return as_delta_append(routed), "pb"
 
 
 def write_simhash_index(
@@ -745,46 +857,27 @@ def write_simhash_index(
     explodes file count) — and the same exact-dedup-before-indexing
     guidance applies (m exact copies share every bucket; the ingest
     loop's stage 1 already guarantees this for loop-grown indexes)."""
-    from .similarity import _compact_for_write
-
-    fs.check_fs(path, "write_simhash_index")
-    _require_unreserved(id_col, "write_simhash_index")
     from .dedup import simhash_bucket_keys as _validate
 
+    fs.check_fs(path, "write_simhash_index")
+    _require_unreserved(_RESERVED_COLS, "write_simhash_index", id_col=id_col)
     # parameter validation (raises on bad n_chunks/chunks_per_key)
     # BEFORE the auto-sizing count — same rule as write_dedup_index
     _validate(F.lit(0), n_chunks=n_chunks, chunks_per_key=chunks_per_key)
-    kpd = simhash_keys_per_doc(n_chunks, chunks_per_key)
+    meta = {
+        "kind": "simhash",
+        "id_col": id_col,
+        "text_col": text_col,
+        "hash_family": hash_family,
+        "n_chunks": n_chunks,
+        "chunks_per_key": chunks_per_key,
+    }
     if n_buckets == "auto":
-        n_buckets = auto_dedup_buckets(
-            (n_docs if n_docs is not None else docs.count()) * kpd,
-            bands=1,
+        n_buckets = SIMHASH.auto_buckets(
+            n_docs if n_docs is not None else docs.count(), meta
         )
-    n_buckets = int(n_buckets)
-    rows = _simhash_rows(
-        docs,
-        id_col=id_col,
-        text_col=text_col,
-        hash_family=hash_family,
-        n_chunks=n_chunks,
-        chunks_per_key=chunks_per_key,
-        n_buckets=n_buckets,
-    )
-    _compact_for_write(rows, "pb", files_per_partition, id_col).write.mode(
-        "overwrite"
-    ).partitionBy("pb").parquet(path)
-    _write_ann_meta(
-        path,
-        {
-            "kind": "simhash",
-            "id_col": id_col,
-            "text_col": text_col,
-            "hash_family": hash_family,
-            "n_chunks": n_chunks,
-            "chunks_per_key": chunks_per_key,
-            "n_buckets": n_buckets,
-        },
-    )
+    meta["n_buckets"] = int(n_buckets)
+    _write_rows(SIMHASH.project(docs, meta), path, meta, files_per_partition)
 
 
 def simhash_batch_against_index(
@@ -801,77 +894,9 @@ def simhash_batch_against_index(
     corpus ∪ batch (pinned bit-equal), at O(batch + matched buckets)
     cost. Same partition-pruned matched-directories read, bounded
     driver collect, self-pair filter, and per-pair dedup as the
-    minhash probe."""
-    meta = load_ann_meta(path)
-    _require_kind(meta, "simhash", "simhash_batch_against_index")
-    b = _simhash_rows(
-        batch,
-        id_col=meta["id_col"],
-        text_col=meta["text_col"],
-        hash_family=meta["hash_family"],
-        n_chunks=int(meta["n_chunks"]),
-        chunks_per_key=int(meta["chunks_per_key"]),
-        n_buckets=int(meta["n_buckets"]),
-    ).localCheckpoint(eager=False)
-    return probe_index_with_simhash_rows(
-        spark, b, path, meta, max_hamming=max_hamming
+    minhash probe. A ``max_hamming`` beyond the geometry's pigeonhole
+    guarantee warns (pairs past it may be missed by banding)."""
+    return batch_against_index(
+        spark, batch, path, threshold=max_hamming, kind="simhash",
+        caller="simhash_batch_against_index",
     )
-
-
-def probe_index_with_simhash_rows(
-    spark,
-    b: DataFrame,
-    path: str,
-    meta: dict,
-    *,
-    max_hamming: int,
-) -> DataFrame:
-    """Probe body of :func:`simhash_batch_against_index` over an
-    already-computed ``_simhash_rows`` projection — the Hamming twin
-    of :func:`probe_index_with_banded_rows`, same caller contract
-    (including the delta-directory read)."""
-    pbs = [r["pb"] for r in b.select("pb").distinct().collect()]
-    droot = active_data_root(path)
-    if fs.is_dir(fs.join(droot, f"pb={DELTA_PB}")):
-        pbs = pbs + [DELTA_PB]
-    id_col = meta["id_col"]
-    rel = read_matched_partitions(
-        spark, droot, "pb", pbs, total_partitions=int(meta["n_buckets"])
-    )
-    if rel is None:
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        idt = b.schema[id_col].dataType
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("batch_id", idt),
-                    StructField("corpus_id", idt),
-                    StructField("hamming", IntegerType()),
-                ]
-            ),
-        )
-    corpus = rel.where(F.col("pb").isin(pbs)).select(
-        "bucket",
-        F.col(id_col).alias("corpus_id"),
-        F.col("sh").alias("_sh_c"),
-    )
-    bb = b.select(
-        "bucket",
-        F.col(id_col).alias("batch_id"),
-        F.col("sh").alias("_sh_b"),
-    )
-    cands = (
-        bb.join(corpus, "bucket")
-        .where(F.col("batch_id") != F.col("corpus_id"))
-        .select("batch_id", "corpus_id", "_sh_b", "_sh_c")
-        .dropDuplicates(["batch_id", "corpus_id"])
-    )
-    return cands.select(
-        "batch_id",
-        "corpus_id",
-        F.bit_count(F.col("_sh_b").bitwiseXOR(F.col("_sh_c")))
-        .cast("int")
-        .alias("hamming"),
-    ).where(F.col("hamming") <= max_hamming)

@@ -1,11 +1,13 @@
 """At-rest embedding near-dup index (``kind="srp"``) — the cosine
-family's incremental-dedup story, completing the triad started by
-``operators/dedup_index.py``: minhash (Jaccard) and simhash (Hamming)
-already dedup a new batch against the indexed corpus in
-O(batch + matched buckets); this module gives
-:func:`~.similarity.embedding_near_duplicate_pairs` the same shape.
-Without it, embedding-cosine near-dup is the one family where a daily
-0.1% increment still pays a full-corpus re-bucketing pass.
+family's incremental-dedup story: the third near-dup index kind next
+to ``operators/dedup_index.py``'s minhash (Jaccard) and simhash
+(Hamming), giving :func:`~.similarity.embedding_near_duplicate_pairs`
+the same O(batch + matched buckets) shape. Without it, embedding-cosine
+near-dup is the one family where a daily 0.1% increment still pays a
+full-corpus re-bucketing pass. This module holds the kind's
+:data:`SRP` family record; append routing, the probe, the in-batch
+pairs and compaction are the shared ``dedup_index`` /
+``compact_ann_index`` steps.
 
 Layout (:func:`write_srp_index`, ``"normalized"`` since r10): ONE
 parquet table partitioned by ``pb``, holding two row roles —
@@ -27,11 +29,13 @@ probe time, but an ``n_tables``× storage/scan multiplier (10× at the
 normalized layout **7.9× smaller at rest** (330 MB vs 2.61 GB),
 compaction 2.8× faster, probe +16% wall (one extra pruned join) —
 at 100 TB of embeddings the storage term dominates, so normalized is
-the build default. Probes verify through a vb-pruned vector fetch
-(candidate ids → their vector directories), and LSM delta appends
-(``pb = −1``) still carry the payload inline — a delta is small and
-transient, and inlining keeps the append a single atomic file;
-compaction splits it into the two roles.
+the only layout; a sidecar without ``layout: "normalized"`` is
+rejected. Probes verify through a vb-pruned vector fetch (candidate
+ids → their vector directories, :func:`_fetch_vectors` — the one
+kind-specific probe step), and LSM delta appends (``pb = −1``) still
+carry the payload inline — a delta is small and transient, and
+inlining keeps the append a single atomic file; compaction splits it
+into the two roles (:func:`split_row_roles`).
 
 Probe (:func:`embedding_batch_against_index`): bit-identical, as a
 set, to running the in-memory operator over corpus ∪ batch at the
@@ -48,20 +52,16 @@ boundary, measured against the SRP closed form in
 ``tests/test_embedding_recall.py``). Probing at a LOOSER threshold
 than the index was designed for silently drops below that floor
 (r1 falls with the threshold), so the probe warns — the same
-geometry-vs-parameter honesty as the simhash loop's
-max_hamming-vs-pigeonhole warning.
+geometry-vs-parameter honesty as the simhash max_hamming-vs-pigeonhole
+warning.
 
-Lifecycle: ``kind="srp"`` rides the SAME sidecar + append/compact
-protocol as the other four kinds — appends are single-file ``pb=-1``
-LSM deltas (:data:`~.dedup_index.DELTA_PB`) routed with the sidecar's
-own planes, probes read matched directories plus the delta, and
-``compact_ann_index`` is the LSM merge; ``regeometry=True``
-re-derives the bucket count from the grown corpus and re-routes from
-the STORED (tbl, bucket) columns, bit-identical to a fresh rebuild
-(planes are never re-derived — unlike n_buckets they define routing
-semantics, but they live in the sidecar, so re-routing needs no
-vector math at all). :func:`~.dedup_index.dedup_index_bucket_stats`
-reports hot (tbl, bucket) keys for this kind too.
+Lifecycle: ``regeometry=True`` compaction re-derives the bucket count
+from the grown corpus and re-routes from the STORED (tbl, bucket)
+columns, bit-identical to a fresh rebuild (planes are never
+re-derived — unlike n_buckets they define routing semantics, but they
+live in the sidecar, so re-routing needs no vector math at all).
+:func:`~.dedup_index.dedup_index_bucket_stats` reports hot (tbl,
+bucket) keys for this kind too.
 
 Reference parity note: the reference pipeline has no vector ops at
 all; this extends the engine-native embedding dedup family
@@ -75,17 +75,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import l2_norm_col
-from .dedup import _intra_bucket_pairs
-from .dedup_index import DELTA_PB, as_delta_append, auto_dedup_buckets
+from .dedup_index import (
+    DELTA_PB,
+    Family,
+    _require_unreserved,
+    _write_rows,
+    batch_against_index,
+    side_col,
+)
 from .. import fs
 from .similarity import (
     _cosine_with_norms,
-    _require_kind,
-    _write_ann_meta,
-    active_data_root,
     auto_lsh_planes,
     auto_lsh_tables,
-    load_ann_meta,
+    crossover_flat_read,
     lsh_bucket_structs_col,
     read_matched_partitions,
 )
@@ -118,13 +121,35 @@ def _vec_pb_col(id_col: str, n_vec_buckets: int):
     ).cast("int")
 
 
-def _require_unreserved(name: str, role: str, caller: str) -> None:
-    if name in _RESERVED_COLS:
+def _require_normalized(meta: dict) -> None:
+    if meta.get("layout") != "normalized":
         raise ValueError(
-            f"{caller}: {role} {name!r} collides with an internal "
-            f"index column — rename it (reserved: "
-            f"{sorted(_RESERVED_COLS)})"
+            f"srp index sidecar has layout={meta.get('layout')!r} — "
+            "expected layout='normalized' (posting rows + one vector "
+            "row per id); rebuild the index with write_srp_index"
         )
+
+
+def _two_roles(
+    postings: DataFrame, vectors: DataFrame, meta: dict, n_vec_buckets: int
+) -> DataFrame:
+    """The normalized layout from routed posting rows (payload
+    stripped here) and one ``(id, vec, nrm)`` row per vector (routed
+    to its vector directory here)."""
+    id_c, vec_c = meta["id_col"], meta["vec_col"]
+    vec_t = postings.schema[vec_c].dataType
+    return postings.select(
+        "pb", "tbl", "bucket", id_c, F.lit(None).cast(vec_t).alias(vec_c), "nrm"
+    ).unionByName(
+        vectors.select(
+            _vec_pb_col(id_c, n_vec_buckets).alias("pb"),
+            F.lit(None).cast("int").alias("tbl"),
+            F.lit(None).cast("long").alias("bucket"),
+            F.col(id_c),
+            F.col(vec_c),
+            F.col("nrm"),
+        )
+    )
 
 
 def _srp_rows(
@@ -145,8 +170,7 @@ def _srp_rows(
     (tbl, bucket) keys — the same one-scan shape (and the same
     seed-per-table bucket ids) as the in-memory operator's multi-table
     path, so index and query always agree on routing."""
-    _require_unreserved(id_col, "id_col", "_srp_rows")
-    _require_unreserved(vec_col, "vec_col", "_srp_rows")
+    _require_unreserved(_RESERVED_COLS, "_srp_rows", id_col=id_col, vec_col=vec_col)
     # ALL tables' (tbl, bucket) structs in ONE HOF expression over a
     # single parsed plane-matrix literal (r13): same bucket ids
     # bit-for-bit as the former per-table lsh_bucket_col fan-out
@@ -182,61 +206,6 @@ def _srp_rows(
         vec_col,
         "nrm",
     )
-
-
-def pairs_from_srp_rows(
-    rows: DataFrame, *, id_col: str, vec_col: str, threshold: float
-) -> DataFrame:
-    """Within-set near-dup pairs from a precomputed ``_srp_rows``
-    projection — ``(id_a, id_b, cosine_sim)`` with ``id_a < id_b`` and
-    cosine ≥ threshold, identical (as a set) to
-    :func:`~.similarity.embedding_near_duplicate_pairs` over the same
-    vectors at the same (n_planes, n_tables, seed) geometry (pinned by
-    ``tests/test_srp_index.py``): same bucket ids, same
-    norms-pre-folded cosine, just read from the rows instead of
-    recomputed. This is the streaming ingest loop's in-batch pass for
-    the srp family — one projection feeds in-batch pairing, the index
-    probe, AND the append routing."""
-    pairs = _intra_bucket_pairs(
-        rows,
-        ["tbl", "bucket"],
-        [id_col, vec_col, "nrm"],
-        lambda x, y: F.struct(
-            x[id_col].alias("id_a"),
-            y[id_col].alias("id_b"),
-            _cosine_with_norms(
-                x[vec_col], y[vec_col], x["nrm"], y["nrm"]
-            ).alias("cosine_sim"),
-        ),
-        lambda p: p["id_a"] < p["id_b"],
-    )
-    return pairs.where(F.col("cosine_sim") >= threshold)
-
-
-def route_srp_append(df: DataFrame, meta: dict) -> tuple[DataFrame, str]:
-    """Append routing for ``kind="srp"`` — called by
-    :func:`~.similarity.append_to_ann_index` so new batches bucket
-    with the SIDECAR's own planes/seed (never recomputed parameters),
-    landing as one LSM delta file (same contract as
-    :func:`~.dedup_index.route_dedup_append`)."""
-    missing = {meta["id_col"], meta["vec_col"]} - set(df.columns)
-    if missing:
-        raise ValueError(
-            f"append to srp index: batch lacks column(s) "
-            f"{sorted(missing)} — the sidecar expects "
-            f"id_col={meta['id_col']!r}, vec_col={meta['vec_col']!r}"
-        )
-    routed = _srp_rows(
-        df,
-        id_col=meta["id_col"],
-        vec_col=meta["vec_col"],
-        dim=int(meta["dim"]),
-        n_planes=int(meta["n_planes"]),
-        n_tables=int(meta["n_tables"]),
-        seed=int(meta["seed"]),
-        n_buckets=int(meta["n_buckets"]),
-    )
-    return as_delta_append(routed), "pb"
 
 
 def write_srp_index(
@@ -292,13 +261,12 @@ def write_srp_index(
     ``files_per_partition`` defaults ON (1) for the same measured
     reason as the other index kinds (uniform keys → a shuffle-free
     write puts every input task's rows into every directory)."""
-    from .similarity import _compact_for_write
-
     fs.check_fs(path, "write_srp_index")
     # guards BEFORE the auto-sizing count — invalid inputs must not
     # cost a full corpus scan to discover
-    _require_unreserved(id_col, "id_col", "write_srp_index")
-    _require_unreserved(vec_col, "vec_col", "write_srp_index")
+    _require_unreserved(
+        _RESERVED_COLS, "write_srp_index", id_col=id_col, vec_col=vec_col
+    )
     if not -1.0 <= design_threshold <= 1.0:
         raise ValueError(
             f"write_srp_index: design_threshold must be a cosine in "
@@ -324,60 +292,59 @@ def write_srp_index(
             f"write_srp_index: n_planes ({n_planes}) and n_tables "
             f"({n_tables}) must be >= 1"
         )
+    meta = {
+        "kind": "srp",
+        "layout": "normalized",
+        "id_col": id_col,
+        "vec_col": vec_col,
+        "dim": dim,
+        "n_planes": n_planes,
+        "n_tables": n_tables,
+        "seed": seed,
+        "design_threshold": design_threshold,
+        "recall_target": recall_target,
+    }
     if n_buckets == "auto":
         # per-TABLE payload (pb carries the table index): n_rows /
         # n_buckets rows per directory, independent of n_tables
-        n_buckets = auto_dedup_buckets(n_rows, bands=1)
-    n_buckets = int(n_buckets)
+        n_buckets = SRP.auto_buckets(n_rows, meta)
     # vector rows have the same rows-per-directory target as one
     # table's postings, so the same formula sizes their directories
-    n_vec_buckets = n_buckets
-    rows = _srp_rows(
-        df,
-        id_col=id_col,
-        vec_col=vec_col,
-        dim=dim,
-        n_planes=n_planes,
-        n_tables=n_tables,
-        seed=seed,
-        n_buckets=n_buckets,
-    )
-    vec_type = df.schema[vec_col].dataType
-    postings = rows.select(
-        "pb",
-        "tbl",
-        "bucket",
-        id_col,
-        F.lit(None).cast(vec_type).alias(vec_col),
-        "nrm",
-    )
+    meta["n_buckets"] = meta["n_vec_buckets"] = int(n_buckets)
     vectors = df.select(
-        _vec_pb_col(id_col, n_vec_buckets).alias("pb"),
-        F.lit(None).cast("int").alias("tbl"),
-        F.lit(None).cast("long").alias("bucket"),
-        F.col(id_col),
-        F.col(vec_col),
-        l2_norm_col(vec_col).alias("nrm"),
+        F.col(id_col), F.col(vec_col), l2_norm_col(vec_col).alias("nrm")
     )
-    _compact_for_write(
-        postings.unionByName(vectors), "pb", files_per_partition, id_col
-    ).write.mode("overwrite").partitionBy("pb").parquet(path)
-    _write_ann_meta(
-        path,
-        {
-            "kind": "srp",
-            "layout": "normalized",
-            "id_col": id_col,
-            "vec_col": vec_col,
-            "dim": dim,
-            "n_planes": n_planes,
-            "n_tables": n_tables,
-            "seed": seed,
-            "n_buckets": n_buckets,
-            "n_vec_buckets": n_vec_buckets,
-            "design_threshold": design_threshold,
-            "recall_target": recall_target,
-        },
+    _write_rows(
+        _two_roles(SRP.project(df, meta), vectors, meta, int(n_buckets)),
+        path, meta, files_per_partition,
+    )
+
+
+def split_row_roles(
+    df: DataFrame, meta: dict, new_pb, n_vec_buckets: int
+) -> tuple[DataFrame, dict]:
+    """The srp step of ``compact_ann_index``: posting rows re-route
+    from their stored (tbl, bucket) via ``new_pb`` exactly like the
+    other near-dup kinds; vector rows re-route from the id alone; and
+    LSM delta rows — which carry the payload inline so an append stays
+    one atomic file — SPLIT into both roles: their payload is stripped
+    from the postings and lands once per id in the vector
+    directories. Returns the rewritten rows and sidecar."""
+    _require_normalized(meta)
+    id_c, vec_c = meta["id_col"], meta["vec_col"]
+    is_posting = F.col("tbl").isNotNull()
+    vectors = (
+        df.where(~is_posting)
+        .select(id_c, vec_c, "nrm")
+        # delta postings of not-yet-compacted vectors: one vector row
+        # per distinct id
+        .unionByName(df.where(F.col("pb") == DELTA_PB).select(id_c, vec_c, "nrm"))
+        .dropDuplicates([id_c])
+    )
+    postings = df.where(is_posting).withColumn("pb", new_pb.cast("int"))
+    return (
+        _two_roles(postings, vectors, meta, n_vec_buckets),
+        {**meta, "n_vec_buckets": n_vec_buckets},
     )
 
 
@@ -403,8 +370,158 @@ def _warn_if_looser_than_design(meta: dict, threshold: float, caller: str):
             f"the {meta.get('recall_target', 0.9)} it was sized for; "
             "rebuild with a lower design_threshold to close the gap",
             UserWarning,
-            stacklevel=3,
+            stacklevel=4,
         )
+
+
+def _srp_threshold(meta: dict, threshold: float | None, caller: str) -> float:
+    """``None`` probes at the sidecar's ``design_threshold`` (the
+    boundary the geometry's recall was sized for); an explicit looser
+    threshold warns."""
+    if threshold is None:
+        if "design_threshold" not in meta:
+            raise ValueError(
+                f"{caller}: srp sidecar has no 'design_threshold' and "
+                "no explicit threshold was given — pass one or repair "
+                "the sidecar (hand-edited or foreign kind='srp' "
+                "metadata?)"
+            )
+        return float(meta["design_threshold"])
+    _warn_if_looser_than_design(meta, threshold, caller)
+    return threshold
+
+
+def _fetch_vectors(spark, cands, rel, pbs, droot, path, meta):
+    """The srp step between candidates and scoring (normalized layout,
+    module docstring): candidate pairs come from the pruned posting
+    directories, and the vector payload for the verify is fetched from
+    the CANDIDATES' own vector directories — the distinct candidate
+    ids' ``vec pb`` values (bounded by ``n_vec_buckets`` and, for small
+    probes, by the candidate count) prune that second read the same way
+    the posting ``pb`` values prune the first. r11 derived those values
+    from every id in the matched POSTING directories instead — a
+    superset that covers essentially all vector buckets once
+    ``n_rows / n_buckets`` ids per directory × matched directories ≫
+    ``n_vec_buckets`` (at 10M vectors the 100-vector probe read ~the
+    whole 2.6 GB vector store; probe wall 9.9 s at 1M → 38.5 s at 10M
+    while the posting side stayed O(batch) — SCALE.md r11 stretch, the
+    r11 verdict's #1). Candidate-driven pruning restores O(batch):
+    measured 43.8 s → see SCALE.md r12 on the same 10M index, pairs
+    set-equal. Delta rows (``pb = −1``) carry the payload inline (they
+    may hold vectors not yet compacted into vector directories), so
+    the verify coalesces inline-over-fetched."""
+    _require_normalized(meta)
+    id_col, vec_col = meta["id_col"], meta["vec_col"]
+    v_c = side_col(vec_col, "c")
+    # the SAME decision read_matched_partitions made for `rel` — shared
+    # helper, so the two sites cannot drift (ADVICE r11: a drifted copy
+    # here would fetch from a pruned posting-only relation and silently
+    # drop every pair)
+    if crossover_flat_read(pbs, SRP.dirs(meta)):
+        # Big-batch regime (r11, verdict #3): `rel` was read FLAT past
+        # the pruning crossover, so it ALREADY contains every vector
+        # row — running the vbs pruning job (a full scan of the matched
+        # postings) and then a second read of the vector directories
+        # would cost two extra passes to select directories the
+        # candidates cover almost entirely anyway. Fetch straight from
+        # the flat relation instead: zero extra jobs, one fewer scan.
+        # Measured at the sf0.1 bench geometry: probe 1.35 s → 0.94 s
+        # (SCALE.md r11).
+        def _is_vec_dir(e: str) -> bool:
+            if not e.startswith("pb="):
+                return False
+            try:
+                return int(e.split("=", 1)[1]) <= VEC_PB_BASE
+            except ValueError:
+                return False
+
+        if not any(_is_vec_dir(e) for e in fs.listdir(droot)):
+            raise RuntimeError(
+                f"srp probe: normalized srp index at {path} has posting "
+                "rows but no vector directories (pb <= -2) exist on "
+                "disk — the index is missing its vector rows (partial "
+                "copy/corruption); rebuild or re-copy it."
+            )
+        fetched = rel.where(F.col("tbl").isNull())
+    else:
+        # Small-probe regime (r12, verdict #1): vector-side partition
+        # pruning driven by the CANDIDATES themselves. The lazy
+        # localCheckpoint pins the bucket join so the vec-pb collect
+        # below and the final pair plan share ONE execution of the
+        # posting scan (without it the collect would be a second full
+        # run of the join); the checkpoint is bounded — candidate pairs
+        # after dedup, carrying two vectors each, ≤ batch keys × bucket
+        # population. Only rows whose payload is NOT already inline
+        # (NULL corpus vector) need the fetch, so they alone contribute
+        # vec-pb values — bounded by n_vec_buckets, and for a small
+        # probe by the candidate count itself.
+        cands = cands.localCheckpoint(eager=False)
+        vpb = _vec_pb_col("corpus_id", int(meta["n_vec_buckets"]))
+        vbs = [
+            r["vpb"]
+            for r in cands.where(F.col(v_c).isNull())
+            .select(vpb.alias("vpb"))
+            .distinct()
+            .collect()
+        ]
+        if not vbs:
+            return cands
+        vrel = read_matched_partitions(spark, droot, "pb", vbs)
+        if vrel is None:
+            # candidates with base postings exist (vbs derives from
+            # them) but NONE of their vector directories do — a
+            # partially copied or corrupted index. Silently continuing
+            # would leave every candidate's corpus vector NULL, NULL
+            # cosine, every pair dropped — indistinguishable from a
+            # genuine no-match probe (ADVICE r10). Fail with the cause
+            # named instead.
+            raise RuntimeError(
+                f"srp probe: normalized srp index at {path} has posting "
+                f"rows but none of their vector directories (pb in "
+                f"{sorted(vbs)[:8]}...) exist on disk — the index is "
+                "missing its vector rows (partial copy/corruption); "
+                "rebuild or re-copy it."
+            )
+        fetched = vrel.where(F.col("pb").isin(vbs))
+    fetched = fetched.select(
+        F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("_v_f")
+    )
+    # A NULL corpus vector winning the candidate dedup is safe: an id
+    # whose ONLY copy is inline (appended since the last compact) has
+    # no base postings, so every row it can contribute carries the
+    # payload; an id with base postings has vector rows, so this fetch
+    # covers it either way.
+    return (
+        cands.join(fetched, "corpus_id", "left")
+        .withColumn(v_c, F.coalesce(v_c, "_v_f"))
+        .drop("_v_f")
+    )
+
+
+SRP = Family(
+    kind="srp",
+    payload_key="vec_col",
+    project=lambda df, m: _srp_rows(
+        df,
+        id_col=m["id_col"],
+        vec_col=m["vec_col"],
+        dim=int(m["dim"]),
+        n_planes=int(m["n_planes"]),
+        n_tables=int(m["n_tables"]),
+        seed=int(m["seed"]),
+        n_buckets=int(m["n_buckets"]),
+    ),
+    keys=("tbl", "bucket"),
+    members=lambda m: (m["vec_col"], "nrm"),
+    score=lambda a, b: _cosine_with_norms(a[0], b[0], a[1], b[1]),
+    score_name="cosine_sim",
+    measure="cosine",
+    at_most=False,
+    pb=lambda nb: F.col("tbl") * nb + F.pmod(F.xxhash64(F.col("bucket")), F.lit(nb)),
+    fanout_key="n_tables",
+    check_threshold=_srp_threshold,
+    fetch=_fetch_vectors,
+)
 
 
 def embedding_batch_against_index(
@@ -442,77 +559,7 @@ def embedding_batch_against_index(
     probe reads the index flat instead of listing matched dirs (same
     rows, one listing pass saved) and warns; split very large batches
     or size ``n_buckets`` above the steady batch size to keep probes
-    pruned."""
-    meta = load_ann_meta(path)
-    _require_kind(meta, "srp", "embedding_batch_against_index")
-    missing = {meta["id_col"], meta["vec_col"]} - set(batch.columns)
-    if missing:
-        raise ValueError(
-            f"probe srp index: batch lacks column(s) "
-            f"{sorted(missing)} — the sidecar expects "
-            f"id_col={meta['id_col']!r}, vec_col={meta['vec_col']!r}"
-        )
-    if threshold is None:
-        if "design_threshold" not in meta:
-            raise ValueError(
-                "probe srp index: sidecar has no 'design_threshold' "
-                "and no explicit threshold= was given — pass "
-                "threshold= or repair the sidecar (hand-edited or "
-                "foreign kind='srp' metadata?)"
-            )
-        threshold = float(meta["design_threshold"])
-    _warn_if_looser_than_design(
-        meta, threshold, "embedding_batch_against_index"
-    )
-    b = _srp_rows(
-        batch,
-        id_col=meta["id_col"],
-        vec_col=meta["vec_col"],
-        dim=int(meta["dim"]),
-        n_planes=int(meta["n_planes"]),
-        n_tables=int(meta["n_tables"]),
-        seed=int(meta["seed"]),
-        n_buckets=int(meta["n_buckets"]),
-    ).localCheckpoint(eager=False)
-    return probe_index_with_srp_rows(
-        spark, b, path, meta, threshold=threshold, plan_probe=plan_probe
-    )
-
-
-def probe_index_with_srp_rows(
-    spark,
-    b: DataFrame,
-    path: str,
-    meta: dict,
-    *,
-    threshold: float,
-    plan_probe: dict | None = None,
-) -> DataFrame:
-    """Probe body of :func:`embedding_batch_against_index` over an
-    already-computed ``_srp_rows`` projection — the cosine twin of
-    :func:`~.dedup_index.probe_index_with_banded_rows`, same caller
-    contract (projection at the sidecar's geometry, pinned by the
-    caller; the delta directory is read when present).
-
-    Normalized layout (module docstring): candidate pairs come from
-    the pruned posting directories, and the vector payload for the
-    verify is fetched from the CANDIDATES' own vector directories —
-    the distinct candidate ids' ``vec pb`` values (bounded by
-    ``n_vec_buckets`` and, for small probes, by the candidate count)
-    prune that second read the same way the posting ``pb`` values
-    prune the first. r11 derived those values from every id in the
-    matched POSTING directories instead — a superset that covers
-    essentially all vector buckets once ``n_rows / n_buckets`` ids
-    per directory × matched directories ≫ ``n_vec_buckets`` (at 10M
-    vectors the 100-vector probe read ~the whole 2.6 GB vector store;
-    probe wall 9.9 s at 1M → 38.5 s at 10M while the posting side
-    stayed O(batch) — SCALE.md r11 stretch, the r11 verdict's #1).
-    Candidate-driven pruning restores O(batch): measured 43.8 s →
-    see SCALE.md r12 on the same 10M index, pairs set-equal. Delta
-    rows (``pb = −1``) carry the payload inline (they may hold
-    vectors not yet compacted into vector directories), so the verify
-    coalesces inline-over-fetched. Legacy payload-carrying sidecars
-    (no ``layout`` key) skip the fetch entirely.
+    pruned.
 
     ``plan_probe`` is a test seam: when a dict is passed, the
     UN-checkpointed candidate frame is stored under
@@ -521,168 +568,7 @@ def probe_index_with_srp_rows(
     bucket join behind a lazy ``localCheckpoint`` (one execution
     shared by the vec-pb collect and the pair plan), which hides that
     scan from the FINAL plan."""
-    # bounded driver collect: ≤ n_tables × n_buckets ints — the
-    # partition-pruning literal, same shape as the other index probes
-    pbs = [r["pb"] for r in b.select("pb").distinct().collect()]
-    # the active generation dir after a generational compaction (r12),
-    # the index root before one
-    droot = active_data_root(path)
-    if fs.is_dir(fs.join(droot, f"pb={DELTA_PB}")):
-        pbs = pbs + [DELTA_PB]
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    rel = read_matched_partitions(
-        spark,
-        droot,
-        "pb",
-        pbs,
-        total_partitions=int(meta["n_tables"]) * int(meta["n_buckets"]),
+    return batch_against_index(
+        spark, batch, path, threshold=threshold, kind="srp",
+        caller="embedding_batch_against_index", plan_probe=plan_probe,
     )
-    if rel is None:
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        idt = b.schema[id_col].dataType
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("batch_id", idt),
-                    StructField("corpus_id", idt),
-                    StructField("cosine_sim", DoubleType()),
-                ]
-            ),
-        )
-    corpus = (
-        rel.where(F.col("pb").isin(pbs))
-        # the flat-read fallback past the pruning crossover returns
-        # the WHOLE table — drop vector rows (tbl is NULL only there)
-        .where(F.col("tbl").isNotNull())
-        .select(
-            "tbl",
-            "bucket",
-            F.col(id_col).alias("corpus_id"),
-            F.col(vec_col).alias("_v_c"),
-            F.col("nrm").alias("_n_c"),
-        )
-    )
-    bb = b.select(
-        "tbl",
-        "bucket",
-        F.col(id_col).alias("batch_id"),
-        F.col(vec_col).alias("_v_b"),
-        F.col("nrm").alias("_n_b"),
-    )
-    cands = (
-        bb.join(corpus, ["tbl", "bucket"])
-        # a re-probed vector whose id already lives in the index would
-        # match its own postings (cosine 1.0) — the in-memory twin
-        # over corpus ∪ batch can never emit a self-pair (id_a < id_b),
-        # so neither does this probe
-        .where(F.col("batch_id") != F.col("corpus_id"))
-        .select("batch_id", "corpus_id", "_v_b", "_v_c", "_n_b", "_n_c")
-        # a pair sharing several tables must verify once, not per
-        # table. A NULL _v_c winning the dedup is safe: an id whose
-        # ONLY copy is inline (appended since the last compact) has no
-        # base postings, so every row it can contribute carries the
-        # payload; an id with base postings has vector rows, so the
-        # fetch below covers it either way.
-        .dropDuplicates(["batch_id", "corpus_id"])
-    )
-    if plan_probe is not None:
-        plan_probe["candidates"] = cands
-    if meta.get("layout") == "normalized":
-        from .similarity import crossover_flat_read
-
-        n_posting_dirs = int(meta["n_tables"]) * int(meta["n_buckets"])
-        fetched = None
-        # the SAME decision read_matched_partitions made for `rel`
-        # above — shared helper, so the two sites cannot drift
-        # (ADVICE r11: a drifted copy here would fetch from a pruned
-        # posting-only relation and silently drop every pair)
-        if crossover_flat_read(pbs, n_posting_dirs):
-            # Big-batch regime (r11, verdict #3): `rel` above was read
-            # FLAT past the pruning crossover, so it ALREADY contains
-            # every vector row — running the vbs pruning job (a full
-            # scan of the matched postings) and then a second read of
-            # the vector directories would cost two extra passes to
-            # select directories the candidates cover almost entirely
-            # anyway. Fetch straight from the flat relation instead:
-            # zero extra jobs, one fewer scan. Measured at the sf0.1
-            # bench geometry: probe 1.35 s → 0.94 s (SCALE.md r11).
-            def _is_vec_dir(e: str) -> bool:
-                if not e.startswith("pb="):
-                    return False
-                try:
-                    return int(e.split("=", 1)[1]) <= VEC_PB_BASE
-                except ValueError:
-                    return False
-
-            if not any(_is_vec_dir(e) for e in fs.listdir(droot)):
-                raise RuntimeError(
-                    f"probe_index_with_srp_rows: normalized srp index "
-                    f"at {path} has posting rows but no vector "
-                    "directories (pb <= -2) exist on disk — the index "
-                    "is missing its vector rows (partial copy/"
-                    "corruption); rebuild or re-copy it."
-                )
-            fetched = rel.where(F.col("tbl").isNull()).select(
-                F.col(id_col).alias("corpus_id"),
-                F.col(vec_col).alias("_v_f"),
-            )
-        else:
-            # Small-probe regime (r12, verdict #1): vector-side
-            # partition pruning driven by the CANDIDATES themselves.
-            # The lazy localCheckpoint pins the bucket join so the
-            # vec-pb collect below and the final pair plan share ONE
-            # execution of the posting scan (without it the collect
-            # would be a second full run of the join); the checkpoint
-            # is bounded — candidate pairs after dedup, carrying two
-            # vectors each, ≤ batch keys × bucket population. Only
-            # rows whose payload is NOT already inline (_v_c NULL)
-            # need the fetch, so they alone contribute vec-pb values —
-            # bounded by n_vec_buckets, and for a small probe by the
-            # candidate count itself.
-            cands = cands.localCheckpoint(eager=False)
-            vpb = _vec_pb_col("corpus_id", int(meta["n_vec_buckets"]))
-            vbs = [
-                r["vpb"]
-                for r in cands.where(F.col("_v_c").isNull())
-                .select(vpb.alias("vpb"))
-                .distinct()
-                .collect()
-            ]
-            if vbs:
-                vrel = read_matched_partitions(spark, droot, "pb", vbs)
-                if vrel is None:
-                    # candidates with base postings exist (vbs derives
-                    # from them) but NONE of their vector directories
-                    # do — a partially copied or corrupted index.
-                    # Silently continuing would leave every
-                    # candidate's _v_c NULL, NULL cosine, every pair
-                    # dropped — indistinguishable from a genuine
-                    # no-match probe (ADVICE r10). Fail with the cause
-                    # named instead.
-                    raise RuntimeError(
-                        f"probe_index_with_srp_rows: normalized srp "
-                        f"index at {path} has posting rows but none of "
-                        f"their vector directories (pb in "
-                        f"{sorted(vbs)[:8]}...) exist on disk — the "
-                        "index is missing its vector rows (partial "
-                        "copy/corruption); rebuild or re-copy it."
-                    )
-                fetched = vrel.where(F.col("pb").isin(vbs)).select(
-                    F.col(id_col).alias("corpus_id"),
-                    F.col(vec_col).alias("_v_f"),
-                )
-        if fetched is not None:
-            cands = (
-                cands.join(fetched, "corpus_id", "left")
-                .withColumn("_v_c", F.coalesce("_v_c", "_v_f"))
-                .drop("_v_f")
-            )
-    return cands.select(
-        "batch_id",
-        "corpus_id",
-        _cosine_with_norms(
-            F.col("_v_b"), F.col("_v_c"), F.col("_n_b"), F.col("_n_c")
-        ).alias("cosine_sim"),
-    ).where(F.col("cosine_sim") >= threshold)

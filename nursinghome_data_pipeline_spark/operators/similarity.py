@@ -1114,36 +1114,22 @@ def append_to_ann_index(df: DataFrame, path: str) -> None:
     from .. import fs
 
     fs.check_fs(path, "append_to_ann_index")
+    # routing of the near-dup kinds is owned by the dedup-index module
+    # (runtime import: dedup_index imports this module's protocol
+    # helpers)
+    from .dedup_index import FAMILIES, route_append
+
     meta = load_ann_meta(path)
-    if meta.get("kind") not in ("ivf", "lsh", "minhash", "simhash", "srp"):
-        raise ValueError(
-            f"append_to_ann_index: unknown index kind "
-            f"{meta.get('kind')!r} in {path}/{ANN_META_FILE}"
-        )
-    if meta["kind"] == "srp":
-        # vector near-dup postings fan out like the text dedup kinds
-        # (n_tables directories per doc) — same LSM delta form
-        from .embedding_index import route_srp_append
-
-        routed, part = route_srp_append(df, meta)
-    elif meta["kind"] == "minhash":
-        # routing owned by the dedup-index module (runtime import:
-        # dedup_index imports this module's protocol helpers)
-        from .dedup_index import route_dedup_append
-
-        routed, part = route_dedup_append(df, meta)
-    elif meta["kind"] == "simhash":
-        from .dedup_index import route_simhash_append
-
-        routed, part = route_simhash_append(df, meta)
-    elif meta["kind"] == "ivf":
+    if meta.get("kind") in FAMILIES:
+        routed, part = route_append(df, meta), "pb"
+    elif meta.get("kind") == "ivf":
         id_col, vec_col = meta["id_col"], meta["vec_col"]
         seeds = [(int(s), vec) for s, vec in meta["seeds"]]
         routed = df.select(
             id_col, vec_col, ivf_cell_col(seeds, vec_col).alias("cell")
         )
         part = "cell"
-    else:
+    elif meta.get("kind") == "lsh":
         id_col, vec_col = meta["id_col"], meta["vec_col"]
         routed = random_projection_buckets(
             df,
@@ -1153,6 +1139,11 @@ def append_to_ann_index(df: DataFrame, path: str) -> None:
             seed=int(meta["seed"]),
         ).select(id_col, vec_col, "bucket")
         part = "bucket"
+    else:
+        raise ValueError(
+            f"append_to_ann_index: unknown index kind "
+            f"{meta.get('kind')!r} in {path}/{ANN_META_FILE}"
+        )
     append_routed_rows(routed, path, part)
 
 
@@ -1162,9 +1153,9 @@ def append_routed_rows(routed: DataFrame, path: str, part: str) -> None:
 
     The caller's contract is that ``routed`` carries the index's full
     row schema with partition values computed from the CURRENT
-    sidecar's geometry — either via the ``route_*`` helpers (what
-    :func:`append_to_ann_index` does) or by reusing a
-    ``_banded_rows``/``_simhash_rows`` projection it already computed
+    sidecar's geometry — either via the routing in
+    :func:`append_to_ann_index` or by reusing a near-dup family
+    projection (``dedup_index.Family.project``) it already computed
     at that geometry (what the streaming ingest loop does, r9 — one
     fingerprint pass per micro-batch instead of one per stage). Under
     the loop's single-writer contract the sidecar cannot change
@@ -1305,23 +1296,19 @@ def compact_ann_index(
     meta, droot = _load_active(path)
     cur_gen = _active_gen(path)
     cur_n = int(cur_gen[len(GEN_PREFIX):]) if cur_gen else 0
-    parts = {
-        "ivf": "cell",
-        "lsh": "bucket",
-        "minhash": "pb",
-        "simhash": "pb",
-        "srp": "pb",
-    }
-    if meta.get("kind") not in parts:
+    from .dedup_index import FAMILIES, family
+
+    kind = meta.get("kind")
+    part = "pb" if kind in FAMILIES else {"ivf": "cell", "lsh": "bucket"}.get(kind)
+    if part is None:
         raise ValueError(
-            f"compact_ann_index: unknown index kind {meta.get('kind')!r} "
+            f"compact_ann_index: unknown index kind {kind!r} "
             f"in {path}/{ANN_META_FILE}"
         )
-    part = parts[meta["kind"]]
-    if regeometry and meta["kind"] not in ("minhash", "simhash", "srp"):
+    if regeometry and kind not in FAMILIES:
         raise ValueError(
-            f"compact_ann_index: regeometry=True only applies to "
-            f"kind='minhash'/'simhash'/'srp' (got {meta['kind']!r}) — "
+            f"compact_ann_index: regeometry=True only applies to the "
+            f"near-dup kinds {sorted(FAMILIES)} (got {kind!r}) — "
             "IVF seeds / LSH planes define routing semantics and "
             "cannot be re-derived from stored rows"
         )
@@ -1380,13 +1367,8 @@ def compact_ann_index(
 
         before = _data_stats(droot)
         df = spark.read.parquet(droot)
-        if meta["kind"] in ("minhash", "simhash", "srp"):
-            from .dedup_index import (
-                DELTA_PB,
-                auto_dedup_buckets,
-                simhash_keys_per_doc,
-            )
-
+        if kind in FAMILIES:
+            fam = family(meta)
             # pb is DERIVED for these kinds — recompute it from the
             # STORED routing columns (band/bkey or bucket) on EVERY
             # compaction, never re-fingerprinting: base rows map to
@@ -1395,95 +1377,26 @@ def compact_ann_index(
             # directories, so the result is bit-identical to a fresh
             # rebuild. regeometry additionally re-derives the bucket
             # COUNT from the current corpus size (distinct ids, not
-            # row count: every doc posts bands / keys_per_doc rows,
-            # and replay-duplicated postings — benign, see
-            # append_to_ann_index — must not inflate the estimate).
-            if regeometry:
-                n_docs = df.select(meta["id_col"]).distinct().count()
-            if meta["kind"] == "minhash":
-                new_nb = (
-                    auto_dedup_buckets(n_docs, bands=int(meta["bands"]))
-                    if regeometry
-                    else int(meta["n_buckets"])
-                )
-                new_pb = (
-                    F.col("band") * new_nb
-                    + F.pmod(F.col("bkey"), F.lit(new_nb))
-                )
-            elif meta["kind"] == "srp":
-                # per-TABLE payload, the same estimate the build uses
-                # (pb carries the table index — n_docs rows spread
-                # over n_buckets dirs within each table)
-                new_nb = (
-                    auto_dedup_buckets(n_docs, bands=1)
-                    if regeometry
-                    else int(meta["n_buckets"])
-                )
-                new_pb = F.col("tbl") * new_nb + F.pmod(
-                    F.xxhash64(F.col("bucket")), F.lit(new_nb)
-                )
-                if meta.get("layout") == "normalized":
-                    # Two row roles share the table (embedding_index
-                    # module docstring): posting rows re-route from
-                    # their stored (tbl, bucket) exactly like the
-                    # other dedup kinds; vector rows re-route from the
-                    # id alone; and LSM delta rows — which carry the
-                    # payload inline so an append stays one atomic
-                    # file — SPLIT into both roles here: their payload
-                    # is stripped from the postings and lands once per
-                    # id in the vector directories. This is the only
-                    # kind-specific compaction branch; the lock/swap
-                    # protocol around it is unchanged.
-                    from .embedding_index import _vec_pb_col
+            # row count: every doc posts several rows, and
+            # replay-duplicated postings — benign, see
+            # append_to_ann_index — must not inflate the estimate),
+            # with the same per-kind sizing rule the builds use.
+            new_nb = (
+                fam.auto_buckets(df.select(meta["id_col"]).distinct().count(), meta)
+                if regeometry
+                else int(meta["n_buckets"])
+            )
+            if kind == "srp":
+                # the only kind-specific compaction step: the srp
+                # normalized layout's two row roles (embedding_index)
+                from .embedding_index import split_row_roles
 
-                    id_c, vec_c = meta["id_col"], meta["vec_col"]
-                    new_nvb = (
-                        new_nb
-                        if regeometry
-                        else int(meta["n_vec_buckets"])
-                    )
-                    vec_t = df.schema[vec_c].dataType
-                    is_posting = F.col("tbl").isNotNull()
-                    postings = (
-                        df.where(is_posting)
-                        .withColumn("pb", new_pb.cast("int"))
-                        .withColumn(vec_c, F.lit(None).cast(vec_t))
-                    )
-                    vec_rows = (
-                        df.where(~is_posting)
-                        .select(id_c, vec_c, "nrm")
-                        .unionByName(
-                            # delta postings of not-yet-compacted
-                            # vectors: one vector row per distinct id
-                            df.where(F.col("pb") == DELTA_PB).select(
-                                id_c, vec_c, "nrm"
-                            )
-                        )
-                        .dropDuplicates([id_c])
-                        .select(
-                            _vec_pb_col(id_c, new_nvb).alias("pb"),
-                            F.lit(None).cast("int").alias("tbl"),
-                            F.lit(None).cast("long").alias("bucket"),
-                            F.col(id_c),
-                            F.col(vec_c),
-                            F.col("nrm"),
-                        )
-                    )
-                    df = postings.select(
-                        "pb", "tbl", "bucket", id_c, vec_c, "nrm"
-                    ).unionByName(vec_rows)
-                    meta = {**meta, "n_vec_buckets": new_nvb}
-                    new_pb = F.col("pb")  # already final on both roles
+                df, meta = split_row_roles(
+                    df, meta, fam.pb(new_nb),
+                    new_nb if regeometry else int(meta["n_vec_buckets"]),
+                )
             else:
-                if regeometry:
-                    kpd = simhash_keys_per_doc(
-                        int(meta["n_chunks"]), int(meta["chunks_per_key"])
-                    )
-                    new_nb = auto_dedup_buckets(n_docs * kpd, bands=1)
-                else:
-                    new_nb = int(meta["n_buckets"])
-                new_pb = F.pmod(F.xxhash64(F.col("bucket")), F.lit(new_nb))
-            df = df.withColumn("pb", new_pb.cast("int"))
+                df = df.withColumn("pb", fam.pb(new_nb).cast("int"))
             meta = {**meta, "n_buckets": new_nb}
         _compact_for_write(
             df, part, files_per_partition, meta["id_col"]

@@ -33,12 +33,11 @@ Idempotency is CRASH-POINT-COMPLETE, not just commit-gated:
   (``ingest_batch=<id>/``), so replays rewrite in place instead of
   double-appending.
 
-One fingerprint pass per micro-batch (r9): the batch's banded
-projection (``dedup_index._banded_rows`` / ``_simhash_rows`` /
-``embedding_index._srp_rows``) is computed once and pinned, then read
-by all three consumers — the within-batch pair pass
-(``pairs_from_banded_rows`` and family), the index probe
-(``probe_index_with_banded_rows`` and family), and the append
+One fingerprint pass per micro-batch (r9): the index kind's family
+projection (``dedup_index.Family.project``) is computed once and
+pinned, then read by all three consumers — the within-batch pair pass
+(``dedup_index.pairs_from_rows``), the index probe
+(``dedup_index.probe_index_with_rows``), and the append
 (``append_routed_rows`` over the accepted slice of the same rows).
 Earlier rounds fingerprinted up to three times per batch; the r8
 ingest-loop probe measured the resulting fixed per-batch cadence at
@@ -195,19 +194,10 @@ def streaming_dedup_ingest(
 
     from ..operators.dedup import exact_dedup_fingerprints
     from ..operators.dedup_index import (
-        _banded_rows,
-        _simhash_rows,
         as_delta_append,
-        pairs_from_banded_rows,
-        pairs_from_simhash_rows,
-        probe_index_with_banded_rows,
-        probe_index_with_simhash_rows,
-    )
-    from ..operators.embedding_index import (
-        _srp_rows,
-        _warn_if_looser_than_design,
-        pairs_from_srp_rows,
-        probe_index_with_srp_rows,
+        family,
+        pairs_from_rows,
+        probe_index_with_rows,
     )
     from .. import fs
     from ..operators.similarity import (
@@ -225,120 +215,54 @@ def streaming_dedup_ingest(
     fs.check_fs(target_dir, "streaming_dedup_ingest")
     fs.check_fs(index_path, "streaming_dedup_ingest")
 
-    def _require_dedup_kind(meta: dict) -> None:
-        if meta.get("kind") not in ("minhash", "simhash", "srp"):
-            # fail at the dispatch point with the kinds named, not
-            # later with a raw KeyError('n_hashes') from an ivf/lsh
-            # sidecar missing the minhash geometry fields
+    def _payload_col(meta: dict) -> str:
+        col = meta[family(meta).payload_key]
+        if "`" in col:
+            # the srp zero-norm bypass (and lsh_bucket_col beneath the
+            # projection) embed the column name in SQL text
             raise ValueError(
-                f"streaming_dedup_ingest: index at {index_path} is "
-                f"kind={meta.get('kind')!r} — the ingest loop dedups "
-                "against a 'minhash', 'simhash', or 'srp' index"
+                "streaming_dedup_ingest: the sidecar's payload column "
+                f"may not contain a backtick (got {col!r})"
             )
+        return col
 
     # fail/warn at stream START (the index must already exist): a bad
     # index kind raises synchronously instead of inside the first
-    # micro-batch's StreamingQueryException, and the simhash
-    # geometry-vs-max_hamming recall warning fires once, up front.
-    # n_chunks/chunks_per_key never change after build (regeometry
-    # only re-derives n_buckets), so start-time is the right scope.
+    # micro-batch's StreamingQueryException, and the threshold is
+    # resolved and checked against the geometry once, up front (the
+    # simhash pigeonhole and srp looser-than-design warnings).
+    # n_chunks/planes/design_threshold never change after build
+    # (regeometry only re-derives n_buckets), so start-time is the
+    # right scope.
     meta0 = load_ann_meta(index_path)
-    _require_dedup_kind(meta0)
-    payload_col0 = (
-        meta0["vec_col"] if meta0["kind"] == "srp" else meta0["text_col"]
+    kind = meta0.get("kind")
+    fam = family(meta0, f"streaming_dedup_ingest: index at {index_path}")
+    _payload_col(meta0)
+    thr = fam.check_threshold(
+        meta0,
+        {"minhash": threshold, "simhash": max_hamming}.get(kind, cosine_threshold),
+        "streaming_dedup_ingest",
     )
-    if "`" in payload_col0:
-        # the srp zero-norm bypass (and lsh_bucket_col beneath the
-        # projection) embed the column name in SQL text
-        raise ValueError(
-            "streaming_dedup_ingest: the sidecar's payload column may "
-            f"not contain a backtick (got {payload_col0!r})"
-        )
-    if meta0["kind"] == "srp" and cosine_threshold is not None:
-        _warn_if_looser_than_design(
-            meta0, cosine_threshold, "streaming_dedup_ingest"
-        )
-    if meta0["kind"] == "simhash":
-        guarantee = int(meta0["n_chunks"]) - int(meta0["chunks_per_key"])
-        if max_hamming > guarantee:
-            import warnings
-
-            warnings.warn(
-                f"streaming_dedup_ingest: max_hamming={max_hamming} "
-                f"exceeds the index geometry's pigeonhole guarantee "
-                f"(h <= {guarantee} for {meta0['n_chunks']} chunks x "
-                f"{meta0['chunks_per_key']}-chunk keys) — pairs at "
-                f"Hamming {guarantee + 1}..{max_hamming} may be missed "
-                "by banding",
-                UserWarning,
-                stacklevel=2,
-            )
 
     def ingest_batch(batch: DataFrame, batch_id: int) -> None:
         spark = SparkSession.getActiveSession()
         if commitlog.is_committed(target_dir, batch_id):
             return  # re-delivered batch: idempotent skip
+        # re-read per batch: a regeometry compaction changes n_buckets
         meta = load_ann_meta(index_path)
-        # re-checked per batch: an index swapped out underneath a
-        # running stream must still fail with the kinds named
-        _require_dedup_kind(meta)
-        id_col = meta["id_col"]
-        payload_col = (
-            meta["vec_col"] if meta["kind"] == "srp" else meta["text_col"]
-        )
-        if "`" in payload_col:
-            # re-checked per batch (ADVICE r10): the stream-start gate
-            # covered meta0, but each batch re-loads the sidecar — a
-            # swapped/edited sidecar's payload column reaches F.expr
-            # SQL text below and must never carry a backtick
+        if meta.get("kind") != kind:
+            # an index swapped out underneath a running stream: the
+            # start-time family and threshold no longer apply
             raise ValueError(
-                "streaming_dedup_ingest: the sidecar's payload column "
-                f"may not contain a backtick (got {payload_col!r})"
+                f"streaming_dedup_ingest: index at {index_path} changed "
+                f"kind from {kind!r} to {meta.get('kind')!r} under a "
+                "running stream"
             )
-        # family dispatch on the SIDECAR kind: the in-batch near pass
-        # and the index probe must band/verify with the same family
-        # (and the same geometry) the index was built with, or
-        # batch-vs-batch and batch-vs-corpus dedup silently diverge.
-        # All three fingerprint consumers — in-batch pairing, the
-        # index probe, and the append routing — read ONE shared
-        # banded projection (r9): the batch is tokenized/shingled/
-        # signed (or projected, for srp) exactly once per micro-batch.
-        if meta["kind"] == "srp":
-            if cosine_threshold is None and "design_threshold" not in meta:
-                raise ValueError(
-                    "srp ingest: sidecar has no 'design_threshold' and "
-                    "no cosine_threshold= was given — pass one "
-                    "explicitly or repair the sidecar"
-                )
-            thr = (
-                float(meta["design_threshold"])
-                if cosine_threshold is None
-                else cosine_threshold
-            )
-
-            def project(df):
-                return _srp_rows(
-                    df,
-                    id_col=id_col,
-                    vec_col=payload_col,
-                    dim=int(meta["dim"]),
-                    n_planes=int(meta["n_planes"]),
-                    n_tables=int(meta["n_tables"]),
-                    seed=int(meta["seed"]),
-                    n_buckets=int(meta["n_buckets"]),
-                )
-
-            def in_batch_pairs(rows):
-                return pairs_from_srp_rows(
-                    rows, id_col=id_col, vec_col=payload_col,
-                    threshold=thr,
-                )
-
-            def index_matches(spark, rows):
-                return probe_index_with_srp_rows(
-                    spark, rows, index_path, meta, threshold=thr
-                )
-
+        id_col = meta["id_col"]
+        # re-checked per batch (ADVICE r10): a swapped/edited sidecar's
+        # payload column reaches F.expr SQL text below
+        payload_col = _payload_col(meta)
+        if kind == "srp":
             def exact_winners(df):
                 # exact-by-payload for vectors: identical float arrays
                 # group together (no text fingerprint exists); min-id
@@ -346,49 +270,7 @@ def streaming_dedup_ingest(
                 return df.groupBy(payload_col).agg(
                     F.min(id_col).alias(id_col)
                 ).select(id_col)
-        elif meta["kind"] == "simhash":
-            def project(df):
-                return _simhash_rows(
-                    df,
-                    id_col=id_col,
-                    text_col=payload_col,
-                    hash_family=meta["hash_family"],
-                    n_chunks=int(meta["n_chunks"]),
-                    chunks_per_key=int(meta["chunks_per_key"]),
-                    n_buckets=int(meta["n_buckets"]),
-                )
-
-            def in_batch_pairs(rows):
-                return pairs_from_simhash_rows(
-                    rows, id_col=id_col, max_hamming=max_hamming
-                )
-
-            def index_matches(spark, rows):
-                return probe_index_with_simhash_rows(
-                    spark, rows, index_path, meta, max_hamming=max_hamming
-                )
         else:
-            def project(df):
-                return _banded_rows(
-                    df,
-                    id_col=id_col,
-                    text_col=payload_col,
-                    n_hashes=int(meta["n_hashes"]),
-                    bands=int(meta["bands"]),
-                    shingle_k=int(meta["shingle_k"]),
-                    n_buckets=int(meta["n_buckets"]),
-                )
-
-            def in_batch_pairs(rows):
-                return pairs_from_banded_rows(
-                    rows, id_col=id_col, threshold=threshold
-                )
-
-            def index_matches(spark, rows):
-                return probe_index_with_banded_rows(
-                    spark, rows, index_path, meta, threshold=threshold
-                )
-        if meta["kind"] != "srp":
             def exact_winners(df):
                 # the canonical min-id-per-md5 winner rule lives in
                 # ONE place (exact_dedup_fingerprints)
@@ -402,7 +284,7 @@ def streaming_dedup_ingest(
         # silently DROP them instead (NULL == NULL is NULL under an
         # inner join).
         bypass_pred = F.col(payload_col).isNull()
-        if meta["kind"] == "srp":
+        if kind == "srp":
             # Zero-norm (all-zero/empty) and NULL-element vectors have
             # NULL cosine to everything, so they can never clear the
             # threshold — yet every one of them projects to the SAME
@@ -416,7 +298,7 @@ def streaming_dedup_ingest(
             bypass_pred = bypass_pred | nrm2.isNull() | (nrm2 == 0.0)
         null_payload = batch.where(bypass_pred)
         degen_new: list[tuple[str, str]] = []
-        if meta["kind"] == "srp":
+        if kind == "srp":
             # Degenerate vectors rightly skip the NEAR stages (NULL
             # cosine can never clear a threshold) — but bit-identical
             # copies are still EXACT duplicates, the one class a dedup
@@ -482,15 +364,18 @@ def streaming_dedup_ingest(
         # the batch is re-read by the projection, the own-ids guard,
         # and the accepted anti-joins — pin it
         exact = exact.localCheckpoint(eager=False)
-        # THE one fingerprint pass: every later stage reads these rows
-        rows = project(exact.select(id_col, payload_col)).localCheckpoint(
+        # THE one fingerprint pass: every later stage reads these rows.
+        # The in-batch pass and the index probe band/verify with the
+        # SIDECAR's family and geometry, so batch-vs-batch and
+        # batch-vs-corpus dedup can never diverge.
+        rows = fam.project(exact.select(id_col, payload_col), meta).localCheckpoint(
             eager=False
         )
         # stage 2 — near within batch: drop the higher id of each
         # verified pair (id_a < id_b by construction); the pair set is
         # identical to the in-memory operator's (pinned — see
-        # pairs_from_banded_rows)
-        pairs = in_batch_pairs(rows)
+        # pairs_from_rows)
+        pairs = pairs_from_rows(rows, meta, threshold=thr)
         drop = (
             pairs.select(F.col("id_b").alias(id_col))
             .distinct()
@@ -505,7 +390,9 @@ def streaming_dedup_ingest(
         # rescanned. The probe reuses the projection (survivor rows =
         # the pinned rows minus in-batch drops), never re-fingerprints.
         surv_rows = rows.join(drop, id_col, "left_anti")
-        matches = index_matches(spark, surv_rows)
+        matches = probe_index_with_rows(
+            spark, surv_rows, index_path, meta, threshold=thr
+        )
         own_ids = exact.select(F.col(id_col).alias("corpus_id"))
         dup_ids = (
             matches.join(own_ids, "corpus_id", "left_anti")

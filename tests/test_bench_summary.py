@@ -255,3 +255,15 @@ def test_trailing_medians_keyed_by_core_count(tmp_path):
     assert bench._trailing_medians(d, cpus=8) == {"q1": 9.0}
     # cpus=None keeps the legacy everything-counts behavior
     assert bench._trailing_medians(d) == {"q1": 2.0}
+    # with no history line at the current count, the bench_full.json
+    # fallback must match the count too (its host_load.spark_cpus)
+    with open(os.path.join(d, "bench_full.json"), "w") as f:
+        json.dump(
+            {"host_load": {"spark_cpus": 32}, "queries": {"q1": 7.0}}, f
+        )
+    assert bench._trailing_medians(d, cpus=4) == {}
+    with open(os.path.join(d, "bench_full.json"), "w") as f:
+        json.dump(
+            {"host_load": {"spark_cpus": 4}, "queries": {"q1": 7.0}}, f
+        )
+    assert bench._trailing_medians(d, cpus=4) == {"q1": 7.0}

@@ -74,7 +74,7 @@ def test_pairs_from_banded_rows_equals_in_memory_operator(spark, sf_dir):
     at the same geometry."""
     from nursinghome_data_pipeline_spark.operators.dedup_index import (
         _banded_rows,
-        pairs_from_banded_rows,
+        pairs_from_rows,
     )
 
     docs = _docs(spark, sf_dir)
@@ -84,8 +84,8 @@ def test_pairs_from_banded_rows_equals_in_memory_operator(spark, sf_dir):
     )
     got = sorted(
         (r["id_a"], r["id_b"], r["jaccard"])
-        for r in pairs_from_banded_rows(
-            rows, id_col="doc_id", threshold=THRESHOLD
+        for r in pairs_from_rows(
+            rows, {"kind": "minhash", "id_col": "doc_id"}, threshold=THRESHOLD
         ).collect()
     )
     want = sorted(

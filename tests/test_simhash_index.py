@@ -67,6 +67,25 @@ def _pairs(df):
     }
 
 
+def test_batch_probe_warns_beyond_pigeonhole_guarantee(spark, tmp_path):
+    """The batch probe surfaces the same recall trade as the ingest
+    loop: a max_hamming past the geometry's pigeonhole guarantee
+    (h <= 3 at 5 chunks x pair keys) warns; within it, silent."""
+    import warnings
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e g")], "doc_id long, text string"
+    )
+    path = str(tmp_path / "sh")
+    write_simhash_index(docs, path, n_buckets=16, **GEO)
+    with pytest.warns(UserWarning, match="pigeonhole guarantee"):
+        simhash_batch_against_index(spark, docs, path, max_hamming=8)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        warnings.filterwarnings("ignore", message=".*pruning crossover.*")
+        simhash_batch_against_index(spark, docs, path, max_hamming=3)
+
+
 def test_probe_equals_in_memory_cross_pairs(spark, sf_dir, tmp_path):
     docs = _docs(spark, sf_dir)
     corpus, batch = _split(docs)
@@ -89,7 +108,7 @@ def test_pairs_from_simhash_rows_equals_in_memory_operator(spark, sf_dir):
     geometry."""
     from nursinghome_data_pipeline_spark.operators.dedup_index import (
         _simhash_rows,
-        pairs_from_simhash_rows,
+        pairs_from_rows,
     )
 
     docs = _docs(spark, sf_dir)
@@ -99,8 +118,8 @@ def test_pairs_from_simhash_rows_equals_in_memory_operator(spark, sf_dir):
     )
     got = sorted(
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in pairs_from_simhash_rows(
-            rows, id_col="doc_id", max_hamming=MAX_HAMMING
+        for r in pairs_from_rows(
+            rows, {"kind": "simhash", "id_col": "doc_id"}, threshold=MAX_HAMMING
         ).collect()
     )
     want = sorted(

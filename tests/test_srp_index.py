@@ -16,9 +16,9 @@ from pyspark.sql import functions as F
 
 from nursinghome_data_pipeline_spark.operators.embedding_index import (
     embedding_batch_against_index,
-    pairs_from_srp_rows,
     write_srp_index,
 )
+from nursinghome_data_pipeline_spark.operators.dedup_index import pairs_from_rows
 from nursinghome_data_pipeline_spark.operators.similarity import (
     append_to_ann_index,
     auto_lsh_tables,
@@ -142,8 +142,9 @@ def test_pairs_from_srp_rows_equals_in_memory_operator(spark, sf_dir):
     )
     got = sorted(
         (r["id_a"], r["id_b"], r["cosine_sim"])
-        for r in pairs_from_srp_rows(
-            rows, id_col="vec_id", vec_col="embedding", threshold=THR
+        for r in pairs_from_rows(
+            rows, {"kind": "srp", "id_col": "vec_id", "vec_col": "embedding"},
+            threshold=THR,
         ).collect()
     )
     want = sorted(
@@ -368,7 +369,7 @@ def test_auto_geometry_matches_formulas(spark, sf_dir, tmp_path):
     assert meta["n_tables"] == t
     # per-TABLE payload: n_buckets sizes n_rows alone (pb carries the
     # table index, like the minhash index's per-band sizing)
-    assert meta["n_buckets"] == auto_dedup_buckets(n, bands=1)
+    assert meta["n_buckets"] == auto_dedup_buckets(n)
     assert meta["design_threshold"] == 0.95
 
 
@@ -404,9 +405,17 @@ def test_bucket_stats_on_srp_index(spark, sf_dir, tmp_path):
 
 
 def test_probe_missing_batch_columns_named_error(spark, sf_dir, tmp_path):
-    """r10 (ADVICE): a batch lacking the sidecar's id/vec columns must
-    fail with the columns NAMED (mirror of route_srp_append's guard),
-    not a raw AnalysisException from the projection."""
+    """r10 (ADVICE): a batch lacking the sidecar's id/payload columns
+    must fail with the columns NAMED (the same guard as append
+    routing), not a raw AnalysisException from the projection — for
+    every near-dup kind, since all three probes share one body."""
+    from nursinghome_data_pipeline_spark.operators.dedup_index import (
+        dedup_batch_against_index,
+        simhash_batch_against_index,
+        write_dedup_index,
+        write_simhash_index,
+    )
+
     corpus, batch = _corpus_and_batch(spark, sf_dir)
     path = str(tmp_path / "idx")
     write_srp_index(
@@ -417,6 +426,18 @@ def test_probe_missing_batch_columns_named_error(spark, sf_dir, tmp_path):
     )
     with pytest.raises(ValueError, match=r"lacks column\(s\).*vec_id"):
         embedding_batch_against_index(spark, bad, path)
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e g")], "doc_id long, text string"
+    )
+    no_text = docs.select("doc_id", F.col("text").alias("body"))
+    for write, probe in (
+        (write_dedup_index, dedup_batch_against_index),
+        (write_simhash_index, simhash_batch_against_index),
+    ):
+        p = str(tmp_path / write.__name__)
+        write(docs, p, n_buckets=16)
+        with pytest.raises(ValueError, match=r"lacks column\(s\).*'text'"):
+            probe(spark, no_text, p)
 
 
 def test_probe_without_design_threshold_named_error(spark, sf_dir, tmp_path):
@@ -454,6 +475,32 @@ def test_probe_without_design_threshold_named_error(spark, sf_dir, tmp_path):
         .collect()
     }
     assert got == expected
+
+
+def test_layoutless_sidecar_named_error(spark, sf_dir, tmp_path):
+    """The normalized layout is the only srp layout: a sidecar without
+    ``layout`` (hand-edited/foreign) fails probe and compaction with
+    the expected layout named, instead of being read as payload-
+    carrying postings."""
+    import json
+    import os
+
+    corpus, _ = _corpus_and_batch(spark, sf_dir)
+    small = corpus.orderBy("vec_id").limit(8)
+    path = str(tmp_path / "idx")
+    write_srp_index(
+        small, path, dim=_DIM, design_threshold=THR, n_buckets=16, **GEO
+    )
+    meta_path = os.path.join(path, "_ann_meta.json")
+    with open(meta_path, encoding="utf-8") as f:
+        meta = json.load(f)
+    del meta["layout"]
+    with open(meta_path, "w", encoding="utf-8") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="layout='normalized'"):
+        embedding_batch_against_index(spark, small, path)
+    with pytest.raises(ValueError, match="layout='normalized'"):
+        compact_ann_index(spark, path)
 
 
 def test_normalized_layout_pins(spark, sf_dir, tmp_path):
