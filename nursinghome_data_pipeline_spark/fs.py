@@ -61,16 +61,20 @@ def _hadoop(path: str):
     Resolved through the ACTIVE SparkSession's Hadoop configuration —
     the same conf Spark's data reads/writes use, so credentials and
     connector settings apply to the sidecar exactly as to the parquet.
+    A thread with no active session of its own (a driver pool thread,
+    see ``parallel.map_actions``) uses the default session.
     """
+    from pyspark.errors import PySparkRuntimeError
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
+    try:
+        spark = SparkSession.active()
+    except PySparkRuntimeError:
         raise RuntimeError(
             f"fs: scheme-qualified path {path!r} needs an active "
             "SparkSession to obtain its Hadoop FileSystem client — "
             "create the session before touching remote index paths"
-        )
+        ) from None
     jvm = spark._jvm
     jpath_cls = jvm.org.apache.hadoop.fs.Path
     fs = jpath_cls(path).getFileSystem(spark._jsc.hadoopConfiguration())

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 
 from ..functions.exprs import q_avg
-from ..functions.vectors import dot_product_col
+from ..functions.vectors import dot_product_col, double_array_sql, double_sql
 
 
 def _collect_centroids(centroids: DataFrame) -> list[tuple[int, list[float]]]:
@@ -52,35 +52,45 @@ def centroid_argmin_col(
 
     Distance is squared L2 expanded as dot(x,x) - 2*dot(x,c) +
     dot(c,c), in exactly that operation order (mirrored by the oracle
-    SQL); the centroids embed as literal arrays and ``array_min`` over
-    (dist, cid) structs reproduces the argmin-with-smallest-cid
-    tie-break bit-for-bit. This replaces the former crossJoin +
-    id-partitioned window, which SHUFFLED k× the input per Lloyd
-    iteration — assignment is now whole-stage-codegen with no exchange,
-    the property that matters at 10^9 vectors."""
-    xx = dot_product_col(vec_col, vec_col)
-    choices = []
-    for cid, clist in centroid_rows:
-        # one array-literal py4j call, not dim F.lit calls — same
-        # values, and k centroids build k of these per Lloyd
-        # iteration (the construction-cost pathology measured on
-        # lsh_bucket_col: 5.7 s per 77-fold tree through the DSL)
-        lit_c = F.lit([float(v) for v in clist])
-        # dot(c,c) precomputed with the same sequential left-to-right
-        # fold as dot_product_col — bit-equal, and a literal instead of
-        # a per-row 64-element fold Catalyst may not constant-fold
+    SQL); ``array_min`` over (dist, cid) structs reproduces the
+    argmin-with-smallest-cid tie-break bit-for-bit. This replaces the
+    former crossJoin + id-partitioned window, which SHUFFLED k× the
+    input per Lloyd iteration — assignment is now whole-stage-codegen
+    with no exchange, the property that matters at 10^9 vectors.
+
+    The k centroids are ONE parsed literal, ``array(named_struct('cid',
+    …, 'c', array(…), 'cc', …), …)``, walked by one ``transform`` with
+    dot(x,x) bound once (:func:`~.dedup._bind`): one py4j call per
+    Lloyd iteration instead of one per centroid element (``F.lit`` of
+    a list is a ``lit`` per element). dot(c,c) is precomputed with the
+    same sequential left-to-right fold as ``dot_product_col`` —
+    bit-equal, and a literal instead of a per-row fold Catalyst may
+    not constant-fold."""
+    from .dedup import _bind
+
+    def one(cid: int, clist: list[float]) -> str:
         cc = 0.0
         for v in clist:
             cc = cc + v * v
-        dist = (
-            xx
-            - F.lit(2.0) * dot_product_col(vec_col, lit_c)
-            + F.lit(cc)
+        return (
+            f"named_struct('cid', {int(cid)}L, 'c', {double_array_sql(clist)}, "
+            f"'cc', {double_sql(cc)})"
         )
-        choices.append(
-            F.struct(dist.alias("d"), F.lit(cid).cast("long").alias("cid"))
-        )
-    return F.array_min(F.array(*choices))["cid"]
+
+    cents = F.expr(f"array({', '.join(one(cid, c) for cid, c in centroid_rows)})")
+
+    def nearest(xx: F.Column) -> F.Column:
+        return F.array_min(
+            F.transform(
+                cents,
+                lambda k: F.struct(
+                    (xx - F.lit(2.0) * dot_product_col(vec_col, k["c"]) + k["cc"]).alias("d"),
+                    k["cid"].alias("cid"),
+                ),
+            )
+        )["cid"]
+
+    return _bind(dot_product_col(vec_col, vec_col), nearest)
 
 
 def assign_to_centroids(

@@ -176,17 +176,18 @@ def side_col(member: str, side: str) -> str:
     return f"_{member}_{side}"
 
 
-def as_delta_append(rows: DataFrame) -> DataFrame:
+def as_delta_append(rows: DataFrame, *, pinned: bool = False) -> DataFrame:
     """Stamp a routed family projection as one LSM delta append: every
     row goes to the ``pb=-1`` directory in a single file (micro-batch
     appends are small by contract — a bulk backfill should use the
     kind's writer or compact right after). The routing columns stay
     untouched — they are what compaction re-routes from and what
     probes join on, so delta rows match candidates exactly like base
-    rows."""
-    return rows.withColumn(
-        "pb", F.lit(DELTA_PB).cast("int")
-    ).repartition(1)
+    rows. Rows computed from a ``pinned`` (checkpointed) projection
+    gather into the one file without a shuffle job; otherwise a
+    shuffle keeps the projection itself parallel."""
+    stamped = rows.withColumn("pb", F.lit(DELTA_PB).cast("int"))
+    return stamped.coalesce(1) if pinned else stamped.repartition(1)
 
 
 def _require_unreserved(reserved, caller: str, **cols: str) -> None:
@@ -629,18 +630,30 @@ def batch_against_index(
     """The one body of the public ``*_batch_against_index`` probes:
     load the sidecar (requiring ``kind`` when given), name missing
     batch columns, resolve/check the threshold against the geometry
-    (:attr:`Family.check_threshold`), project the batch ONCE (pinned:
-    the pb collect and the candidate join both read it) and probe."""
+    (:attr:`Family.check_threshold`), pin the batch projection and its
+    bucket set (:func:`pin_rows`) and probe."""
     meta = load_ann_meta(path)
     if kind is not None:
         _require_kind(meta, kind, caller)
     fam = family(meta, caller)
     _require_columns(batch, meta, "probe")
     threshold = fam.check_threshold(meta, threshold, caller)
-    b = fam.project(batch, meta).localCheckpoint(eager=False)
+    b, pbs = pin_rows(fam.project(batch, meta))
     return probe_index_with_rows(
-        spark, b, path, meta, threshold=threshold, plan_probe=plan_probe
+        spark, b, path, meta, threshold=threshold, pbs=pbs, plan_probe=plan_probe
     )
+
+
+def pin_rows(rows: DataFrame) -> tuple[DataFrame, list[int]]:
+    """Eagerly pin a family projection and return it with its
+    distinct ``pb`` values — ONE job: the bucket set rides the pin as
+    an observed ``collect_set`` (bounded by the geometry's directory
+    count, the same bound as a separate distinct collect, which would
+    cost its own job per probe)."""
+    from ..functions.obs import observed_checkpoint
+
+    pinned, m = observed_checkpoint(rows, "family_rows", pbs=F.collect_set("pb"))
+    return pinned, sorted(m["pbs"])
 
 
 def dedup_batch_against_index(
@@ -657,7 +670,7 @@ def dedup_batch_against_index(
     :func:`~.dedup.near_duplicate_pairs` would emit over
     corpus ∪ batch, at O(batch + matched buckets) cost instead of
     O(corpus). The batch's distinct ``pb`` values (bounded by
-    ``bands × n_buckets``, collected driver-side from a tiny agg)
+    ``bands × n_buckets``, observed on the projection's pin)
     become a partition ``isin`` filter, so unmatched corpus
     directories contribute ZERO I/O. "Fresh" docs for ingest are the
     batch anti-joined against this result's ``batch_id``.
@@ -673,10 +686,10 @@ def dedup_batch_against_index(
     (4.45 s for 10⁴ docs vs 10⁶-doc corpus here). ENFORCED (r10): past
     :data:`~.similarity.FLAT_READ_CROSSOVER` of the directories the
     probe skips the per-directory listing and reads the index flat
-    (same rows, one listing pass saved) with a warning naming the
-    regime; if that is your steady batch size, split the batch to keep
-    probes pruned or size ``n_buckets`` above the batch size at build
-    time.
+    (same rows, no per-directory existence check) with a warning
+    naming the regime; if that is your steady batch size, split the
+    batch to keep probes pruned or size ``n_buckets`` above the batch
+    size at build time.
     Probe cost stays flat in CORPUS size either way: 100-doc probes
     measured 1.17/1.32/1.72 s against 5k/150k/1M-doc indexes (auto
     geometry growing 4×16 → 4×256 holds rows-behind-matched-dirs
@@ -695,6 +708,7 @@ def probe_index_with_rows(
     meta: dict,
     *,
     threshold,
+    pbs: list[int],
     plan_probe: dict | None = None,
 ) -> DataFrame:
     """The probe body of every near-dup kind, taking the batch side as
@@ -703,9 +717,11 @@ def probe_index_with_rows(
     fingerprint each micro-batch ONCE and feed the same projection to
     the in-batch pass, this probe, and the append routing (r9 — the
     fixed per-batch fingerprint redundancy measured as part of the
-    loop's ~7 s cadence). ``rows`` should be pinned (localCheckpoint)
-    by the caller: the pb collect below and the candidate join both
-    consume it. Returns ``(batch_id, corpus_id, <score_name>)``.
+    loop's ~7 s cadence). ``pbs`` — the distinct ``pb`` values of
+    ``rows``, the partition-pruning literal — comes from the caller,
+    which pins ``rows`` and observes the set in the same job
+    (:func:`pin_rows`); the probe itself runs no job to find it.
+    Returns ``(batch_id, corpus_id, <score_name>)``.
 
     ``plan_probe`` is a test seam: when a dict is passed, the
     candidate frame (before the srp vector fetch pins it) is stored
@@ -714,18 +730,15 @@ def probe_index_with_rows(
     fam = family(meta)
     id_col = meta["id_col"]
     members = fam.members(meta)
-    # bounded driver collect: ≤ the geometry's directory count ints
-    # (256 at the default minhash geometry) — the partition-pruning
-    # literal, same shape as the ANN probes' cell/bucket lists
-    pbs = [r["pb"] for r in rows.select("pb").distinct().collect()]
     # the active generation dir after a generational compaction (r12),
     # the index root before one
     droot = active_data_root(path)
     # un-compacted LSM delta appends (pb=-1, see DELTA_PB) hold recent
     # postings for EVERY bucket, so every probe reads them too — a
-    # single small directory bounded by the compaction cadence
-    if fs.is_dir(fs.join(droot, f"pb={DELTA_PB}")):
-        pbs = pbs + [DELTA_PB]
+    # single small directory bounded by the compaction cadence. An
+    # empty batch (no pb) reads nothing: the typed empty result below.
+    if pbs and fs.is_dir(fs.join(droot, f"pb={DELTA_PB}")):
+        pbs = [*pbs, DELTA_PB]
     # Matched-directories-only read: above ~32 directories Spark's
     # partition discovery launches a listing JOB over every directory
     # — measured 7.4 s of the probe's 8.1 s at a 4×1024 geometry
@@ -735,9 +748,11 @@ def probe_index_with_rows(
     # total_partitions arms the flat-read crossover (r9 verdict #3):
     # a batch matching > half the directories reads the index flat
     # instead of listing ~every directory explicitly.
-    rel = read_matched_partitions(
-        spark, droot, "pb", pbs, total_partitions=fam.dirs(meta)
-    )
+    rel = None
+    if pbs:
+        rel = read_matched_partitions(
+            spark, droot, "pb", pbs, total_partitions=fam.dirs(meta)
+        )
 
     def side(df: DataFrame, id_alias: str, s: str) -> DataFrame:
         return df.select(

@@ -557,7 +557,7 @@ def embedding_batch_against_index(
     re-bucketing pass it replaces). ENFORCED (r10): past
     :data:`~.similarity.FLAT_READ_CROSSOVER` of the directories the
     probe reads the index flat instead of listing matched dirs (same
-    rows, one listing pass saved) and warns; split very large batches
+    rows, no per-directory existence check) and warns; split very large batches
     or size ``n_buckets`` above the steady batch size to keep probes
     pruned.
 

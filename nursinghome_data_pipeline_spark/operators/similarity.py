@@ -13,6 +13,7 @@ partitionings, and the DuckDB oracle.
 from __future__ import annotations
 
 import threading
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -95,17 +96,17 @@ def _cosine_lit(a: Column | str, vals) -> Column:
     17."""
     import math
 
-    from ..functions.vectors import dot_product_col
+    from ..functions.vectors import dot_product_col, double_array_sql
 
     fv = [float(v) for v in vals]
     bb = 0.0
     for v in fv:
         bb = bb + v * v
-    # one array-literal py4j call, not dim F.lit calls under a
-    # CreateArray — same values (and the same construction-cost
-    # pathology lsh_bucket_col measured at 5.7 s per 77 folds; an
-    # ivf_cell_col over 16 seeds builds 16 of these per call)
-    num = dot_product_col(a, F.lit(fv))
+    # one parsed array literal (one py4j call), not dim F.lit calls —
+    # same values (the construction-cost pathology lsh_bucket_col
+    # measured at 5.7 s per 77 folds; an ivf_cell_col over 16 seeds
+    # builds 16 of these per call)
+    num = dot_product_col(a, F.expr(double_array_sql(fv)))
     den = F.sqrt(dot_product_col(a, a)) * F.lit(math.sqrt(bb))
     return F.when(den == 0.0, F.lit(None).cast("double")).otherwise(
         num / den
@@ -844,8 +845,9 @@ def _load_active(path: str) -> tuple[dict, str]:
 #: follows ``matched ≈ 1 − exp(−B/n_buckets)`` (MEASURED, SCALE.md
 #: r9 --bigprobe): past ~half the directories the explicit per-dir
 #: listing enumerates nearly the whole index anyway, so the flat root
-#: read is the same bytes with one listing pass saved. r9 verdict #3
-#: promoted this from docstring guidance to an enforced switch.
+#: read is the same bytes without a per-directory existence check.
+#: r9 verdict #3 promoted this from docstring guidance to an enforced
+#: switch.
 FLAT_READ_CROSSOVER = 0.5
 
 #: index paths that already emitted the flat-read crossover warning —
@@ -854,7 +856,7 @@ FLAT_READ_CROSSOVER = 0.5
 _FLAT_READ_WARNED: set[str] = set()
 
 #: serializes the parallel-discovery-threshold save/restore window in
-#: :func:`_read_many_dirs` — see its thread-exclusion note (r13).
+#: :func:`_driver_listing` — see its thread-exclusion note (r13).
 _DISCOVERY_CONF_LOCK = threading.Lock()
 
 
@@ -903,10 +905,10 @@ def read_matched_partitions(
     probe would match more than :data:`FLAT_READ_CROSSOVER` of them
     (the large-batch regime, ``B ≳ n_buckets``), the matched-dirs
     listing is SKIPPED and the whole index is read flat — identical
-    rows (the caller's ``isin`` still applies), one listing pass
-    cheaper, and a warning names the regime so operators know to split
-    the batch or rebuild with more buckets if this is their steady
-    state. Reserved partitions (negative values — the LSM delta
+    rows (the caller's ``isin`` still applies), no per-directory
+    existence check, and a warning names the regime so operators know
+    to split the batch or rebuild with more buckets if this is their
+    steady state. Reserved partitions (negative values — the LSM delta
     ``pb=-1`` and the normalized-srp vector directories ``pb<=-2``)
     do NOT count toward the crossover: every probe touches them
     regardless of batch size, so counting them made small-geometry
@@ -923,12 +925,12 @@ def read_matched_partitions(
             1 for v in vals if not (isinstance(v, int) and v < 0)
         )
         try:
-            has_any = any(
-                e.startswith(f"{part_col}=") for e in fs.listdir(path)
+            parts = sorted(
+                e for e in fs.listdir(path) if e.startswith(f"{part_col}=")
             )
         except OSError:
-            has_any = False
-        if not has_any:
+            parts = []
+        if not parts:
             return None
         if path not in _FLAT_READ_WARNED:
             import warnings
@@ -938,14 +940,23 @@ def read_matched_partitions(
                 f"index probe at {path}: batch matches {crossover_n} of "
                 f"~{total_partitions} partition directories (> "
                 f"{FLAT_READ_CROSSOVER:.0%}) — past the pruning crossover; "
-                "reading the index flat (same rows, one listing pass "
-                "saved). If this is your steady batch size, split the "
-                "batch or rebuild the index with n_buckets above it. "
+                "reading the index flat (same rows, no per-directory "
+                "existence check). If this is your steady batch size, "
+                "split the batch or rebuild the index with n_buckets above it. "
                 "(Warned once per index path.)",
                 UserWarning,
                 stacklevel=2,
             )
-        return spark.read.option("basePath", path).parquet(path)
+        # the root's partition directories are listed like the matched
+        # ones: schema from one footer, listing on the driver — without
+        # this, every flat read past 32 directories paid a listing JOB
+        # (one task per directory: 64–65 tasks per micro-batch at the
+        # 4×16 minhash geometry)
+        schema = spark.read.option("basePath", path).parquet(
+            fs.join(path, parts[0])
+        ).schema
+        with _driver_listing(spark, path, len(parts)):
+            return spark.read.schema(schema).option("basePath", path).parquet(path)
     matched = [
         d
         for v in vals
@@ -958,22 +969,30 @@ def read_matched_partitions(
 
 
 def _read_many_dirs(spark, base_path: str, dirs: list[str]):
-    """Construct the multi-directory read without paying Spark's
-    parallel-discovery job twice over.
+    """Construct the multi-directory read without Spark's
+    parallel-discovery job: schema from ONE matched directory (a single
+    footer), listing on the driver (:func:`_driver_listing`)."""
+    schema = spark.read.option("basePath", base_path).parquet(dirs[0]).schema
+    with _driver_listing(spark, base_path, len(dirs)):
+        return spark.read.schema(schema).option("basePath", base_path).parquet(*dirs)
+
+
+@contextmanager
+def _driver_listing(spark, path: str, n_dirs: int):
+    """Scope a read construction over ``n_dirs`` partition directories
+    under ``path`` so Spark lists them on the driver.
 
     Above ``parallelPartitionDiscovery.threshold`` (32) paths, Spark
-    lists AND schema-infers via driver jobs whose per-path task
-    overhead dwarfs the actual stat calls on a local filesystem —
-    MEASURED on the 10M-vector srp index (SCALE.md r12): constructing
-    a 4,096-directory read cost 16.7 s as jobs vs **1.55 s** with
-    sequential driver listing + an explicit schema (the listing itself
-    is 4,096 ``listStatus`` calls ≈ 40 ms locally). So for plain local
-    paths: resolve the schema from ONE matched directory (a single
-    footer), then list sequentially by raising the threshold for the
-    duration of the construct. ``scheme://`` URIs keep the parallel
-    job — against S3 each LIST is a ~30-50 ms RPC and the driver
-    serializing 4,096 of them would cost minutes; only the schema
-    shortcut applies there.
+    lists via a driver job whose per-path task overhead dwarfs the
+    actual stat calls on a local filesystem — MEASURED on the
+    10M-vector srp index (SCALE.md r12): constructing a 4,096-directory
+    read cost 16.7 s as jobs vs **1.55 s** with sequential driver
+    listing + an explicit schema (the listing itself is 4,096
+    ``listStatus`` calls ≈ 40 ms locally). So for plain local paths
+    the threshold is raised for the duration of the construct.
+    ``scheme://`` URIs keep the parallel job — against S3 each LIST is
+    a ~30-50 ms RPC and the driver serializing 4,096 of them would
+    cost minutes.
 
     Thread-exclusion note (r12 verdict #8): the threshold is a
     session-level SQL conf consulted from the active ``SQLConf`` at
@@ -992,16 +1011,15 @@ def _read_many_dirs(spark, base_path: str, dirs: list[str]):
     against URI stores should funnel them through one thread."""
     from .. import fs
 
-    schema = spark.read.option("basePath", base_path).parquet(dirs[0]).schema
-    reader = spark.read.schema(schema).option("basePath", base_path)
-    if fs.is_uri(base_path) or len(dirs) <= 32:
-        return reader.parquet(*dirs)
+    if fs.is_uri(path) or n_dirs <= 32:
+        yield
+        return
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     with _DISCOVERY_CONF_LOCK:
         saved = spark.conf.get(key)
         try:
-            spark.conf.set(key, str(max(len(dirs) + 1, int(saved))))
-            return reader.parquet(*dirs)
+            spark.conf.set(key, str(max(n_dirs + 1, int(saved))))
+            yield
         finally:
             spark.conf.set(key, saved)
 

@@ -31,7 +31,12 @@ Idempotency is CRASH-POINT-COMPLETE, not just commit-gated:
   preserves rows, it does not dedup);
 - the target write is per-batch-directory overwrite
   (``ingest_batch=<id>/``), so replays rewrite in place instead of
-  double-appending.
+  double-appending;
+- the commit order is target ∥ index append → commit marker: the two
+  writes run side by side and BOTH finish before the marker, so a
+  crash leaves at most one of them landed — an idempotent per-batch
+  overwrite or a replay-benign delta append — and the replay
+  reproduces the same accepted set either way.
 
 One fingerprint pass per micro-batch (r9): the index kind's family
 projection (``dedup_index.Family.project``) is computed once and
@@ -45,6 +50,13 @@ ingest-loop probe measured the resulting fixed per-batch cadence at
 bought this cross-module API (the sharing is pinned accepted-set-
 identical to the composed in-memory operators by
 ``tests/test_streaming_dedup_ingest.py``).
+
+Per batch, the Spark actions run in this order, ``∥`` marking the
+independent pairs issued side by side from driver threads
+(``parallel.map_actions``, which keeps the stream's job group):
+exact pin → projection pin (its ``pb`` bucket set observed in the
+same job, ``dedup_index.pin_rows``) → in-batch pairs ∥ index probe →
+accepted pin → target ∥ index append → commit marker.
 
 Null-payload rows (no text/vector to fingerprint) bypass every dedup
 stage: they pass straight to the sink and are never posted to the
@@ -197,9 +209,11 @@ def streaming_dedup_ingest(
         as_delta_append,
         family,
         pairs_from_rows,
+        pin_rows,
         probe_index_with_rows,
     )
     from .. import fs
+    from ..parallel import map_actions
     from ..operators.similarity import (
         append_routed_rows,
         load_ann_meta,
@@ -367,57 +381,72 @@ def streaming_dedup_ingest(
         # THE one fingerprint pass: every later stage reads these rows.
         # The in-batch pass and the index probe band/verify with the
         # SIDECAR's family and geometry, so batch-vs-batch and
-        # batch-vs-corpus dedup can never diverge.
-        rows = fam.project(exact.select(id_col, payload_col), meta).localCheckpoint(
-            eager=False
-        )
+        # batch-vs-corpus dedup can never diverge. Pinned eagerly, the
+        # probe's bucket set observed in the same job.
+        rows, pbs = pin_rows(fam.project(exact.select(id_col, payload_col), meta))
+
         # stage 2 — near within batch: drop the higher id of each
         # verified pair (id_a < id_b by construction); the pair set is
         # identical to the in-memory operator's (pinned — see
         # pairs_from_rows)
-        pairs = pairs_from_rows(rows, meta, threshold=thr)
-        drop = (
-            pairs.select(F.col("id_b").alias(id_col))
-            .distinct()
-            # consumed three times (survivor rows for the probe, the
-            # accepted anti-join, and through them the append's
-            # semi-join) — pin the pair shuffle
-            .localCheckpoint(eager=False)
-        )
+        def in_batch_drops() -> DataFrame:
+            pairs = pairs_from_rows(rows, meta, threshold=thr)
+            return pairs.select(F.col("id_b").alias(id_col)).distinct()
+
         # stage 3 — near against the indexed corpus, EXCLUDING matches
         # to this very batch's ids (the crash-replay guard — module
         # docstring): O(batch + matched buckets), corpus never
-        # rescanned. The probe reuses the projection (survivor rows =
-        # the pinned rows minus in-batch drops), never re-fingerprints.
-        surv_rows = rows.join(drop, id_col, "left_anti")
-        matches = probe_index_with_rows(
-            spark, surv_rows, index_path, meta, threshold=thr
+        # rescanned. The probe reuses the projection, never
+        # re-fingerprints, and covers every exact survivor: a match of
+        # a doc stage 2 drops changes nothing, that doc is dropped
+        # either way.
+        def corpus_dups() -> DataFrame:
+            matches = probe_index_with_rows(
+                spark, rows, index_path, meta, threshold=thr, pbs=pbs
+            )
+            own_ids = exact.select(F.col(id_col).alias("corpus_id"))
+            # one row per matched pair, not per doc: its only reader is
+            # the accepted anti-join, which ignores repeats, and a
+            # distinct here would cost a shuffle job per batch
+            return matches.join(own_ids, "corpus_id", "left_anti").select(
+                F.col("batch_id").alias(id_col)
+            )
+
+        # stages 2 and 3 read only the pinned rows: run side by side,
+        # each pinned eagerly (the accepted set below reads both)
+        drop, dup_ids = map_actions(
+            lambda stage: stage().localCheckpoint(eager=True),
+            [in_batch_drops, corpus_dups],
         )
-        own_ids = exact.select(F.col(id_col).alias("corpus_id"))
-        dup_ids = (
-            matches.join(own_ids, "corpus_id", "left_anti")
-            .select(F.col("batch_id").alias(id_col))
-            .distinct()
-        )
-        # the accepted set is materialized TWICE below (target write +
-        # index append) — pin it so the probe/anti-join subtree runs once
+        # the accepted set is read by BOTH writes below — pin it so
+        # they do not each re-run the anti-joins
         accepted = (
             exact.join(drop, id_col, "left_anti")
             .join(dup_ids, id_col, "left_anti")
-            .localCheckpoint(eager=False)
+            .localCheckpoint(eager=True)
         )
-        # commit order: target (idempotent per-batch overwrite) →
-        # index append (replay-benign) → manifest (gates the skip)
-        accepted.unionByName(null_payload).write.mode("overwrite").parquet(
-            fs.join(target_dir, "data", f"ingest_batch={batch_id}")
-        )
-        # index append: the accepted docs' slice of the SAME projection
-        # (already banded at the sidecar's geometry), written as one
-        # LSM delta file (as_delta_append) — no re-fingerprint, no
-        # per-directory file fan-out. Safe under the loop's
-        # single-writer contract (see append_routed_rows).
-        routed = rows.join(accepted.select(id_col), id_col, "left_semi")
-        append_routed_rows(as_delta_append(routed), index_path, "pb")
+
+        def write_target() -> None:
+            # idempotent per-batch overwrite
+            accepted.unionByName(null_payload).write.mode("overwrite").parquet(
+                fs.join(target_dir, "data", f"ingest_batch={batch_id}")
+            )
+
+        def append_index() -> None:
+            # the accepted docs' slice of the SAME projection (already
+            # banded at the sidecar's geometry), written as one LSM
+            # delta file (as_delta_append) — no re-fingerprint, no
+            # per-directory file fan-out. Safe under the loop's
+            # single-writer contract (see append_routed_rows).
+            routed = rows.join(accepted.select(id_col), id_col, "left_semi")
+            append_routed_rows(as_delta_append(routed, pinned=True), index_path, "pb")
+
+        # commit order: target ∥ index append → commit marker. Both
+        # finish before the marker; a crash between them leaves either
+        # an idempotent per-batch overwrite or a replay-benign delta
+        # append, and the own-id exclusion reproduces the same
+        # accepted set on replay (module docstring)
+        map_actions(lambda write: write(), [write_target, append_index])
         fs.makedirs(target_dir)
         # record NEW degenerate payloads before the commit marker:
         # marker creation is idempotent, and a crash between here and

@@ -61,17 +61,25 @@ def fresh_database(spark):
 
 
 @pytest.fixture
-def run_in_job_group(spark):
+def last_job_id(spark):
+    """``last_job_id()``: the newest job id in the status store (-1
+    before any job), read after the listener bus drains."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def read() -> int:
+        jsc.listenerBus().waitUntilEmpty(30_000)
+        jobs = jsc.statusStore().jobsList(None)  # a Scala Seq
+        return -1 if jobs.isEmpty() else max(jobs.head().jobId(), jobs.last().jobId())
+
+    return read
+
+
+@pytest.fixture
+def run_in_job_group(spark, last_job_id):
     """``run_in_job_group(fn)`` calls ``fn()`` under a fresh job group
     and returns ``(result, jobs launched, jobs in that group)``; jobs
     launched is the job-id delta read from the status store."""
     sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-
-    def last_job_id() -> int:
-        jsc.listenerBus().waitUntilEmpty(30_000)
-        jobs = jsc.statusStore().jobsList(None)  # a Scala Seq
-        return -1 if jobs.isEmpty() else max(jobs.head().jobId(), jobs.last().jobId())
 
     def run(fn):
         group = f"g-{uuid.uuid4().hex[:8]}"

@@ -98,3 +98,75 @@ def test_max_centroid_movement_edge_cases():
     assert max_centroid_movement(a, [(1, [0.0, 1.5]), (2, [5.0, 5.0])]) == 0.5
     # a dropped (emptied) cluster is never "converged"
     assert max_centroid_movement(a, [(1, [0.0, 1.0])]) == float("inf")
+
+
+def _per_centroid_argmin_oracle(centroid_rows, vec_col):
+    """The former per-centroid form of ``centroid_argmin_col``: one
+    literal array and one (dist, cid) struct per centroid. Kept as the
+    bit-identity oracle of the single-literal form."""
+    from nursinghome_data_pipeline_spark.functions.vectors import dot_product_col
+
+    xx = dot_product_col(vec_col, vec_col)
+    choices = []
+    for cid, clist in centroid_rows:
+        cc = 0.0
+        for v in clist:
+            cc = cc + v * v
+        dist = (
+            xx
+            - F.lit(2.0) * dot_product_col(vec_col, F.lit([float(v) for v in clist]))
+            + F.lit(cc)
+        )
+        choices.append(F.struct(dist.alias("d"), F.lit(cid).cast("long").alias("cid")))
+    return F.array_min(F.array(*choices))["cid"]
+
+
+def test_centroid_argmin_bit_identical_to_per_centroid_form(spark):
+    """One parsed centroid literal walked by one transform assigns
+    exactly like one literal per centroid: ties go to the smaller cid,
+    -0.0 and a NaN centroid element included."""
+    import random
+
+    from nursinghome_data_pipeline_spark.operators.clustering import (
+        centroid_argmin_col,
+    )
+
+    rnd = random.Random(7)
+    dim = 6
+    cents = [(cid, [rnd.uniform(-2, 2) for _ in range(dim)]) for cid in (5, 1, 9, 3)]
+    cents.append((2, list(cents[0][1])))  # exact tie with cid 5 -> 2 wins
+    cents.append((7, [-0.0] * dim))
+    cents.append((8, [float("nan")] + [0.5] * (dim - 1)))
+    rows = [(i, [rnd.uniform(-3, 3) for _ in range(dim)]) for i in range(200)]
+    rows += [
+        (1000, list(cents[0][1])),  # on the tied centroid
+        (1001, [0.0] * dim),  # on the -0.0 centroid
+        (1002, [-0.0] * dim),
+        (1003, [float("nan")] * dim),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    new = df.select("vec_id", centroid_argmin_col(cents, "embedding").alias("cid"))
+    old = df.select("vec_id", _per_centroid_argmin_oracle(cents, "embedding").alias("cid"))
+    got = {r["vec_id"]: r["cid"] for r in new.collect()}
+    assert got == {r["vec_id"]: r["cid"] for r in old.collect()}
+    assert got[1000] == 2
+    assert len(set(got.values())) > 2
+
+
+def test_double_sql_round_trips_every_double(spark):
+    """The SQL text of a double parses back to the same bits; NaN and
+    ±Infinity never reach SQL as bare ``nan``/``inf``."""
+    import struct
+
+    from nursinghome_data_pipeline_spark.functions.vectors import (
+        double_array_sql,
+        double_sql,
+    )
+
+    vals = [0.0, -0.0, 0.1, 1 / 3, -1.5, 1e16, 1e-300, 5e-324,
+            1.7976931348623157e308, float("nan"), float("inf"), float("-inf")]
+    assert [double_sql(v) for v in vals[-3:]] == [
+        "CAST('NaN' AS DOUBLE)", "CAST('Infinity' AS DOUBLE)", "CAST('-Infinity' AS DOUBLE)"
+    ]
+    got = spark.range(1).select(F.expr(double_array_sql(vals)).alias("a")).first()["a"]
+    assert [struct.pack(">d", v) for v in got] == [struct.pack(">d", v) for v in vals]

@@ -549,3 +549,49 @@ def test_read_many_dirs_concurrent_conf_restore(spark, tmp_path):
         t.join()
     assert not errs
     assert spark.conf.get(key) == before
+
+
+def test_flat_read_lists_on_the_driver(spark, tmp_path, run_in_job_group):
+    """Past the crossover the flat root read over more than 32
+    partition directories launches no listing job: its one job is the
+    single-footer schema read, and the discovery threshold is back at
+    its prior value afterwards."""
+    from nursinghome_data_pipeline_spark.operators.similarity import (
+        read_matched_partitions,
+    )
+
+    path = str(tmp_path / "wide")
+    df = spark.range(200).select(
+        (F.col("id") % 40).cast("int").alias("pb"), F.col("id").alias("v")
+    )
+    df.write.partitionBy("pb").parquet(path)
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(key)
+    with pytest.warns(UserWarning, match="reading the index flat"):
+        rel, launched, _ = run_in_job_group(
+            lambda: read_matched_partitions(
+                spark, path, "pb", range(40), total_partitions=40
+            )
+        )
+    assert launched == 1
+    assert spark.conf.get(key) == before
+    assert sorted(tuple(r) for r in rel.select("pb", "v").collect()) == sorted(
+        tuple(r) for r in df.collect()
+    )
+
+
+def test_empty_batch_probe_returns_typed_empty_frame(spark, tmp_path):
+    """An empty batch has no bucket to probe: no index read, and the
+    result is the typed empty frame."""
+    corpus = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "epsilon zeta eta theta")],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "idx")
+    write_dedup_index(corpus, path, n_buckets=4)
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    out = dedup_batch_against_index(spark, empty, path, threshold=0.5)
+    assert out.schema.simpleString() == (
+        "struct<batch_id:bigint,corpus_id:bigint,jaccard:double>"
+    )
+    assert out.collect() == []

@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from nursinghome_data_pipeline_spark.operators.dedup_index import (
@@ -841,3 +842,172 @@ def test_sidecar_payload_col_backtick_rejected_at_stream_start(
             stream, index, str(tmp_path / "target"),
             checkpoint_dir=str(tmp_path / "ckpt"),
         )
+
+
+def _crash_batch():
+    # a corpus copy, a fresh doc, its near-copy and its exact copy
+    return [(10, _BASE), (11, _FRESH), (12, _variant("ninety")), (13, _FRESH)]
+
+
+def _target_rows(spark, target: str, batch_id: int = 0):
+    part = os.path.join(target, "data", f"ingest_batch={batch_id}")
+    return sorted(tuple(r) for r in spark.read.parquet(part).collect())
+
+
+def _wait_for(pred, what: str, timeout_s: float = 120.0) -> None:
+    import time
+
+    t_end = time.monotonic() + timeout_s
+    while not pred():
+        if time.monotonic() > t_end:
+            raise AssertionError(f"timed out waiting for {what}")
+        time.sleep(0.05)
+
+
+@pytest.mark.parametrize("failing", ["index_append", "target_write"])
+def test_crash_between_concurrent_writes_replays_identically(
+    spark, tmp_path, monkeypatch, failing
+):
+    """The target write and the index append run side by side; one of
+    them failing after the other has landed leaves no commit marker,
+    and the restarted stream reproduces the clean run's accepted ids
+    and target rows (own-id exclusion for a landed append, per-batch
+    overwrite for a landed target)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from nursinghome_data_pipeline_spark.operators import similarity
+    from nursinghome_data_pipeline_spark.streaming import commitlog
+
+    corpus = spark.createDataFrame(_corpus_rows(), "doc_id long, text string")
+
+    def setup(tag: str):
+        index = str(tmp_path / f"index-{tag}")
+        write_dedup_index(corpus, index, n_buckets=16)
+        src = str(tmp_path / f"src-{tag}")
+        os.makedirs(src)
+        _write_batch(src, "b0.json", _crash_batch())
+        return index, src, str(tmp_path / f"target-{tag}")
+
+    def run(index, src, target, tag):
+        stream = spark.readStream.schema("doc_id long, text string").json(src)
+        q = streaming_dedup_ingest(
+            stream, index, target, threshold=0.6,
+            checkpoint_dir=str(tmp_path / f"ckpt-{tag}"),
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    ref = setup("ref")
+    run(*ref, "ref")
+    want_ids = _accepted_ids(spark, ref[2])
+    want_rows = _target_rows(spark, ref[2])
+    assert want_ids == {11}
+
+    index, src, target = setup("crash")
+    target_done = os.path.join(target, "data", "ingest_batch=0", "_SUCCESS")
+    delta = os.path.join(index, "pb=-1")
+
+    def delta_landed() -> bool:
+        return os.path.isdir(delta) and any(
+            n.endswith(".parquet") for n in os.listdir(delta)
+        )
+
+    if failing == "index_append":
+        def boom(*a, **k):
+            _wait_for(lambda: os.path.exists(target_done), "the target write")
+            raise OSError("injected append failure")
+
+        monkeypatch.setattr(similarity, "append_routed_rows", boom)
+    else:
+        real_parquet = DataFrameWriter.parquet
+
+        def parquet(self, path, *a, **k):
+            if "ingest_batch=" in str(path):
+                _wait_for(delta_landed, "the index append")
+                raise OSError("injected target-write failure")
+            return real_parquet(self, path, *a, **k)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(Exception, match="injected"):
+        run(index, src, target, "crash")
+    monkeypatch.undo()
+    assert not commitlog.is_committed(target, 0)
+    assert os.path.exists(target_done) == (failing == "index_append")
+    assert delta_landed() == (failing == "target_write")
+
+    run(index, src, target, "crash")  # same checkpoint: batch 0 replays
+    assert commitlog.is_committed(target, 0)
+    assert _accepted_ids(spark, target) == want_ids
+    assert _target_rows(spark, target) == want_rows
+
+
+def test_ingest_jobs_stay_in_stream_job_group(spark, tmp_path, last_job_id):
+    """Every job of a micro-batch — the side-by-side stages and writes
+    included — is in the stream's job group, so reading the group
+    accounts for the whole batch."""
+    corpus = spark.createDataFrame(_corpus_rows(), "doc_id long, text string")
+    index = str(tmp_path / "index")
+    write_dedup_index(corpus, index, n_buckets=16)
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    stream = spark.readStream.schema("doc_id long, text string").json(src)
+    q = streaming_dedup_ingest(
+        stream, index, str(tmp_path / "target"), threshold=0.6,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    try:
+        _write_batch(src, "b0.json", [(20, _FRESH)])
+        q.processAllAvailable()
+        before = last_job_id()
+        _write_batch(src, "b1.json", _crash_batch())
+        q.processAllAvailable()
+        launched = last_job_id() - before
+    finally:
+        q.stop()
+    tracker = spark.sparkContext.statusTracker()
+    in_group = [j for j in tracker.getJobIdsForGroup(str(q.runId)) if j > before]
+    assert launched > 0
+    assert len(in_group) == launched
+
+
+def test_all_null_payload_batch_commits_pass_through_rows(
+    spark, tmp_path, monkeypatch
+):
+    """A batch with no payload at all projects to zero rows and an
+    empty bucket set; it still commits, with only its pass-through
+    rows, and posts nothing to the index."""
+    from nursinghome_data_pipeline_spark.operators import dedup_index
+    from nursinghome_data_pipeline_spark.streaming import commitlog
+
+    pins = []
+    real_pin = dedup_index.pin_rows
+
+    def recording_pin(rows):
+        pinned, pbs = real_pin(rows)
+        pins.append((pinned.count(), pbs))
+        return pinned, pbs
+
+    monkeypatch.setattr(dedup_index, "pin_rows", recording_pin)
+    corpus = spark.createDataFrame(_corpus_rows(), "doc_id long, text string")
+    index = str(tmp_path / "index")
+    write_dedup_index(corpus, index, n_buckets=16)
+    before = sorted(tuple(r) for r in spark.read.parquet(index).collect())
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    target = str(tmp_path / "target")
+    _write_batch(src, "b0.json", [(60, None), (61, None)])
+    stream = spark.readStream.schema("doc_id long, text string").json(src)
+    q = streaming_dedup_ingest(
+        stream, index, target, threshold=0.6,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert pins == [(0, [])]
+    assert commitlog.is_committed(target, 0)
+    assert _target_rows(spark, target) == [(60, None), (61, None)]
+    assert sorted(tuple(r) for r in spark.read.parquet(index).collect()) == before
