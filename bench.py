@@ -224,8 +224,9 @@ def _ivf_partitioned_probe(spark, sf_dir: str):
     """Top-k probe latency over the AT-REST cell-partitioned IVF index
     (operators/similarity.write_ivf_index). The index materializes once
     per bench process into the system tempdir — build cost is the
-    amortized write path, measured separately by
-    ``scripts/scaling_probe.py --ivf`` — so the timed plan is the
+    amortized write path, measured separately (SCALE.md "r4
+    IVF-index-at-rest probe"; ``--ivf`` of the retired
+    ``git show 3b25c0b:scripts/scaling_probe.py``) — so the timed plan is the
     production read path for vector search at rest: the
     PartitionFilters-pruned scan of the probed cells plus the exact
     cosine re-rank."""
@@ -312,7 +313,9 @@ def _streaming_dedup_ingest_batch(spark, sf_dir: str):
     appends, and a mutated cache would poison the sibling probe entry
     and later reps). Returns the accepted docs. The full 20-batch
     1×/10× growth table (incl. the cross-batch dedup path) lives in
-    scaling_probe --ingestloop / SCALE.md; this entry keeps the
+    SCALE.md "r8: streaming dedup-ingest — end-to-end 20-batch growth
+    run" (``--ingestloop`` of the retired
+    ``git show 3b25c0b:scripts/scaling_probe.py``); this entry keeps the
     per-batch constant (~7 s fixed job cadence, measured flat in both
     batch index and corpus size) visible round over round."""
     import json as _json
@@ -480,8 +483,10 @@ def _sessionize_bucketed_events(spark, sf_dir: str):
     table (operators/sessions.py) — bit-equal to the registry's
     user_sessions window twin (pinned), benched so the bucketed plan's
     overhead vs the single-window default stays visible per round (the
-    hot-key crossover itself is measured by scaling_probe
-    --hotsession: 2.9x at 19M rows on one user)."""
+    hot-key crossover itself is in SCALE.md "r7 follow-through: the
+    hot-user sessionize ceiling", 2.9x at 19M rows on one user, measured
+    by ``--hotsession`` of the retired
+    ``git show 3b25c0b:scripts/scaling_probe.py``)."""
     from nursinghome_data_pipeline_spark.operators.sessions import (
         sessionize_bucketed,
     )
@@ -496,7 +501,9 @@ def _embedding_near_dup_auto(spark, sf_dir: str):
     corpus-size-adaptive) — the registry twin pins n_planes=6 for
     DuckDB-oracle tractability, so the adaptive production path gets
     its per-round number here (r6 verdict ask #1; sf-curve exponent
-    0.25 vs 1.14 fixed at 30x, scripts/scaling_probe.py --sfcurve)."""
+    0.25 vs 1.14 fixed at 30x, SCALE.md "r7: the last superlinear
+    closed"; ``--sfcurve`` of the retired
+    ``git show 3b25c0b:scripts/scaling_probe.py``)."""
     from nursinghome_data_pipeline_spark.operators.similarity import (
         embedding_near_duplicate_pairs,
     )

@@ -55,14 +55,3 @@ def oracle_morton2(x_expr: str, y_expr: str, *, bits: int = 16) -> str:
     py = f"(((({y_expr}) % {mask}) + {mask}) % {mask})"
     body = _terms(px, py, bits, "//")
     return f"CAST({body} AS BIGINT)"
-
-
-def morton2_py(x: int, y: int, *, bits: int = 16) -> int:
-    """Python reference for differential tests."""
-    x %= 1 << bits
-    y %= 1 << bits
-    out = 0
-    for i in range(bits):
-        out |= ((x >> i) & 1) << (2 * i)
-        out |= ((y >> i) & 1) << (2 * i + 1)
-    return out

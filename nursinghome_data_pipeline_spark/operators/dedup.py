@@ -53,9 +53,6 @@ def _shingles(text: Column | str, k: int = 3) -> Column:
     return _bind(tokens, mk)
 
 
-_MAX_LONG = (1 << 63) - 1
-
-
 def _perm_constants(n: int, seed: int = 0x9E3779B97F4A7C15) -> list[int]:
     """Deterministic 64-bit XOR constants (splitmix64 sequence)."""
     out = []
@@ -379,17 +376,6 @@ def jaccard_verify_col(sh_a: Column, sh_b: Column) -> Column:
     )
 
 
-def ngram_jaccard_col(a: Column | str, b: Column | str, *, shingle_k: int = 3) -> Column:
-    """Exact Jaccard similarity of two texts' shingle sets (verify step)."""
-    sa = F.array_distinct(_shingles(a, shingle_k))
-    sb = F.array_distinct(_shingles(b, shingle_k))
-    inter = F.size(F.array_intersect(sa, sb))
-    union = F.size(F.array_union(sa, sb))
-    return F.when(union == 0, F.lit(0.0)).otherwise(
-        inter.cast("double") / union.cast("double")
-    )
-
-
 SIMHASH_BITS = 64
 
 
@@ -599,229 +585,132 @@ def jaccard_pair_join(
     text_col: str = "text",
     threshold: float = 0.5,
     shingle_k: int = 3,
-    max_df: int | None = None,
-    carry_hashes: bool = True,
-    algorithm: str = "prefix",
 ) -> DataFrame:
-    """EXACT all-pairs n-gram Jaccard >= threshold (no LSH approximation).
+    """EXACT all-pairs n-gram Jaccard >= threshold (no LSH approximation,
+    never a cross join); ``threshold`` must lie in (0, 1].
 
-    Inverted-index algorithm (the scalable exact plan — never a cross
-    join): explode each document's distinct shingle set into postings,
-    self-join postings on the shingle, count shared shingles per pair,
-    and derive Jaccard by inclusion-exclusion
+    AllPairs/PPJoin-style prefix filtering (Bayardo et al., WWW'07;
+    Xiao et al., WWW'08) over each document's distinct 64-bit shingle
+    hashes (:func:`shingle_hash_col` — no shingle strings are built; a
+    collision needs ~10¹⁰ distinct shingles in one corpus for even odds,
+    and the DuckDB oracle checks against string shingles). Each doc's
+    shingles sort by ASCENDING global document frequency (ties by
+    shingle value — any global total order is valid) and only the first
+    ``sz - ceil(t·sz) + 1`` — the RAREST shingles — are posted into the
+    candidate join; candidates pass the size-ratio prune
+    ``min(|A|,|B|) >= t·max(|A|,|B|)`` inside the join condition, then
+    verify exactly against the full shingle arrays with
     ``|A∩B| / (|A| + |B| - |A∩B|)``.
 
-    Two lossless prunes keep the pair blow-up bounded:
+    Exactness: ``J(A,B) ≥ t`` forces ``|A∩B| ≥ ceil(t·|A|)``, and if
+    every common element sat outside A's prefix the intersection would
+    fit in the last ``ceil(t·|A|)-1`` positions — contradiction;
+    symmetrically for B, so some common element lands in BOTH posted
+    prefixes. Pinned against a pure-Python all-pairs Jaccard by
+    ``tests/test_dedup_properties.py``.
 
-    - size-ratio: ``J >= t`` implies ``min(|A|,|B|) >= t * max(|A|,|B|)``,
-      applied inside the join condition so mismatched-length pairs never
-      reach the aggregation;
-    - the posting join emits a pair once per SHARED shingle only — pairs
-      with empty intersection (the overwhelming majority) are never
-      materialized at all, unlike a cross join.
-
-    Scale: shuffle keys are shingle hashes (uniform); a stop-shingle
-    appearing in f fraction of docs contributes O((fn)^2) pair rows.
-    ``max_df`` bounds this: postings whose shingle occurs in more than
-    ``max_df`` documents are dropped before the join (one extra
-    groupBy over posting keys + a broadcast anti-join of the tiny stop
-    list), capping any shingle's pair contribution at O(max_df²).
-    The prune is ONE-SIDED: set sizes (``sz``) stay exact full-set
-    sizes while the counted intersection can only shrink, so the
-    computed Jaccard is a lower bound — no false positives, but a pair
-    whose overlap is mostly stop shingles can fall below threshold
-    (recall loss quantified in tests/test_dedup_similarity.py). Run
-    :func:`exact_dedup_fingerprints` first for mass-duplicated
-    payloads. Complements :func:`near_duplicate_pairs` (LSH), which
-    trades exactness for a near-linear candidate set; this one
-    (``max_df=None``) is the auditable ground truth.
-
-    ``carry_hashes=True`` (default) posts 64-bit shingle HASHES
-    (:func:`shingle_hash_col` — no shingle strings are ever built)
-    instead of shingle strings: the posting shuffle narrows ~3-4×
-    (8-byte longs vs multi-word strings) and the join compares longs.
-    Identical results unless two distinct shingles collide in 64 bits
-    (~2⁻⁶⁴ per pair — it would take ~10¹⁰ distinct shingles in ONE
-    corpus for a 50% chance of any collision anywhere); hash-checked
-    against the string-shingle DuckDB oracle. Set False for the
-    string-exact audit path.
-
-    ``algorithm`` picks the candidate generator — both are EXACT (same
-    output bit-for-bit; pinned by a differential test):
-
-    - ``"prefix"`` (default): AllPairs/PPJoin-style prefix filtering
-      (Bayardo et al., WWW'07; Xiao et al., WWW'08). Each doc's
-      shingles sort by ASCENDING global document frequency (ties by
-      shingle value — any global total order is valid) and only the
-      first ``sz - ceil(t·sz) + 1`` — the RAREST shingles — are posted
-      into the candidate join; candidates then verify exactly against
-      the full shingle arrays. Exactness: ``J(A,B) ≥ t`` forces
-      ``|A∩B| ≥ ceil(t·|A|)``, and if every common element sat outside
-      A's prefix the intersection would fit in the last
-      ``ceil(t·|A|)-1`` positions — contradiction; symmetrically for
-      B, so some common element lands in BOTH posted prefixes.
-      This bounds the pair blow-up by Σ df² over PREFIX postings
-      only: a stop-shingle shared by f·n docs almost never appears in
-      a prefix (it is the commonest, prefixes keep the rarest), so
-      pair cost stops scaling with the square of corpus-wide phrase
-      frequency. Measured on the r6 sf-curve (organic 10× growth at
-      sf0.1): the postings plan walked 33.3 s wall (fitted exponent
-      1.30); prefix restores ≈linear. Three extra LINEAR passes pay
-      for it (df count, df join, per-doc rank) — at sf0.1 that is
-      noise, at 100 TB it is the difference between a join that
-      finishes and one that doesn't.
-    - ``"postings"``: the plain inverted-index join (every posting
-      emits candidate rows; per-shingle cost O(df²)). Kept as the
-      structurally-simpler differential twin and for corpora already
-      known to have bounded df (or with ``max_df`` set, which bounds
-      df by construction).
+    Scale: pair cost is Σ df² over PREFIX postings only — a stop-shingle
+    shared by f·n docs almost never appears in a prefix (it is the
+    commonest, prefixes keep the rarest), so pair cost stops scaling
+    with the square of corpus-wide phrase frequency. Measured on the r6
+    sf-curve (organic 10× growth at sf0.1): the plain postings join
+    walked 33.3 s wall (fitted exponent 1.30); prefix restores
+    ≈linear for three extra LINEAR passes (df count, df join, per-doc
+    rank). Complements :func:`near_duplicate_pairs` (LSH), which trades
+    exactness for a near-linear candidate set; this one is the
+    auditable ground truth.
     """
-    if algorithm not in ("prefix", "postings"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    shingle_expr = (
-        shingle_hash_col(text_col, shingle_k)
-        if carry_hashes
-        else _shingles(text_col, shingle_k)
-    )
-    # materialize the SHINGLE SETS once: every downstream consumer —
-    # both posting sides, the df ranking, and the prefix branch's
-    # verification arrays — would otherwise re-evaluate the shingle
-    # projection (the expensive subtree; measured 12s → 7s at sf0.1
-    # when the old postings-level checkpoint was introduced, and the
-    # checkpoint moved up to the sets so the verify join shares it
-    # instead of paying a fourth evaluation). At cluster scale this is
-    # the standard "write the inverted index, then join it" shape.
+    if not 0 < threshold <= 1:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold!r}")
+    # materialize the SHINGLE SETS once: both posting sides, the df
+    # ranking and the verification arrays would otherwise re-evaluate
+    # the shingle projection (the expensive subtree; measured 12s → 7s
+    # at sf0.1 when the old postings-level checkpoint was introduced,
+    # and the checkpoint moved up to the sets so the verify join shares
+    # it instead of paying a fourth evaluation). At cluster scale this
+    # is the standard "write the inverted index, then join it" shape.
     sets = (
         df.select(
             F.col(id_col),
-            F.array_distinct(shingle_expr).alias("sh"),
+            F.array_distinct(shingle_hash_col(text_col, shingle_k)).alias("sh"),
         )
         .select(id_col, "sh", F.size("sh").alias("sz"))
         .localCheckpoint(eager=False)
     )
     post = sets.select(id_col, "sz", F.explode("sh").alias("shingle"))
-    if max_df is not None:
-        stop = (
-            post.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") > max_df)
-            .select("shingle")
-        )
-        post = post.join(F.broadcast(stop), "shingle", "left_anti")
     size_ratio_ok = F.least(F.col("a.sz"), F.col("b.sz")) >= F.greatest(
         F.col("a.sz"), F.col("b.sz")
     ) * F.lit(threshold)
-    if algorithm == "prefix":
-        # document frequency via a COUNT window over the shingle
-        # partition, not groupBy+join: one shuffle on the shingle key
-        # instead of an aggregate plus a sort-merge join back
-        # (measured 3.2 s → 2.3 s at sf0.1, bit-identical output)
-        w_sh = Window.partitionBy("shingle")
-        w_id = Window.partitionBy(id_col)
-        ranked = post.withColumn("_df", F.count(F.lit(1)).over(w_sh))
-        # prefix length uses the KEPT set size (= full size unless
-        # max_df filtered postings): J ≥ t against full sizes implies
-        # kept-common ≥ ceil(t·sz_full) ≥ ceil(t·sz_kept). The 1e-9
-        # slack keeps a float product that is mathematically integral
-        # from ceiling one too high (which would SHORTEN the prefix —
-        # the unsafe direction; too-long prefixes only add candidates).
-        # With no max_df the kept postings ARE the full set, so the
-        # kept-size COUNT window is provably the existing `sz` column
-        # — one window op per self-join side saved (r13; the row_number
-        # window below still owns the id-partition exchange either way).
-        if max_df is None:
-            kept_sz = F.col("sz")
-        else:
-            kept_sz = F.count(F.lit(1)).over(w_id)
-        rank = F.row_number().over(
-            w_id.orderBy(F.col("_df").asc(), F.col("shingle").asc())
+    # document frequency via a COUNT window over the shingle partition,
+    # not groupBy+join: one shuffle on the shingle key instead of an
+    # aggregate plus a sort-merge join back (measured 3.2 s → 2.3 s at
+    # sf0.1, bit-identical output)
+    ranked = post.withColumn(
+        "_df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
+    )
+    rank = F.row_number().over(
+        Window.partitionBy(id_col).orderBy(
+            F.col("_df").asc(), F.col("shingle").asc()
         )
-        prefix = (
-            ranked.select(
-                id_col,
-                "sz",
-                "shingle",
-                rank.alias("_rk"),
-                (
-                    kept_sz
-                    - F.ceil(kept_sz * F.lit(threshold) - F.lit(1e-9))
-                    + F.lit(1)
-                ).alias("_plen"),
-            )
-            .where(F.col("_rk") <= F.col("_plen"))
-            .select(id_col, "sz", "shingle")
-            # NOT checkpointed, deliberately: both self-join sides
-            # re-run the df-ranking pipeline (explode + two window
-            # shuffles), but the two copies run CONCURRENTLY across
-            # cores while a checkpoint is a serializing barrier —
-            # measured 1.96 s → 2.40 s at sf0.1 when a lazy
-            # localCheckpoint was tried here (r12). The `sets`
-            # checkpoint above already bounds the duplicated work to
-            # the ranking passes over in-memory postings.
+    )
+    # The 1e-9 slack keeps a float product that is mathematically
+    # integral from ceiling one too high (which would SHORTEN the
+    # prefix — the unsafe direction; too-long prefixes only add
+    # candidates).
+    sz = F.col("sz")
+    prefix = (
+        ranked.select(
+            id_col,
+            "sz",
+            "shingle",
+            rank.alias("_rk"),
+            (sz - F.ceil(sz * F.lit(threshold) - F.lit(1e-9)) + F.lit(1)).alias(
+                "_plen"
+            ),
         )
-        a, b = prefix.alias("a"), prefix.alias("b")
-        cands = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-                & size_ratio_ok,
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-                F.col("a.sz").alias("sz_a"),
-                F.col("b.sz").alias("sz_b"),
-            )
-            .distinct()
+        .where(F.col("_rk") <= F.col("_plen"))
+        .select(id_col, "sz", "shingle")
+        # NOT checkpointed, deliberately: both self-join sides re-run
+        # the df-ranking pipeline (explode + two window shuffles), but
+        # the two copies run CONCURRENTLY across cores while a
+        # checkpoint is a serializing barrier — measured 1.96 s →
+        # 2.40 s at sf0.1 when a lazy localCheckpoint was tried here
+        # (r12). The `sets` checkpoint above already bounds the
+        # duplicated work to the ranking passes over in-memory postings.
+    )
+    a, b = prefix.alias("a"), prefix.alias("b")
+    cands = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            & size_ratio_ok,
         )
-        # verification arrays: the KEPT shingles (max_df semantics —
-        # intersection can only shrink, sizes stay full); with no
-        # max_df this is exactly sets.sh, no extra shuffle.
-        if max_df is None:
-            arrays = sets.select(id_col, "sh")
-        else:
-            arrays = post.groupBy(id_col).agg(
-                F.collect_list("shingle").alias("sh")
-            )
-        inter = (
-            cands.join(
-                arrays.select(
-                    F.col(id_col).alias("id_a"), F.col("sh").alias("_sh_a")
-                ),
-                "id_a",
-            )
-            .join(
-                arrays.select(
-                    F.col(id_col).alias("id_b"), F.col("sh").alias("_sh_b")
-                ),
-                "id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                "sz_a",
-                "sz_b",
-                F.size(F.array_intersect("_sh_a", "_sh_b")).alias("n_common"),
-            )
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.sz").alias("sz_a"),
+            F.col("b.sz").alias("sz_b"),
         )
-    else:
-        a, b = post.alias("a"), post.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-                & size_ratio_ok,
-            )
-            .groupBy(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-                F.col("a.sz").alias("sz_a"),
-                F.col("b.sz").alias("sz_b"),
-            )
-            .agg(F.count(F.lit(1)).alias("n_common"))
+        .distinct()
+    )
+    inter = (
+        cands.join(
+            sets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("_sh_a")),
+            "id_a",
         )
+        .join(
+            sets.select(F.col(id_col).alias("id_b"), F.col("sh").alias("_sh_b")),
+            "id_b",
+        )
+        .select(
+            "id_a",
+            "id_b",
+            "sz_a",
+            "sz_b",
+            F.size(F.array_intersect("_sh_a", "_sh_b")).alias("n_common"),
+        )
+    )
     union_sz = F.col("sz_a") + F.col("sz_b") - F.col("n_common")
     return inter.select(
         "id_a",
@@ -1078,8 +967,9 @@ def near_duplicate_pairs(
     array-intersect. The earlier formulation joined raw text and
     re-shingled per PAIR — on a mass-duplicated corpus a text copied
     m times sits in one LSH bucket and is re-shingled C(m,2)·2 times,
-    which measured 126 s for a 16×-duplicated sf0.1 corpus
-    (scripts/scaling_probe.py) vs 4.2 s with per-doc shingling. The
+    which measured 126 s for a 16×-duplicated sf0.1 corpus vs 4.2 s
+    with per-doc shingling (SCALE.md "Shuffle inventory", LSH band
+    join row; ``git show 3b25c0b:scripts/scaling_probe.py``). The
     hashed-long arrays are also smaller on the wire than the text
     they replace. (For corpora with heavy exact duplication, still run
     :func:`exact_dedup_fingerprints` first — it collapses the m copies

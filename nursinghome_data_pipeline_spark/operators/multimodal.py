@@ -17,9 +17,10 @@ Decode depth is tiered:
   bytes.
 - **Pixel/sample decode stays stubbed**: full raster decode, audio
   resample, video frame extraction need media libraries NOT in this
-  environment; ``decode_stub=True`` (default) computes a
-  deterministic fake from the bytes, and the pixel-level paths raise
-  ``NotImplementedError`` where the codec would run.
+  environment; the stubs (``extract_features(decode_stub=True)``, the
+  default, and :func:`sample_frames`' frame bytes) compute a
+  deterministic fake from the bytes, and pixel resampling is left to
+  the decode workers that consume :func:`resize_plan`'s geometry.
 
 Scale notes: media blobs make rows wide — ``media_repartition`` sizes
 partitions by *bytes*, not rows, so Arrow batches stay within executor
@@ -183,8 +184,7 @@ def resize_plan(df: DataFrame, *, target: int = 224) -> DataFrame:
     keeps the plan bit-portable across engines, so a SQL oracle can
     recompute it from the source dimensions.
 
-    The pixel resample itself is the codec boundary
-    (:func:`resize_pixels`, ``NotImplementedError`` — media libraries
+    The pixel resample itself is the codec boundary (media libraries
     are absent in this environment). That split is deliberate at scale:
     a training pipeline runs this metadata-only plan stage first, so
     the stage that groups media for the GPU/codec workers shuffles
@@ -226,20 +226,6 @@ def resize_plan(df: DataFrame, *, target: int = 224) -> DataFrame:
             )
 
     return df.mapInPandas(batches, schema=out_schema)
-
-
-def resize_pixels(payload: bytes | None, out_width: int, out_height: int) -> bytes:
-    """Pixel-level resample — the documented codec boundary.
-
-    Raster decode + interpolation need an image library this
-    environment does not ship; the Spark-side contract (payload in,
-    payload out, geometry from :func:`resize_plan`) is what a real
-    codec UDF would implement unchanged."""
-    raise NotImplementedError(
-        "pixel resampling requires an image codec library, absent in "
-        "this environment; resize_plan computes the target geometry and "
-        "this function is the slot where the decoder+interpolator runs"
-    )
 
 
 def parse_audio_header(
@@ -445,9 +431,7 @@ def extract_features(df: DataFrame, *, decode_stub: bool = True) -> DataFrame:
     return df.mapInPandas(batches, schema=out_schema)
 
 
-def sample_frames(
-    df: DataFrame, *, every_ms: int = 1000, decode_stub: bool = True
-) -> DataFrame:
+def sample_frames(df: DataFrame, *, every_ms: int = 1000) -> DataFrame:
     """Frame sampling for video payloads: one output row per sampled
     frame timestamp (media_id, frame_ts_ms, frame binary).
 
@@ -470,10 +454,6 @@ def sample_frames(
                 meta = row["meta"] or {}
                 duration = meta.get("duration_ms") or 0
                 for t in range(0, int(duration), every_ms):
-                    if not decode_stub:
-                        raise NotImplementedError(
-                            "real frame extraction requires codec libraries"
-                        )
                     ids.append(row["media_id"])
                     ts.append(t)
                     seed = hashlib.sha256(

@@ -2170,7 +2170,7 @@ def image_header_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "derives the aspect-preserving output geometry in pure integer "
     "floor division — which is why a SQL oracle can recompute the "
     "plan arithmetically. Pixel resampling stays behind the "
-    "documented resize_pixels codec boundary; at scale the plan "
+    "codec boundary; at scale the plan "
     "stage ships (media_id, geometry) rows to the decode workers, "
     "never payload bytes.",
 )
@@ -5363,9 +5363,8 @@ def orc_roundtrip_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the batch GROUP BY oracle bit-for-bit. Since r13 this fold runs "
     "as a CATALYST-NATIVE streaming aggregation in update mode (count "
     "+ quantized-sum are built-in aggregates — JVM state store, zero "
-    "Python workers on the plan, guide §4); the GroupState API twin "
-    "(applyInPandasWithState — the arbitrary-stateful shape for folds "
-    "built-ins cannot express) ships alongside, emission-identical "
+    "Python workers on the plan, guide §4); the GroupState API fold "
+    "(applyInPandasWithState) is its test oracle, emission-identical "
     "(differential-pinned in tests/test_running_totals.py).",
 )
 def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:

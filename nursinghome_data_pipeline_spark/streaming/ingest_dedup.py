@@ -181,8 +181,9 @@ def streaming_dedup_ingest(
     never gated on maintenance). Appends are single-file ``pb=-1``
     LSM deltas (r9 — see ``dedup_index.DELTA_PB``), so the compaction
     is the LSM merge: it folds delta rows into their true bucket
-    directories. The re-measured cadence (SCALE.md r9,
-    ``scaling_probe --dedupcadence``): probe latency is FLAT through
+    directories. The re-measured cadence (SCALE.md "Re-measured append
+    cadence", r9; ``--dedupcadence`` of the retired
+    ``git show 3b25c0b:scripts/scaling_probe.py``): probe latency is FLAT through
     128 delta appends (1.77/1.47/1.23/1.14 s at 0/1/32/128 — within
     warm-up noise; the r8 per-directory appends read +25% at 32 and
     3.0× at 128), and file count grows exactly +1 per append (192

@@ -10,8 +10,9 @@ tagged with its running session ordinal) and custom per-session state
 State per user: (last event ts, session ordinal, events in session) —
 three scalars, so 100M users is a few GB of state store, well within a
 cluster's RocksDB state backend. The operator is deterministic given
-per-user event-time order; batch parity with the window-function twin
-(``registry.user_sessions``) is pinned by tests.
+per-user event-time order; batch parity with a window-function twin
+(kept as the oracle in ``tests/test_stateful_sessionize.py``) is pinned
+by tests.
 """
 
 from __future__ import annotations
@@ -119,27 +120,4 @@ def sessionize_stream(
             outputMode="update",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
-    )
-
-
-def batch_sessionize_twin(events: DataFrame, *, gap_minutes: int = 30) -> DataFrame:
-    """Window-function twin for parity tests (same output schema;
-    session_start is the first event ts of each session)."""
-    from pyspark.sql.window import Window
-
-    gap_us = gap_minutes * 60 * 1_000_000
-    # NTZ-safe cast applied to the COLUMN (not just the gap expression)
-    # so session_start comes back LTZ, matching the streaming output
-    events = events.withColumn("ts", F.col("ts").cast("timestamp_ltz"))
-    w = Window.partitionBy("user_id").orderBy("ts")
-    gap = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
-    flagged = events.withColumn(
-        "new_session",
-        F.when(F.lag("ts").over(w).isNull() | (gap > gap_us), 1).otherwise(0),
-    )
-    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    numbered = flagged.withColumn("session_id", F.sum("new_session").over(wsum))
-    return numbered.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("ts").alias("session_start"),
     )

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from nursinghome_data_pipeline_spark.operators.dedup import (
@@ -173,13 +174,39 @@ def test_star_cc_equals_label_propagation_on_random_graphs(spark):
         assert st == expected, f"trial {trial} star"
 
 
-def test_prefix_filter_join_equals_postings_join(spark):
-    """The AllPairs/PPJoin prefix-filtered candidate generator must be
-    EXACT: bit-identical pair sets to the plain inverted-index join at
-    every threshold, with and without the max_df prune, on an
-    adversarial corpus of partial-overlap edits (deletes, substitutes,
-    inserts) where thresholds actually discriminate. Also covers the
-    carry_hashes=False string-shingle path once."""
+def _all_pairs_jaccard(docs, threshold: float) -> dict:
+    """Reference: pure-Python all-pairs Jaccard over the Spark-collected
+    distinct string-shingle sets → {(id_a, id_b): (n_common, n_union)}."""
+    from nursinghome_data_pipeline_spark.operators.dedup import _shingles
+
+    sets = sorted(
+        (r.doc_id, set(r.sh))
+        for r in docs.select(
+            "doc_id", F.array_distinct(_shingles("text", 3)).alias("sh")
+        ).collect()
+    )
+    out = {}
+    for i, (id_a, sa) in enumerate(sets):
+        for id_b, sb in sets[i + 1 :]:
+            n_common = len(sa & sb)
+            n_union = len(sa) + len(sb) - n_common
+            if n_common / n_union >= threshold:
+                out[(id_a, id_b)] = (n_common, n_union)
+    return out
+
+
+def _pairs(df) -> dict:
+    return {(r.id_a, r.id_b): (r.n_common, r.n_union) for r in df.collect()}
+
+
+def test_prefix_filter_join_equals_all_pairs_jaccard(spark):
+    """The AllPairs/PPJoin prefix-filtered join must be EXACT: the same
+    pair set and the same n_common/n_union as a brute-force all-pairs
+    Jaccard at every threshold, on an adversarial corpus of
+    partial-overlap edits (deletes, substitutes, inserts) where the
+    thresholds actually discriminate. Edge inputs pinned alongside: an
+    empty frame, a doc below k tokens, a NULL text, identical docs at
+    threshold 1.0."""
     import pandas as pd
 
     from nursinghome_data_pipeline_spark.operators.dedup import (
@@ -207,24 +234,52 @@ def test_prefix_filter_join_equals_postings_join(spark):
         rows.append((i, " ".join(toks)))
     docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
     for t in (0.3, 0.5, 0.75, 0.9):
-        for mdf in (None, 8):
-            old = jaccard_pair_join(
-                docs, threshold=t, max_df=mdf, algorithm="postings"
-            )
-            new = jaccard_pair_join(
-                docs, threshold=t, max_df=mdf, algorithm="prefix"
-            )
-            assert old.exceptAll(new).count() == 0, (t, mdf)
-            assert new.exceptAll(old).count() == 0, (t, mdf)
-            assert old.count() == new.count() > 0, (t, mdf)
-    s_old = jaccard_pair_join(
-        docs, threshold=0.5, carry_hashes=False, algorithm="postings"
+        expected = _all_pairs_jaccard(docs, t)
+        assert expected, t
+        assert _pairs(jaccard_pair_join(docs, threshold=t)) == expected, t
+
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    assert jaccard_pair_join(empty, threshold=0.5).count() == 0
+    edge = spark.createDataFrame(
+        [
+            (1, "a b"),  # below k tokens: the whole doc is one shingle
+            (2, "a b"),
+            (3, None),
+            (4, "x y z w"),
+            (5, "x y z w"),
+            (6, "solo"),
+            (7, "x y z q"),
+        ],
+        "doc_id long, text string",
     )
-    s_new = jaccard_pair_join(
-        docs, threshold=0.5, carry_hashes=False, algorithm="prefix"
+    got = jaccard_pair_join(edge, threshold=1.0)
+    assert _pairs(got) == _all_pairs_jaccard(edge, 1.0) == {
+        (1, 2): (1, 1),
+        (4, 5): (2, 2),
+    }
+    assert {r.jaccard for r in got.collect()} == {1.0}
+    assert _pairs(jaccard_pair_join(edge, threshold=0.3)) == {
+        (1, 2): (1, 1),
+        (4, 5): (2, 2),
+        (4, 7): (1, 3),
+        (5, 7): (1, 3),
+    }
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="two NULL texts share the all-zero shingle hash and pair at "
+    "J = 1.0; the DuckDB oracle gives them empty sets and no pair",
+)
+def test_null_texts_do_not_pair(spark):
+    from nursinghome_data_pipeline_spark.operators.dedup import (
+        jaccard_pair_join,
     )
-    assert s_old.exceptAll(s_new).count() == 0
-    assert s_new.exceptAll(s_old).count() == 0
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, None), (3, "a b c")], "doc_id long, text string"
+    )
+    assert jaccard_pair_join(docs, threshold=0.5).count() == 0
 
 
 def test_simhash_pair_chunk_keys_match_single_chunk_at_shared_guarantee(spark):

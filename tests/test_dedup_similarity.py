@@ -84,46 +84,19 @@ def test_exact_jaccard_pair_join(docs):
         assert exact[pair] == pytest.approx(j)
 
 
-def test_jaccard_max_df_bounds_stop_shingle_blowup(spark):
-    """A shingle shared by every document makes the posting self-join
-    emit O(n²) pair rows; the df-cutoff drops it and bounds the pair
-    count, while true near-dups (overlapping on non-stop shingles)
-    keep their pairs — with jaccard reported as a lower bound."""
+def test_jaccard_threshold_outside_unit_interval_rejected(docs):
+    """Every pair satisfies J ≥ 0 and none J > 1, so a threshold outside
+    (0, 1] is a caller error, not an empty or partial answer."""
     from nursinghome_data_pipeline_spark.operators.dedup import (
         jaccard_pair_join,
     )
 
-    n = 60
-    # every doc starts with the same 3 tokens → one universal shingle;
-    # tails are unique so no other overlap exists
-    rows = [(i, f"shared stop prefix unique{i} tail{i} word{i}") for i in range(n)]
-    # planted near-dup pair overlapping on many NON-stop shingles
-    dup_tail = " ".join(f"rare{j}" for j in range(20))
-    rows += [(100, "shared stop prefix " + dup_tail),
-             (101, "shared stop prefix " + dup_tail + " extra")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    # no cutoff at a permissive threshold: the universal shingle links
-    # every pair → quadratic blow-up reaches the output
-    blown = jaccard_pair_join(docs, threshold=0.01).count()
-    assert blown >= n * (n - 1) // 2
-
-    # df-cutoff: the universal shingle (df=62 > 10) is pruned; only the
-    # planted pair remains — bounded output, not O(n²)
-    pruned = jaccard_pair_join(docs, threshold=0.01, max_df=10).collect()
-    pairs = {(r.id_a, r.id_b): r.jaccard for r in pruned}
-    assert (100, 101) in pairs
-    assert len(pairs) < 10
-
-    # recall accounting: the pruned jaccard is a LOWER bound of the
-    # exact one (stop shingles removed from the intersection only)
-    exact = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in jaccard_pair_join(docs, threshold=0.01).collect()
-    }
-    assert pairs[(100, 101)] <= exact[(100, 101)] + 1e-12
-    # and the planted pair still clears a realistic dedup threshold
-    assert pairs[(100, 101)] >= 0.8
+    for threshold in (0, -0.1, 1.5):
+        with pytest.raises(ValueError, match="threshold"):
+            jaccard_pair_join(docs, threshold=threshold)
+    # the upper bound itself is valid: only the exact duplicate clears it
+    exact = jaccard_pair_join(docs, threshold=1.0).collect()
+    assert [(r.id_a, r.id_b, r.jaccard) for r in exact] == [(0, 1, 1.0)]
 
 
 def test_connected_components_transitive_chain(spark):

@@ -8,13 +8,23 @@ from pyspark.sql import functions as F
 
 from nursinghome_data_pipeline_spark.functions.zorder import (
     morton2_col,
-    morton2_py,
     oracle_morton2,
 )
 from nursinghome_data_pipeline_spark.operators.graph import (
     cooccurrence_edges,
     triangle_stats,
 )
+
+
+def morton2_py(x: int, y: int, *, bits: int = 16) -> int:
+    """Oracle: bit-interleaved Morton key, one bit at a time."""
+    x %= 1 << bits
+    y %= 1 << bits
+    out = 0
+    for i in range(bits):
+        out |= ((x >> i) & 1) << (2 * i)
+        out |= ((y >> i) & 1) << (2 * i + 1)
+    return out
 
 
 def _stats(spark, edge_list):

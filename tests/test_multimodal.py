@@ -13,7 +13,6 @@ from nursinghome_data_pipeline_spark.operators.multimodal import (
     image_metadata,
     media_repartition,
     parse_image_header,
-    resize_pixels,
     resize_plan,
     sample_frames,
 )
@@ -96,8 +95,6 @@ def test_resize_plan_geometry_and_codec_boundary(spark):
     assert out[2] == (10, 5, 10, 5)
     assert out[3] == (1, 31, 1, 16)
     assert out[4] == (None, None, None, None)
-    with pytest.raises(NotImplementedError, match="codec"):
-        resize_pixels(rows[0][1], 16, 8)
 
 
 @pytest.fixture(scope="module")

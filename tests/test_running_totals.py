@@ -1,13 +1,19 @@
 """Stateful running totals across micro-batches
-(streaming/running_totals.py)."""
+(streaming/running_totals.py), checked against the GroupState fold
+(``applyInPandasWithState``) kept here as the oracle."""
 
 from __future__ import annotations
 
 import os
-import tempfile
+from collections.abc import Iterator
+from typing import Any
 
+import numpy as np
+import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from nursinghome_data_pipeline_spark.functions.exprs import Q_BITS
 from nursinghome_data_pipeline_spark.streaming.ingest_stream import (
@@ -15,9 +21,59 @@ from nursinghome_data_pipeline_spark.streaming.ingest_stream import (
 )
 from nursinghome_data_pipeline_spark.streaming.running_totals import (
     finalize_totals,
-    running_totals_stream,
     running_totals_stream_agg,
 )
+
+
+def _fold_batch(n: int, vq: int, pdf: pd.DataFrame) -> tuple[int, int]:
+    """Fold one pandas chunk into (count, quantized sum) — exact
+    integers, mirroring the engine-wide q_sum term bit-for-bit.
+
+    ``v * 2^Q`` is an exponent shift (exact in float64 for every finite
+    v), ``np.floor`` of an exact product equals ``math.floor`` per
+    element, and the cast to int64 is exact because any float64 with
+    magnitude ≥ 2^53 is already integral. ``isfinite``, not just
+    not-NaN: ``floor(±inf * 2^Q)`` cast to int64 is undefined.
+    """
+    n += len(pdf)
+    vals = np.asarray(pdf["value"], dtype=np.float64)
+    finite = np.isfinite(vals)
+    if finite.any():
+        vq += int(np.floor(vals[finite] * float(1 << Q_BITS)).astype(np.int64).sum())
+    return n, vq
+
+
+def running_totals_stream(events: DataFrame, *, key_col: str = "user_id") -> DataFrame:
+    """Oracle: the running-totals fold via ``applyInPandasWithState``.
+
+    Emits one row per (touched key, micro-batch) carrying the CUMULATIVE
+    totals, with no timeout (totals never expire)."""
+
+    def fold(
+        key: tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        n, vq = state.get if state.exists else (0, 0)
+        n, vq = int(n), int(vq)
+        for pdf in pdfs:
+            n, vq = _fold_batch(n, vq, pdf)
+        state.update((n, vq))
+        yield pd.DataFrame(
+            {"user_id": [key[0]], "n_events": [n], "value_q": [vq]}
+        )
+
+    return (
+        events.where(F.col(key_col).isNotNull())
+        .groupBy(key_col)
+        .applyInPandasWithState(
+            fold,
+            outputStructType="user_id long, n_events long, value_q long",
+            stateStructType="n long, vq long",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
 
 
 @pytest.fixture()
@@ -37,7 +93,7 @@ def staged_batches(spark, tmp_path):
     return d
 
 
-def _run(spark, staged, name, op=running_totals_stream):
+def _run(spark, staged, name, op=running_totals_stream_agg):
     stream = (
         spark.readStream.schema("user_id bigint, value double")
         .option("maxFilesPerTrigger", 1)
@@ -97,10 +153,10 @@ def test_native_agg_twin_emission_identical(spark, staged_batches):
     touched key per micro-batch, bit-equal value_q. Multiset equality
     over the full emission history is the strongest observable pin —
     it proves per-batch update semantics, not just the final fold."""
-    by_fold = _run(spark, staged_batches, "rt_diff_fold")
-    by_agg = _run(
-        spark, staged_batches, "rt_diff_agg", op=running_totals_stream_agg
+    by_fold = _run(
+        spark, staged_batches, "rt_diff_fold", op=running_totals_stream
     )
+    by_agg = _run(spark, staged_batches, "rt_diff_agg")
     rows_fold = sorted(map(tuple, by_fold.collect()))
     rows_agg = sorted(map(tuple, by_agg.collect()))
     assert rows_fold == rows_agg
@@ -121,8 +177,8 @@ def test_native_agg_twin_nonfinite_values(spark, tmp_path):
         spark.createDataFrame(rows, "user_id long, value double").coalesce(
             1
         ).write.mode("append").parquet(d)
-    by_fold = _run(spark, d, "rt_nf_fold")
-    by_agg = _run(spark, d, "rt_nf_agg", op=running_totals_stream_agg)
+    by_fold = _run(spark, d, "rt_nf_fold", op=running_totals_stream)
+    by_agg = _run(spark, d, "rt_nf_agg")
     rows_fold = sorted(map(tuple, by_fold.collect()))
     rows_agg = sorted(map(tuple, by_agg.collect()))
     assert rows_fold == rows_agg

@@ -3,14 +3,37 @@ must agree with the window-function batch twin on bounded input."""
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
+
 from nursinghome_data_pipeline_spark.sources.tpch import load_tables
 from nursinghome_data_pipeline_spark.streaming.ingest_stream import (
     run_stream_to_memory,
 )
 from nursinghome_data_pipeline_spark.streaming.sessionize import (
-    batch_sessionize_twin,
     sessionize_stream,
 )
+
+
+def batch_sessionize_twin(events: DataFrame, *, gap_minutes: int = 30) -> DataFrame:
+    """Oracle: window-function sessionization (same output schema;
+    session_start is the first event ts of each session)."""
+    gap_us = gap_minutes * 60 * 1_000_000
+    # NTZ-safe cast applied to the COLUMN (not just the gap expression)
+    # so session_start comes back LTZ, matching the streaming output
+    events = events.withColumn("ts", F.col("ts").cast("timestamp_ltz"))
+    w = Window.partitionBy("user_id").orderBy("ts")
+    gap = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
+    flagged = events.withColumn(
+        "new_session",
+        F.when(F.lag("ts").over(w).isNull() | (gap > gap_us), 1).otherwise(0),
+    )
+    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    numbered = flagged.withColumn("session_id", F.sum("new_session").over(wsum))
+    return numbered.groupBy("user_id", "session_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.min("ts").alias("session_start"),
+    )
 
 
 def test_stateful_sessionize_matches_batch_twin(spark, sf_dir, tmp_path):
