@@ -237,6 +237,7 @@ def _ivf_partitioned_probe(spark, sf_dir: str):
         knn_ivf_partitioned,
         write_ivf_index,
     )
+    from nursinghome_data_pipeline_spark.fs import active_generation
     from nursinghome_data_pipeline_spark.sources.tpch import load_tables
 
     emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
@@ -245,7 +246,7 @@ def _ivf_partitioned_probe(spark, sf_dir: str):
         "ivf", tag, _dataset_fingerprint(sf_dir, "embeddings")
     )
     seeds = fixed_ivf_seeds(emb, n_seeds=8)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    if active_generation(path) is None:
         write_ivf_index(emb, path, seeds)
     qvec = emb.orderBy("vec_id").first()["embedding"]
     return knn_ivf_partitioned(spark, path, qvec, seeds, k=10, n_probe=2)
@@ -263,6 +264,7 @@ def _lsh_partitioned_probe(spark, sf_dir: str):
         knn_lsh_partitioned,
         write_lsh_index,
     )
+    from nursinghome_data_pipeline_spark.fs import active_generation
     from nursinghome_data_pipeline_spark.sources.tpch import load_tables
 
     emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
@@ -270,7 +272,7 @@ def _lsh_partitioned_probe(spark, sf_dir: str):
     path = _fresh_index_cache_path(
         "lsh", tag, _dataset_fingerprint(sf_dir, "embeddings")
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    if active_generation(path) is None:
         write_lsh_index(emb, path, dim=64, n_planes=6)
     qvec = emb.orderBy("vec_id").first()["embedding"]
     return knn_lsh_partitioned(
@@ -291,6 +293,7 @@ def _dedup_index_probe(spark, sf_dir: str):
         dedup_batch_against_index,
         write_dedup_index,
     )
+    from nursinghome_data_pipeline_spark.fs import active_generation
     from nursinghome_data_pipeline_spark.sources.tpch import load_tables
 
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
@@ -298,7 +301,7 @@ def _dedup_index_probe(spark, sf_dir: str):
     path = _fresh_index_cache_path(
         "minhash", tag, _dataset_fingerprint(sf_dir, "documents")
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    if active_generation(path) is None:
         write_dedup_index(docs.where(F.col("doc_id") % 10 != 9), path)
     batch = docs.where(F.col("doc_id") % 10 == 9)
     return dedup_batch_against_index(spark, batch, path, threshold=0.35)
@@ -327,6 +330,7 @@ def _streaming_dedup_ingest_batch(spark, sf_dir: str):
     from nursinghome_data_pipeline_spark.operators.dedup_index import (
         write_dedup_index,
     )
+    from nursinghome_data_pipeline_spark.fs import active_generation
     from nursinghome_data_pipeline_spark.sources.tpch import load_tables
     from nursinghome_data_pipeline_spark.streaming.ingest_dedup import (
         streaming_dedup_ingest,
@@ -337,7 +341,7 @@ def _streaming_dedup_ingest_batch(spark, sf_dir: str):
     cache = _fresh_index_cache_path(
         "minhash", tag, _dataset_fingerprint(sf_dir, "documents")
     )
-    if not os.path.exists(os.path.join(cache, "_SUCCESS")):
+    if active_generation(cache) is None:
         write_dedup_index(docs.where(F.col("doc_id") % 10 != 9), cache)
     # reap stale run dirs (each rep leaks ~8 MB otherwise — 26 dirs
     # observed after six bench runs); >1h without ANY write in the
@@ -426,6 +430,7 @@ def _simhash_index_probe(spark, sf_dir: str):
         simhash_batch_against_index,
         write_simhash_index,
     )
+    from nursinghome_data_pipeline_spark.fs import active_generation
     from nursinghome_data_pipeline_spark.sources.tpch import load_tables
 
     docs = load_tables(spark, sf_dir, ["documents"])["documents"]
@@ -433,7 +438,7 @@ def _simhash_index_probe(spark, sf_dir: str):
     path = _fresh_index_cache_path(
         "simhash", tag, _dataset_fingerprint(sf_dir, "documents")
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    if active_generation(path) is None:
         write_simhash_index(docs.where(F.col("doc_id") % 10 != 9), path)
     batch = docs.where(F.col("doc_id") % 10 == 9)
     return simhash_batch_against_index(spark, batch, path, max_hamming=20)
@@ -456,6 +461,7 @@ def _srp_index_probe(spark, sf_dir: str):
         embedding_batch_against_index,
         write_srp_index,
     )
+    from nursinghome_data_pipeline_spark.fs import active_generation
     from nursinghome_data_pipeline_spark.sources.tpch import load_tables
 
     emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"].select(
@@ -468,7 +474,7 @@ def _srp_index_probe(spark, sf_dir: str):
     path = _fresh_index_cache_path(
         "srp2", tag, _dataset_fingerprint(sf_dir, "embeddings")
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    if active_generation(path) is None:
         dim = len(emb.select("embedding").first()[0])
         write_srp_index(
             emb.where(F.col("vec_id") % 10 != 9), path, dim=dim,

@@ -268,6 +268,7 @@ def _cmd_ann_index(args: argparse.Namespace) -> int:
 
     from pyspark.sql import functions as F
 
+    from .fs import active_data_root
     from .operators.similarity import (
         append_to_ann_index,
         fixed_ivf_seeds,
@@ -453,7 +454,7 @@ def _cmd_ann_index(args: argparse.Namespace) -> int:
             meta = load_ann_meta(args.path)
             from pyspark.sql import functions as _F
 
-            idx = spark.read.parquet(args.path)
+            idx = spark.read.parquet(active_data_root(args.path))
             n = idx.where(_F.col("tbl").isNotNull()).count()
             nv = idx.where(_F.col("tbl").isNull()).count()
             print(
@@ -492,7 +493,7 @@ def _cmd_ann_index(args: argparse.Namespace) -> int:
                 ),
             )
             meta = load_ann_meta(args.path)
-            n = spark.read.parquet(args.path).count()
+            n = spark.read.parquet(active_data_root(args.path)).count()
             print(
                 f"built simhash dedup index at {args.path}: {n} posting "
                 f"rows, {meta['n_buckets']} bucket dirs "
@@ -531,7 +532,7 @@ def _cmd_ann_index(args: argparse.Namespace) -> int:
                 ),
             )
             meta = load_ann_meta(args.path)
-            n = spark.read.parquet(args.path).count()
+            n = spark.read.parquet(active_data_root(args.path)).count()
             print(
                 f"built minhash dedup index at {args.path}: {n} band rows, "
                 f"{meta['bands']}x{meta['n_buckets']} bucket dirs"
@@ -563,7 +564,7 @@ def _cmd_ann_index(args: argparse.Namespace) -> int:
                 files_per_partition=args.files_per_partition,
             )
         meta = load_ann_meta(args.path)
-        n = spark.read.parquet(args.path).count()
+        n = spark.read.parquet(active_data_root(args.path)).count()
         print(
             f"built {meta['kind']} index at {args.path}: {n} vectors, "
             + (

@@ -1,12 +1,17 @@
-"""Filesystem layer for the at-rest index lifecycle.
+"""Filesystem layer for the at-rest index and streaming-target lifecycle.
 
-The ANN/dedup index protocol keeps three kinds of driver-side state
-next to the Spark-written parquet data: the ``_ann_meta.json`` sidecar
-(geometry), the Dekker intent/lock markers (append-vs-compact
-exclusion), and the compaction's generation-pointer/stat bookkeeping
-(r12 — the commit is an atomic empty-file creation, never a data
-rename, so it is crash-safe on object stores too). Through r10
-these used ``open()``/``os.rename``/``os.listdir`` directly, which
+Every writer that REPLACES a directory — the five index builds, index
+compaction, the streaming upsert sink's per-batch merge — commits
+through the one generation protocol at the end of this module
+(:func:`commit_generation`): the new tree is written to a hidden
+``_gen-NNNNNN/`` dir and activated by creating the empty pointer
+``_gen-NNNNNN.ptr``. The commit is an atomic file creation, never a
+data rename, so it is crash-safe AND O(1) on object stores too (a
+directory rename there is a copy). Next to the parquet data the index
+protocol also keeps the ``_ann_meta.json`` sidecar (geometry, inside
+each generation) and the Dekker intent/lock markers (append-vs-compact
+exclusion, at the index root). Through r10 these used
+``open()``/``os.rename``/``os.listdir`` directly, which
 bound every at-rest index to one node's local disk — a
 ``NotImplementedError`` gate (`_require_local_path`) rejected any
 ``scheme://`` URI up front. The reference's own endgame is object-store
@@ -214,21 +219,6 @@ def remove(path: str) -> None:
         raise FileNotFoundError(path)
 
 
-def rename(src: str, dst: str) -> None:
-    """Same-filesystem rename (the upsert sink's target swap, legacy
-    crash recovery). Atomic on local disk/HDFS, copy-based on object
-    stores — which is why the index compaction commit no longer uses
-    it (generation pointer, r12). Hadoop's ``rename`` returns False
-    instead of raising — normalize to ``OSError`` so callers' error
-    handling is uniform."""
-    if not is_uri(src):
-        os.rename(src, dst)
-        return
-    _, fs, P = _hadoop(src)
-    if not fs.rename(P(src), P(dst)):
-        raise OSError(f"rename failed: {src} -> {dst}")
-
-
 def rmtree(path: str) -> None:
     if not is_uri(path):
         shutil.rmtree(path)
@@ -299,3 +289,83 @@ def data_file_stats(path: str, suffix: str = ".parquet") -> set[tuple[str, int, 
         )()
         out.add((f"{path}#vanished:{name}#after={len(out)}", -1, -1.0))
     return out
+
+
+#: Generation protocol. A directory ``path`` managed by
+#: :func:`commit_generation` holds its data in ``path/_gen-NNNNNN/``
+#: and names the active one by the empty pointer file
+#: ``path/_gen-NNNNNN.ptr`` — the generation number is the pointer's
+#: NAME, so the flip is one atomic file creation on every store (local
+#: create, HDFS create, S3 PUT). The leading underscore keeps
+#: generation dirs and pointers invisible to Spark's parquet
+#: discovery. Readers resolve the active data root as the max-numbered
+#: pointer's dir (:func:`active_generation`).
+GEN_PREFIX = "_gen-"
+GEN_PTR_SUFFIX = ".ptr"
+
+
+def _active_name(path: str) -> str | None:
+    """Name (``_gen-NNNNNN``) of the active generation, or None before
+    the first commit. One directory listing; zero-padded numbers make
+    the lexicographic max the numeric max."""
+    ptrs = glob_names(path, f"{GEN_PREFIX}*{GEN_PTR_SUFFIX}")
+    return max(ptrs)[: -len(GEN_PTR_SUFFIX)] if ptrs else None
+
+
+def active_generation(path: str) -> str | None:
+    """Directory of ``path``'s active generation, or None before the
+    first commit — THE resolver every reader of a generational
+    directory goes through."""
+    name = _active_name(path)
+    return join(path, name) if name else None
+
+
+def active_data_root(path: str) -> str:
+    """:func:`active_generation`, for readers that need committed data:
+    raises ``FileNotFoundError`` when nothing was ever committed."""
+    g = active_generation(path)
+    if g is None:
+        raise FileNotFoundError(f"{path}: no committed generation")
+    return g
+
+
+def _gc_generations(path: str, keep: str | None) -> None:
+    """Remove every generation dir and pointer of ``path`` except the
+    generation named ``keep``: a crashed write's orphan tree (no
+    pointer), and the superseded generation and pointer a crash
+    between flip and GC left behind."""
+    import contextlib
+
+    for name in glob_names(path, f"{GEN_PREFIX}*"):
+        if keep and name in (keep, keep + GEN_PTR_SUFFIX):
+            continue
+        p = join(path, name)
+        if name.endswith(GEN_PTR_SUFFIX):
+            with contextlib.suppress(FileNotFoundError):
+                remove(p)
+        elif is_dir(p):
+            rmtree(p)
+
+
+def commit_generation(path: str, write) -> str:
+    """Replace the contents of ``path`` with what ``write(new_dir)``
+    writes, as the next generation; returns ``new_dir``.
+
+    Order: GC debris of earlier crashes → ``write(new_dir)`` → THE
+    FLIP (create ``new_dir``'s pointer) → GC the superseded
+    generation. A failure (or crash) at any point before the flip
+    leaves the previous generation fully active and ``new_dir`` as an
+    orphan the next commit reaps; after the flip the new generation
+    is fully active and the next commit reaps the old one. ``write``
+    may raise to abort the commit (a pre-flip gate); a gate that wants
+    its orphan gone at once removes ``new_dir`` itself. Callers
+    serialize commits to one ``path`` (one writer, or a lock such as
+    the index compaction's)."""
+    cur = _active_name(path)
+    new_name = f"{GEN_PREFIX}{int(cur[len(GEN_PREFIX):]) + 1 if cur else 1:06d}"
+    _gc_generations(path, cur)
+    new_dir = join(path, new_name)
+    write(new_dir)
+    touch(join(path, new_name + GEN_PTR_SUFFIX))
+    _gc_generations(path, new_name)
+    return new_dir

@@ -87,10 +87,8 @@ from .dedup import (
     shingle_hash_col,
 )
 from .similarity import (
-    _compact_for_write,
+    _commit_index,
     _require_kind,
-    _write_ann_meta,
-    active_data_root,
     load_ann_meta,
     read_matched_partitions,
 )
@@ -448,7 +446,7 @@ def dedup_index_bucket_stats(
     keys = family(meta, "dedup_index_bucket_stats").keys
     band = F.col(keys[0]) if len(keys) == 2 else F.lit(-1)
     # srp vector rows (NULL tbl/bucket) are storage, not postings
-    keyed = spark.read.parquet(active_data_root(path)).dropna(
+    keyed = spark.read.parquet(fs.active_data_root(path)).dropna(
         subset=list(keys)
     ).select(band.alias("band"), F.col(keys[-1]).alias("bkey"))
     counts = keyed.groupBy("band", "bkey").agg(
@@ -528,15 +526,6 @@ def route_append(df: DataFrame, meta: dict) -> DataFrame:
     return as_delta_append(family(meta).project(df, meta))
 
 
-def _write_rows(rows: DataFrame, path: str, meta: dict, files_per_partition) -> None:
-    """Overwrite ``path`` with routed rows partitioned by ``pb``, then
-    its sidecar."""
-    _compact_for_write(rows, "pb", files_per_partition, meta["id_col"]).write.mode(
-        "overwrite"
-    ).partitionBy("pb").parquet(path)
-    _write_ann_meta(path, meta)
-
-
 def write_dedup_index(
     docs: DataFrame,
     path: str,
@@ -614,7 +603,7 @@ def write_dedup_index(
             n_docs if n_docs is not None else docs.count(), meta
         )
     meta["n_buckets"] = int(n_buckets)
-    _write_rows(MINHASH.project(docs, meta), path, meta, files_per_partition)
+    _commit_index(MINHASH.project(docs, meta), path, meta, files_per_partition)
 
 
 def batch_against_index(
@@ -730,9 +719,8 @@ def probe_index_with_rows(
     fam = family(meta)
     id_col = meta["id_col"]
     members = fam.members(meta)
-    # the active generation dir after a generational compaction (r12),
-    # the index root before one
-    droot = active_data_root(path)
+    # the active generation dir (every build and compaction commits one)
+    droot = fs.active_data_root(path)
     # un-compacted LSM delta appends (pb=-1, see DELTA_PB) hold recent
     # postings for EVERY bucket, so every probe reads them too — a
     # single small directory bounded by the compaction cadence. An
@@ -892,7 +880,7 @@ def write_simhash_index(
             n_docs if n_docs is not None else docs.count(), meta
         )
     meta["n_buckets"] = int(n_buckets)
-    _write_rows(SIMHASH.project(docs, meta), path, meta, files_per_partition)
+    _commit_index(SIMHASH.project(docs, meta), path, meta, files_per_partition)
 
 
 def simhash_batch_against_index(

@@ -79,12 +79,12 @@ from .dedup_index import (
     DELTA_PB,
     Family,
     _require_unreserved,
-    _write_rows,
     batch_against_index,
     side_col,
 )
 from .. import fs
 from .similarity import (
+    _commit_index,
     _cosine_with_norms,
     auto_lsh_planes,
     auto_lsh_tables,
@@ -314,7 +314,7 @@ def write_srp_index(
     vectors = df.select(
         F.col(id_col), F.col(vec_col), l2_norm_col(vec_col).alias("nrm")
     )
-    _write_rows(
+    _commit_index(
         _two_roles(SRP.project(df, meta), vectors, meta, int(n_buckets)),
         path, meta, files_per_partition,
     )

@@ -19,6 +19,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import fs
+# the generation layout is fs's; re-exported for out-of-API readers of
+# the raw index tree (spark.read.parquet, file counting, scripts)
+from ..fs import active_data_root
 from ..functions.vectors import dot_product_col, l2_norm_col
 
 
@@ -496,108 +500,6 @@ def embedding_near_duplicate_pairs(
     return pairs.where(F.col("cosine_sim") >= threshold)
 
 
-def ivf_train_centroids(
-    df: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_centroids: int = 16,
-    sample_rows: int = 10_000,
-    iters: int = 5,
-    seed: int = 42,
-):
-    """Driver-side Lloyd k-means on a bounded, deterministic sample.
-
-    IVF training is the one legitimately driver-side step: the sample
-    is capped (``sample_rows`` × dim doubles — a few MB regardless of
-    table size) and taken by ``ORDER BY id LIMIT n`` so the index is
-    reproducible across partition layouts. Returns a (n_centroids, dim)
-    numpy array of L2-normalized centroids.
-    """
-    import numpy as np
-
-    sample = np.stack(
-        [
-            np.asarray(r[0], dtype=np.float64)
-            for r in df.select(vec_col).orderBy(id_col).limit(sample_rows).collect()
-        ]
-    )
-    rng = np.random.default_rng(seed)
-    cent = sample[rng.choice(len(sample), size=n_centroids, replace=False)]
-    norm = lambda m: m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-    cent = norm(cent)
-    sn = norm(sample)
-    for _ in range(iters):
-        assign = np.argmax(sn @ cent.T, axis=1)
-        for c in range(n_centroids):
-            members = sn[assign == c]
-            if len(members):
-                cent[c] = members.mean(axis=0)
-        cent = norm(cent)
-    return cent
-
-
-def ivf_assign(
-    df: DataFrame, centroids, *, vec_col: str = "embedding", out_col: str = "cell"
-) -> DataFrame:
-    """Assign each vector to its nearest (cosine) centroid cell.
-
-    Vectorized pandas UDF: each Arrow batch becomes one numpy matmul
-    (batch × dim) @ (dim × cells) — the right tool for a dense
-    all-centroids comparison, unlike per-element HOF expressions.
-    Map-only at any scale; persisting the result partitioned by
-    ``cell`` gives scan-pruned ANN queries.
-    """
-    import numpy as np
-
-    cent = np.asarray(centroids, dtype=np.float64)
-
-    @F.pandas_udf("int")
-    def _cell(v: pd.Series) -> pd.Series:
-        m = np.stack(v.to_numpy())
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(m @ cent.T, axis=1))
-
-    return df.withColumn(out_col, _cell(F.col(vec_col)))
-
-
-def knn_ivf(
-    candidates: DataFrame,
-    query_vec,
-    centroids,
-    *,
-    k: int = 10,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF approximate top-k: score only the ``n_probe`` cells whose
-    centroids are nearest the query.
-
-    Probing ALL cells is exactly brute force (pinned by test); fewer
-    probes trade recall for a ~cells/n_probe scan reduction — more with
-    cell-partitioned storage, where pruning happens at the file level.
-    """
-    import numpy as np
-
-    cent = np.asarray(centroids, dtype=np.float64)
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = q / max(np.linalg.norm(q), 1e-12)
-    probes = [int(c) for c in np.argsort(-(cent @ qn))[:n_probe]]
-    assigned = ivf_assign(candidates, cent, vec_col=vec_col)
-    return (
-        assigned.where(F.col("cell").isin(probes))
-        .select(
-            id_col,
-            _cosine_lit(F.col(vec_col), [float(v) for v in q]).alias(
-                "cosine_sim"
-            ),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
 def fixed_ivf_seeds(
     df: DataFrame,
     *,
@@ -611,9 +513,10 @@ def fixed_ivf_seeds(
 
     The driver-side collect is bounded: ``n_seeds × dim`` floats
     regardless of table size (same contract as the IVF training
-    sample). Trained centroids (``ivf_train_centroids``) give tighter
-    cells; hash-chosen seeds give a quantizer every engine can
-    reproduce exactly — which is what makes the full IVF plan
+    sample). Trained centroids (``clustering.lloyd_train``, as the
+    registry's ``knn_ivf_topk`` trains them) give tighter cells;
+    hash-chosen seeds give a quantizer every engine can reproduce
+    exactly — which is what makes the full IVF plan
     oracle-checkable end to end.
     """
     rows = (
@@ -717,9 +620,10 @@ def knn_ivf_fixed(
     )
 
 
-#: Sidecar filename for at-rest ANN index metadata. The leading
-#: underscore keeps it invisible to Spark's parquet discovery (the
-#: `_SUCCESS` convention), so `spark.read.parquet(path)` is unaffected.
+#: Sidecar filename for at-rest ANN index metadata, one per generation
+#: dir. The leading underscore keeps it invisible to Spark's parquet
+#: discovery (the `_SUCCESS` convention), so reading the generation
+#: dir as parquet is unaffected.
 ANN_META_FILE = "_ann_meta.json"
 
 #: Lockfile dropped by :func:`compact_ann_index` for the duration of a
@@ -729,50 +633,9 @@ ANN_META_FILE = "_ann_meta.json"
 #: generation.
 ANN_COMPACT_LOCK = "_compacting.lock"
 
-#: Generation-dir prefix (r12). A compaction writes its rewritten tree
-#: to ``<index>/_gen-NNNNNN/`` and commits it by CREATING the empty
-#: pointer file ``<index>/_gen-NNNNNN.ptr`` — the generation number is
-#: the ptr's NAME, so the flip is one atomic file creation on every
-#: store (local create, HDFS create, S3 PUT), replacing the r5-r11
-#: demote/promote directory renames that were copy-based (hence
-#: non-atomic AND O(data)) on object stores. The leading underscore
-#: keeps generation dirs invisible to Spark's parquet discovery, so a
-#: LEGACY root-layout index (data dirs at the index root — every fresh
-#: build) can be read flat while its first generational compaction is
-#: writing inside it. Readers resolve the active data root as the
-#: max-numbered pointer's dir, else the root itself; old generations
-#: are GC'd after the flip, and a crash at ANY point leaves either the
-#: old generation fully active (ptr never created; the orphan tree is
-#: GC'd by the next compaction) or the new one fully active (ptr
-#: created; leftover old gen/ptr GC'd by the next compaction).
-GEN_PREFIX = "_gen-"
-GEN_PTR_SUFFIX = ".ptr"
-
-
-def _active_gen(path: str) -> str | None:
-    """Name (``_gen-NNNNNN``) of the active generation, or None for a
-    legacy root-layout index. One directory listing; zero-padded
-    numbers make lexicographic max the numeric max."""
-    from .. import fs
-
-    ptrs = fs.glob_names(path, f"{GEN_PREFIX}*{GEN_PTR_SUFFIX}")
-    if not ptrs:
-        return None
-    return max(ptrs)[: -len(GEN_PTR_SUFFIX)]
-
-
-def active_data_root(path: str) -> str:
-    """The directory holding the index's DATA (partition dirs, LSM
-    delta, per-generation sidecar): the active generation dir after a
-    generational compaction, else the index root. Public because
-    out-of-API readers (``spark.read.parquet`` on the raw tree, file
-    counting, scripts) must resolve through it once an index has been
-    compacted."""
-    from .. import fs
-
-    g = _active_gen(path)
-    return fs.join(path, g) if g else path
-
+#: Every index kind partitions its rows by one column: the near-dup
+#: kinds (minhash/simhash/srp) by ``pb``, these two kNN kinds by theirs.
+_KNN_PART = {"ivf": "cell", "lsh": "bucket"}
 
 #: r5-r10 had a ``_require_local_path`` gate here rejecting every
 #: ``scheme://`` URI because the sidecar/lock protocol used local
@@ -812,8 +675,6 @@ def _write_ann_meta(path: str, meta: dict) -> None:
     s3a://) — always the same one Spark wrote the parquet to."""
     import json
 
-    from .. import fs
-
     fs.write_text(fs.join(path, ANN_META_FILE), json.dumps(meta))
 
 
@@ -822,8 +683,7 @@ def load_ann_meta(path: str) -> dict:
     generation dir (written there before the generation's pointer
     flip, so geometry and data commit atomically together — a
     regeometry can never leave new buckets live under an old
-    ``n_buckets``), else the root sidecar of a legacy root-layout
-    index."""
+    ``n_buckets``)."""
     return _load_active(path)[0]
 
 
@@ -833,8 +693,6 @@ def _load_active(path: str) -> tuple[dict, str]:
     routes with and the tree it reads always come from the same
     generation."""
     import json
-
-    from .. import fs
 
     droot = active_data_root(path)
     return json.loads(fs.read_text(fs.join(droot, ANN_META_FILE))), droot
@@ -915,8 +773,6 @@ def read_matched_partitions(
     indexes (n_buckets of a few units) trip the flat read on virtually
     every probe (ADVICE r10). The warning fires once per index path
     per process, not per probe/micro-batch."""
-    from .. import fs
-
     vals = sorted(set(values))
     if crossover_flat_read(vals, total_partitions):
         # only genuine bucket matches armed the crossover — see
@@ -1009,8 +865,6 @@ def _driver_listing(spark, path: str, n_dirs: int):
     harmless for correctness, momentarily slower for it on remote
     stores; callers that construct probes from many driver threads
     against URI stores should funnel them through one thread."""
-    from .. import fs
-
     if fs.is_uri(path) or n_dirs <= 32:
         yield
         return
@@ -1068,24 +922,73 @@ def write_ivf_index(
     parallelism. Index parameters (seeds, columns) persist in a
     ``_ann_meta.json`` sidecar so :func:`knn_ivf_partitioned` probes
     need only the path."""
-    from .. import fs
-
     fs.check_fs(path, "write_ivf_index")
-    assigned = df.select(
-        id_col, vec_col, ivf_cell_col(seeds, vec_col).alias("cell")
-    )
-    _compact_for_write(assigned, "cell", files_per_partition, id_col).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(path)
-    _write_ann_meta(
-        path,
-        {
-            "kind": "ivf",
-            "seeds": [[int(s), [float(v) for v in vec]] for s, vec in seeds],
-            "id_col": id_col,
-            "vec_col": vec_col,
-        },
-    )
+    meta = {
+        "kind": "ivf",
+        "seeds": [[int(s), [float(v) for v in vec]] for s, vec in seeds],
+        "id_col": id_col,
+        "vec_col": vec_col,
+    }
+    _commit_index(_route_knn(df, meta), path, meta, files_per_partition)
+
+
+def _route_knn(df: DataFrame, meta: dict) -> DataFrame:
+    """Index rows of ``df`` routed with the sidecar's geometry: the IVF
+    cell (:func:`ivf_cell_col` over the seeds) or the LSH bucket
+    (:func:`random_projection_buckets` over the planes). The ONE
+    kNN routing — builds and appends both call it, so old and new rows
+    always agree on cell/bucket."""
+    id_col, vec_col = meta["id_col"], meta["vec_col"]
+    if meta["kind"] == "ivf":
+        seeds = [(int(s), vec) for s, vec in meta["seeds"]]
+        return df.select(
+            id_col, vec_col, ivf_cell_col(seeds, vec_col).alias("cell")
+        )
+    return random_projection_buckets(
+        df,
+        vec_col=vec_col,
+        dim=int(meta["dim"]),
+        n_planes=int(meta["n_planes"]),
+        seed=int(meta["seed"]),
+    ).select(id_col, vec_col, "bucket")
+
+
+def _index_part(meta: dict, caller: str, path: str) -> str:
+    """The partition column of the sidecar's index kind; an unknown
+    kind is a named error (never a silent fallback to some column)."""
+    from .dedup_index import FAMILIES
+
+    kind = meta.get("kind")
+    part = "pb" if kind in FAMILIES else _KNN_PART.get(kind)
+    if part is None:
+        raise ValueError(
+            f"{caller}: unknown index kind {kind!r} in {path}/{ANN_META_FILE}"
+        )
+    return part
+
+
+def _commit_index(
+    rows: DataFrame, path: str, meta: dict, files_per_partition, gate=None
+) -> str:
+    """THE index writer — every build and every compaction: ``rows``
+    (already routed) partitioned by the kind's column, plus the
+    sidecar, written as the next generation of ``path`` and committed
+    by ``fs.commit_generation``. The sidecar lives INSIDE the
+    generation, so geometry and data activate together at the pointer
+    flip — a regeometry can never leave new buckets live under an old
+    ``n_buckets``. ``gate(new_dir)`` runs after the write, before the
+    flip (compaction's re-list check). Returns the generation dir."""
+    part = _index_part(meta, "_commit_index", path)
+
+    def write(new_dir: str) -> None:
+        _compact_for_write(
+            rows, part, files_per_partition, meta["id_col"]
+        ).write.mode("overwrite").partitionBy(part).parquet(new_dir)
+        _write_ann_meta(new_dir, meta)
+        if gate is not None:
+            gate(new_dir)
+
+    return fs.commit_generation(path, write)
 
 
 def append_to_ann_index(df: DataFrame, path: str) -> None:
@@ -1116,7 +1019,7 @@ def append_to_ann_index(df: DataFrame, path: str) -> None:
     exist). Whatever the interleaving of the two first-steps, the
     second-steps run after both flags are up, so at least one side
     sees the other and backs off — a batch can never land after the
-    compactor's read and vanish with the demoted directory. The
+    compactor's read and vanish with the GC'd old generation. The
     intent marker is removed when the append's write commits (or
     fails). The handshake assumes sequentially consistent
     create/exists visibility between the two writer processes — local
@@ -1129,39 +1032,15 @@ def append_to_ann_index(df: DataFrame, path: str) -> None:
     strand its intent marker —
     compact_ann_index names the stale file in its error; remove it by
     hand after confirming no append is running."""
-    from .. import fs
-
     fs.check_fs(path, "append_to_ann_index")
     # routing of the near-dup kinds is owned by the dedup-index module
     # (runtime import: dedup_index imports this module's protocol
     # helpers)
-    from .dedup_index import FAMILIES, route_append
+    from .dedup_index import route_append
 
     meta = load_ann_meta(path)
-    if meta.get("kind") in FAMILIES:
-        routed, part = route_append(df, meta), "pb"
-    elif meta.get("kind") == "ivf":
-        id_col, vec_col = meta["id_col"], meta["vec_col"]
-        seeds = [(int(s), vec) for s, vec in meta["seeds"]]
-        routed = df.select(
-            id_col, vec_col, ivf_cell_col(seeds, vec_col).alias("cell")
-        )
-        part = "cell"
-    elif meta.get("kind") == "lsh":
-        id_col, vec_col = meta["id_col"], meta["vec_col"]
-        routed = random_projection_buckets(
-            df,
-            vec_col=vec_col,
-            dim=int(meta["dim"]),
-            n_planes=int(meta["n_planes"]),
-            seed=int(meta["seed"]),
-        ).select(id_col, vec_col, "bucket")
-        part = "bucket"
-    else:
-        raise ValueError(
-            f"append_to_ann_index: unknown index kind "
-            f"{meta.get('kind')!r} in {path}/{ANN_META_FILE}"
-        )
+    part = _index_part(meta, "append_to_ann_index", path)
+    routed = route_append(df, meta) if part == "pb" else _route_knn(df, meta)
     append_routed_rows(routed, path, part)
 
 
@@ -1184,8 +1063,6 @@ def append_routed_rows(routed: DataFrame, path: str, part: str) -> None:
     intent marker FIRST, then the compactor-lock check — whatever the
     interleaving, at least one side sees the other and backs off."""
     import uuid
-
-    from .. import fs
 
     fs.check_fs(path, "append_routed_rows")
     # intent BEFORE lock-check (the handshake's whole point): if the
@@ -1213,10 +1090,9 @@ def append_routed_rows(routed: DataFrame, path: str, part: str) -> None:
     finally:
         import contextlib
 
-        # the marker can vanish with the directory itself (a swap
-        # demoting path→old while this append is aborting) — that is
-        # fine, the compactor's rmtree disposes of it; don't let the
-        # cleanup mask the real error
+        # the marker can vanish with the directory itself (the
+        # whole index removed while this append is aborting); don't
+        # let the cleanup mask the real error
         with contextlib.suppress(FileNotFoundError):
             fs.remove(intent)
 
@@ -1257,25 +1133,16 @@ def compact_ann_index(
     (the compaction probe measured fragmented probes 27% slower and
     8,192-file layouts at 128-task builds — SCALE.md).
 
-    Commit protocol (r12 — generation pointer, replacing the r5-r11
-    demote/promote directory renames, which were copy-based and so
-    neither atomic nor O(1) on object stores): the rewritten tree is
-    written to a NEW hidden generation dir ``_gen-NNNNNN/`` inside
-    the index (invisible to Spark's discovery, so a legacy root
-    layout keeps serving flat reads while it is written), its sidecar
-    is written INSIDE it (geometry+data commit together), and the
-    swap is one empty-file creation: ``_gen-NNNNNN.ptr``. File
-    creation with the number in the NAME is atomic on local disk,
-    HDFS, and S3 alike — there is no torn state, and a crash at any
-    point leaves either the old generation fully active (no ptr; the
-    orphan tree is GC'd on the next call) or the new one fully active
-    (leftover old generation GC'd on the next call). Probes resolve
+    Commit protocol: the rewritten tree and its sidecar are committed
+    as the next generation of the index by :func:`_commit_index` —
+    the same ``fs.commit_generation`` pointer flip every build uses,
+    atomic and O(1) on object stores too. A crash at any point leaves
+    either the old generation fully active or the new one, and the
+    next commit GCs the other. Probes resolve
     the active generation per call (:func:`active_data_root`); a
     probe mid-flight when the old generation is GC'd can fail and
     must retry — quiesce probes around compaction for strict
-    no-retry operation, exactly as the r11 protocol required. Crashed
-    pre-r12 rename-swap state (``.compact.old``/``.compact.tmp``
-    siblings) is still repaired at entry.
+    no-retry operation.
 
     SINGLE-WRITER contract with :func:`append_to_ann_index`, enforced
     by the Dekker-style intent/lock handshake (described there): this
@@ -1287,7 +1154,7 @@ def compact_ann_index(
     at least one side backs off (local-disk visibility assumption —
     see the NFS caveat in :func:`append_to_ann_index`). A
     belt-and-braces re-list gate after the rewrite additionally
-    aborts the swap if any data file changed — compared as
+    aborts the flip if any data file changed — compared as
     (path, size, mtime) so even a same-name in-place overwrite by a
     writer bypassing the protocol is caught, not just file-set
     additions/removals. Run ONE compactor at a time — a stale lock from a
@@ -1296,33 +1163,12 @@ def compact_ann_index(
     removed by hand (fail-safe: blocking beats deleting a batch)."""
     import contextlib as _contextlib
 
-    from .. import fs
-
     fs.check_fs(path, "compact_ann_index")
-    # pre-r12 rename-swap crash states (``path.compact.old`` holding a
-    # demoted copy) are still repaired so an upgraded deployment can
-    # compact over whatever a crashed r11 run left behind
-    old = path.rstrip("/") + ".compact.old"
-    if fs.exists(old):
-        if fs.exists(path):
-            fs.rmtree(old)
-        else:
-            fs.rename(old, path)
-    legacy_tmp = path.rstrip("/") + ".compact.tmp"
-    if fs.exists(legacy_tmp):
-        fs.rmtree(legacy_tmp)
     meta, droot = _load_active(path)
-    cur_gen = _active_gen(path)
-    cur_n = int(cur_gen[len(GEN_PREFIX):]) if cur_gen else 0
     from .dedup_index import FAMILIES, family
 
     kind = meta.get("kind")
-    part = "pb" if kind in FAMILIES else {"ivf": "cell", "lsh": "bucket"}.get(kind)
-    if part is None:
-        raise ValueError(
-            f"compact_ann_index: unknown index kind {kind!r} "
-            f"in {path}/{ANN_META_FILE}"
-        )
+    part = _index_part(meta, "compact_ann_index", path)
     if regeometry and kind not in FAMILIES:
         raise ValueError(
             f"compact_ann_index: regeometry=True only applies to the "
@@ -1330,8 +1176,6 @@ def compact_ann_index(
             "IVF seeds / LSH planes define routing semantics and "
             "cannot be re-derived from stored rows"
         )
-    new_gen = f"{GEN_PREFIX}{cur_n + 1:06d}"
-    new_dir = fs.join(path, new_gen)
     lock = fs.join(path, ANN_COMPACT_LOCK)
     # Reclaim a crashed compaction's lock: singleton-compactor is the
     # caller's contract, so a lock that predates this call is stale.
@@ -1353,37 +1197,13 @@ def compact_ann_index(
                 "crashed append stranded its intent marker — remove it "
                 "by hand."
             )
-        # GC generation debris under the lock: dirs without a pointer
-        # (a crashed rewrite's orphan tree) and stale pointers/dirs
-        # below the active generation (a crash between flip and GC)
-        for name in fs.glob_names(path, f"{GEN_PREFIX}*"):
-            if name.endswith(GEN_PTR_SUFFIX):
-                if cur_gen and name[: -len(GEN_PTR_SUFFIX)] != cur_gen:
-                    with _contextlib.suppress(FileNotFoundError):
-                        fs.remove(fs.join(path, name))
-            elif name != cur_gen and fs.is_dir(fs.join(path, name)):
-                fs.rmtree(fs.join(path, name))
-
         # (path, size, mtime) — not bare paths — so a rogue writer
         # that overwrites an existing part file IN PLACE (same name)
         # is still caught before the commit discards its data (see
-        # fs.data_file_stats for the vanishing-file sentinel). On the
-        # LEGACY layout (active root == index root) the new generation
-        # is written INSIDE the listed tree between the two listings,
-        # so files under generation dirs are excluded there; when the
-        # active root is itself a generation dir, new generations are
-        # SIBLINGS and nothing may be excluded — the naive substring
-        # exclusion would match the droot's own path prefix and void
-        # the gate entirely.
-        def _data_stats(root):
-            stats = fs.data_file_stats(root)
-            if root != path:
-                return stats
-            return {
-                e for e in stats if f"/{GEN_PREFIX}" not in e[0]
-            }
-
-        before = _data_stats(droot)
+        # fs.data_file_stats for the vanishing-file sentinel). New
+        # generations are SIBLINGS of the active one, so nothing the
+        # rewrite writes is inside the listed tree.
+        before = fs.data_file_stats(droot)
         df = spark.read.parquet(droot)
         if kind in FAMILIES:
             fam = family(meta)
@@ -1416,39 +1236,21 @@ def compact_ann_index(
             else:
                 df = df.withColumn("pb", fam.pb(new_nb).cast("int"))
             meta = {**meta, "n_buckets": new_nb}
-        _compact_for_write(
-            df, part, files_per_partition, meta["id_col"]
-        ).write.mode("overwrite").partitionBy(part).parquet(new_dir)
-        # geometry commits WITH the data: the sidecar lives inside the
-        # generation, so the ptr flip below activates both atomically
-        _write_ann_meta(new_dir, meta)
-        # Belt-and-braces: abort the commit if any data file changed
-        # anyway (e.g. a writer that bypassed append_to_ann_index).
-        if _data_stats(droot) != before:
-            fs.rmtree(new_dir)
-            raise RuntimeError(
-                f"compact_ann_index: {path} changed during compaction "
-                "(concurrent append?) — index left untouched, retry."
-            )
-        # THE FLIP: one atomic empty-file creation. Everything before
-        # it leaves the old generation fully active; everything after
-        # it is GC of the now-inactive old generation.
-        fs.touch(fs.join(path, new_gen + GEN_PTR_SUFFIX))
-        if cur_gen:
-            with _contextlib.suppress(FileNotFoundError):
-                fs.remove(fs.join(path, cur_gen + GEN_PTR_SUFFIX))
-            fs.rmtree(droot)
-        else:
-            # legacy root layout: drop the superseded root-level data
-            # dirs, marker file, and sidecar (the per-generation
-            # sidecar is now the single authority — a stale root copy
-            # would misreport a later regeometry's n_buckets)
-            for name in fs.glob_names(path, f"{part}=*"):
-                if fs.is_dir(fs.join(path, name)):
-                    fs.rmtree(fs.join(path, name))
-            for name in ("_SUCCESS", ANN_META_FILE):
-                with _contextlib.suppress(FileNotFoundError):
-                    fs.remove(fs.join(path, name))
+
+        def relist_gate(new_dir: str) -> None:
+            # Belt-and-braces: abort the commit if any data file
+            # changed anyway (e.g. a writer that bypassed
+            # append_to_ann_index).
+            if fs.data_file_stats(droot) != before:
+                fs.rmtree(new_dir)
+                raise RuntimeError(
+                    f"compact_ann_index: {path} changed during compaction "
+                    "(concurrent append?) — index left untouched, retry."
+                )
+
+        new_dir = _commit_index(
+            df, path, meta, files_per_partition, gate=relist_gate
+        )
     except BaseException:
         # the lock can vanish with the directory itself (e.g. the
         # whole index removed from under a failing compaction — the
@@ -1723,26 +1525,16 @@ def write_lsh_index(
     parallelism). Plane parameters persist in a ``_ann_meta.json``
     sidecar so :func:`knn_lsh_partitioned` probes need only the
     path."""
-    from .. import fs
-
     fs.check_fs(path, "write_lsh_index")
-    bucketed = random_projection_buckets(
-        df, vec_col=vec_col, dim=dim, n_planes=n_planes, seed=seed
-    ).select(id_col, vec_col, "bucket")
-    _compact_for_write(bucketed, "bucket", files_per_partition, id_col).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(path)
-    _write_ann_meta(
-        path,
-        {
-            "kind": "lsh",
-            "dim": dim,
-            "n_planes": n_planes,
-            "seed": seed,
-            "id_col": id_col,
-            "vec_col": vec_col,
-        },
-    )
+    meta = {
+        "kind": "lsh",
+        "dim": dim,
+        "n_planes": n_planes,
+        "seed": seed,
+        "id_col": id_col,
+        "vec_col": vec_col,
+    }
+    _commit_index(_route_knn(df, meta), path, meta, files_per_partition)
 
 
 def knn_lsh_partitioned(

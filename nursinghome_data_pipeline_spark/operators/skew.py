@@ -539,58 +539,3 @@ def has_exchange(df: DataFrame) -> bool:
     diagnostics helper for asserting co-located execution)."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     return "Exchange" in plan
-
-
-def compact_files(
-    spark,
-    path: str,
-    *,
-    target_bytes: int = 128 << 20,
-    sort_col: str | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ~``target_bytes`` files. Returns the new file count.
-
-    Streaming ingest and per-partition writes leave thousands of tiny
-    files; at 100 TB that inflates NameNode/listing load and makes
-    every scan footer-bound. Compaction sizes the output by BYTES on
-    disk (matching `media_repartition`'s policy of sizing by payload,
-    not row count) and optionally sorts within files so min/max
-    row-group stats stay selective for ``sort_col`` predicates.
-
-    The rewrite goes through a temp directory + atomic-ish swap so a
-    failed compaction never leaves the table half-rewritten (the
-    parquet+rename swap is the stand-in for a transactional rewrite in
-    Delta/Iceberg). All directory ops route through :mod:`..fs` (r11),
-    so the table may live at a plain path or any Hadoop-reachable URI
-    — note rename is atomic on local disk/HDFS but copy-based on
-    object stores, where the transactional-format caveat applies
-    doubly.
-    """
-    from .. import fs
-
-    old = path.rstrip("/") + ".compact.old"
-    # recover a previous compaction that died mid-swap BEFORE touching
-    # the directory: either the swap completed (path + .old both
-    # present → drop the leftover) or only the demote happened (.old
-    # present, path gone → restore it; the data was never lost, just
-    # parked). Without this, a leftover .old makes every later
-    # compaction's rename fail, and a missing path breaks every reader
-    # until manual repair.
-    if fs.exists(old):
-        if fs.exists(path):
-            fs.rmtree(old)
-        else:
-            fs.rename(old, path)
-    total = sum(sz for _p, sz, _m in fs.data_file_stats(path))
-    n = max(1, (total + target_bytes - 1) // target_bytes)
-    df = spark.read.parquet(path)
-    out = df.repartitionByRange(n, F.col(sort_col)) if sort_col else df.coalesce(n)
-    if sort_col:
-        out = out.sortWithinPartitions(sort_col)
-    tmp = path.rstrip("/") + ".compact.tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    fs.rename(path, old)
-    fs.rename(tmp, path)
-    fs.rmtree(old)
-    return len(fs.data_file_stats(path))

@@ -2773,11 +2773,10 @@ def _ivf_trained_oracle(
     "the TRAINED cells. ORACLE-checked since r4 (was the last ANN "
     "rows-only waiver): quantized per-dim means are bit-reproducible "
     "in SQL, so the unrolled-Lloyd CTE chain reproduces the trained "
-    "index exactly and the whole ANN pipeline hash-matches. The "
-    "numpy-sample production training path (ivf_train_centroids, "
-    "vectorized Arrow assignment) is retained in operators/ and "
-    "recall-tested in tests/test_ivf.py; at 100 TB training stays on "
-    "a bounded sample either way and assignment stays map-only.",
+    "index exactly and the whole ANN pipeline hash-matches. This is "
+    "the one trained-IVF path (clustering.lloyd_train + knn_ivf_fixed); "
+    "at 100 TB training stays on a bounded sample and assignment stays "
+    "map-only.",
 )
 def knn_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.clustering import lloyd_train
@@ -5571,9 +5570,9 @@ def _zorder_oracle() -> str:
     "min/max per type). Sorting a 100 TB fact table by this key before "
     "writing clusters BOTH dimensions, so parquet min/max stats prune "
     "files for range predicates on either column — single-column sort "
-    "prunes only itself. Pairs with operators/skew.compact_files "
-    "(sorted small-file compaction) as the layout-management story; "
-    "the differential test pins the interleave against a Python bit-"
+    "prunes only itself. It is applied as the write-time sort key "
+    "(sortWithinPartitions before the parquet write) — the layout-"
+    "management story; the differential test pins the interleave against a Python bit-"
     "twiddling reference.",
 )
 def zorder_key_events(spark: SparkSession, sf_dir: str) -> DataFrame:

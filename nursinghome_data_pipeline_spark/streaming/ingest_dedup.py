@@ -91,9 +91,9 @@ from pyspark.sql import functions as F
 #: marker directory under the TARGET recording every degenerate
 #: payload ever accepted — ``<md5>__<hex(winner_id)>`` per entry. Under
 #: the target (not the index) because the index tree belongs to the
-#: compaction lifecycle (generation GC, legacy rename recovery, and a
-#: full rebuild's mode('overwrite') all reclaim index state; the
-#: target is the stream's own durable root). Same no-torn-state marker
+#: generation lifecycle (every rebuild and compaction commits a new
+#: generation and GCs the old one; the target is the stream's own
+#: durable root). Same no-torn-state marker
 #: protocol as streaming/commitlog.py.
 DEGEN_DIR = "_degen.d"
 
@@ -140,7 +140,6 @@ def streaming_dedup_ingest(
     cosine_threshold: float | None = None,
     checkpoint_dir: str,
     compact_every: int | None = 32,
-    regeometry_on_compact: bool = True,
 ):
     """Start the dedup-ingest stream; returns the StreamingQuery.
 
@@ -192,9 +191,9 @@ def streaming_dedup_ingest(
     full-scan row count on every probe and the delta directory's own
     file listing — both trivial at micro-batch sizes; one compaction
     (≈1 s at this corpus) restores the fresh build exactly.
-    ``regeometry_on_compact`` additionally re-derives the bucket
-    count from the grown corpus on each cadence compaction
-    (bit-identical to a fresh rebuild — pinned), so directory payload
+    Each cadence compaction also re-derives the bucket count from the
+    grown corpus (``compact_ann_index(regeometry=True)``,
+    bit-identical to a fresh rebuild — pinned), so directory payload
     stays ∝ corpus/auto_buckets no matter how far appends outgrow the
     build-time geometry. Compaction here is crash-safe maintenance:
     a cadence point skipped by a crash is simply picked up at a later
@@ -460,8 +459,8 @@ def streaming_dedup_ingest(
             # the batch is already committed above — NOTHING in this
             # maintenance block may fail it. RuntimeError is the
             # handshake's defer signal (a foreign writer's in-flight
-            # append / stranded intent); OSError covers a rename or
-            # permission failure mid-swap; ValueError a corrupted
+            # append / stranded intent); OSError covers a filesystem
+            # or permission failure mid-commit; ValueError a corrupted
             # sidecar. All defer to the next cadence point.
             try:
                 # bound the per-batch marker listings (commit ids +
@@ -476,10 +475,7 @@ def streaming_dedup_ingest(
                 if commitlog.n_committed(target_dir) % compact_every == 0:
                     from ..operators.similarity import compact_ann_index
 
-                    compact_ann_index(
-                        spark, index_path,
-                        regeometry=regeometry_on_compact,
-                    )
+                    compact_ann_index(spark, index_path, regeometry=True)
             except (RuntimeError, OSError, ValueError) as e:
                 import sys as _sys
 

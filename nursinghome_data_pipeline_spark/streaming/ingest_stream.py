@@ -163,6 +163,11 @@ def streaming_upsert_sink(
     descending — arbitrary but reproducible. Ties on ``seq_col`` break
     on the remaining columns, again for reproducibility.
 
+    The merged target is committed as the next generation of
+    ``target_dir/data`` (``fs.commit_generation`` — one atomic pointer
+    creation, crash-safe on every store); read it through
+    ``fs.active_data_root(target_dir + "/data")``.
+
     Exactly-once: Spark's foreachBatch gives at-least-once delivery
     with a stable ``batch_id`` — the sink records committed batch ids
     as per-batch marker files under the target
@@ -201,19 +206,9 @@ def streaming_upsert_sink(
             .drop("__rn")
         )
         data_dir = fs.join(target_dir, "data")
-        old_dir = data_dir + "_old"
-        # crash recovery for the two-rename swap below: a previous run
-        # that died mid-swap left either a completed swap (data + _old
-        # both present → drop the leftover _old) or a demoted-only
-        # state (_old present, data missing → restore it before
-        # merging, the batch was never committed)
-        if fs.exists(old_dir):
-            if fs.exists(data_dir):
-                fs.rmtree(old_dir)
-            else:
-                fs.rename(old_dir, data_dir)
-        if fs.exists(data_dir):
-            tgt = spark.read.parquet(data_dir)
+        cur = fs.active_generation(data_dir)
+        if cur is not None:
+            tgt = spark.read.parquet(cur)
             src = latest.select(
                 *[F.col(k).alias(f"__u_{k}") for k in keys],
                 *[
@@ -231,18 +226,14 @@ def streaming_upsert_sink(
             )
         else:
             merged = latest
-        merged.write.mode("overwrite").parquet(data_dir + "_next")
-        # demote-promote-drop swap: at EVERY crash point either data/
-        # or data_old/ holds a complete pre- or post-merge table (an
-        # rmtree-then-rename order has a window where both are gone,
-        # and the idempotent retry would silently rebuild the target
-        # from this one batch). A real deployment uses Delta/Iceberg
-        # commit protocols or an atomic store rename instead.
-        if fs.exists(data_dir):
-            fs.rename(data_dir, old_dir)
-        fs.rename(data_dir + "_next", data_dir)
-        if fs.exists(old_dir):
-            fs.rmtree(old_dir)
+        # the merged table is the next generation of data/ (fs's
+        # generation protocol): until the pointer flip the pre-merge
+        # generation stays fully active, after it the post-merge one —
+        # and a crash between the flip and the commit marker replays
+        # the batch, whose re-merge is idempotent
+        fs.commit_generation(
+            data_dir, lambda d: merged.write.mode("overwrite").parquet(d)
+        )
         commitlog.record_commit(target_dir, batch_id)
 
     return (

@@ -8,6 +8,7 @@ import json
 import pytest
 
 from nursinghome_data_pipeline_spark.cli import main
+from nursinghome_data_pipeline_spark.fs import active_data_root
 
 from .conftest import SF_DIR
 
@@ -151,7 +152,7 @@ def test_cli_ann_index_build_and_probe(tmp_path, spark, capsys):
     import glob as _glob
     import os as _os
 
-    for d in _glob.glob(_os.path.join(path, "bucket=*")):
+    for d in _glob.glob(_os.path.join(active_data_root(path), "bucket=*")):
         files = [f for f in _os.listdir(d) if f.endswith(".parquet")]
         assert len(files) <= 1, (d, files)
 
@@ -193,13 +194,13 @@ def test_cli_ann_index_append(tmp_path, spark, capsys):
         ["ann-index", "build", path, "--kind", "lsh", "--sf-dir", SF_DIR,
          "--n-planes", "4"]
     ) == 0
-    n0 = spark.read.parquet(path).count()
+    n0 = spark.read.parquet(active_data_root(path)).count()
     capsys.readouterr()
     assert main(["ann-index", "append", path, "--sf-dir", SF_DIR]) == 0
     out = capsys.readouterr().out
     # the message reports the O(batch) count, never a full-index scan
     assert f"appended {n0} rows" in out
-    assert spark.read.parquet(path).count() == 2 * n0
+    assert spark.read.parquet(active_data_root(path)).count() == 2 * n0
 
 
 def test_cli_ann_index_compact(tmp_path, spark, capsys):
@@ -217,7 +218,7 @@ def test_cli_ann_index_compact(tmp_path, spark, capsys):
     import glob as _glob
     import os as _os
 
-    for d in _glob.glob(_os.path.join(path, "bucket=*")):
+    for d in _glob.glob(_os.path.join(active_data_root(path), "bucket=*")):
         assert len([f for f in _os.listdir(d) if f.endswith(".parquet")]) <= 1
 
 
@@ -378,12 +379,12 @@ def test_cli_ann_index_srp_append_and_regeometry(tmp_path, spark, capsys):
     assert rc == 0
     out = capsys.readouterr().out
     assert "appended" in out and "srp" in out
-    assert _os.path.isdir(_os.path.join(path, "pb=-1"))
+    assert _os.path.isdir(_os.path.join(active_data_root(path), "pb=-1"))
     rc = main(["ann-index", "compact", path, "--regeometry"])
     assert rc == 0
     out = capsys.readouterr().out
     assert "regeometry ->" in out
-    assert not _os.path.isdir(_os.path.join(path, "pb=-1"))
+    assert not _os.path.isdir(_os.path.join(active_data_root(path), "pb=-1"))
     meta = load_ann_meta(path)
     # 500 testdata vectors (+ the appended copy) -> the auto floor, not
     # the stale 64

@@ -17,6 +17,7 @@ from nursinghome_data_pipeline_spark.operators.dedup_index import (
     write_dedup_index,
 )
 from nursinghome_data_pipeline_spark.operators.similarity import (
+    active_data_root,
     append_to_ann_index,
     compact_ann_index,
     load_ann_meta,
@@ -150,7 +151,7 @@ def test_probe_prunes_at_file_level(spark, sf_dir, tmp_path):
     assert len(pbs) <= meta["bands"]  # one doc -> at most `bands` keys
     touched = {
         int(re.search(r"pb=(\d+)", r[0]).group(1))
-        for r in spark.read.parquet(path)
+        for r in spark.read.parquet(active_data_root(path))
         .where(F.col("pb").isin(list(pbs)))
         .select(F.input_file_name())
         .distinct()
@@ -204,11 +205,8 @@ def test_append_is_one_delta_file_and_compact_folds_it(
     assert len(new_files) == 1
     assert all(os.sep + "pb=-1" + os.sep in f for f in new_files)
     # delta rows carry real routing columns, only pb is the sentinel
-    delta = spark.read.parquet(path).where(F.col("pb") == -1)
+    delta = spark.read.parquet(active_data_root(path)).where(F.col("pb") == -1)
     assert delta.count() > 0
-    from nursinghome_data_pipeline_spark.operators.similarity import (
-        active_data_root,
-    )
 
     compact_ann_index(spark, path)
     nb = load_ann_meta(path)["n_buckets"]
@@ -219,7 +217,7 @@ def test_append_is_one_delta_file_and_compact_folds_it(
     write_dedup_index(corpus, full, n_buckets=nb)
     key = lambda r: (r["pb"], r["band"], r["bkey"], r["doc_id"])  # noqa: E731
     assert sorted(map(key, rows)) == sorted(
-        map(key, spark.read.parquet(full).collect())
+        map(key, spark.read.parquet(active_data_root(full)).collect())
     )
 
 
@@ -399,10 +397,6 @@ def test_regeometry_compaction_matches_fresh_rebuild(spark, sf_dir, tmp_path):
     m_g, m_f = load_ann_meta(grown), load_ann_meta(fresh)
     assert m_g["n_buckets"] == m_f["n_buckets"]
     assert m_g["kind"] == "minhash" and m_g["bands"] == m_f["bands"]
-
-    from nursinghome_data_pipeline_spark.operators.similarity import (
-        active_data_root,
-    )
 
     key = lambda r: (r["pb"], r["band"], r["bkey"], r["doc_id"])  # noqa: E731
     rows_g = sorted(

@@ -13,6 +13,7 @@ from nursinghome_data_pipeline_spark.operators.dedup import (
     near_duplicate_pairs,
 )
 from nursinghome_data_pipeline_spark.operators.similarity import (
+    active_data_root,
     knn_brute_force,
     knn_lsh,
 )
@@ -337,7 +338,7 @@ def test_lsh_partitioned_index_prunes_at_file_level(spark, sf_dir, tmp_path):
     )
     touched = {
         int(re.search(r"bucket=(\d+)", r[0]).group(1))
-        for r in spark.read.parquet(path)
+        for r in spark.read.parquet(active_data_root(path))
         .where(F.col("bucket").isin(list(probes)))
         .select(F.input_file_name())
         .distinct()
@@ -615,14 +616,14 @@ def test_append_to_ann_index_routes_with_sidecar_geometry(spark, sf_dir, tmp_pat
     top = knn_ivf_partitioned(spark, ivf_inc, qvec, k=5, n_probe=4).collect()
     assert top[0].vec_id == 7 and top[0].cosine_sim == pytest.approx(1.0)
     # count integrity: append added rows, replaced nothing
-    assert spark.read.parquet(ivf_inc).count() == emb.count()
+    assert spark.read.parquet(active_data_root(ivf_inc)).count() == emb.count()
 
 
 def test_compact_ann_index_bounds_files_preserving_results(spark, sf_dir, tmp_path):
     """Lifecycle close-out: append batches fragment the probed
     directories; compaction rewrites them bounded, preserving rows,
-    sidecar, and probe results exactly (same swap/recovery protocol
-    as skew.compact_files)."""
+    sidecar, and probe results exactly (committed as the next
+    generation, like every build)."""
     import glob as _glob
     import os as _os
 
@@ -646,17 +647,14 @@ def test_compact_ann_index_bounds_files_preserving_results(spark, sf_dir, tmp_pa
     ).collect()
     frag = max(
         len([f for f in _os.listdir(d) if f.endswith(".parquet")])
-        for d in _glob.glob(_os.path.join(path, "bucket=*"))
+        for d in _glob.glob(_os.path.join(active_data_root(path), "bucket=*"))
     )
     assert frag >= 2  # the appends really fragmented some directory
-    from nursinghome_data_pipeline_spark.operators.similarity import (
-        active_data_root,
-    )
-
+    gen1 = active_data_root(path)
     n_files = compact_ann_index(spark, path, files_per_partition=1)
     assert n_files <= 1 << 4
     droot = active_data_root(path)  # the committed generation (r12)
-    assert droot != path
+    assert droot != gen1
     for d in _glob.glob(_os.path.join(droot, "bucket=*")):
         files = [f for f in _os.listdir(d) if f.endswith(".parquet")]
         assert len(files) <= 1, (d, files)

@@ -5,11 +5,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from nursinghome_data_pipeline_spark import fs
 from nursinghome_data_pipeline_spark.operators.similarity import (
-    ivf_assign,
-    ivf_train_centroids,
+    active_data_root,
     knn_brute_force,
-    knn_ivf,
 )
 
 N_CENTROIDS = 8
@@ -19,57 +18,9 @@ def _embeddings(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def test_assignment_deterministic_and_in_range(spark, sf_dir):
-    emb = _embeddings(spark, sf_dir)
-    cent = ivf_train_centroids(emb, n_centroids=N_CENTROIDS, sample_rows=500)
-    assert cent.shape == (N_CENTROIDS, 64)
-    a1 = ivf_assign(emb, cent).select("vec_id", "cell").collect()
-    a2 = ivf_assign(emb, cent).select("vec_id", "cell").collect()
-    assert sorted(a1) == sorted(a2)
-    assert all(0 <= r.cell < N_CENTROIDS for r in a1)
-
-
-def test_probe_all_cells_equals_brute_force(spark, sf_dir):
-    emb = _embeddings(spark, sf_dir)
-    cent = ivf_train_centroids(emb, n_centroids=N_CENTROIDS, sample_rows=500)
-    qvec = emb.where(F.col("vec_id") == 0).first()["embedding"]
-    exact = knn_brute_force(
-        emb.where(F.col("vec_id") != 0),
-        spark.createDataFrame([(list(qvec),)], "query_embedding array<double>"),
-        k=10,
-    ).collect()
-    ivf_all = knn_ivf(
-        emb.where(F.col("vec_id") != 0),
-        qvec,
-        cent,
-        k=10,
-        n_probe=N_CENTROIDS,
-    ).collect()
-    assert [r.vec_id for r in exact] == [r.vec_id for r in ivf_all]
-    for a, b in zip(exact, ivf_all):
-        assert abs(a.cosine_sim - b.cosine_sim) < 1e-12
-
-
-def test_partial_probe_stays_in_cells(spark, sf_dir):
-    emb = _embeddings(spark, sf_dir)
-    cent = ivf_train_centroids(emb, n_centroids=N_CENTROIDS, sample_rows=500)
-    qvec = emb.where(F.col("vec_id") == 0).first()["embedding"]
-    got = knn_ivf(emb, qvec, cent, k=5, n_probe=2).collect()
-    assert 0 < len(got) <= 5
-    # every result must come from one of the probed cells
-    cells = {
-        r.cell
-        for r in ivf_assign(emb, cent)
-        .where(F.col("vec_id").isin([r.vec_id for r in got]))
-        .collect()
-    }
-    assert len(cells) <= 2
-
-
 def test_fixed_ivf_probe_all_equals_brute_force(spark, sf_dir):
-    """The untrained (hash-seeded, oracle-checkable) IVF variant obeys
-    the same contract as trained IVF: probing every cell IS exact
-    brute force."""
+    """The hash-seeded, oracle-checkable IVF plan: probing every cell
+    IS exact brute force."""
     from nursinghome_data_pipeline_spark.operators.similarity import (
         fixed_ivf_seeds,
         knn_ivf_fixed,
@@ -177,7 +128,7 @@ def test_partitioned_index_prunes_at_file_level(spark, sf_dir, tmp_path):
     # observe the files that actually contribute rows instead)
     touched = {
         int(re.search(r"cell=(\d+)", r[0]).group(1))
-        for r in spark.read.parquet(path)
+        for r in spark.read.parquet(active_data_root(path))
         .where(F.col("cell").isin(list(probes)))
         .select(F.input_file_name())
         .distinct()
@@ -313,7 +264,7 @@ def test_ann_lifecycle_churn_stays_bit_equal_to_rebuild(spark, sf_dir, tmp_path)
 
 def test_append_refused_while_compaction_lock_present(spark, sf_dir, tmp_path):
     """Single-writer exclusion (ADVICE r5): an append during a live
-    compaction would land in the demoted directory and be deleted —
+    compaction would land in the superseded generation and be deleted —
     it must fail loudly while _compacting.lock exists."""
     import os as _os
 
@@ -336,7 +287,7 @@ def test_append_refused_while_compaction_lock_present(spark, sf_dir, tmp_path):
         append_to_ann_index(emb.where(F.col("vec_id") % 2 == 1), path)
     _os.remove(_os.path.join(path, ANN_COMPACT_LOCK))
     append_to_ann_index(emb.where(F.col("vec_id") % 2 == 1), path)
-    assert spark.read.parquet(path).count() == emb.count()
+    assert spark.read.parquet(active_data_root(path)).count() == emb.count()
 
 
 def test_compact_aborts_swap_if_files_changed_mid_rewrite(
@@ -356,14 +307,15 @@ def test_compact_aborts_swap_if_files_changed_mid_rewrite(
     seeds = sim.fixed_ivf_seeds(emb, n_seeds=4)
     path = str(tmp_path / "ivf_race")
     sim.write_ivf_index(emb.where(F.col("vec_id") % 2 == 0), path, seeds)
+    live = sim.active_data_root(path)
     late = emb.where(F.col("vec_id") % 2 == 1)
     real_meta_write = sim._write_ann_meta
     state = {"fired": False}
 
     def sneak_append_then_write(p, meta):
         # simulate an append racing in while the rewrite runs: it lands
-        # in the LIVE (root) layout just before the gate re-lists it
-        if not state["fired"] and sim.GEN_PREFIX in p:
+        # in the LIVE generation just before the gate re-lists it
+        if not state["fired"] and p != live:
             state["fired"] = True
             routed = late.select(
                 meta["id_col"],
@@ -372,7 +324,7 @@ def test_compact_aborts_swap_if_files_changed_mid_rewrite(
                     [(int(s), v) for s, v in meta["seeds"]], meta["vec_col"]
                 ).alias("cell"),
             )
-            routed.write.mode("append").partitionBy("cell").parquet(path)
+            routed.write.mode("append").partitionBy("cell").parquet(live)
         real_meta_write(p, meta)
 
     monkeypatch.setattr(sim, "_write_ann_meta", sneak_append_then_write)
@@ -384,21 +336,22 @@ def test_compact_aborts_swap_if_files_changed_mid_rewrite(
     assert not _os.path.exists(_os.path.join(path, sim.ANN_COMPACT_LOCK))
     import glob as _glob
 
-    assert not any(
-        _os.path.isdir(d) for d in _glob.glob(_os.path.join(path, "_gen-*"))
-    )
+    assert [
+        d for d in _glob.glob(_os.path.join(path, "_gen-*"))
+        if _os.path.isdir(d)
+    ] == [live]
     assert spark.read.parquet(sim.active_data_root(path)).count() == emb.count()
     # and a retry (no race this time) succeeds
     sim.compact_ann_index(spark, path, files_per_partition=1)
     gen1 = sim.active_data_root(path)
     assert spark.read.parquet(gen1).count() == emb.count()
-    # r12 regression pin: the gate must ALSO fire when the active root
-    # is itself a generation dir (new generations are siblings there —
-    # a substring-based exclusion would void the gate entirely)
+    # r12 regression pin: the gate must ALSO fire on a compacted
+    # generation (new generations are siblings of the active one — a
+    # substring-based exclusion would void the gate entirely)
     state2 = {"fired": False}
 
     def sneak_append_gen1(p, meta):
-        if not state2["fired"] and p != gen1 and sim.GEN_PREFIX in p:
+        if not state2["fired"] and p != gen1 and fs.GEN_PREFIX in p:
             state2["fired"] = True
             routed = late.select(
                 meta["id_col"],
@@ -500,7 +453,10 @@ def test_compact_refused_while_append_intent_present(spark, sf_dir, tmp_path):
     )
 
     assert not _os.path.exists(_os.path.join(path, "_compacting.lock"))
-    assert _glob.glob(_os.path.join(path, "_gen-*")) == []
+    assert sorted(_glob.glob(_os.path.join(path, "_gen-*"))) == [
+        _os.path.join(path, "_gen-000001"),
+        _os.path.join(path, "_gen-000001.ptr"),
+    ]
     _os.remove(marker)
     compact_ann_index(spark, path, files_per_partition=1)
     assert spark.read.parquet(active_data_root(path)).count() == emb.count()
@@ -526,7 +482,7 @@ def test_append_leaves_no_intent_marker_behind(spark, sf_dir, tmp_path):
     write_ivf_index(emb.where(F2.col("vec_id") % 2 == 0), path, fixed_ivf_seeds(emb, n_seeds=4))
     append_to_ann_index(emb.where(F2.col("vec_id") % 2 == 1), path)
     assert _glob.glob(_os.path.join(path, "_append-*.intent")) == []
-    assert spark.read.parquet(path).count() == emb.count()
+    assert spark.read.parquet(active_data_root(path)).count() == emb.count()
 
 
 def test_mutators_validate_sidecar_kind(spark, sf_dir, tmp_path):
@@ -549,7 +505,7 @@ def test_mutators_validate_sidecar_kind(spark, sf_dir, tmp_path):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     path = str(tmp_path / "ivf_badkind")
     write_ivf_index(emb, path, fixed_ivf_seeds(emb, n_seeds=4))
-    meta_path = _os.path.join(path, ANN_META_FILE)
+    meta_path = _os.path.join(active_data_root(path), ANN_META_FILE)
     meta = _json.load(open(meta_path))
     meta["kind"] = "ivf2"
     _json.dump(meta, open(meta_path, "w"))
@@ -600,11 +556,12 @@ def test_compact_crash_between_write_and_flip_is_repaired(
     from nursinghome_data_pipeline_spark import fs as _fs
 
     sim, path, topk, want = _ivf_crash_fixture(spark, sf_dir, tmp_path)
+    gen1 = sim.active_data_root(path)
     real_touch = _fs.touch
     state = {"n": 0}
 
     def dying_touch(p):
-        if p.endswith(sim.GEN_PTR_SUFFIX):
+        if p.endswith(_fs.GEN_PTR_SUFFIX):
             state["n"] += 1
             raise OSError("injected crash before flip")
         return real_touch(p)
@@ -614,15 +571,15 @@ def test_compact_crash_between_write_and_flip_is_repaired(
         sim.compact_ann_index(spark, path, files_per_partition=1)
     monkeypatch.undo()
     assert state["n"] == 1
-    # crashed state: orphan generation tree, no pointer — the legacy
-    # root layout is still the active data root and probes still work
-    assert _glob.glob(_os.path.join(path, "_gen-*.ptr")) == []
+    # crashed state: orphan generation tree, no pointer — the build's
+    # generation is still the active data root and probes still work
+    assert _glob.glob(_os.path.join(path, "_gen-*.ptr")) == [gen1 + ".ptr"]
     orphans = [
         d for d in _glob.glob(_os.path.join(path, "_gen-*"))
-        if _os.path.isdir(d)
+        if _os.path.isdir(d) and d != gen1
     ]
     assert orphans, "new generation tree should have been written"
-    assert sim.active_data_root(path) == path
+    assert sim.active_data_root(path) == gen1
     assert topk() == want
     # next call GCs the orphan, reclaims the stale lock, completes
     sim.compact_ann_index(spark, path, files_per_partition=1)
@@ -648,10 +605,10 @@ def test_compact_crash_between_flip_and_gc_is_repaired(
     from nursinghome_data_pipeline_spark import fs as _fs
 
     sim, path, topk, want = _ivf_crash_fixture(spark, sf_dir, tmp_path)
-    # first compaction: establish generation 1 normally
+    # first compaction: establish generation 2 normally
     sim.compact_ann_index(spark, path, files_per_partition=1)
     gen1 = sim.active_data_root(path)
-    assert gen1 != path
+    assert gen1.endswith("_gen-000002")
     real_rmtree = _fs.rmtree
 
     def dying_rmtree(p):
@@ -665,12 +622,12 @@ def test_compact_crash_between_flip_and_gc_is_repaired(
     monkeypatch.undo()
     # generation 2 is committed and active despite the leftover tree;
     # the stale lock (crash before removal) is reclaimed by next call
-    assert sim.active_data_root(path).endswith("_gen-000002")
+    assert sim.active_data_root(path).endswith("_gen-000003")
     assert _os.path.isdir(gen1)
     assert topk() == want
     sim.compact_ann_index(spark, path, files_per_partition=1)
     assert not _os.path.isdir(gen1)
-    assert sim.active_data_root(path).endswith("_gen-000003")
+    assert sim.active_data_root(path).endswith("_gen-000004")
     assert len(_glob.glob(_os.path.join(path, "_gen-*.ptr"))) == 1
     assert topk() == want
 
@@ -704,8 +661,10 @@ def test_compact_detects_in_place_overwrite_of_part_file(
     real_meta_write = sim._write_ann_meta
     state = {"fired": False}
 
+    gen1 = sim.active_data_root(path)
+
     def overwrite_in_place_then_write(p, meta):
-        if not state["fired"] and sim.GEN_PREFIX in p:
+        if not state["fired"] and p != gen1:
             state["fired"] = True
             _shutil.copyfile(b, a)  # same name `a`, different bytes
         real_meta_write(p, meta)
@@ -715,11 +674,11 @@ def test_compact_detects_in_place_overwrite_of_part_file(
         sim.compact_ann_index(spark, path, files_per_partition=1)
     assert state["fired"]
     # gate released the lock and removed the uncommitted generation;
-    # live (root) layout intact
-    import glob as _glob
-
+    # the live generation is intact
     assert not _os.path.exists(_os.path.join(path, sim.ANN_COMPACT_LOCK))
-    assert _glob.glob(_os.path.join(path, "_gen-*")) == []
+    assert sorted(_glob.glob(_os.path.join(path, "_gen-*"))) == [
+        gen1, gen1 + ".ptr"
+    ]
 
 
 def test_compact_lock_cleanup_tolerates_vanished_lock(
@@ -735,8 +694,10 @@ def test_compact_lock_cleanup_tolerates_vanished_lock(
     sim, path, _topk, _want = _ivf_crash_fixture(spark, sf_dir, tmp_path)
     real_meta_write = sim._write_ann_meta
 
+    gen1 = sim.active_data_root(path)
+
     def remove_lock_then_die(p, meta):
-        if sim.GEN_PREFIX in p:
+        if p != gen1:
             _os.remove(_os.path.join(path, sim.ANN_COMPACT_LOCK))
             raise RuntimeError("original failure to surface")
         real_meta_write(p, meta)

@@ -18,6 +18,7 @@ from nursinghome_data_pipeline_spark.operators.dedup_index import (
     write_simhash_index,
 )
 from nursinghome_data_pipeline_spark.operators.similarity import (
+    active_data_root,
     append_to_ann_index,
     compact_ann_index,
     load_ann_meta,
@@ -210,9 +211,6 @@ def test_regeometry_compaction_matches_fresh_rebuild(spark, sf_dir, tmp_path):
         load_ann_meta(grown)["n_buckets"]
         == load_ann_meta(fresh)["n_buckets"]
     )
-    from nursinghome_data_pipeline_spark.operators.similarity import (
-        active_data_root,
-    )
 
     rows = lambda p: sorted(  # noqa: E731
         (r["pb"], r["bucket"], r["doc_id"], r["sh"])
@@ -284,7 +282,7 @@ def test_probe_on_empty_match_returns_typed_empty(spark, tmp_path):
     import os
     import shutil
 
-    for d in glob.glob(os.path.join(path, "pb=*")):
+    for d in glob.glob(os.path.join(active_data_root(path), "pb=*")):
         shutil.rmtree(d)
     batch = spark.createDataFrame(
         [(9, "totally different words entirely unrelated content")],

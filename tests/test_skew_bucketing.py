@@ -113,47 +113,6 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
 
-def test_compact_files_reduces_file_count_preserving_rows(spark, tmp_path):
-    from nursinghome_data_pipeline_spark.operators.skew import compact_files
-
-    path = str(tmp_path / "frag")
-    df = spark.range(0, 10000).withColumn("v", F.col("id") * 2)
-    df.repartition(64).write.parquet(path)  # 64 tiny files
-    import glob
-    import os
-
-    before = len(glob.glob(os.path.join(path, "*.parquet")))
-    assert before >= 32
-    n_after = compact_files(spark, path, target_bytes=1 << 30)
-    assert n_after < before
-    back = spark.read.parquet(path)
-    assert back.count() == 10000
-    assert back.agg(F.sum("v")).first()[0] == 10000 * 9999  # content intact
-
-
-def test_compact_files_sorted_keeps_rowgroup_stats_selective(spark, tmp_path):
-    from nursinghome_data_pipeline_spark.operators.skew import compact_files
-
-    path = str(tmp_path / "frag_sorted")
-    spark.range(0, 5000).withColumn("k", (F.col("id") * 7919) % 5000).write.mode(
-        "overwrite"
-    ).parquet(path)
-    compact_files(spark, path, target_bytes=1 << 30, sort_col="k")
-    back = spark.read.parquet(path)
-    assert back.count() == 5000
-    # sorted-within-file: each partition's k values are non-decreasing
-    import pandas as pd
-
-    def check(it):
-        for pdf in it:
-            ks = pdf["k"].tolist()
-            yield pd.DataFrame({"ok": [ks == sorted(ks)]})
-
-    assert all(
-        r.ok for r in back.select("k").mapInPandas(check, "ok boolean").collect()
-    )
-
-
 def test_salted_join_rejects_small_side_preserving_outer(spark):
     # replicated-small salting cannot express right/full outer: every
     # unmatched small-side key would emit its null-extended row once
@@ -169,23 +128,6 @@ def test_salted_join_rejects_small_side_preserving_outer(spark):
     plain = large.join(small, ["k"], "left")
     salted = salted_join(large, small, ["k"], how="left", n_salts=8)
     assert sorted(plain.collect()) == sorted(salted.collect())
-
-
-def test_compact_files_recovers_interrupted_swap(spark, tmp_path):
-    # simulate a compaction that crashed after demoting the live dir:
-    # path is gone, .compact.old holds the data — the next compaction
-    # must restore and proceed instead of failing on the leftover
-    import os
-
-    from nursinghome_data_pipeline_spark.operators.skew import compact_files
-
-    path = str(tmp_path / "crashy")
-    spark.range(0, 1000).repartition(8).write.parquet(path)
-    os.rename(path, path + ".compact.old")  # crash state: demote done
-    n = compact_files(spark, path, target_bytes=1 << 30)
-    assert n >= 1
-    assert not os.path.exists(path + ".compact.old")
-    assert spark.read.parquet(path).count() == 1000
 
 
 def test_bucketed_global_order_matches_global_window(spark):
@@ -531,19 +473,3 @@ def test_sub_quantization_point_mass_splits_by_observed_span(spark):
         ).collect()
     }
     assert got == ref
-
-
-def test_compact_files_over_file_uri(spark, tmp_path):
-    """r11: compact_files' swap/stat protocol rides the fs layer — a
-    file:// table compacts in place with rows intact."""
-    from nursinghome_data_pipeline_spark.operators.skew import compact_files
-
-    path = f"file://{tmp_path}/frag_uri"
-    spark.range(0, 5000).withColumn("v", F.col("id") * 3).repartition(
-        32
-    ).write.parquet(path)
-    n_after = compact_files(spark, path, target_bytes=1 << 30)
-    assert n_after < 32
-    back = spark.read.parquet(path)
-    assert back.count() == 5000
-    assert back.agg(F.sum("v")).first()[0] == 3 * 5000 * 4999 // 2

@@ -20,6 +20,7 @@ from nursinghome_data_pipeline_spark.operators.embedding_index import (
 )
 from nursinghome_data_pipeline_spark.operators.dedup_index import pairs_from_rows
 from nursinghome_data_pipeline_spark.operators.similarity import (
+    active_data_root,
     append_to_ann_index,
     auto_lsh_tables,
     compact_ann_index,
@@ -171,7 +172,7 @@ def test_append_then_probe_equals_full_rebuild(spark, sf_dir, tmp_path):
     append_to_ann_index(rest, grown)
     import os
 
-    assert os.path.isdir(os.path.join(grown, "pb=-1")), (
+    assert os.path.isdir(os.path.join(active_data_root(grown), "pb=-1")), (
         "srp append should land as an LSM delta"
     )
     full = str(tmp_path / "full")
@@ -187,7 +188,7 @@ def test_append_then_probe_equals_full_rebuild(spark, sf_dir, tmp_path):
     assert g == f and g
     # compaction folds the delta; probe unchanged
     compact_ann_index(spark, grown)
-    assert not os.path.isdir(os.path.join(grown, "pb=-1"))
+    assert not os.path.isdir(os.path.join(active_data_root(grown), "pb=-1"))
     assert (
         _pairs(
             embedding_batch_against_index(
@@ -225,10 +226,6 @@ def test_regeometry_compaction_matches_fresh_rebuild(
         load_ann_meta(grown)["n_buckets"]
         == load_ann_meta(fresh)["n_buckets"]
     )
-    from nursinghome_data_pipeline_spark.operators.similarity import (
-        active_data_root,
-    )
-
     rows = lambda p: sorted(  # noqa: E731
         # vector rows of the normalized layout carry NULL tbl/bucket —
         # map to -1 so mixed-role tuples stay sortable
@@ -295,7 +292,7 @@ def test_probe_on_empty_match_returns_typed_empty(spark, tmp_path):
     write_srp_index(
         corpus, path, dim=_DIM, design_threshold=THR, n_buckets=4, **GEO
     )
-    for d in glob.glob(f"{path}/pb=*"):
+    for d in glob.glob(f"{active_data_root(path)}/pb=*"):
         shutil.rmtree(d)
     out = embedding_batch_against_index(spark, corpus, path, threshold=THR)
     assert out.columns == ["batch_id", "corpus_id", "cosine_sim"]
@@ -393,7 +390,7 @@ def test_bucket_stats_on_srp_index(spark, sf_dir, tmp_path):
     )
     stats = dedup_index_bucket_stats(spark, path)
     assert stats["kind"] == "srp"
-    idx = spark.read.parquet(path)
+    idx = spark.read.parquet(active_data_root(path))
     # r10 normalized layout: only POSTING rows (tbl non-null) feed the
     # hot-key stat; vector rows are storage, one per distinct id
     n_postings = idx.where(F.col("tbl").isNotNull()).count()
@@ -452,7 +449,7 @@ def test_probe_without_design_threshold_named_error(spark, sf_dir, tmp_path):
     write_srp_index(
         corpus, path, dim=_DIM, design_threshold=THR, n_buckets=16, **GEO
     )
-    meta_path = os.path.join(path, "_ann_meta.json")
+    meta_path = os.path.join(active_data_root(path), "_ann_meta.json")
     with open(meta_path, encoding="utf-8") as f:
         meta = json.load(f)
     expected = {
@@ -491,7 +488,7 @@ def test_layoutless_sidecar_named_error(spark, sf_dir, tmp_path):
     write_srp_index(
         small, path, dim=_DIM, design_threshold=THR, n_buckets=16, **GEO
     )
-    meta_path = os.path.join(path, "_ann_meta.json")
+    meta_path = os.path.join(active_data_root(path), "_ann_meta.json")
     with open(meta_path, encoding="utf-8") as f:
         meta = json.load(f)
     del meta["layout"]
@@ -525,7 +522,7 @@ def test_normalized_layout_pins(spark, sf_dir, tmp_path):
     )
     meta = load_ann_meta(path)
     assert meta["layout"] == "normalized"
-    idx = spark.read.parquet(path)
+    idx = spark.read.parquet(active_data_root(path))
     postings = idx.where(F.col("tbl").isNotNull())
     vec_rows = idx.where(F.col("tbl").isNull())
     # postings: payload stripped, pb >= 0, n_tables per vector
@@ -545,8 +542,9 @@ def test_normalized_layout_pins(spark, sf_dir, tmp_path):
     assert bad_pb.count() == 0
     # delta append: payload inline (single atomic file), probe sees it
     append_to_ann_index(rest, path)
-    delta = spark.read.option("basePath", path).parquet(
-        os.path.join(path, "pb=-1")
+    droot = active_data_root(path)
+    delta = spark.read.option("basePath", droot).parquet(
+        os.path.join(droot, "pb=-1")
     )
     assert delta.where(F.col("embedding").isNull()).count() == 0
     want = _pairs(
@@ -555,10 +553,6 @@ def test_normalized_layout_pins(spark, sf_dir, tmp_path):
     # compaction splits the delta: postings lose the payload, every
     # appended id gains exactly one vector row, probe unchanged
     # (post-compaction the data lives in the active generation — r12)
-    from nursinghome_data_pipeline_spark.operators.similarity import (
-        active_data_root,
-    )
-
     compact_ann_index(spark, path)
     idx = spark.read.parquet(active_data_root(path))
     assert idx.where(

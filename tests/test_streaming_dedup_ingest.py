@@ -11,6 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from nursinghome_data_pipeline_spark.fs import active_data_root
 from nursinghome_data_pipeline_spark.operators.dedup_index import (
     dedup_batch_against_index,
     write_dedup_index,
@@ -140,14 +141,14 @@ def test_stream_dedups_within_and_across_batches(spark, tmp_path):
     # re-delivery with a FRESH checkpoint replays all files as batch 0
     # — already committed, so the manifest skip keeps target AND index
     # unchanged (no duplicate postings from the replay)
-    before = spark.read.parquet(index).count()
+    before = spark.read.parquet(active_data_root(index)).count()
     q2 = start("ckpt2")
     try:
         q2.processAllAvailable()
     finally:
         q2.stop()
     assert _accepted_ids(spark, target) == {11, 21}
-    assert spark.read.parquet(index).count() == before
+    assert spark.read.parquet(active_data_root(index)).count() == before
 
 
 def test_null_text_rows_pass_through_not_dropped(spark, tmp_path):
@@ -174,7 +175,7 @@ def test_null_text_rows_pass_through_not_dropped(spark, tmp_path):
     finally:
         q.stop()
     assert _accepted_ids(spark, target) == {50, 51, 52}
-    idx_ids = {r["doc_id"] for r in spark.read.parquet(index).collect()}
+    idx_ids = {r["doc_id"] for r in spark.read.parquet(active_data_root(index)).collect()}
     assert 52 in idx_ids and not ({50, 51} & idx_ids)
 
 
@@ -224,7 +225,7 @@ def test_cadence_compaction_preserves_results_and_bounds_files(
     must (a) accept exactly what the no-compaction twin accepts,
     (b) preserve every index posting, (c) actually bound the file
     count (compactions fired at batches 2/4/6), and (d) keep the
-    sidecar geometry auto-derived (regeometry_on_compact default)."""
+    sidecar geometry auto-derived (every cadence compaction regeometries)."""
     import glob
 
     from nursinghome_data_pipeline_spark.operators.similarity import (
@@ -272,10 +273,6 @@ def test_cadence_compaction_preserves_results_and_bounds_files(
     # postings preserved by ROUTING identity (band, bkey, doc): pb is
     # derived — the no-compact twin still holds its appends as pb=-1
     # LSM deltas while the cadence run folded them into true buckets
-    from nursinghome_data_pipeline_spark.operators.similarity import (
-        active_data_root,
-    )
-
     key = lambda r: (r["band"], r["bkey"], r["doc_id"])  # noqa: E731
     rows_c = spark.read.parquet(active_data_root(idx_c)).collect()
     rows_n = spark.read.parquet(active_data_root(idx_n)).collect()
@@ -366,8 +363,8 @@ def test_accepted_set_matches_composed_in_memory_operators(
     # the fixture exercised something: at least one drop per stage
     assert want and want < {r[0] for r in batch_rows}
     # and the index grew by exactly the accepted docs' postings
-    grown = {r["doc_id"] for r in spark.read.parquet(index).collect()}
-    base = {r["doc_id"] for r in spark.read.parquet(pristine).collect()}
+    grown = {r["doc_id"] for r in spark.read.parquet(active_data_root(index)).collect()}
+    base = {r["doc_id"] for r in spark.read.parquet(active_data_root(pristine)).collect()}
     assert grown - base == want
 
 
@@ -720,7 +717,7 @@ def test_srp_zero_norm_vectors_bypass_index(spark, tmp_path):
     # the index gained postings ONLY for the normal vector
     posted = {
         r["vec_id"]
-        for r in spark.read.parquet(index).select("vec_id").collect()
+        for r in spark.read.parquet(active_data_root(index)).select("vec_id").collect()
     }
     assert posted == {1, 34}
 
@@ -828,7 +825,7 @@ def test_sidecar_payload_col_backtick_rejected_at_stream_start(
     index = str(tmp_path / "idx")
     write_dedup_index(corpus, index, id_col="id", text_col="t", n_buckets=8)
     # simulate a hand-edited / foreign sidecar carrying a hostile name
-    meta_path = os.path.join(index, "_ann_meta.json")
+    meta_path = os.path.join(active_data_root(index), "_ann_meta.json")
     with open(meta_path, encoding="utf-8") as f:
         meta = _json.load(f)
     meta["text_col"] = "t`x"
@@ -907,7 +904,7 @@ def test_crash_between_concurrent_writes_replays_identically(
 
     index, src, target = setup("crash")
     target_done = os.path.join(target, "data", "ingest_batch=0", "_SUCCESS")
-    delta = os.path.join(index, "pb=-1")
+    delta = os.path.join(active_data_root(index), "pb=-1")
 
     def delta_landed() -> bool:
         return os.path.isdir(delta) and any(
@@ -993,7 +990,7 @@ def test_all_null_payload_batch_commits_pass_through_rows(
     corpus = spark.createDataFrame(_corpus_rows(), "doc_id long, text string")
     index = str(tmp_path / "index")
     write_dedup_index(corpus, index, n_buckets=16)
-    before = sorted(tuple(r) for r in spark.read.parquet(index).collect())
+    before = sorted(tuple(r) for r in spark.read.parquet(active_data_root(index)).collect())
     src = str(tmp_path / "src")
     os.makedirs(src)
     target = str(tmp_path / "target")
@@ -1010,4 +1007,4 @@ def test_all_null_payload_batch_commits_pass_through_rows(
     assert pins == [(0, [])]
     assert commitlog.is_committed(target, 0)
     assert _target_rows(spark, target) == [(60, None), (61, None)]
-    assert sorted(tuple(r) for r in spark.read.parquet(index).collect()) == before
+    assert sorted(tuple(r) for r in spark.read.parquet(active_data_root(index)).collect()) == before

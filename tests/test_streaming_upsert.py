@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+from nursinghome_data_pipeline_spark import fs
+
 
 def _write_batch(spark, path: str, rows, batch_no: int) -> None:
     df = spark.createDataFrame(rows, "k int, v string, seq int")
@@ -16,7 +18,9 @@ def _write_batch(spark, path: str, rows, batch_no: int) -> None:
 def _read_target(spark, target: str) -> dict:
     return {
         r.k: r.v
-        for r in spark.read.parquet(os.path.join(target, "data")).collect()
+        for r in spark.read.parquet(
+            fs.active_data_root(os.path.join(target, "data"))
+        ).collect()
     }
 
 
@@ -86,11 +90,10 @@ def test_streaming_upsert_merges_microbatches(spark, tmp_path):
 
 
 def test_streaming_upsert_over_file_uri_target(spark, tmp_path):
-    """r11: the sink's manifest + demote/promote swap ride the fs
+    """r11: the sink's commit markers + generation commit ride the fs
     layer, so a scheme-qualified target works — file:// exercises the
-    Hadoop client path for the manifest, the crash-safe dir swap, and
-    the per-batch merge."""
-    from nursinghome_data_pipeline_spark import fs
+    Hadoop client path for the markers, the generation pointer flip,
+    and the per-batch merge."""
     from nursinghome_data_pipeline_spark.streaming.ingest_stream import (
         streaming_upsert_sink,
     )
@@ -122,7 +125,9 @@ def test_streaming_upsert_over_file_uri_target(spark, tmp_path):
         q.stop()
     got = {
         r.k: r.v
-        for r in spark.read.parquet(fs.join(target, "data")).collect()
+        for r in spark.read.parquet(
+            fs.active_data_root(fs.join(target, "data"))
+        ).collect()
     }
     assert got == {1: "a", 2: "B", 3: "c"}
     # the exactly-once commit log lives at the URI, one marker per batch
