@@ -230,11 +230,9 @@ def _ivf_partitioned_probe(spark, sf_dir: str):
     production read path for vector search at rest: the
     PartitionFilters-pruned scan of the probed cells plus the exact
     cosine re-rank."""
-    import tempfile
-
     from nursinghome_data_pipeline_spark.operators.similarity import (
         fixed_ivf_seeds,
-        knn_ivf_partitioned,
+        knn_index_probe,
         write_ivf_index,
     )
     from nursinghome_data_pipeline_spark.fs import active_generation
@@ -245,11 +243,10 @@ def _ivf_partitioned_probe(spark, sf_dir: str):
     path = _fresh_index_cache_path(
         "ivf", tag, _dataset_fingerprint(sf_dir, "embeddings")
     )
-    seeds = fixed_ivf_seeds(emb, n_seeds=8)
     if active_generation(path) is None:
-        write_ivf_index(emb, path, seeds)
+        write_ivf_index(emb, path, fixed_ivf_seeds(emb, n_seeds=8))
     qvec = emb.orderBy("vec_id").first()["embedding"]
-    return knn_ivf_partitioned(spark, path, qvec, seeds, k=10, n_probe=2)
+    return knn_index_probe(spark, path, qvec, k=10, n_probe=2)
 
 
 def _lsh_partitioned_probe(spark, sf_dir: str):
@@ -258,10 +255,8 @@ def _lsh_partitioned_probe(spark, sf_dir: str):
     ``knn_ivf_partitioned_probe``: index materializes once per bench
     process, the timed plan is the PartitionFilters-pruned scan of the
     probed buckets plus the exact cosine re-rank."""
-    import tempfile
-
     from nursinghome_data_pipeline_spark.operators.similarity import (
-        knn_lsh_partitioned,
+        knn_index_probe,
         write_lsh_index,
     )
     from nursinghome_data_pipeline_spark.fs import active_generation
@@ -275,9 +270,7 @@ def _lsh_partitioned_probe(spark, sf_dir: str):
     if active_generation(path) is None:
         write_lsh_index(emb, path, dim=64, n_planes=6)
     qvec = emb.orderBy("vec_id").first()["embedding"]
-    return knn_lsh_partitioned(
-        spark, path, qvec, k=10, dim=64, n_planes=6, n_probe_buckets=4
-    )
+    return knn_index_probe(spark, path, qvec, k=10, n_probe=4)
 
 
 def _dedup_index_probe(spark, sf_dir: str):

@@ -49,16 +49,6 @@ def create_view(spark: SparkSession, view: str, select_sql: str) -> None:
     spark.sql(f"CREATE OR REPLACE VIEW {view} AS {select_sql}")
 
 
-def list_tables(spark: SparkSession) -> list[str]:
-    """S6: catalog scan (sqlite_master → spark.catalog.listTables)."""
-    return sorted(t.name for t in spark.catalog.listTables())
-
-
-def table_preview(spark: SparkSession, table: str, n: int = 5) -> DataFrame:
-    """S4 + H1: SELECT * FROM t LIMIT n (streamlit_app.py:15-19,32)."""
-    return spark.table(table).limit(n)
-
-
 AUDIT_TABLE = "dq_audit"
 #: parity: dq_audit DDL, build.py:18-24 (id omitted — surrogate keys
 #: don't distribute; created_at orders the log)

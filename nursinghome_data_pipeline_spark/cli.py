@@ -257,23 +257,33 @@ def _cmd_corpus_build(args: argparse.Namespace) -> int:
 
 
 def _cmd_ann_index(args: argparse.Namespace) -> int:
-    """Build or probe an at-rest ANN index — the one-surface entry to
-    ``write_ivf_index``/``write_lsh_index`` and their partition-pruned
-    probe twins (SCALE.md "ANN indexes at rest"). ``build`` persists a
-    cell/bucket-partitioned parquet layout plus a ``_ann_meta.json``
-    sidecar; ``probe`` needs only the index path (kind and geometry
-    come from the sidecar) and a query vector, given either inline as
-    JSON or by id from the source table."""
+    """Build, probe, append to, compact, near-dup probe or profile an
+    at-rest index — the one-surface entry to the index writers and
+    probes (SCALE.md "ANN indexes at rest"). An existing index's kind
+    and geometry come from its ``_ann_meta.json`` sidecar; every
+    per-kind check is the library's, and the ``ValueError`` it raises
+    becomes a stderr line and exit 2 here. ``probe`` takes the query
+    vector either inline as JSON or by id from the source table."""
     import json as _json
 
     from pyspark.sql import functions as F
 
     from .fs import active_data_root
+    from .operators.dedup_index import (
+        batch_against_index,
+        dedup_index_bucket_stats,
+        family,
+        write_dedup_index,
+        write_simhash_index,
+    )
+    from .operators.embedding_index import write_srp_index
     from .operators.similarity import (
+        _KNN_PART,
+        _require_kind,
         append_to_ann_index,
+        compact_ann_index,
         fixed_ivf_seeds,
-        knn_ivf_partitioned,
-        knn_lsh_partitioned,
+        knn_index_probe,
         load_ann_meta,
         write_ivf_index,
         write_lsh_index,
@@ -291,325 +301,206 @@ def _cmd_ann_index(args: argparse.Namespace) -> int:
             file=sys.stderr,
         )
         return 2
-    spark = _session(args)
-    if args.action == "append":
-        emb = load_tables(spark, args.sf_dir, [args.table])[args.table]
-        append_to_ann_index(emb, args.path)
-        meta = load_ann_meta(args.path)
-        # report the BATCH size, not a full-index count: a per-append
-        # O(index) scan would re-pay exactly the listing/footer tax
-        # the incremental path exists to avoid
+    if args.action == "build" and not args.kind:
         print(
-            f"appended {emb.count()} rows to {meta['kind']} index "
-            f"at {args.path}"
+            "ann-index build requires --kind ivf|lsh|minhash|simhash|srp",
+            file=sys.stderr,
         )
-        return 0
-    if args.action == "dedup":
-        from .operators.dedup_index import batch_against_index, family
-
-        if args.batch_path:
-            batch = spark.read.parquet(args.batch_path)
-        else:
-            batch = load_tables(spark, args.sf_dir, [args.table])[args.table]
-        meta = load_ann_meta(args.path)
-        # the flag default is None so srp can mean "use the sidecar's
-        # design threshold"; minhash keeps its historical 0.8
-        threshold = {
-            "minhash": 0.8 if args.threshold is None else args.threshold,
-            "simhash": args.max_hamming,
-        }.get(meta.get("kind"), args.threshold)
-        try:
+        return 2
+    # flag not given: each writer / the compaction keeps its own default
+    fpp = (
+        {"files_per_partition": args.files_per_partition}
+        if args.files_per_partition is not None else {}
+    )
+    spark = _session(args)
+    try:
+        if args.action == "append":
+            emb = load_tables(spark, args.sf_dir, [args.table])[args.table]
+            append_to_ann_index(emb, args.path)
+            meta = load_ann_meta(args.path)
+            # report the BATCH size, not a full-index count: a per-append
+            # O(index) scan would re-pay exactly the listing/footer tax
+            # the incremental path exists to avoid
+            print(
+                f"appended {emb.count()} rows to {meta['kind']} index "
+                f"at {args.path}"
+            )
+            return 0
+        if args.action == "dedup":
+            if args.batch_path:
+                batch = spark.read.parquet(args.batch_path)
+            else:
+                batch = load_tables(spark, args.sf_dir, [args.table])[args.table]
+            meta = load_ann_meta(args.path)
+            # the flag default is None so srp can mean "use the sidecar's
+            # design threshold"; minhash keeps its historical 0.8
+            threshold = {
+                "minhash": 0.8 if args.threshold is None else args.threshold,
+                "simhash": args.max_hamming,
+            }.get(meta.get("kind"), args.threshold)
             # count + top-20 share one run
             pairs = batch_against_index(
                 spark, batch, args.path, threshold=threshold,
                 caller="ann-index dedup",
             ).localCheckpoint(eager=False)
-        except ValueError as e:
-            # a non-near-dup index kind, batch columns missing, no
-            # threshold: a clean stderr+2, not a raw traceback
-            print(e, file=sys.stderr)
-            return 2
-        fam = family(meta)
-        name = fam.score_name
-        rows = pairs.orderBy(
-            F.col(name) if fam.at_most else F.desc(name)
-        ).limit(20).collect()
-        if threshold is None:
-            threshold = meta["design_threshold"]
-        print(
-            f"{pairs.count()} near-dup pairs {'<=' if fam.at_most else '>='} "
-            f"{fam.measure} {threshold} (top {len(rows)} shown)"
-        )
-        for r in rows:
-            print(f"  batch={r['batch_id']} corpus={r['corpus_id']} "
-                  f"{fam.measure}={r[name]:.4g}")
-        return 0
-    if args.action == "stats":
-        from .operators.dedup_index import FAMILIES, dedup_index_bucket_stats
-
-        meta = load_ann_meta(args.path)
-        if meta.get("kind") not in FAMILIES:
+            fam = family(meta)
+            name = fam.score_name
+            rows = pairs.orderBy(
+                F.col(name) if fam.at_most else F.desc(name)
+            ).limit(20).collect()
+            if threshold is None:
+                threshold = meta["design_threshold"]
             print(
-                f"ann-index stats: index at {args.path} is "
-                f"kind={meta.get('kind')!r} — bucket stats apply to "
-                "minhash/simhash/srp dedup indexes",
-                file=sys.stderr,
+                f"{pairs.count()} near-dup pairs {'<=' if fam.at_most else '>='} "
+                f"{fam.measure} {threshold} (top {len(rows)} shown)"
             )
-            return 2
-        stats = dedup_index_bucket_stats(spark, args.path)
-        print(_json.dumps(stats, indent=2))
-        mean = stats["mean_postings_per_key"] or 1.0
-        ratio = stats["max_postings_per_key"] / mean
-        if ratio > 100:
-            print(
-                f"WARNING: hottest band key holds {ratio:.0f}x the mean "
-                "postings — likely mass-duplicated boilerplate; run "
-                "exact/passage dedup before indexing (see "
-                "dedup_index_bucket_stats docstring)",
-                file=sys.stderr,
-            )
-        return 0
-    if args.action == "compact":
-        from .operators.dedup_index import FAMILIES, family
-        from .operators.similarity import compact_ann_index
-
-        kind = load_ann_meta(args.path).get("kind")
-        if args.regeometry and kind not in FAMILIES:
-            # same kinds compact_ann_index itself accepts for the flag
-            print(
-                f"ann-index compact --regeometry: index at {args.path} "
-                f"is kind={kind!r} — geometry refresh only applies to "
-                "minhash/simhash/srp dedup indexes (IVF seeds / LSH "
-                "planes define routing semantics, not just "
-                "partitioning)",
-                file=sys.stderr,
-            )
-            return 2
-        n_files = compact_ann_index(
-            spark, args.path,
-            # explicit-None-vs-default: flag not given keeps the
-            # deliberate compaction default (1); values < 1 were
-            # rejected before the session was built
-            files_per_partition=(
-                1 if args.files_per_partition is None
-                else args.files_per_partition
-            ),
-            regeometry=args.regeometry,
-        )
-        if args.regeometry:
-            meta = load_ann_meta(args.path)
-            # minhash dirs = bands × n_buckets; srp = tables ×
-            # n_buckets; simhash has no fan-out dimension
-            fan = family(meta).fanout_key
-            print(
-                f"compacted index at {args.path}: {n_files} data files, "
-                f"regeometry -> {f'{meta[fan]}x' if fan else ''}"
-                f"{meta['n_buckets']} bucket dirs"
-            )
-        else:
-            print(f"compacted index at {args.path}: {n_files} data files")
-        return 0
-    if args.action == "build":
-        if not args.kind:
-            print(
-                "ann-index build requires --kind "
-                "ivf|lsh|minhash|simhash|srp",
-                file=sys.stderr,
-            )
-            return 2
-        if args.kind == "srp":
-            from .operators.embedding_index import write_srp_index
-
-            emb = load_tables(spark, args.sf_dir, [args.table])[args.table]
-            missing = {args.id_col, args.vec_col} - set(emb.columns)
-            if missing:
+            for r in rows:
+                print(f"  batch={r['batch_id']} corpus={r['corpus_id']} "
+                      f"{fam.measure}={r[name]:.4g}")
+            return 0
+        if args.action == "stats":
+            stats = dedup_index_bucket_stats(spark, args.path)
+            print(_json.dumps(stats, indent=2))
+            mean = stats["mean_postings_per_key"] or 1.0
+            ratio = stats["max_postings_per_key"] / mean
+            if ratio > 100:
                 print(
-                    f"ann-index build --kind srp: table "
-                    f"{args.table!r} lacks column(s) {sorted(missing)} — "
-                    "set --id-col/--vec-col (and likely --table "
-                    "embeddings)",
+                    f"WARNING: hottest band key holds {ratio:.0f}x the mean "
+                    "postings — likely mass-duplicated boilerplate; run "
+                    "exact/passage dedup before indexing (see "
+                    "dedup_index_bucket_stats docstring)",
                     file=sys.stderr,
                 )
-                return 2
-            write_srp_index(
-                emb,
-                args.path,
-                id_col=args.id_col,
-                vec_col=args.vec_col,
-                dim=args.dim,
-                design_threshold=args.design_threshold,
-                n_planes=(
-                    "auto" if args.n_planes is None else args.n_planes
-                ),
-                n_tables=(
-                    "auto" if args.n_tables is None else args.n_tables
-                ),
-                seed=args.seed,
-                n_buckets=args.n_buckets if args.n_buckets else "auto",
-                files_per_partition=(
-                    1 if args.files_per_partition is None
-                    else args.files_per_partition
-                ),
+            return 0
+        if args.action == "compact":
+            n_files = compact_ann_index(
+                spark, args.path, regeometry=args.regeometry, **fpp
             )
+            if args.regeometry:
+                meta = load_ann_meta(args.path)
+                # minhash dirs = bands × n_buckets; srp = tables ×
+                # n_buckets; simhash has no fan-out dimension
+                fan = family(meta).fanout_key
+                print(
+                    f"compacted index at {args.path}: {n_files} data files, "
+                    f"regeometry -> {f'{meta[fan]}x' if fan else ''}"
+                    f"{meta['n_buckets']} bucket dirs"
+                )
+            else:
+                print(f"compacted index at {args.path}: {n_files} data files")
+            return 0
+        if args.action == "build":
+            emb = load_tables(spark, args.sf_dir, [args.table])[args.table]
+            common = {"id_col": args.id_col, **fpp}
+            n_buckets = args.n_buckets or "auto"
+            if args.kind == "ivf":
+                seeds = fixed_ivf_seeds(
+                    emb, n_seeds=args.n_seeds, id_col=args.id_col, vec_col=args.vec_col
+                )
+                write_ivf_index(emb, args.path, seeds, vec_col=args.vec_col, **common)
+            elif args.kind == "lsh":
+                write_lsh_index(
+                    emb,
+                    args.path,
+                    dim=args.dim,
+                    # flag default is None so the srp build can mean
+                    # "auto"; the lsh build keeps its historical 6
+                    n_planes=6 if args.n_planes is None else args.n_planes,
+                    seed=args.seed,
+                    vec_col=args.vec_col,
+                    **common,
+                )
+            elif args.kind == "minhash":
+                write_dedup_index(
+                    emb,
+                    args.path,
+                    text_col=args.text_col,
+                    n_hashes=args.n_hashes,
+                    bands=args.bands,
+                    shingle_k=args.shingle_k,
+                    n_buckets=n_buckets,
+                    **common,
+                )
+            elif args.kind == "simhash":
+                write_simhash_index(
+                    emb,
+                    args.path,
+                    text_col=args.text_col,
+                    n_chunks=args.n_chunks,
+                    chunks_per_key=args.chunks_per_key,
+                    n_buckets=n_buckets,
+                    **common,
+                )
+            else:
+                write_srp_index(
+                    emb,
+                    args.path,
+                    vec_col=args.vec_col,
+                    dim=args.dim,
+                    design_threshold=args.design_threshold,
+                    n_planes="auto" if args.n_planes is None else args.n_planes,
+                    n_tables="auto" if args.n_tables is None else args.n_tables,
+                    seed=args.seed,
+                    n_buckets=n_buckets,
+                    **common,
+                )
             meta = load_ann_meta(args.path)
-            from pyspark.sql import functions as _F
-
             idx = spark.read.parquet(active_data_root(args.path))
-            n = idx.where(_F.col("tbl").isNotNull()).count()
-            nv = idx.where(_F.col("tbl").isNull()).count()
-            print(
-                f"built srp embedding near-dup index at {args.path}: "
-                f"{n} posting rows + {nv} vector rows, "
-                f"{meta['n_tables']}x"
-                f"{meta['n_buckets']} bucket dirs ({meta['n_planes']} "
-                f"planes, design cosine {meta['design_threshold']})"
-            )
-            return 0
-        if args.kind == "simhash":
-            from .operators.dedup_index import write_simhash_index
-
-            emb = load_tables(spark, args.sf_dir, [args.table])[args.table]
-            missing = {args.id_col, args.text_col} - set(emb.columns)
-            if missing:
-                print(
-                    f"ann-index build --kind simhash: table "
-                    f"{args.table!r} lacks column(s) {sorted(missing)} — "
-                    "set --id-col/--text-col (and likely --table "
-                    "documents --id-col doc_id)",
-                    file=sys.stderr,
+            n = idx.count()
+            if args.kind == "srp":
+                nv = idx.where(F.col("tbl").isNull()).count()
+                shape = (
+                    f"embedding near-dup index at {args.path}: {n - nv} "
+                    f"posting rows + {nv} vector rows, {meta['n_tables']}x"
+                    f"{meta['n_buckets']} bucket dirs ({meta['n_planes']} "
+                    f"planes, design cosine {meta['design_threshold']})"
                 )
-                return 2
-            write_simhash_index(
-                emb,
-                args.path,
-                id_col=args.id_col,
-                text_col=args.text_col,
-                n_chunks=args.n_chunks,
-                chunks_per_key=args.chunks_per_key,
-                n_buckets=args.n_buckets if args.n_buckets else "auto",
-                files_per_partition=(
-                    1 if args.files_per_partition is None
-                    else args.files_per_partition
-                ),
-            )
-            meta = load_ann_meta(args.path)
-            n = spark.read.parquet(active_data_root(args.path)).count()
-            print(
-                f"built simhash dedup index at {args.path}: {n} posting "
-                f"rows, {meta['n_buckets']} bucket dirs "
-                f"({meta['n_chunks']} chunks x {meta['chunks_per_key']})"
-            )
-            return 0
-        emb = load_tables(spark, args.sf_dir, [args.table])[args.table]
-        if args.kind == "minhash":
-            from .operators.dedup_index import write_dedup_index
-
-            missing = {args.id_col, args.text_col} - set(emb.columns)
-            if missing:
-                print(
-                    f"ann-index build --kind minhash: table "
-                    f"{args.table!r} lacks column(s) {sorted(missing)} — "
-                    "set --id-col/--text-col (and likely --table "
-                    "documents --id-col doc_id)",
-                    file=sys.stderr,
+            elif args.kind == "simhash":
+                shape = (
+                    f"dedup index at {args.path}: {n} posting rows, "
+                    f"{meta['n_buckets']} bucket dirs ({meta['n_chunks']} "
+                    f"chunks x {meta['chunks_per_key']})"
                 )
-                return 2
-            write_dedup_index(
-                emb,
-                args.path,
-                id_col=args.id_col,
-                text_col=args.text_col,
-                n_hashes=args.n_hashes,
-                bands=args.bands,
-                shingle_k=args.shingle_k,
-                n_buckets=args.n_buckets if args.n_buckets else "auto",
-                # explicit-None-vs-default: flag not given keeps the
-                # writer's deliberate compaction default (1); values
-                # < 1 were rejected before the session was built
-                files_per_partition=(
-                    1 if args.files_per_partition is None
-                    else args.files_per_partition
-                ),
-            )
-            meta = load_ann_meta(args.path)
-            n = spark.read.parquet(active_data_root(args.path)).count()
-            print(
-                f"built minhash dedup index at {args.path}: {n} band rows, "
-                f"{meta['bands']}x{meta['n_buckets']} bucket dirs"
-            )
+            elif args.kind == "minhash":
+                shape = (
+                    f"dedup index at {args.path}: {n} band rows, "
+                    f"{meta['bands']}x{meta['n_buckets']} bucket dirs"
+                )
+            elif args.kind == "ivf":
+                shape = f"index at {args.path}: {n} vectors, {len(meta['seeds'])} cells"
+            else:
+                shape = (
+                    f"index at {args.path}: {n} vectors, "
+                    f"{1 << meta['n_planes']} buckets ({meta['n_planes']} planes)"
+                )
+            print(f"built {args.kind} {shape}")
             return 0
-        if args.kind == "ivf":
-            seeds = fixed_ivf_seeds(
-                emb, n_seeds=args.n_seeds, id_col=args.id_col, vec_col=args.vec_col
-            )
-            write_ivf_index(
-                emb,
-                args.path,
-                seeds,
-                id_col=args.id_col,
-                vec_col=args.vec_col,
-                files_per_partition=args.files_per_partition,
-            )
+        if args.query_vec:
+            qvec = [float(v) for v in _json.loads(args.query_vec)]
         else:
-            write_lsh_index(
-                emb,
-                args.path,
-                dim=args.dim,
-                # flag default is None so the srp build can mean "auto";
-                # the lsh writer keeps its historical default of 6
-                n_planes=6 if args.n_planes is None else args.n_planes,
-                seed=args.seed,
-                id_col=args.id_col,
-                vec_col=args.vec_col,
-                files_per_partition=args.files_per_partition,
+            meta = load_ann_meta(args.path)
+            # the probe's own kind check, before the lookup reads the
+            # sidecar's vec_col (a near-dup sidecar may have none)
+            _require_kind(meta, tuple(_KNN_PART), "ann-index probe")
+            emb = load_tables(spark, args.sf_dir, [args.table])[args.table]
+            row = (
+                emb.where(F.col(meta["id_col"]) == args.query_id)
+                .select(meta["vec_col"])
+                .first()
             )
-        meta = load_ann_meta(args.path)
-        n = spark.read.parquet(active_data_root(args.path)).count()
-        print(
-            f"built {meta['kind']} index at {args.path}: {n} vectors, "
-            + (
-                f"{len(meta['seeds'])} cells"
-                if meta["kind"] == "ivf"
-                else f"{1 << meta['n_planes']} buckets ({meta['n_planes']} planes)"
-            )
-        )
-        return 0
-    meta = load_ann_meta(args.path)
-    if meta.get("kind") not in ("ivf", "lsh"):
-        # the dedup-family kinds hold postings, not a kNN corpus — a
-        # clean stderr+2 instead of _require_kind's raw traceback from
-        # the knn probe (or a KeyError on the missing vec_col)
-        print(
-            f"ann-index probe: index at {args.path} is "
-            f"kind={meta.get('kind')!r} — kNN probes need an ivf or "
-            "lsh index; use `ann-index dedup` for "
-            "minhash/simhash/srp near-dup indexes",
-            file=sys.stderr,
-        )
-        return 2
-    if args.query_vec:
-        qvec = [float(v) for v in _json.loads(args.query_vec)]
-    else:
-        emb = load_tables(spark, args.sf_dir, [args.table])[args.table]
-        row = (
-            emb.where(F.col(meta["id_col"]) == args.query_id)
-            .select(meta["vec_col"])
-            .first()
-        )
-        if row is None:
-            print(f"no row with {meta['id_col']}={args.query_id}", file=sys.stderr)
-            return 2
-        qvec = [float(v) for v in row[0]]
-    if meta["kind"] == "ivf":
-        topk = knn_ivf_partitioned(
+            if row is None:
+                print(f"no row with {meta['id_col']}={args.query_id}", file=sys.stderr)
+                return 2
+            qvec = [float(v) for v in row[0]]
+        knn_index_probe(
             spark, args.path, qvec, k=args.k, n_probe=args.n_probe
-        )
-    else:
-        topk = knn_lsh_partitioned(
-            spark, args.path, qvec, k=args.k, n_probe_buckets=args.n_probe
-        )
-    topk.show(args.k, truncate=False)
-    return 0
+        ).show(args.k, truncate=False)
+        return 0
+    except ValueError as e:
+        # a wrong index kind, missing input columns, a flag the kind
+        # does not take: a clean stderr+2, not a raw traceback
+        print(e, file=sys.stderr)
+        return 2
 
 
 def _cmd_dashboard(args: argparse.Namespace) -> int:

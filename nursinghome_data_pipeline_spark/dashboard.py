@@ -27,7 +27,6 @@ and the accessibility fallback).
 from __future__ import annotations
 
 import html as _html
-import json
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -480,7 +479,3 @@ def write_html(html: str, path: str) -> None:
     with open(path, "w", encoding="utf-8") as fh:
         fh.write(html)
 
-
-def payload_json(payload: dict[str, Any]) -> str:
-    """Machine-readable sidecar (the chart data, exactly as embedded)."""
-    return json.dumps(payload, indent=2, sort_keys=True, default=str)

@@ -198,14 +198,15 @@ def _require_unreserved(reserved, caller: str, **cols: str) -> None:
 
 
 def _require_columns(df: DataFrame, meta: dict, what: str) -> None:
-    """A batch lacking the sidecar's id/payload columns fails with the
-    columns NAMED, not a raw AnalysisException from the projection."""
+    """An input (build corpus, append or probe batch) lacking the
+    index's id/payload columns fails with the columns NAMED, not a raw
+    AnalysisException from the projection."""
     pk = family(meta).payload_key
     missing = {meta["id_col"], meta[pk]} - set(df.columns)
     if missing:
         raise ValueError(
-            f"{what} {meta['kind']} index: batch lacks column(s) "
-            f"{sorted(missing)} — the sidecar expects "
+            f"{what} {meta['kind']} index: input lacks column(s) "
+            f"{sorted(missing)} — the index uses "
             f"id_col={meta['id_col']!r}, {pk}={meta[pk]!r}"
         )
 
@@ -598,6 +599,7 @@ def write_dedup_index(
         "bands": bands,
         "shingle_k": shingle_k,
     }
+    _require_columns(docs, meta, "build")
     if n_buckets == "auto":
         n_buckets = MINHASH.auto_buckets(
             n_docs if n_docs is not None else docs.count(), meta
@@ -623,7 +625,7 @@ def batch_against_index(
     bucket set (:func:`pin_rows`) and probe."""
     meta = load_ann_meta(path)
     if kind is not None:
-        _require_kind(meta, kind, caller)
+        _require_kind(meta, (kind,), caller)
     fam = family(meta, caller)
     _require_columns(batch, meta, "probe")
     threshold = fam.check_threshold(meta, threshold, caller)
@@ -875,6 +877,7 @@ def write_simhash_index(
         "n_chunks": n_chunks,
         "chunks_per_key": chunks_per_key,
     }
+    _require_columns(docs, meta, "build")
     if n_buckets == "auto":
         n_buckets = SIMHASH.auto_buckets(
             n_docs if n_docs is not None else docs.count(), meta

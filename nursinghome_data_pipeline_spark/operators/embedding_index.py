@@ -78,6 +78,7 @@ from ..functions.vectors import l2_norm_col
 from .dedup_index import (
     DELTA_PB,
     Family,
+    _require_columns,
     _require_unreserved,
     batch_against_index,
     side_col,
@@ -266,6 +267,9 @@ def write_srp_index(
     # cost a full corpus scan to discover
     _require_unreserved(
         _RESERVED_COLS, "write_srp_index", id_col=id_col, vec_col=vec_col
+    )
+    _require_columns(
+        df, {"kind": "srp", "id_col": id_col, "vec_col": vec_col}, "build"
     )
     if not -1.0 <= design_threshold <= 1.0:
         raise ValueError(

@@ -305,30 +305,6 @@ def encode_wav(
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def encode_flac_streaminfo(
-    channels: int, sample_rate: int, total_samples: int, *, bits: int = 16
-) -> bytes:
-    """Spec-valid FLAC STREAMINFO header (container metadata only — no
-    encoded frames; FLAC audio encoding needs a codec library). Enough
-    for any FLAC reader to report stream parameters."""
-    packed = (
-        (sample_rate << 44)
-        | ((channels - 1) << 41)
-        | ((bits - 1) << 36)
-        | (total_samples & ((1 << 36) - 1))
-    )
-    body = (
-        (0).to_bytes(2, "big")  # min block size
-        + (0).to_bytes(2, "big")  # max block size
-        + (0).to_bytes(3, "big")  # min frame size
-        + (0).to_bytes(3, "big")  # max frame size
-        + packed.to_bytes(8, "big")
-        + b"\x00" * 16  # md5 of raw samples (unset)
-    )
-    # 0x80: last-metadata-block flag; type 0 = STREAMINFO
-    return b"fLaC" + bytes([0x80]) + len(body).to_bytes(3, "big") + body
-
-
 def audio_metadata(df: DataFrame) -> DataFrame:
     """Distributed REAL audio header decode: (media_id, format,
     channels, sample_rate, bits_per_sample, duration_ms) parsed from

@@ -646,23 +646,23 @@ _KNN_PART = {"ivf": "cell", "lsh": "bucket"}
 #: only for schemes whose connector genuinely isn't configured.
 
 
-def _require_kind(meta: dict, expected: str, probe: str) -> None:
+def _require_kind(meta: dict, kinds: tuple[str, ...], probe: str) -> None:
     """A probe pointed at the wrong index kind must fail with the
-    mismatch spelled out, not a bare KeyError from a missing
-    seeds/dim field."""
+    mismatch spelled out (and the probe that does serve the index
+    named), not a bare KeyError from a missing seeds/dim field."""
     kind = meta.get("kind")
-    if kind != expected:
-        other = {
-            "ivf": "knn_ivf_partitioned",
-            "lsh": "knn_lsh_partitioned",
-            "minhash": "dedup_index.dedup_batch_against_index",
-            "simhash": "dedup_index.simhash_batch_against_index",
-            "srp": "embedding_index.embedding_batch_against_index",
-        }
-        hint = other.get(kind)
+    if kind not in kinds:
+        near_dup = "dedup_index.batch_against_index (CLI: `ann-index dedup`)"
+        hint = {
+            "ivf": "knn_index_probe (CLI: `ann-index probe`)",
+            "lsh": "knn_index_probe (CLI: `ann-index probe`)",
+            "minhash": near_dup,
+            "simhash": near_dup,
+            "srp": near_dup,
+        }.get(kind)
         raise ValueError(
-            f"{probe} expects a {expected!r} index but the sidecar "
-            f"says kind={kind!r}"
+            f"{probe} expects a {' or '.join(map(repr, kinds))} index but "
+            f"the sidecar says kind={kind!r}"
             + (f" — use {hint} for this index" if hint else "")
         )
 
@@ -920,8 +920,8 @@ def write_ivf_index(
     ``files_per_partition`` to bound files per cell directory (one
     build-time shuffle) when small-file count matters more than write
     parallelism. Index parameters (seeds, columns) persist in a
-    ``_ann_meta.json`` sidecar so :func:`knn_ivf_partitioned` probes
-    need only the path."""
+    ``_ann_meta.json`` sidecar so :func:`knn_index_probe` needs only
+    the path."""
     fs.check_fs(path, "write_ivf_index")
     meta = {
         "kind": "ivf",
@@ -1264,45 +1264,50 @@ def compact_ann_index(
     return len(fs.data_file_stats(new_dir))
 
 
-def knn_ivf_partitioned(
-    spark,
-    path: str,
-    query_vec,
-    seeds: list[tuple[int, list[float]]] | None = None,
-    *,
-    k: int = 10,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+def knn_index_probe(
+    spark, path: str, query_vec, *, k: int = 10, n_probe: int = 2
 ) -> DataFrame:
-    """Top-k over a :func:`write_ivf_index` layout — scan-pruned probes.
+    """Top-k over an at-rest kNN index (:func:`write_ivf_index` or
+    :func:`write_lsh_index`) — scan-pruned probes.
 
-    Identical results to :func:`knn_ivf_fixed` on the same seeds
-    (pinned by test): the probe pick, cell routing, and exact cosine
-    re-rank are the same code; only WHERE the cell filter applies
-    changes — here it lands in the scan's ``PartitionFilters`` (plan-
-    gated), so non-probed cells contribute zero I/O. With
-    ``seeds=None`` the quantizer (and column names) load from the
-    index's ``_ann_meta.json`` sidecar — the probe is self-describing
-    from the path alone."""
-    if seeds is None:
-        meta = load_ann_meta(path)
-        _require_kind(meta, "ivf", "knn_ivf_partitioned")
+    Kind and geometry come from the index's ``_ann_meta.json`` sidecar
+    and nowhere else, so the probe always reads the index with the
+    seeds/planes and columns it was built with. ``n_probe`` is the
+    number of probed cells (IVF, :func:`ivf_probe_cells`) or buckets
+    (LSH multi-probe, :func:`lsh_probe_buckets`). Only the probed
+    partition directories are listed (:func:`read_matched_partitions`)
+    and the partition filter lands in the scan's ``PartitionFilters``
+    (plan-gated), so non-probed partitions contribute zero I/O; the
+    exact cosine re-rank follows. Identical rows to the in-memory
+    :func:`knn_ivf_fixed` / :func:`knn_lsh` on the same geometry
+    (pinned by test). Columns: ``(id_col, cell|bucket as bigint,
+    cosine_sim)``. A near-dup index (minhash/simhash/srp) raises a
+    named ``ValueError``: those are probed by
+    ``dedup_index.batch_against_index``."""
+    meta, droot = _load_active(path)
+    _require_kind(meta, tuple(_KNN_PART), "knn_index_probe")
+    if meta["kind"] == "ivf":
         seeds = [(int(s), vec) for s, vec in meta["seeds"]]
-        id_col = meta.get("id_col", id_col)
-        vec_col = meta.get("vec_col", vec_col)
-    probes = ivf_probe_cells(seeds, query_vec, n_probe=n_probe)
-    droot = active_data_root(path)
-    rel = read_matched_partitions(spark, droot, "cell", probes)
+        probes = ivf_probe_cells(seeds, query_vec, n_probe=n_probe)
+    else:
+        probes = lsh_probe_buckets(
+            query_vec,
+            dim=int(meta["dim"]),
+            n_planes=int(meta["n_planes"]),
+            seed=int(meta["seed"]),
+            n_probe_buckets=n_probe,
+        )
+    part, id_col = _KNN_PART[meta["kind"]], meta["id_col"]
+    rel = read_matched_partitions(spark, droot, part, probes)
     if rel is None:
         rel = spark.read.parquet(droot)
     return (
         rel
-        .where(F.col("cell").isin(probes))
+        .where(F.col(part).isin(probes))
         .select(
             id_col,
-            F.col("cell").cast("bigint").alias("cell"),
-            _cosine_lit(F.col(vec_col), query_vec).alias("cosine_sim"),
+            F.col(part).cast("bigint").alias(part),
+            _cosine_lit(F.col(meta["vec_col"]), query_vec).alias("cosine_sim"),
         )
         .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
         .limit(k)
@@ -1523,8 +1528,7 @@ def write_lsh_index(
     ``files_per_partition`` to bound files per bucket directory — one
     build-time shuffle — when file count matters more than write
     parallelism). Plane parameters persist in a ``_ann_meta.json``
-    sidecar so :func:`knn_lsh_partitioned` probes need only the
-    path."""
+    sidecar so :func:`knn_index_probe` needs only the path."""
     fs.check_fs(path, "write_lsh_index")
     meta = {
         "kind": "lsh",
@@ -1535,62 +1539,6 @@ def write_lsh_index(
         "vec_col": vec_col,
     }
     _commit_index(_route_knn(df, meta), path, meta, files_per_partition)
-
-
-def knn_lsh_partitioned(
-    spark,
-    path: str,
-    query_vec,
-    *,
-    k: int = 10,
-    dim: int | None = None,
-    n_planes: int = 8,
-    seed: int = 42,
-    n_probe_buckets: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k over a :func:`write_lsh_index` layout — scan-pruned probes.
-
-    Identical results to :func:`knn_lsh` on the same planes/seed
-    (pinned by test): the probe picks (:func:`lsh_probe_buckets`) and
-    the exact cosine re-rank are the same code; only WHERE the bucket
-    filter applies changes — here it lands in the scan's
-    ``PartitionFilters`` (plan-gated), so non-probed buckets
-    contribute zero I/O. Multi-probe raises recall at a directly
-    visible byte cost: each extra probed bucket is one more
-    directory read. With ``dim=None`` the hash geometry (and column
-    names) load from the index's ``_ann_meta.json`` sidecar — the
-    probe is self-describing from the path alone."""
-    if dim is None:
-        meta = load_ann_meta(path)
-        _require_kind(meta, "lsh", "knn_lsh_partitioned")
-        dim = int(meta["dim"])
-        n_planes = int(meta["n_planes"])
-        seed = int(meta["seed"])
-        id_col = meta.get("id_col", id_col)
-        vec_col = meta.get("vec_col", vec_col)
-    probes = lsh_probe_buckets(
-        query_vec,
-        dim=dim,
-        n_planes=n_planes,
-        seed=seed,
-        n_probe_buckets=n_probe_buckets,
-    )
-    droot = active_data_root(path)
-    rel = read_matched_partitions(spark, droot, "bucket", probes)
-    if rel is None:
-        rel = spark.read.parquet(droot)
-    return (
-        rel
-        .where(F.col("bucket").isin(probes))
-        .select(
-            id_col,
-            _cosine_lit(F.col(vec_col), query_vec).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
 
 
 #: Moment quantization for whitening: floor(v * 2^20) per value keeps

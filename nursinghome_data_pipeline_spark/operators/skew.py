@@ -533,9 +533,3 @@ def bucketed_global_order(
         )
     )
 
-
-def has_exchange(df: DataFrame) -> bool:
-    """True if the executed plan contains a shuffle Exchange (test/
-    diagnostics helper for asserting co-located execution)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "Exchange" in plan

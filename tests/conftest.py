@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 from contextlib import contextmanager
@@ -34,6 +35,7 @@ def spark():
     spark = build_session("tests", driver_memory="8g", extra=extra)
     yield spark
     spark.stop()
+    shutil.rmtree(warehouse, ignore_errors=True)
 
 
 @pytest.fixture(scope="session")

@@ -285,12 +285,12 @@ def test_lsh_multi_probe_recall_monotone(spark, sf_dir):
 
 
 def test_lsh_partitioned_index_matches_in_memory_plan(spark, sf_dir, tmp_path):
-    """write_lsh_index + knn_lsh_partitioned must return exactly the
+    """write_lsh_index + knn_index_probe must return exactly the
     in-memory knn_lsh results for the same planes/probes — routing,
     probe picks, and re-rank are shared code; only the filter's
     placement moves."""
     from nursinghome_data_pipeline_spark.operators.similarity import (
-        knn_lsh_partitioned,
+        knn_index_probe,
         write_lsh_index,
     )
 
@@ -305,9 +305,7 @@ def test_lsh_partitioned_index_matches_in_memory_plan(spark, sf_dir, tmp_path):
         mem = knn_lsh(
             emb, query, k=6, dim=64, n_planes=5, n_probe_buckets=nb
         ).collect()
-        disk = knn_lsh_partitioned(
-            spark, path, qvec, k=6, dim=64, n_planes=5, n_probe_buckets=nb
-        ).collect()
+        disk = knn_index_probe(spark, path, qvec, k=6, n_probe=nb).collect()
         assert [(r.vec_id, r.cosine_sim) for r in disk] == [
             (r.vec_id, r.cosine_sim) for r in mem
         ]
@@ -317,7 +315,7 @@ def test_lsh_partitioned_index_prunes_at_file_level(spark, sf_dir, tmp_path):
     import re
 
     from nursinghome_data_pipeline_spark.operators.similarity import (
-        knn_lsh_partitioned,
+        knn_index_probe,
         lsh_probe_buckets,
         write_lsh_index,
     )
@@ -327,9 +325,7 @@ def test_lsh_partitioned_index_prunes_at_file_level(spark, sf_dir, tmp_path):
     qvec = emb.where(F.col("vec_id") == 7).first()["embedding"]
     path = str(tmp_path / "lsh_index")
     write_lsh_index(emb, path, dim=64, n_planes=5)
-    topk = knn_lsh_partitioned(
-        spark, path, qvec, k=6, dim=64, n_planes=5, n_probe_buckets=2
-    )
+    topk = knn_index_probe(spark, path, qvec, k=6, n_probe=2)
     plan = formatted_plan(topk)
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert pf and "bucket" in pf[0], plan
@@ -581,8 +577,7 @@ def test_append_to_ann_index_routes_with_sidecar_geometry(spark, sf_dir, tmp_pat
     from nursinghome_data_pipeline_spark.operators.similarity import (
         append_to_ann_index,
         fixed_ivf_seeds,
-        knn_ivf_partitioned,
-        knn_lsh_partitioned,
+        knn_index_probe,
         write_ivf_index,
         write_lsh_index,
     )
@@ -597,12 +592,8 @@ def test_append_to_ann_index_routes_with_sidecar_geometry(spark, sf_dir, tmp_pat
     append_to_ann_index(new, lsh_inc)
     lsh_full = str(tmp_path / "lsh_full")
     write_lsh_index(emb, lsh_full, dim=64, n_planes=5)
-    got = knn_lsh_partitioned(
-        spark, lsh_inc, qvec, k=6, n_probe_buckets=3
-    ).collect()
-    want = knn_lsh_partitioned(
-        spark, lsh_full, qvec, k=6, n_probe_buckets=3
-    ).collect()
+    got = knn_index_probe(spark, lsh_inc, qvec, k=6, n_probe=3).collect()
+    want = knn_index_probe(spark, lsh_full, qvec, k=6, n_probe=3).collect()
     assert [(r.vec_id, r.cosine_sim) for r in got] == [
         (r.vec_id, r.cosine_sim) for r in want
     ]
@@ -613,7 +604,7 @@ def test_append_to_ann_index_routes_with_sidecar_geometry(spark, sf_dir, tmp_pat
     seeds = fixed_ivf_seeds(old, n_seeds=4)
     write_ivf_index(old, ivf_inc, seeds)
     append_to_ann_index(new, ivf_inc)
-    top = knn_ivf_partitioned(spark, ivf_inc, qvec, k=5, n_probe=4).collect()
+    top = knn_index_probe(spark, ivf_inc, qvec, k=5, n_probe=4).collect()
     assert top[0].vec_id == 7 and top[0].cosine_sim == pytest.approx(1.0)
     # count integrity: append added rows, replaced nothing
     assert spark.read.parquet(active_data_root(ivf_inc)).count() == emb.count()
@@ -630,7 +621,7 @@ def test_compact_ann_index_bounds_files_preserving_results(spark, sf_dir, tmp_pa
     from nursinghome_data_pipeline_spark.operators.similarity import (
         append_to_ann_index,
         compact_ann_index,
-        knn_lsh_partitioned,
+        knn_index_probe,
         load_ann_meta,
         write_lsh_index,
     )
@@ -642,9 +633,7 @@ def test_compact_ann_index_bounds_files_preserving_results(spark, sf_dir, tmp_pa
     append_to_ann_index(emb.where(F.col("vec_id") % 3 == 2), path)
     meta_before = load_ann_meta(path)
     qvec = [float(v) for v in emb.where(F.col("vec_id") == 7).first()["embedding"]]
-    before = knn_lsh_partitioned(
-        spark, path, qvec, k=6, n_probe_buckets=3
-    ).collect()
+    before = knn_index_probe(spark, path, qvec, k=6, n_probe=3).collect()
     frag = max(
         len([f for f in _os.listdir(d) if f.endswith(".parquet")])
         for d in _glob.glob(_os.path.join(active_data_root(path), "bucket=*"))
@@ -659,9 +648,7 @@ def test_compact_ann_index_bounds_files_preserving_results(spark, sf_dir, tmp_pa
         files = [f for f in _os.listdir(d) if f.endswith(".parquet")]
         assert len(files) <= 1, (d, files)
     assert load_ann_meta(path) == meta_before  # sidecar survives the flip
-    after = knn_lsh_partitioned(
-        spark, path, qvec, k=6, n_probe_buckets=3
-    ).collect()
+    after = knn_index_probe(spark, path, qvec, k=6, n_probe=3).collect()
     assert [(r.vec_id, r.cosine_sim) for r in after] == [
         (r.vec_id, r.cosine_sim) for r in before
     ]

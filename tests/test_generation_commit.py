@@ -103,12 +103,12 @@ def vectors(spark, sf_dir):
 
 def _topk(spark, path, qvec):
     from nursinghome_data_pipeline_spark.operators.similarity import (
-        knn_ivf_partitioned,
+        knn_index_probe,
     )
 
     return [
         (r.vec_id, r.cosine_sim)
-        for r in knn_ivf_partitioned(spark, path, qvec, k=6, n_probe=2).collect()
+        for r in knn_index_probe(spark, path, qvec, k=6, n_probe=2).collect()
     ]
 
 

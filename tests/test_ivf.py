@@ -71,13 +71,13 @@ def test_fixed_ivf_plan_is_map_only_scan(spark, sf_dir):
 
 
 def test_partitioned_index_matches_in_memory_plan(spark, sf_dir, tmp_path):
-    """write_ivf_index + knn_ivf_partitioned must return exactly the
+    """write_ivf_index + knn_index_probe must return exactly the
     rows/scores of knn_ivf_fixed on the same seeds and query — only
     the storage layout differs."""
     from nursinghome_data_pipeline_spark.operators.similarity import (
         fixed_ivf_seeds,
         knn_ivf_fixed,
-        knn_ivf_partitioned,
+        knn_index_probe,
         write_ivf_index,
     )
 
@@ -88,9 +88,7 @@ def test_partitioned_index_matches_in_memory_plan(spark, sf_dir, tmp_path):
     path = str(tmp_path / "ivf_index")
     write_ivf_index(cands, path, seeds)
     mem = knn_ivf_fixed(cands, qvec, seeds, k=10, n_probe=2).collect()
-    disk = knn_ivf_partitioned(
-        spark, path, qvec, seeds, k=10, n_probe=2
-    ).collect()
+    disk = knn_index_probe(spark, path, qvec, k=10, n_probe=2).collect()
     assert [(r.vec_id, r.cell) for r in mem] == [
         (r.vec_id, r.cell) for r in disk
     ]
@@ -107,7 +105,7 @@ def test_partitioned_index_prunes_at_file_level(spark, sf_dir, tmp_path):
     from nursinghome_data_pipeline_spark.operators.similarity import (
         fixed_ivf_seeds,
         ivf_probe_cells,
-        knn_ivf_partitioned,
+        knn_index_probe,
         write_ivf_index,
     )
     from nursinghome_data_pipeline_spark.plans import formatted_plan
@@ -118,7 +116,7 @@ def test_partitioned_index_prunes_at_file_level(spark, sf_dir, tmp_path):
     qvec = emb.where(F.col("vec_id") == 0).first()["embedding"]
     path = str(tmp_path / "ivf_index")
     write_ivf_index(cands, path, seeds)
-    topk = knn_ivf_partitioned(spark, path, qvec, seeds, k=10, n_probe=2)
+    topk = knn_index_probe(spark, path, qvec, k=10, n_probe=2)
     plan = formatted_plan(topk)
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert pf and "cell" in pf[0], plan
@@ -137,33 +135,6 @@ def test_partitioned_index_prunes_at_file_level(spark, sf_dir, tmp_path):
     assert touched and touched <= probes, (touched, probes)
 
 
-def test_sidecar_probe_equals_explicit_seeds_probe(spark, sf_dir, tmp_path):
-    """Self-describing probes (seeds/geometry loaded from the index's
-    _ann_meta.json sidecar) must return bit-identical rows to probes
-    given the same parameters explicitly — the sidecar IS the
-    parameters, not an approximation of them."""
-    from nursinghome_data_pipeline_spark.operators.similarity import (
-        fixed_ivf_seeds,
-        knn_ivf_partitioned,
-        load_ann_meta,
-        write_ivf_index,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    seeds = fixed_ivf_seeds(emb, n_seeds=4)
-    qvec = [float(v) for v in emb.where(F.col("vec_id") == 0).first()["embedding"]]
-    path = str(tmp_path / "ivf_meta_idx")
-    write_ivf_index(emb, path, seeds)
-    assert [(int(s), v) for s, v in load_ann_meta(path)["seeds"]] == seeds
-    explicit = knn_ivf_partitioned(
-        spark, path, qvec, seeds, k=8, n_probe=2
-    ).collect()
-    from_meta = knn_ivf_partitioned(spark, path, qvec, k=8, n_probe=2).collect()
-    assert [(r.vec_id, r.cosine_sim) for r in from_meta] == [
-        (r.vec_id, r.cosine_sim) for r in explicit
-    ]
-
-
 def test_ivf_append_equals_full_rebuild_on_same_seeds(spark, sf_dir, tmp_path):
     """IVF twin of the LSH append pin: building on half the corpus
     then appending the rest must return bit-identical top-k to a full
@@ -172,7 +143,7 @@ def test_ivf_append_equals_full_rebuild_on_same_seeds(spark, sf_dir, tmp_path):
     from nursinghome_data_pipeline_spark.operators.similarity import (
         append_to_ann_index,
         fixed_ivf_seeds,
-        knn_ivf_partitioned,
+        knn_index_probe,
         write_ivf_index,
     )
 
@@ -184,8 +155,8 @@ def test_ivf_append_equals_full_rebuild_on_same_seeds(spark, sf_dir, tmp_path):
     append_to_ann_index(emb.where(F.col("vec_id") % 2 == 1), inc)
     full = str(tmp_path / "ivf_full2")
     write_ivf_index(emb, full, seeds)
-    got = knn_ivf_partitioned(spark, inc, qvec, k=6, n_probe=3).collect()
-    want = knn_ivf_partitioned(spark, full, qvec, k=6, n_probe=3).collect()
+    got = knn_index_probe(spark, inc, qvec, k=6, n_probe=3).collect()
+    want = knn_index_probe(spark, full, qvec, k=6, n_probe=3).collect()
     assert [(r.vec_id, r.cosine_sim) for r in got] == [
         (r.vec_id, r.cosine_sim) for r in want
     ]
@@ -200,7 +171,7 @@ def test_ann_lifecycle_churn_stays_bit_equal_to_rebuild(spark, sf_dir, tmp_path)
         append_to_ann_index,
         compact_ann_index,
         fixed_ivf_seeds,
-        knn_ivf_partitioned,
+        knn_index_probe,
         load_ann_meta,
         write_ivf_index,
     )
@@ -216,13 +187,13 @@ def test_ann_lifecycle_churn_stays_bit_equal_to_rebuild(spark, sf_dir, tmp_path)
         write_ivf_index(emb.where(pred), ref, seeds)
         return [
             (r.vec_id, r.cosine_sim)
-            for r in knn_ivf_partitioned(spark, ref, qvec, k=6, n_probe=3).collect()
+            for r in knn_index_probe(spark, ref, qvec, k=6, n_probe=3).collect()
         ]
 
     def live_topk():
         return [
             (r.vec_id, r.cosine_sim)
-            for r in knn_ivf_partitioned(spark, live, qvec, k=6, n_probe=3).collect()
+            for r in knn_index_probe(spark, live, qvec, k=6, n_probe=3).collect()
         ]
 
     # step 1: first append batch
@@ -255,8 +226,8 @@ def test_ann_lifecycle_churn_stays_bit_equal_to_rebuild(spark, sf_dir, tmp_path)
         want,
         seeds,
     )
-    got = knn_ivf_partitioned(spark, live, qvec, k=6, n_probe=3).collect()
-    exp = knn_ivf_partitioned(spark, want, qvec, k=6, n_probe=3).collect()
+    got = knn_index_probe(spark, live, qvec, k=6, n_probe=3).collect()
+    exp = knn_index_probe(spark, want, qvec, k=6, n_probe=3).collect()
     assert [(r.vec_id, r.cosine_sim) for r in got] == [
         (r.vec_id, r.cosine_sim) for r in exp
     ]
@@ -371,28 +342,25 @@ def test_compact_aborts_swap_if_files_changed_mid_rewrite(
 
 
 def test_probe_kind_mismatch_raises_named_error(spark, sf_dir, tmp_path):
-    """Sidecar-driven probes must validate meta['kind'] (ADVICE r5):
-    the wrong probe on an index should name both kinds, not KeyError."""
+    """Sidecar-driven kNN probes must validate meta['kind'] (ADVICE r5):
+    a near-dup index holds postings, not a kNN corpus, so the probe
+    names the kind and the probe that serves it, not a KeyError."""
     import pytest as _pytest
 
+    from nursinghome_data_pipeline_spark.operators.dedup_index import (
+        write_dedup_index,
+    )
     from nursinghome_data_pipeline_spark.operators.similarity import (
-        fixed_ivf_seeds,
-        knn_ivf_partitioned,
-        knn_lsh_partitioned,
-        write_ivf_index,
-        write_lsh_index,
+        knn_index_probe,
     )
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qvec = [float(v) for v in emb.first()["embedding"]]
-    ivf_path = str(tmp_path / "ivf_kind")
-    write_ivf_index(emb, ivf_path, fixed_ivf_seeds(emb, n_seeds=4))
-    lsh_path = str(tmp_path / "lsh_kind")
-    write_lsh_index(emb, lsh_path, dim=64, n_planes=4)
-    with _pytest.raises(ValueError, match="knn_lsh_partitioned"):
-        knn_ivf_partitioned(spark, lsh_path, qvec)
-    with _pytest.raises(ValueError, match="knn_ivf_partitioned"):
-        knn_lsh_partitioned(spark, ivf_path, qvec)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    path = str(tmp_path / "minhash_kind")
+    write_dedup_index(docs.select("doc_id", "text"), path, n_buckets=4)
+    with _pytest.raises(
+        ValueError, match=r"kind='minhash'.*batch_against_index.*ann-index dedup"
+    ):
+        knn_index_probe(spark, path, [0.0] * 64)
 
 
 def test_unconfigured_scheme_fails_fast_before_any_write(spark):
@@ -530,9 +498,7 @@ def _ivf_crash_fixture(spark, sf_dir, tmp_path):
     def topk():
         return [
             (r.vec_id, r.cosine_sim)
-            for r in sim.knn_ivf_partitioned(
-                spark, path, qvec, k=6, n_probe=3
-            ).collect()
+            for r in sim.knn_index_probe(spark, path, qvec, k=6, n_probe=3).collect()
         ]
 
     return sim, path, topk, topk()

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from nursinghome_data_pipeline_spark import registry
 from nursinghome_data_pipeline_spark.plans import (
+    executed_plan,
     formatted_plan as _formatted_plan,
     join_strategies,
     plan_report,
@@ -53,8 +54,6 @@ def test_groupby_has_partial_aggregation(spark, sf_dir):
 
 
 def test_fingerprint_queries_are_shuffle_free(spark, sf_dir):
-    from nursinghome_data_pipeline_spark.operators.skew import has_exchange
-
     for name in [
         "minhash_signatures_docs",
         "simhash_docs",
@@ -64,7 +63,7 @@ def test_fingerprint_queries_are_shuffle_free(spark, sf_dir):
         "image_header_decode",
     ]:
         df = registry.queries()[name](spark, sf_dir)
-        assert not has_exchange(df), f"{name} must be map-only"
+        assert "Exchange" not in executed_plan(df), f"{name} must be map-only"
 
 
 def test_exact_jaccard_join_never_cartesian(spark, sf_dir):
@@ -97,10 +96,8 @@ def test_time_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
 
 
 def test_chunking_is_map_only(spark, sf_dir):
-    from nursinghome_data_pipeline_spark.operators.skew import has_exchange
-
     df = registry.queries()["chunk_documents_overlap"](spark, sf_dir)
-    assert not has_exchange(df), "chunking must not shuffle"
+    assert "Exchange" not in executed_plan(df), "chunking must not shuffle"
 
 
 def test_heavy_hitters_uses_take_ordered(spark, sf_dir):

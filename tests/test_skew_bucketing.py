@@ -6,11 +6,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from nursinghome_data_pipeline_spark.operators.skew import (
-    has_exchange,
     salted_aggregate,
     salted_join,
     write_bucketed,
 )
+from nursinghome_data_pipeline_spark.plans import executed_plan
 
 
 def _skewed_df(spark):
@@ -98,7 +98,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        assert not has_exchange(joined)
+        assert "Exchange" not in executed_plan(joined)
         plain = (
             spark.read.parquet(f"{sf_dir}/orders.parquet")
             .join(

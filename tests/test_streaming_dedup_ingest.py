@@ -1008,3 +1008,37 @@ def test_all_null_payload_batch_commits_pass_through_rows(
     assert commitlog.is_committed(target, 0)
     assert _target_rows(spark, target) == [(60, None), (61, None)]
     assert sorted(tuple(r) for r in spark.read.parquet(active_data_root(index)).collect()) == before
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="ROADMAP direction 5 (one rule for degenerate inputs): the "
+    "second empty text is rejected as a duplicate of the first, and an "
+    "empty text is posted to the index",
+)
+def test_null_and_empty_texts_all_accepted_in_one_batch(spark, tmp_path):
+    """Degenerate inputs (ROADMAP direction 5): a NULL or empty text
+    has no shingles and no fingerprint, so none of them is a duplicate
+    of another — two NULL and two empty docs in one micro-batch all
+    reach the sink, and none is posted to the index."""
+    corpus = spark.createDataFrame(_corpus_rows(), "doc_id long, text string")
+    index = str(tmp_path / "index")
+    write_dedup_index(corpus, index, n_buckets=16)
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    target = str(tmp_path / "target")
+    _write_batch(
+        src, "b0.json", [(70, None), (71, None), (72, ""), (73, ""), (74, _FRESH)]
+    )
+    stream = spark.readStream.schema("doc_id long, text string").json(src)
+    q = streaming_dedup_ingest(
+        stream, index, target, threshold=0.6,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert _accepted_ids(spark, target) == {70, 71, 72, 73, 74}
+    idx_ids = {r["doc_id"] for r in spark.read.parquet(active_data_root(index)).collect()}
+    assert 74 in idx_ids and not ({70, 71, 72, 73} & idx_ids)
