@@ -1,8 +1,10 @@
 """Filesystem layer for the at-rest index and streaming-target lifecycle.
 
 Every writer that REPLACES a directory — the five index builds, index
-compaction, the streaming upsert sink's per-batch merge — commits
-through the one generation protocol at the end of this module
+compaction, the streaming upsert sink's per-batch merge, and both
+streaming sinks' per-batch commit record (``target/_commit``,
+``streaming/commitlog.py``) — commits through the one generation
+protocol at the end of this module
 (:func:`commit_generation`): the new tree is written to a hidden
 ``_gen-NNNNNN/`` dir and activated by creating the empty pointer
 ``_gen-NNNNNN.ptr``. The commit is an atomic file creation, never a

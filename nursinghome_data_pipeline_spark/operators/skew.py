@@ -13,9 +13,10 @@ Three standard remedies, engine-native:
   for any algebraic aggregate (sum/count/min/max — avg as sum+count).
 - **Salted replicated join** (here): explode the small side once per
   salt so the large side's hot key scatters over ``n_salts`` reducers.
-- **Bucketed co-located join** (here): pre-bucket both tables on the
-  join key at write time; Spark's bucketing-aware scan joins them with
-  NO Exchange at all — the shuffle is paid once at ingest, then every
+- **Bucketed co-located join**: pre-bucket both tables on the join
+  key at write time (``DataFrameWriter.bucketBy(n, key).sortBy(key)
+  .saveAsTable``); Spark's bucketing-aware scan joins them with NO
+  Exchange at all — the shuffle is paid once at ingest, then every
   downstream join of the bucketed tables is shuffle-free.
 """
 
@@ -123,27 +124,6 @@ def salted_join(
     return out.drop(_SALT)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    *,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort: bool = True,
-) -> None:
-    """Persist as a bucketed (and optionally sort-bucketed) table.
-
-    Joins/aggregations between tables bucketed on the same key with the
-    same bucket count read co-located buckets — no Exchange in the
-    plan (verified by tests). At 100 TB this converts every recurring
-    fact⋈fact join from a full shuffle into a local merge.
-    """
-    w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, bucket_col)
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.saveAsTable(table)
-
-
 def write_time_partitioned(
     df: DataFrame,
     path: str,
@@ -181,7 +161,6 @@ def bucketed_global_order(
     n_buckets: int = 4096,
     descending: bool = False,
     debug_stats: dict | None = None,
-    materialize_input: bool = False,
 ) -> DataFrame:
     """Global rank + running quantized sum WITHOUT a global window.
 
@@ -261,14 +240,11 @@ def bucketed_global_order(
     deterministic under stage retry like everything else here.
 
     The operator makes 2-3 passes over ``df`` (width min/max, stats,
-    the final window; +1 per refinement round). When ``df`` is itself
-    an expensive subtree — a group-by of a much larger fact table,
-    the typical rank-the-aggregate shape — every pass replays that
-    subtree; ``materialize_input=True`` localCheckpoints ``df`` once
-    so the passes re-read the (aggregate-sized) materialization
-    instead. Leave False when ``df`` is a cheap scan of data near the
-    full input's size: materializing it would store ~the whole input
-    in the block manager for no replay savings.
+    the final window; +1 per refinement round), so it localCheckpoints
+    ``df`` once and every pass re-reads that materialization instead
+    of replaying ``df``'s subtree — in the rank-the-aggregate shape
+    (a group-by of a much larger fact table) the replay would re-run
+    the group-by per pass.
     """
     from pyspark.sql.window import Window
 
@@ -285,8 +261,7 @@ def bucketed_global_order(
             f"{sorted(reserved | out_cols)}; input already has "
             f"{sorted(clash)} — rename them first"
         )
-    if materialize_input:
-        df = df.localCheckpoint(eager=True)
+    df = df.localCheckpoint(eager=True)
 
     qv_long = F.floor(F.col(value_col) * q).cast("long")
     qv_dec = F.floor(F.col(value_col) * q).cast("decimal(38,0)")

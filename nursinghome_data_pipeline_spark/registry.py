@@ -8284,9 +8284,6 @@ def pareto_8020_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_col="rev",
         tiebreak_col="o_custkey",
         descending=True,
-        # the input is an aggregate far smaller than orders: checkpoint
-        # it once instead of replaying the groupBy per operator pass
-        materialize_input=True,
     ).select(
         "i",
         "n",
@@ -8882,7 +8879,6 @@ def revenue_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust,
         value_col="rev",
         tiebreak_col="o_custkey",
-        materialize_input=True,  # aggregate input — see pareto twin
     ).select("rev", "i", "n")
     q = float(1 << 20)
     iw_sum = (

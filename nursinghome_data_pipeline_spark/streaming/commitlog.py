@@ -1,92 +1,62 @@
-"""Committed-batch bookkeeping for the exactly-once streaming sinks.
+"""Committed-batch record of the exactly-once streaming sinks.
 
 Both foreachBatch sinks (:mod:`.ingest_stream` upsert-merge,
 :mod:`.ingest_dedup` dedup-ingest) get at-least-once delivery from
-Spark with a stable ``batch_id`` and make it exactly-once by recording
-committed ids under the target and skipping re-delivered ones. Through
-r11 the record was ONE ``_committed_batches`` text file appended per
-batch — but ``fs.append_text`` on a URI is a read-modify-write that
-restages the whole file, so a driver crash mid-copy could tear it:
-lost lines silently REPLAY committed batches, and a line torn
-mid-digit still parses as an int, i.e. a wrong batch id that no
-restart can detect (ADVICE r11, medium).
+Spark with a stable ``batch_id`` and make it exactly-once by keeping
+ONE small JSON record per target::
 
-r12 replaces the append with **one empty marker file per batch** under
-``_committed_batches.d/`` — the batch id is the file NAME, the content
-is empty, so there is no torn state a crash can produce: the marker
-either exists with its complete name or it does not (a local
-``open()``, an HDFS ``create``, and an S3 PUT all make the full name
-visible atomically; a 0-byte partially-flushed marker IS the intended
-content). No read-modify-write, no recovery protocol, and concurrent
-sinks on different targets never contend.
+    {"batch_id": N, "degen": [payload md5, ...]}
 
-Legacy compatibility: a pre-r12 ``_committed_batches`` FILE still
-under the target is honored read-only (its ids union with the marker
-set), so an upgraded job resumes without replaying history. New
-commits always write markers.
+``batch_id`` is the last committed batch. Spark's micro-batch
+execution hands ``foreachBatch`` consecutive ids and only ever
+re-delivers the last, uncommitted one, so "already committed" is
+``batch_id <= record["batch_id"]`` — one small read, no listing.
+``degen`` is the dedup-ingest's set of degenerate vector payloads
+accepted so far (empty for the upsert sink); it rides the record, so
+an uncommitted run's entries are never visible to its replay.
+
+The record is committed as the next generation of ``target/_commit``
+through :func:`fs.commit_generation` — the same atomic pointer flip
+every index build and upsert merge uses, so no crash leaves a torn or
+half-visible record. The leading underscore keeps the directory out of
+parquet discovery; it sits beside ``target/data``, not inside it.
+Single writer per target (the sinks' contract).
 """
 
 from __future__ import annotations
 
+import json
+
 from .. import fs
 
-#: legacy single-file manifest (pre-r12) — read-only compatibility
-MANIFEST_FILE = "_committed_batches"
-#: per-batch marker directory — one empty file per committed batch id
-MARKER_DIR = "_committed_batches.d"
+#: generational directory under the target holding the record
+RECORD_DIR = "_commit"
+RECORD_FILE = "record.json"
 
 
-def committed_ids(target_dir: str) -> set[int]:
-    """All committed batch ids under ``target_dir`` — marker files
-    (loose plus compacted packs, :mod:`.markerpack` — r13) plus any
-    legacy manifest lines."""
-    from . import markerpack
-
-    ids: set[int] = set()
-    marker_dir = fs.join(target_dir, MARKER_DIR)
-    names = markerpack.list_markers(marker_dir)
-    for n in names:
-        try:
-            ids.add(int(n))
-        except ValueError:
-            # foreign file in the marker dir — never a commit record
-            continue
-    legacy = fs.join(target_dir, MANIFEST_FILE)
-    if fs.exists(legacy):
-        ids.update(int(line) for line in fs.read_text(legacy).split())
-    return ids
+def read_record(target_dir: str) -> dict:
+    """The committed record of ``target_dir``; ``{"batch_id": -1,
+    "degen": []}`` when nothing was ever committed. A malformed record
+    raises ``ValueError`` naming its path — never a silent replay."""
+    gen = fs.active_generation(fs.join(target_dir, RECORD_DIR))
+    if gen is None:
+        return {"batch_id": -1, "degen": []}
+    path = fs.join(gen, RECORD_FILE)
+    try:
+        rec = json.loads(fs.read_text(path))
+        return {"batch_id": int(rec["batch_id"]), "degen": list(rec["degen"])}
+    except (ValueError, KeyError, TypeError) as e:
+        raise ValueError(f"{path}: malformed commit record ({e})") from e
 
 
-def is_committed(target_dir: str, batch_id: int) -> bool:
-    """Cheap single-batch check: one ``exists`` on the loose marker
-    (the per-batch hot path — a just-committed id is always loose
-    until the next compaction), falling back to the full committed
-    set (packs + legacy manifest) only when the marker is absent."""
-    if fs.exists(fs.join(target_dir, MARKER_DIR, str(int(batch_id)))):
-        return True
-    return int(batch_id) in committed_ids(target_dir)
+def commit_record(target_dir: str, batch_id: int, degen=()) -> None:
+    """Commit ``batch_id`` (and the full degenerate-payload set) — the
+    LAST step of a batch, so a committed record implies every prior
+    effect completed."""
+    text = json.dumps({"batch_id": int(batch_id), "degen": sorted(degen)})
 
+    def write(new_dir: str) -> None:
+        fs.makedirs(new_dir)
+        fs.write_text(fs.join(new_dir, RECORD_FILE), text)
 
-def record_commit(target_dir: str, batch_id: int) -> None:
-    """Record ``batch_id`` as committed — the LAST step of a batch, so
-    marker-present implies every prior effect completed."""
-    marker_dir = fs.join(target_dir, MARKER_DIR)
-    fs.makedirs(marker_dir)
-    fs.touch(fs.join(marker_dir, str(int(batch_id))))
-
-
-def n_committed(target_dir: str) -> int:
-    """Committed-batch count (the compaction-cadence counter)."""
-    return len(committed_ids(target_dir))
-
-
-def compact_markers(target_dir: str, *, threshold: int | None = None) -> bool:
-    """Roll loose commit markers into a pack once ``threshold`` of
-    them accumulate (:mod:`.markerpack` — bounds the per-batch
-    ``committed_ids`` listing to O(batches since last pack); r13, r12
-    verdict #9). Maintenance cadence only, never the commit hot path;
-    single writer per target (the sinks' existing contract)."""
-    from . import markerpack
-
-    kw = {} if threshold is None else {"threshold": threshold}
-    return markerpack.compact(fs.join(target_dir, MARKER_DIR), **kw)
+    fs.commit_generation(fs.join(target_dir, RECORD_DIR), write)

@@ -13,9 +13,10 @@ appears in it.
 
 Idempotency is CRASH-POINT-COMPLETE, not just commit-gated:
 
-- the committed-batch marker files (:mod:`.commitlog`, same protocol
-  as the upsert sink) skip re-delivered batch ids outright;
-- a crash AFTER the index append but BEFORE the commit marker is the
+- the target's commit record (:mod:`.commitlog`, the same record the
+  upsert sink keeps, committed through ``fs.commit_generation``)
+  skips re-delivered batch ids outright;
+- a crash AFTER the index append but BEFORE the record commit is the
   dangerous replay: the re-run probes an index that already contains
   this batch's accepted docs, so every one of them would match
   "the corpus" (itself, jaccard 1.0), accept nothing, and overwrite
@@ -32,8 +33,8 @@ Idempotency is CRASH-POINT-COMPLETE, not just commit-gated:
 - the target write is per-batch-directory overwrite
   (``ingest_batch=<id>/``), so replays rewrite in place instead of
   double-appending;
-- the commit order is target ∥ index append → commit marker: the two
-  writes run side by side and BOTH finish before the marker, so a
+- the commit order is target ∥ index append → commit record: the two
+  writes run side by side and BOTH finish before the record, so a
   crash leaves at most one of them landed — an idempotent per-batch
   overwrite or a replay-benign delta append — and the replay
   reproduces the same accepted set either way.
@@ -56,7 +57,7 @@ independent pairs issued side by side from driver threads
 (``parallel.map_actions``, which keeps the stream's job group):
 exact pin → projection pin (its ``pb`` bucket set observed in the
 same job, ``dedup_index.pin_rows``) → in-batch pairs ∥ index probe →
-accepted pin → target ∥ index append → commit marker.
+accepted pin → target ∥ index append → commit record.
 
 Null-payload rows (no text/vector to fingerprint) bypass every dedup
 stage: they pass straight to the sink and are never posted to the
@@ -64,10 +65,10 @@ index — filter them upstream if the corpus should not carry them.
 Degenerate srp vectors (zero-norm / NULL-element) bypass only the
 NEAR stages; bit-identical copies within a batch are collapsed by the
 exact min-id rule (r11, ADVICE r10), and ACROSS batches by the
-at-rest ``_degen.d`` marker set under the target (r12, r11 verdict
-#4): one marker per distinct degenerate payload ever accepted, probed
-per batch with the same winner-id self-exclusion the main probe uses
-for crash replay, so exactly one copy survives the whole stream.
+``degen`` md5 set of the commit record: one entry per distinct
+degenerate payload ever accepted, committed together with the batch
+id, so a replay sees exactly what its first run saw and exactly one
+copy survives the whole stream.
 
 Within-batch near-dup policy: after exact dedup (min-id winner per
 ``md5(text)``; min-id per identical vector for the srp family — no
@@ -87,47 +88,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: marker directory under the TARGET recording every degenerate
-#: payload ever accepted — ``<md5>__<hex(winner_id)>`` per entry. Under
-#: the target (not the index) because the index tree belongs to the
-#: generation lifecycle (every rebuild and compaction commits a new
-#: generation and GCs the old one; the target is the stream's own
-#: durable root). Same no-torn-state marker
-#: protocol as streaming/commitlog.py.
-DEGEN_DIR = "_degen.d"
-
-
-def _degen_entries(target_dir: str) -> dict[str, str]:
-    """{payload_md5: winner_id_str} of every degenerate payload a
-    previous batch accepted. Reads loose markers plus compacted packs
-    (:mod:`.markerpack`) so the per-batch listing stays O(markers
-    since the last compaction), not O(stream lifetime) — r13, r12
-    verdict #9."""
-    from .. import fs
-    from . import markerpack
-
-    names = markerpack.list_markers(fs.join(target_dir, DEGEN_DIR))
-    out: dict[str, str] = {}
-    for n in names:
-        md5, sep, hexid = n.partition("__")
-        if not sep:
-            continue  # foreign file
-        try:
-            out[md5] = bytes.fromhex(hexid).decode("utf-8")
-        except ValueError:
-            continue
-    return out
-
-
-def _degen_record(target_dir: str, payload_md5: str, winner_id: str) -> None:
-    from .. import fs
-
-    d = fs.join(target_dir, DEGEN_DIR)
-    fs.makedirs(d)
-    fs.touch(
-        fs.join(d, f"{payload_md5}__{winner_id.encode('utf-8').hex()}")
-    )
 
 
 def streaming_dedup_ingest(
@@ -176,7 +136,7 @@ def streaming_dedup_ingest(
     build time to close the gap.
 
     ``compact_every``: every N committed batches the index is
-    compacted in place (after the manifest commit, so acceptance is
+    compacted in place (after the record commit, so acceptance is
     never gated on maintenance). Appends are single-file ``pb=-1``
     LSM deltas (r9 — see ``dedup_index.DELTA_PB``), so the compaction
     is the LSM merge: it folds delta rows into their true bucket
@@ -219,9 +179,8 @@ def streaming_dedup_ingest(
         load_ann_meta,
     )
 
-    # committed-batch bookkeeping is the per-batch marker protocol in
-    # streaming/commitlog.py (r12: markers cannot tear, unlike the
-    # appended manifest file) — routed through fs (r11), so a
+    # committed-batch bookkeeping is the target's commit record
+    # (streaming/commitlog.py) — routed through fs, so a
     # file://-or-remote target keeps the exactly-once bookkeeping on
     # the SAME filesystem as the data, never a cwd-relative local file
     from . import commitlog
@@ -260,7 +219,8 @@ def streaming_dedup_ingest(
 
     def ingest_batch(batch: DataFrame, batch_id: int) -> None:
         spark = SparkSession.getActiveSession()
-        if commitlog.is_committed(target_dir, batch_id):
+        record = commitlog.read_record(target_dir)
+        if batch_id <= record["batch_id"]:
             return  # re-delivered batch: idempotent skip
         # re-read per batch: a regeometry compaction changes n_buckets
         meta = load_ann_meta(index_path)
@@ -311,7 +271,7 @@ def streaming_dedup_ingest(
             )
             bypass_pred = bypass_pred | nrm2.isNull() | (nrm2 == 0.0)
         null_payload = batch.where(bypass_pred)
-        degen_new: list[tuple[str, str]] = []
+        degen_md5s = set(record["degen"])
         if kind == "srp":
             # Degenerate vectors rightly skip the NEAR stages (NULL
             # cosine can never clear a threshold) — but bit-identical
@@ -320,17 +280,13 @@ def streaming_dedup_ingest(
             # batch, stage 1's own rule applies: group identical
             # payload arrays, min-id wins. ACROSS batches (r12, r11
             # verdict #4): degenerate vectors are never posted to the
-            # index, so the loop keeps its own at-rest record — one
-            # empty marker file per distinct degenerate payload under
-            # the TARGET (``_degen.d/<md5>__<hex(winner_id)>``; inside
-            # the index it would not survive the compaction swap).
-            # Marker names carry both fields, so there is no torn
-            # state (same protocol as commitlog), and the winner id
-            # enables the same self-exclusion the main probe uses for
-            # crash replay: a marker whose winner IS one of this
-            # batch's rows means the marker came from this very
-            # batch's earlier, uncommitted run — keep the row, so the
-            # replay reproduces the first run's accepted set exactly.
+            # index, so the loop keeps the md5 of every distinct
+            # degenerate payload it accepted in the target's commit
+            # record (inside the index it would not survive the
+            # compaction swap). The set is committed together with the
+            # batch id, so an uncommitted run's entries are never
+            # visible: its replay decides against the same set the
+            # first run did and reproduces its accepted set exactly.
             # Truly-NULL payloads carry no content to compare and pass
             # through unchanged. Driver boundedness: one row per
             # DISTINCT degenerate payload (zero vectors of one dim are
@@ -345,15 +301,8 @@ def streaming_dedup_ingest(
                 .agg(F.min(id_col).alias("__win"))
                 .collect()
             ]
-            known = _degen_entries(target_dir)
-            keep_ids = [
-                w
-                for m, w in surv
-                if m not in known or known[m] == str(w)
-            ]
-            degen_new = [
-                (m, str(w)) for m, w in surv if m not in known
-            ]
+            keep_ids = [w for m, w in surv if m not in degen_md5s]
+            degen_md5s.update(m for m, _ in surv)
             import pandas as _pd
 
             keep_schema = degen.select(id_col).schema
@@ -441,20 +390,13 @@ def streaming_dedup_ingest(
             routed = rows.join(accepted.select(id_col), id_col, "left_semi")
             append_routed_rows(as_delta_append(routed, pinned=True), index_path, "pb")
 
-        # commit order: target ∥ index append → commit marker. Both
-        # finish before the marker; a crash between them leaves either
+        # commit order: target ∥ index append → commit record. Both
+        # finish before the record; a crash between them leaves either
         # an idempotent per-batch overwrite or a replay-benign delta
         # append, and the own-id exclusion reproduces the same
         # accepted set on replay (module docstring)
         map_actions(lambda write: write(), [write_target, append_index])
-        fs.makedirs(target_dir)
-        # record NEW degenerate payloads before the commit marker:
-        # marker creation is idempotent, and a crash between here and
-        # the commit replays the batch with the self-exclusion above
-        # reproducing the identical accepted set
-        for m, w in degen_new:
-            _degen_record(target_dir, m, w)
-        commitlog.record_commit(target_dir, batch_id)
+        commitlog.commit_record(target_dir, batch_id, degen_md5s)
         if compact_every:
             # the batch is already committed above — NOTHING in this
             # maintenance block may fail it. RuntimeError is the
@@ -463,16 +405,9 @@ def streaming_dedup_ingest(
             # or permission failure mid-commit; ValueError a corrupted
             # sidecar. All defer to the next cadence point.
             try:
-                # bound the per-batch marker listings (commit ids +
-                # degen payloads) the same way the index LSM bounds
-                # delta files: threshold-gated pack compaction (r13,
-                # r12 verdict #9). Crash-safe and idempotent — see
-                # streaming/markerpack.py.
-                from . import markerpack
-
-                commitlog.compact_markers(target_dir)
-                markerpack.compact(fs.join(target_dir, DEGEN_DIR))
-                if commitlog.n_committed(target_dir) % compact_every == 0:
+                # batch ids are consecutive from 0: batch_id + 1 is
+                # the committed-batch count
+                if (batch_id + 1) % compact_every == 0:
                     from ..operators.similarity import compact_ann_index
 
                     compact_ann_index(spark, index_path, regeometry=True)

@@ -8,6 +8,12 @@ aggregates over an event stream (late data handled by the watermark).
 
 At scale: file-source streaming checkpoints file lists; the windowed
 aggregate keeps state per (window, event_type) only — both bounded.
+
+The exactly-once upsert sink (:func:`streaming_upsert_sink`) commits
+each micro-batch with two ``fs.commit_generation`` flips in order: the
+merged table as the next generation of ``target/data``, then the
+batch id as the next generation of the commit record
+``target/_commit`` (:mod:`.commitlog`).
 """
 
 from __future__ import annotations
@@ -169,13 +175,12 @@ def streaming_upsert_sink(
     ``fs.active_data_root(target_dir + "/data")``.
 
     Exactly-once: Spark's foreachBatch gives at-least-once delivery
-    with a stable ``batch_id`` — the sink records committed batch ids
-    as per-batch marker files under the target
-    (:mod:`.commitlog` — crash-safe on every store, r12) and skips
-    re-delivered ids, making the merge idempotent. Replacing
-    parquet+markers with Delta/Iceberg gives the same semantics
-    transactionally; the control flow here is identical, which is the
-    point of the design.
+    with a stable ``batch_id`` — after the data flip the sink commits
+    the batch id as the next generation of the target's commit record
+    (:mod:`.commitlog`, ``target_dir/_commit``) and skips re-delivered
+    ids, making the merge idempotent. Replacing parquet+record with
+    Delta/Iceberg gives the same semantics transactionally; the
+    control flow here is identical, which is the point of the design.
 
     At scale: per batch, one shuffle of the (small) micro-batch plus a
     key-range-pruned rewrite of affected target files — copy-on-write
@@ -190,7 +195,7 @@ def streaming_upsert_sink(
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         spark = SparkSession.getActiveSession()
-        if commitlog.is_committed(target_dir, batch_id):
+        if batch_id <= commitlog.read_record(target_dir)["batch_id"]:
             return  # re-delivered batch: idempotent skip
         from pyspark.sql.window import Window
 
@@ -229,12 +234,12 @@ def streaming_upsert_sink(
         # the merged table is the next generation of data/ (fs's
         # generation protocol): until the pointer flip the pre-merge
         # generation stays fully active, after it the post-merge one —
-        # and a crash between the flip and the commit marker replays
-        # the batch, whose re-merge is idempotent
+        # and a crash between the data flip and the record flip
+        # replays the batch, whose re-merge is idempotent
         fs.commit_generation(
             data_dir, lambda d: merged.write.mode("overwrite").parquet(d)
         )
-        commitlog.record_commit(target_dir, batch_id)
+        commitlog.commit_record(target_dir, batch_id)
 
     return (
         stream.writeStream.foreachBatch(merge_batch)

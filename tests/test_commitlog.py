@@ -1,62 +1,67 @@
-"""Committed-batch marker protocol (r12, ADVICE r11 medium): the
-single appended ``_committed_batches`` file could tear on a URI
-(read-modify-write restage) — lost lines silently replay committed
-batches. The replacement is one empty marker file per batch id whose
-NAME is the record, so no crash can produce a torn state; a legacy
-manifest file is still honored read-only so upgraded jobs resume
-without replaying history. These are driver-side unit tests — no
-SparkSession needed for plain local paths."""
+"""The streaming sinks' commit record (streaming/commitlog.py): one
+small JSON record per target, ``{"batch_id": N, "degen": [...]}``,
+committed as the next generation of ``target/_commit`` through
+``fs.commit_generation``. A missing record means nothing is committed;
+a malformed one raises instead of silently replaying. These are
+driver-side unit tests — no SparkSession needed for plain local
+paths."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
+
+from nursinghome_data_pipeline_spark import fs
 from nursinghome_data_pipeline_spark.streaming import commitlog
 
 
 def test_markers_round_trip(tmp_path):
     target = str(tmp_path / "tgt")
     os.makedirs(target)
-    assert commitlog.committed_ids(target) == set()
-    assert not commitlog.is_committed(target, 0)
-    commitlog.record_commit(target, 0)
-    commitlog.record_commit(target, 3)
-    # re-recording an id is idempotent (replayed batch re-commits)
-    commitlog.record_commit(target, 0)
-    assert commitlog.committed_ids(target) == {0, 3}
-    assert commitlog.is_committed(target, 3)
-    assert not commitlog.is_committed(target, 1)
-    assert commitlog.n_committed(target) == 2
-    # markers are empty files named by batch id
-    mdir = os.path.join(target, commitlog.MARKER_DIR)
-    assert sorted(os.listdir(mdir)) == ["0", "3"]
-    assert os.path.getsize(os.path.join(mdir, "0")) == 0
-
-
-def test_legacy_manifest_unioned_read_only(tmp_path):
-    """A pre-r12 target carries ``_committed_batches`` lines — they
-    must count as committed (no replay on upgrade), but new commits
-    write markers, never the legacy file."""
-    target = str(tmp_path / "tgt")
-    os.makedirs(target)
-    legacy = os.path.join(target, commitlog.MANIFEST_FILE)
-    with open(legacy, "w") as f:
-        f.write("0\n1\n")
-    assert commitlog.committed_ids(target) == {0, 1}
-    assert commitlog.is_committed(target, 1)
-    assert not commitlog.is_committed(target, 2)
-    commitlog.record_commit(target, 2)
-    assert commitlog.committed_ids(target) == {0, 1, 2}
-    assert commitlog.n_committed(target) == 3
-    with open(legacy) as f:
-        assert f.read() == "0\n1\n"  # untouched
+    assert commitlog.read_record(target) == {"batch_id": -1, "degen": []}
+    commitlog.commit_record(target, 0)
+    assert commitlog.read_record(target) == {"batch_id": 0, "degen": []}
+    commitlog.commit_record(target, 1, {"b" * 32, "a" * 32})
+    assert commitlog.read_record(target) == {
+        "batch_id": 1,
+        "degen": ["a" * 32, "b" * 32],
+    }
+    # every commit is a generation flip: one generation and its
+    # pointer remain, beside data/ rather than inside it
+    rdir = os.path.join(target, commitlog.RECORD_DIR)
+    gen = os.path.basename(fs.active_data_root(rdir))
+    assert sorted(os.listdir(rdir)) == [gen, gen + fs.GEN_PTR_SUFFIX]
+    assert os.listdir(os.path.join(rdir, gen)) == [commitlog.RECORD_FILE]
 
 
 def test_foreign_files_in_marker_dir_ignored(tmp_path):
+    """A foreign file in the record directory is neither read as a
+    record nor collected by the next commit."""
     target = str(tmp_path / "tgt")
-    mdir = os.path.join(target, commitlog.MARKER_DIR)
-    os.makedirs(mdir)
-    with open(os.path.join(mdir, ".DS_Store"), "w") as f:
+    rdir = os.path.join(target, commitlog.RECORD_DIR)
+    os.makedirs(rdir)
+    with open(os.path.join(rdir, ".DS_Store"), "w") as f:
         f.write("junk")
-    commitlog.record_commit(target, 7)
-    assert commitlog.committed_ids(target) == {7}
+    assert commitlog.read_record(target)["batch_id"] == -1
+    commitlog.commit_record(target, 7)
+    commitlog.commit_record(target, 8)
+    assert commitlog.read_record(target)["batch_id"] == 8
+    assert ".DS_Store" in os.listdir(rdir)
+
+
+@pytest.mark.parametrize(
+    "text", ["", "{", "[7]", '{"batch_id": "x", "degen": []}', '{"degen": []}']
+)
+def test_malformed_record_raises_named_error(tmp_path, text):
+    target = str(tmp_path / "tgt")
+    commitlog.commit_record(target, 3)
+    path = os.path.join(
+        fs.active_data_root(os.path.join(target, commitlog.RECORD_DIR)),
+        commitlog.RECORD_FILE,
+    )
+    with open(path, "w") as f:
+        f.write(text)
+    with pytest.raises(ValueError, match="malformed commit record") as e:
+        commitlog.read_record(target)
+    assert path in str(e.value)

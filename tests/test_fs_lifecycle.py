@@ -55,7 +55,8 @@ def test_fs_helpers_uri_and_local_parity(spark, tmp_path):
         assert fs.read_text(f1) == "hello"
         assert not fs.is_dir(f1)
         # overwrite semantics (append_text was removed in r12 — the
-        # torn-manifest hazard went with it; commits are marker files)
+        # torn-manifest hazard went with it; commits are generation
+        # flips)
         fs.write_text(f1, "hello world")
         assert fs.read_text(f1) == "hello world"
         fs.touch(fs.join(root, "_m-1.intent"))
@@ -227,10 +228,10 @@ def test_index_lifecycle_over_file_uri(spark, sf_dir, tmp_path, kind):
 
 
 def test_streaming_ingest_over_file_uri(spark, sf_dir, tmp_path):
-    """The full streaming dedup-ingest loop (manifest bookkeeping,
-    per-batch target overwrite, index delta append) over file:// URIs
-    for BOTH the index and the target — the manifest must land on the
-    target's filesystem, not a cwd-relative local file."""
+    """The full streaming dedup-ingest loop (commit record, per-batch
+    target overwrite, index delta append) over file:// URIs for BOTH
+    the index and the target — the record must land on the target's
+    filesystem, not a cwd-relative local file."""
     import json
 
     from nursinghome_data_pipeline_spark.operators.dedup_index import (
@@ -275,18 +276,19 @@ def test_streaming_ingest_over_file_uri(spark, sf_dir, tmp_path):
         ).parquet(fs.join(target, "data")).collect()
     }
     assert got == {i for i, _ in fresh}
-    # exactly-once commit log lives at the URI (marker files — r12)
+    # the exactly-once commit record lives at the URI
     from nursinghome_data_pipeline_spark.streaming import commitlog
 
-    assert commitlog.committed_ids(target) == {0}
+    assert commitlog.read_record(target)["batch_id"] == 0
+    assert fs.is_dir(fs.join(target, commitlog.RECORD_DIR))
 
 
 def test_srp_degen_markers_over_file_uri(spark, tmp_path):
-    """The cross-batch degenerate-vector marker set (r12) over a
-    ``file://`` target: the ``_degen.d`` markers must land on the
-    target's filesystem, and a second batch's bit-identical zero-norm
-    vector must be dropped against them — one survivor across the
-    stream, exactly as on a plain path."""
+    """The cross-batch degenerate-vector set over a ``file://``
+    target: the commit record carrying the payload md5s must land on
+    the target's filesystem, and a second batch's bit-identical
+    zero-norm vector must be dropped against it — one survivor across
+    the stream, exactly as on a plain path."""
     import json
 
     import numpy as np
@@ -294,8 +296,8 @@ def test_srp_degen_markers_over_file_uri(spark, tmp_path):
     from nursinghome_data_pipeline_spark.operators.embedding_index import (
         write_srp_index,
     )
+    from nursinghome_data_pipeline_spark.streaming import commitlog
     from nursinghome_data_pipeline_spark.streaming.ingest_dedup import (
-        _degen_entries,
         streaming_dedup_ingest,
     )
 
@@ -340,7 +342,6 @@ def test_srp_degen_markers_over_file_uri(spark, tmp_path):
         for r in spark.read.option("basePath", data).parquet(data).collect()
     }
     assert got == {30}
-    assert _degen_entries(target) == {
-        next(iter(_degen_entries(target))): "30"
-    }
-    assert fs.is_dir(fs.join(target, "_degen.d"))
+    record = commitlog.read_record(target)
+    assert record["batch_id"] == 1 and len(record["degen"]) == 1
+    assert fs.is_dir(fs.join(target, commitlog.RECORD_DIR))

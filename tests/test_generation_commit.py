@@ -2,8 +2,8 @@
 (``fs.commit_generation``).
 
 Every writer that replaces a directory — an index build, an index
-compaction, an upsert micro-batch — commits through the same helper,
-so one battery covers them all. A failure is injected at each of the
+compaction, an upsert micro-batch, a streaming sink's commit record —
+commits through the same helper, so one battery covers them all. A failure is injected at each of the
 protocol's three crash points:
 
 - ``write``: inside the generation write (a torn file lands in the new
@@ -35,12 +35,16 @@ class Crash(Exception):
     pass
 
 
-def _inject(monkeypatch, point: str) -> None:
-    """Arm one crash point of the next ``fs.commit_generation``."""
+def _inject(monkeypatch, point: str, under: str = "") -> None:
+    """Arm one crash point of the next ``fs.commit_generation`` of a
+    directory whose path starts with ``under``."""
     if point == "write":
         real_commit = fs.commit_generation
 
         def torn_commit(path, write):
+            if not path.startswith(under):
+                return real_commit(path, write)
+
             def torn(new_dir):
                 fs.makedirs(new_dir)
                 fs.write_text(fs.join(new_dir, "part-torn.parquet"), "torn")
@@ -53,7 +57,7 @@ def _inject(monkeypatch, point: str) -> None:
         real_touch = fs.touch
 
         def dying_touch(p):
-            if p.endswith(fs.GEN_PTR_SUFFIX):
+            if p.startswith(under) and p.endswith(fs.GEN_PTR_SUFFIX):
                 raise Crash("injected crash before the flip")
             return real_touch(p)
 
@@ -65,10 +69,12 @@ def _inject(monkeypatch, point: str) -> None:
 
         def flag_touch(p):
             real_touch(p)
-            flipped["yes"] = flipped["yes"] or p.endswith(fs.GEN_PTR_SUFFIX)
+            flipped["yes"] = flipped["yes"] or (
+                p.startswith(under) and p.endswith(fs.GEN_PTR_SUFFIX)
+            )
 
         def dying_gc(path, keep):
-            if flipped["yes"]:
+            if flipped["yes"] and path.startswith(under):
                 raise Crash("injected crash before the GC")
             return real_gc(path, keep)
 
@@ -240,3 +246,109 @@ def test_upsert_micro_batch_crash_points(spark, tmp_path, monkeypatch, scheme):
         run()
         _assert_collected(data)
         assert rows(target) == post
+
+
+def _words(tag: str) -> str:
+    return " ".join(f"{tag}w{k}" for k in range(30))
+
+
+@pytest.mark.parametrize("scheme", ["plain", "uri"])
+def test_dedup_ingest_micro_batch_crash_points(
+    spark, tmp_path, monkeypatch, scheme
+):
+    """A dedup-ingest micro-batch, crashed in its commit record after
+    the target write and the index append have landed. Before the
+    record's flip the restarted stream replays the batch and lands the
+    identical accepted set, target rows and index ids; after the flip
+    the replay is skipped (the batch's index postings are not appended
+    again). The next committed batch leaves one record generation."""
+    from pyspark.errors import StreamingQueryException
+
+    from nursinghome_data_pipeline_spark.operators.dedup_index import (
+        write_dedup_index,
+    )
+    from nursinghome_data_pipeline_spark.streaming import commitlog
+    from nursinghome_data_pipeline_spark.streaming.ingest_dedup import (
+        streaming_dedup_ingest,
+    )
+
+    def read(path):
+        return spark.read.option("basePath", path).parquet(path)
+
+    def land(src, batch_rows, n):
+        spark.createDataFrame(batch_rows, "doc_id long, text string").coalesce(
+            1
+        ).write.json(os.path.join(src, f"b{n}"))
+
+    corpus = spark.createDataFrame(
+        [(1, _words("a")), (2, _words("b"))], "doc_id long, text string"
+    )
+    fresh = _words("f")
+    # a corpus copy, a fresh doc, its one-word near-copy, its exact copy
+    crash_batch = [
+        (20, _words("a")),
+        (21, fresh),
+        (22, fresh.replace("fw15", "edited")),
+        (23, fresh),
+    ]
+    for point in POINTS:
+        index = _root(tmp_path, scheme, f"index_{point}")
+        target = _root(tmp_path, scheme, f"ingest_{point}")
+        record_dir = fs.join(target, commitlog.RECORD_DIR)
+        src = str(tmp_path / f"src_{scheme}_{point}")
+        ckpt = str(tmp_path / f"ckpt_{scheme}_{point}")
+        write_dedup_index(corpus, index, n_buckets=8)
+
+        def run():
+            q = streaming_dedup_ingest(
+                spark.readStream.schema("doc_id long, text string")
+                .option("recursiveFileLookup", True)
+                .json(src),
+                index,
+                target,
+                threshold=0.6,
+                checkpoint_dir=ckpt,
+                compact_every=None,
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+
+        def postings():
+            rows = read(fs.active_data_root(index)).select("doc_id").collect()
+            return [r.doc_id for r in rows]
+
+        def batch_rows(n):
+            part = fs.join(target, "data", f"ingest_batch={n}")
+            return sorted(tuple(r) for r in spark.read.parquet(part).collect())
+
+        land(src, [(10, _words("g"))], 0)
+        run()
+        old_gen = fs.active_data_root(record_dir)
+        land(src, crash_batch, 1)
+        with monkeypatch.context() as m:
+            _inject(m, point, under=record_dir)
+            with pytest.raises(StreamingQueryException, match="injected crash"):
+                run()
+        # the writes landed; only the record commit was cut
+        assert batch_rows(1) == [(21, fresh)]
+        n21 = postings().count(21)
+        assert n21 > 0
+        assert len(_gen_entries(record_dir)) > 2
+        assert (fs.active_data_root(record_dir) == old_gen) == (point != "gc")
+        assert commitlog.read_record(target)["batch_id"] == (
+            1 if point == "gc" else 0
+        )
+        land(src, [(30, _words("h"))], 2)
+        run()  # replays (or skips) batch 1, then commits batch 2
+        assert batch_rows(1) == [(21, fresh)]
+        assert postings().count(21) == n21 * (1 if point == "gc" else 2)
+        assert {r.doc_id for r in read(fs.join(target, "data")).collect()} == {
+            10,
+            21,
+            30,
+        }
+        assert set(postings()) == {1, 2, 10, 21, 30}
+        assert commitlog.read_record(target) == {"batch_id": 2, "degen": []}
+        _assert_collected(record_dir)

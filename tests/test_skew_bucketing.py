@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from nursinghome_data_pipeline_spark.operators.skew import (
     salted_aggregate,
     salted_join,
-    write_bucketed,
 )
 from nursinghome_data_pipeline_spark.plans import executed_plan
 
@@ -82,8 +81,13 @@ def test_salted_join_matches_plain(spark):
 def test_bucketed_join_has_no_exchange(spark, sf_dir):
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    write_bucketed(orders, "b_orders", bucket_col="o_custkey", n_buckets=8)
-    write_bucketed(customer, "b_customer", bucket_col="c_custkey", n_buckets=8)
+    for df, table, key in (
+        (orders, "b_orders", "o_custkey"),
+        (customer, "b_customer", "c_custkey"),
+    ):
+        df.write.mode("overwrite").format("parquet").bucketBy(8, key).sortBy(
+            key
+        ).saveAsTable(table)
     joined = (
         spark.table("b_orders")
         .join(

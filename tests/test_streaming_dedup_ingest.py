@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -133,13 +134,13 @@ def test_stream_dedups_within_and_across_batches(spark, tmp_path):
     assert all(c not in (12, 13, 20, 10) for _, c in got)
     assert not any(b == 901 for b, _ in got)
 
-    # commit log recorded each batch (marker files — r12)
+    # the commit record names the last committed batch
     from nursinghome_data_pipeline_spark.streaming import commitlog
 
-    assert len(commitlog.committed_ids(target)) >= 2
+    assert commitlog.read_record(target)["batch_id"] >= 1
 
     # re-delivery with a FRESH checkpoint replays all files as batch 0
-    # — already committed, so the manifest skip keeps target AND index
+    # — already committed, so the record's skip keeps target AND index
     # unchanged (no duplicate postings from the replay)
     before = spark.read.parquet(active_data_root(index)).count()
     q2 = start("ckpt2")
@@ -180,7 +181,7 @@ def test_null_text_rows_pass_through_not_dropped(spark, tmp_path):
 
 
 def test_crash_replay_after_index_append_is_idempotent(spark, tmp_path):
-    """The dangerous crash point: index appended, manifest NOT written.
+    """The dangerous crash point: index appended, record NOT committed.
     The replay probes an index already containing the batch's accepted
     docs — the own-ids exclusion must reproduce the same accepted set
     instead of rejecting everything as self-matches."""
@@ -205,10 +206,10 @@ def test_crash_replay_after_index_append_is_idempotent(spark, tmp_path):
 
     run("ckpt")
     assert _accepted_ids(spark, target) == {11}
-    # simulate the crash: drop the commit marker (as if the process
-    # died between the index append and the commit record), then
+    # simulate the crash: drop the commit record (as if the process
+    # died between the index append and the record commit), then
     # replay the same source through a fresh checkpoint
-    os.remove(os.path.join(target, "_committed_batches.d", "0"))
+    shutil.rmtree(os.path.join(target, "_commit"))
     run("ckpt2")
     assert _accepted_ids(spark, target) == {11}
     # 11 survived its own replay (self-match excluded), and its target
@@ -300,8 +301,6 @@ def test_accepted_set_matches_composed_in_memory_operators(
     composing the standalone operators stage by stage
     (exact_dedup_fingerprints → near_duplicate_pairs →
     dedup_batch_against_index) at the sidecar's geometry."""
-    import shutil
-
     from nursinghome_data_pipeline_spark.operators.dedup import (
         exact_dedup_fingerprints,
         near_duplicate_pairs,
@@ -464,7 +463,7 @@ def test_maintenance_failure_never_fails_a_committed_batch(
     assert _accepted_ids(spark, target) == {11}
     from nursinghome_data_pipeline_spark.streaming import commitlog
 
-    assert commitlog.committed_ids(target) == {0}
+    assert commitlog.read_record(target)["batch_id"] == 0
     assert "deferred" in capsys.readouterr().err
 
 
@@ -725,12 +724,12 @@ def test_srp_zero_norm_vectors_bypass_index(spark, tmp_path):
 def test_srp_degenerate_duplicates_dropped_across_batches(spark, tmp_path):
     """r12 (r11 verdict #4): degenerate vectors are never indexed, so
     cross-batch copies used to be exempt by documented policy. The
-    ``_degen.d`` marker set closes the class: a zero-norm vector
-    accepted by batch N leaves a marker, and bit-identical copies in
-    batch N+1 are dropped — exactly one copy survives the stream. The
-    marker's winner id also self-excludes on crash replay (marker
-    written, commit lost → the replay reproduces the first run's
-    accepted set instead of dropping its own winner)."""
+    commit record's ``degen`` md5 set closes the class: a zero-norm
+    vector accepted by batch N is recorded with the batch's commit,
+    and bit-identical copies in batch N+1 are dropped — exactly one
+    copy survives the stream. The set is only visible once committed,
+    so a crash replay (record lost) reproduces the first run's
+    accepted set instead of dropping its own winner."""
     import numpy as np
 
     from nursinghome_data_pipeline_spark.operators.embedding_index import (
@@ -784,7 +783,7 @@ def test_srp_degenerate_duplicates_dropped_across_batches(spark, tmp_path):
     assert accepted() == {30, 34}
     # batch 1: two bit-identical copies of batch 0's zero vector (41
     # collapses into 40 within the batch; 40 is dropped against 30's
-    # marker) plus a fresh normal vector
+    # committed payload md5) plus a fresh normal vector
     with open(os.path.join(src, "b1.json"), "w", encoding="utf-8") as f:
         for i, v in [
             (40, [0.0] * dim),
@@ -794,15 +793,13 @@ def test_srp_degenerate_duplicates_dropped_across_batches(spark, tmp_path):
             f.write(json.dumps({"vec_id": i, "embedding": v}) + "\n")
     run("ckpt")
     assert accepted() == {30, 34, 42}
-    # exactly one marker exists for the zero payload, naming winner 30
-    from nursinghome_data_pipeline_spark.streaming.ingest_dedup import (
-        _degen_entries,
-    )
+    # exactly one entry exists for the zero payload
+    from nursinghome_data_pipeline_spark.streaming import commitlog
 
-    assert list(_degen_entries(target).values()) == ["30"]
-    # crash replay: markers survive but batch 0's commit is lost — the
-    # replay must NOT drop its own winner against its own marker
-    os.remove(os.path.join(target, "_committed_batches.d", "0"))
+    assert len(commitlog.read_record(target)["degen"]) == 1
+    # crash replay: the commit record is lost — the replay must NOT
+    # drop its own winner, and the accepted set stays the same
+    shutil.rmtree(os.path.join(target, "_commit"))
     run("ckpt2")
     assert accepted() == {30, 34, 42}
 
@@ -866,7 +863,7 @@ def test_crash_between_concurrent_writes_replays_identically(
     spark, tmp_path, monkeypatch, failing
 ):
     """The target write and the index append run side by side; one of
-    them failing after the other has landed leaves no commit marker,
+    them failing after the other has landed leaves no commit record,
     and the restarted stream reproduces the clean run's accepted ids
     and target rows (own-id exclusion for a landed append, per-batch
     overwrite for a landed target)."""
@@ -930,12 +927,12 @@ def test_crash_between_concurrent_writes_replays_identically(
     with pytest.raises(Exception, match="injected"):
         run(index, src, target, "crash")
     monkeypatch.undo()
-    assert not commitlog.is_committed(target, 0)
+    assert commitlog.read_record(target)["batch_id"] == -1
     assert os.path.exists(target_done) == (failing == "index_append")
     assert delta_landed() == (failing == "target_write")
 
     run(index, src, target, "crash")  # same checkpoint: batch 0 replays
-    assert commitlog.is_committed(target, 0)
+    assert commitlog.read_record(target)["batch_id"] == 0
     assert _accepted_ids(spark, target) == want_ids
     assert _target_rows(spark, target) == want_rows
 
@@ -1005,7 +1002,7 @@ def test_all_null_payload_batch_commits_pass_through_rows(
     finally:
         q.stop()
     assert pins == [(0, [])]
-    assert commitlog.is_committed(target, 0)
+    assert commitlog.read_record(target)["batch_id"] == 0
     assert _target_rows(spark, target) == [(60, None), (61, None)]
     assert sorted(tuple(r) for r in spark.read.parquet(active_data_root(index)).collect()) == before
 
