@@ -283,7 +283,7 @@ def _dedup_index_probe(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from nursinghome_data_pipeline_spark.operators.dedup_index import (
-        dedup_batch_against_index,
+        batch_against_index,
         write_dedup_index,
     )
     from nursinghome_data_pipeline_spark.fs import active_generation
@@ -297,7 +297,7 @@ def _dedup_index_probe(spark, sf_dir: str):
     if active_generation(path) is None:
         write_dedup_index(docs.where(F.col("doc_id") % 10 != 9), path)
     batch = docs.where(F.col("doc_id") % 10 == 9)
-    return dedup_batch_against_index(spark, batch, path, threshold=0.35)
+    return batch_against_index(spark, batch, path, threshold=0.35)
 
 
 def _streaming_dedup_ingest_batch(spark, sf_dir: str):
@@ -420,7 +420,7 @@ def _simhash_index_probe(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from nursinghome_data_pipeline_spark.operators.dedup_index import (
-        simhash_batch_against_index,
+        batch_against_index,
         write_simhash_index,
     )
     from nursinghome_data_pipeline_spark.fs import active_generation
@@ -434,7 +434,7 @@ def _simhash_index_probe(spark, sf_dir: str):
     if active_generation(path) is None:
         write_simhash_index(docs.where(F.col("doc_id") % 10 != 9), path)
     batch = docs.where(F.col("doc_id") % 10 == 9)
-    return simhash_batch_against_index(spark, batch, path, max_hamming=20)
+    return batch_against_index(spark, batch, path, threshold=20)
 
 
 def _srp_index_probe(spark, sf_dir: str):
@@ -450,8 +450,10 @@ def _srp_index_probe(spark, sf_dir: str):
     against planted partners)."""
     from pyspark.sql import functions as F
 
+    from nursinghome_data_pipeline_spark.operators.dedup_index import (
+        batch_against_index,
+    )
     from nursinghome_data_pipeline_spark.operators.embedding_index import (
-        embedding_batch_against_index,
         write_srp_index,
     )
     from nursinghome_data_pipeline_spark.fs import active_generation
@@ -474,7 +476,7 @@ def _srp_index_probe(spark, sf_dir: str):
             design_threshold=0.95,
         )
     batch = emb.where(F.col("vec_id") % 10 == 9)
-    return embedding_batch_against_index(spark, batch, path)
+    return batch_against_index(spark, batch, path, threshold=None)
 
 
 def _sessionize_bucketed_events(spark, sf_dir: str):

@@ -1,7 +1,6 @@
 from .dedup import (  # noqa: F401
     exact_dedup,
     exact_dedup_fingerprints,
-    minhash_lsh_candidate_pairs,
     minhash_signature_col,
 )
 from .sessions import sessionize_bucketed  # noqa: F401

@@ -8,8 +8,8 @@ COUNT(*)>1) into duplicate-*resolution* operators:
 - near-dup: MinHash signatures + LSH banding, expressed entirely with
   native higher-order functions (``transform``/``aggregate``/``slice``)
   so signature computation is a single codegen'd projection — no UDF,
-  no shuffle. Only the band-bucket self-join shuffles, and it shuffles
-  *bands* (a few ints per doc), not document text;
+  no shuffle. Only the band-bucket grouping shuffles, and it shuffles
+  band keys and shingle hashes, never document text;
 - n-gram Jaccard: exact verification for candidate pairs.
 """
 
@@ -217,51 +217,14 @@ def minhash_signature_md5_col(
     return _bind(_bind(sh, base_hashes), mins)
 
 
-def _intra_bucket_pairs(
-    banded: DataFrame,
-    bucket_cols: list[str],
-    member_cols: list[str],
-    make_pair,
-    keep,
-) -> DataFrame:
-    """Generate unordered pairs WITHIN hash buckets, bucket-locally.
-
-    ``collect_list`` gathers each bucket's members, then a nested
-    ``transform`` emits every pair and ``keep`` prunes before the
-    explode. Compared to a bucket self-join this computes the upstream
-    (signature) subtree ONCE and shuffles once (measured 8.0s → 2.5s on
-    simhash pairs at sf0.1 — Spark does not share the scan/projection
-    between the two sides of a self-join).
-
-    Scale note: bucket membership lists must fit in memory — fine for
-    uniform hash buckets; a pathologically hot bucket (mass-duplicated
-    content) should be removed by EXACT dedup first
-    (:func:`exact_dedup_fingerprints`), which collapses identical
-    payloads before any near-dup pass.
-    """
-    ms = F.col("ms")
-    bucketed = banded.groupBy(*bucket_cols).agg(
-        F.collect_list(F.struct(*member_cols)).alias("ms")
-    )
-    nested = F.filter(
-        F.flatten(
-            F.transform(ms, lambda x: F.transform(ms, lambda y: make_pair(x, y)))
-        ),
-        keep,
-    )
-    return (
-        bucketed.select(F.explode(nested).alias("p")).select("p.*").distinct()
-    )
-
-
 def band_key_col(sig: Column, band: int, rows_per_band: int) -> Column:
     """64-bit key of one LSH band: xxhash64 over the band's signature
     slice rendered as a comma-joined string. THE single owner of the
-    band-key formula — the in-memory candidate join
-    (:func:`minhash_lsh_candidate_pairs`) and the at-rest index
-    (``dedup_index.write_dedup_index`` / append routing / batch probe)
-    must compute byte-identical keys or index and query silently stop
-    agreeing on bucket routing."""
+    band-key formula, read only by the minhash family's projection
+    (``dedup_index._banded_rows``), which feeds the in-memory
+    :func:`near_duplicate_pairs`, the at-rest index build, append
+    routing and batch probe alike — so index and query can never
+    disagree on bucket routing."""
     return F.xxhash64(
         F.array_join(
             F.transform(
@@ -273,66 +236,22 @@ def band_key_col(sig: Column, band: int, rows_per_band: int) -> Column:
     )
 
 
-def minhash_lsh_candidate_pairs(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Near-duplicate candidate pairs via LSH banding.
-
-    Signature is split into ``bands`` bands of ``n_hashes//bands`` rows;
-    documents sharing any identical band land in the same bucket. The
-    shuffle key is (band_index, band_hash) — uniformly distributed, so
-    no skew; bucket sizes stay tiny for non-pathological corpora. The
-    self-join inside buckets emits each unordered pair once (id_a < id_b).
-
-    ``bands`` must divide ``n_hashes``: silently dropping the trailing
-    ``n_hashes % bands`` signature rows would shift the collision-
-    probability curve away from the (bands, rows_per_band) tuning the
-    caller asked for, so an inexact split is rejected instead.
-    """
+def _check_banding(n_hashes: int, bands: int) -> None:
+    """Reject a minhash banding that is not an exact split: each of
+    ``bands`` bands takes ``n_hashes // bands`` signature rows, so
+    ``bands`` must be a positive divisor of a positive ``n_hashes`` —
+    silently dropping the trailing ``n_hashes % bands`` rows would
+    shift the collision-probability curve away from the (bands,
+    rows_per_band) tuning the caller asked for."""
+    for name, value in (("n_hashes", n_hashes), ("bands", bands)):
+        if value < 1:
+            raise ValueError(f"{name} must be >= 1 (got {value})")
     if n_hashes % bands != 0:
         raise ValueError(
             f"bands ({bands}) must divide n_hashes ({n_hashes}); "
             f"{n_hashes % bands} trailing signature rows would be "
             f"silently unused, changing the LSH collision curve"
         )
-    rows_per_band = n_hashes // bands
-    sig = df.select(
-        F.col(id_col),
-        minhash_signature_col(text_col, n_hashes=n_hashes, shingle_k=shingle_k).alias(
-            "sig"
-        ),
-    )
-    banded = sig.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        band_key_col(F.col("sig"), b, rows_per_band).alias(
-                            "band_hash"
-                        ),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bh"),
-    ).select(id_col, "bh.band", "bh.band_hash")
-    return _intra_bucket_pairs(
-        banded,
-        ["band", "band_hash"],
-        [id_col],
-        lambda x, y: F.struct(
-            x[id_col].alias("id_a"), y[id_col].alias("id_b")
-        ),
-        lambda p: p["id_a"] < p["id_b"],
-    )
 
 
 def banding_detection_prob(jaccard: float, *, n_hashes: int, bands: int) -> float:
@@ -348,27 +267,19 @@ def banding_detection_prob(jaccard: float, *, n_hashes: int, bands: int) -> floa
     family tracks this closed form within sampling tolerance, so the
     formula is safe to size (n_hashes, bands) with. The dual of
     :func:`~.similarity.srp_collision_prob` for the Jaccard family."""
-    if n_hashes < 1 or bands < 1:
-        # before the divisibility check — `n_hashes % 0` would raise an
-        # opaque ZeroDivisionError instead of naming the bad input
-        raise ValueError(
-            f"n_hashes ({n_hashes}) and bands ({bands}) must be >= 1"
-        )
-    if n_hashes % bands != 0:
-        raise ValueError(
-            f"bands ({bands}) must divide n_hashes ({n_hashes})"
-        )
+    _check_banding(n_hashes, bands)
     j = max(0.0, min(1.0, jaccard))
     return 1.0 - (1.0 - j ** (n_hashes // bands)) ** bands
 
 
 def jaccard_verify_col(sh_a: Column, sh_b: Column) -> Column:
     """Exact Jaccard of two DISTINCT-shingle-hash arrays — the single
-    owner of the verify expression. :func:`near_duplicate_pairs` and
-    the at-rest index probe (``dedup_index.dedup_batch_against_index``)
-    both verify with THIS column so their outputs stay bit-identical
-    (pinned by ``tests/test_dedup_index.py``); a drift between two
-    inline copies would silently break that parity."""
+    owner of the verify expression: the minhash family's ``score``
+    (``dedup_index.MINHASH``), so :func:`near_duplicate_pairs`, the
+    streaming ingest's in-batch pass and the at-rest index probe
+    (``dedup_index.batch_against_index``) all verify with THIS column
+    and their outputs stay bit-identical (pinned by
+    ``tests/test_dedup_index.py``)."""
     inter = F.size(F.array_intersect(sh_a, sh_b))
     union = F.size(F.array_union(sh_a, sh_b))
     return F.when(union == 0, F.lit(0.0)).otherwise(
@@ -532,8 +443,8 @@ def simhash_near_duplicate_pairs(
     ``n_chunks - chunks_per_key`` share at least ``chunks_per_key``
     CLEAN chunks — and with every ``chunks_per_key``-sized chunk
     combination emitted as a bucket key, some key matches exactly.
-    Banding makes the candidate join an equi-join (shuffle on uniform
-    buckets), then ``bit_count`` verifies the full distance ≤
+    Banding makes candidate generation a grouping on equal keys (one
+    shuffle on uniform buckets), then ``bit_count`` verifies the full distance ≤
     ``max_hamming`` (candidates beyond the pigeonhole guarantee may be
     missed — standard recall trade-off).
 
@@ -548,34 +459,26 @@ def simhash_near_duplicate_pairs(
     keeps candidate counts tracking near-duplicate density instead of
     corpus size. Both variants verify identically, so for pairs within
     the WEAKER guarantee the outputs coincide exactly (pinned by
-    differential test)."""
-    sig = df.select(
-        F.col(id_col), simhash_col(text_col, hash_family=hash_family).alias("sh")
-    )
-    # bucket formula owned by simhash_bucket_keys (shared with the
-    # at-rest index — byte-identical routing)
-    keys = simhash_bucket_keys(
-        F.col("sh"), n_chunks=n_chunks, chunks_per_key=chunks_per_key
-    )
-    banded = sig.select(
-        id_col,
-        "sh",
-        F.explode(F.array(*keys)).alias("bucket"),
-    )
-    # intra-bucket pair generation (see _intra_bucket_pairs): ONE
-    # signature computation and ONE shuffle, vs. a self-join that
-    # computes the fingerprint subtree once per side
-    return _intra_bucket_pairs(
-        banded,
-        ["bucket"],
-        [id_col, "sh"],
-        lambda x, y: F.struct(
-            x[id_col].alias("id_a"),
-            y[id_col].alias("id_b"),
-            F.bit_count(x["sh"].bitwiseXOR(y["sh"])).alias("hamming"),
-        ),
-        lambda p: (p["id_a"] < p["id_b"]) & (p["hamming"] <= max_hamming),
-    )
+    differential test).
+
+    The pass is the simhash index family's: ``SIMHASH.project`` at a
+    one-directory geometry (``n_buckets=1``) fingerprints each doc once
+    and explodes its keys (:func:`simhash_bucket_keys`), and
+    ``dedup_index.pairs_from_rows`` verifies every co-bucketed pair
+    inside its bucket — ONE fingerprint computation and ONE shuffle,
+    the same rows the at-rest index and the streaming ingest use."""
+    from .dedup_index import SIMHASH, pairs_from_rows
+
+    meta = {
+        "kind": "simhash",
+        "id_col": id_col,
+        "text_col": text_col,
+        "hash_family": hash_family,
+        "n_chunks": n_chunks,
+        "chunks_per_key": chunks_per_key,
+        "n_buckets": 1,
+    }
+    return pairs_from_rows(SIMHASH.project(df, meta), meta, threshold=max_hamming)
 
 
 def jaccard_pair_join(
@@ -960,42 +863,42 @@ def near_duplicate_pairs(
 ) -> DataFrame:
     """LSH candidates verified by exact n-gram Jaccard >= threshold.
 
-    Each document is shingled ONCE (distinct hashed shingles — the
-    same 64-bit family :func:`jaccard_pair_join` carries, with the
-    same ~2⁻⁶⁴ collision tolerance vs string shingles); candidate
-    pairs then join the precomputed sets and verify with one
-    array-intersect. The earlier formulation joined raw text and
-    re-shingled per PAIR — on a mass-duplicated corpus a text copied
-    m times sits in one LSH bucket and is re-shingled C(m,2)·2 times,
-    which measured 126 s for a 16×-duplicated sf0.1 corpus vs 4.2 s
-    with per-doc shingling (SCALE.md "Shuffle inventory", LSH band
-    join row; ``git show 3b25c0b:scripts/scaling_probe.py``). The
-    hashed-long arrays are also smaller on the wire than the text
-    they replace. (For corpora with heavy exact duplication, still run
-    :func:`exact_dedup_fingerprints` first — it collapses the m copies
-    before any pair is generated.)
+    MinHash signatures split into ``bands`` bands of
+    ``n_hashes // bands`` rows (``bands`` must divide ``n_hashes``, see
+    :func:`_check_banding`); documents sharing any identical band key
+    (:func:`band_key_col`) land in the same bucket. The shuffle key is
+    (band, band key) — uniformly distributed, so no skew; bucket sizes
+    stay tiny for non-pathological corpora.
+
+    The pass is the minhash index family's: ``MINHASH.project`` at a
+    one-directory geometry (``n_buckets=1``) shingles each document
+    ONCE into its distinct hashed shingles (the same 64-bit family
+    :func:`jaccard_pair_join` carries, with the same ~2⁻⁶⁴ collision
+    tolerance vs string shingles) and carries them on every band row,
+    and ``dedup_index.pairs_from_rows`` verifies each co-bucketed pair
+    with one array-intersect INSIDE its bucket — no candidate join
+    followed by a re-join to the shingle sets. An earlier formulation
+    joined raw text and re-shingled per PAIR — on a mass-duplicated
+    corpus a text copied m times sits in one LSH bucket and is
+    re-shingled C(m,2)·2 times, which measured 126 s for a
+    16×-duplicated sf0.1 corpus vs 4.2 s with per-doc shingling
+    (SCALE.md "Shuffle inventory", LSH band join row;
+    ``git show 3b25c0b:scripts/scaling_probe.py``). (For corpora with
+    heavy exact duplication, still run :func:`exact_dedup_fingerprints`
+    first — it collapses the m copies before any pair is generated.)
     """
-    cands = minhash_lsh_candidate_pairs(
-        df,
-        id_col=id_col,
-        text_col=text_col,
-        n_hashes=n_hashes,
-        bands=bands,
-        shingle_k=shingle_k,
-    )
-    sets = df.select(
-        F.col(id_col).alias("_sid"),
-        F.array_distinct(shingle_hash_col(text_col, shingle_k)).alias("_sh"),
-    )
-    sa = sets.select(F.col("_sid").alias("id_a"), F.col("_sh").alias("_sh_a"))
-    sb = sets.select(F.col("_sid").alias("id_b"), F.col("_sh").alias("_sh_b"))
-    jaccard = jaccard_verify_col(F.col("_sh_a"), F.col("_sh_b"))
-    return (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", jaccard.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+    from .dedup_index import MINHASH, pairs_from_rows
+
+    meta = {
+        "kind": "minhash",
+        "id_col": id_col,
+        "text_col": text_col,
+        "n_hashes": n_hashes,
+        "bands": bands,
+        "shingle_k": shingle_k,
+        "n_buckets": 1,
+    }
+    return pairs_from_rows(MINHASH.project(df, meta), meta, threshold=threshold)
 
 
 def passage_dedup(

@@ -14,10 +14,14 @@ Three index kinds share one lifecycle: ``"minhash"`` (Jaccard),
 record holding only what differs — its projection, bucket join keys,
 verify score, ``pb`` routing formula and bucket sizing — and every
 kind-independent step is written once against it:
-:func:`route_append` (append routing), :func:`probe_index_with_rows`
-(the batch probe), :func:`pairs_from_rows` (the in-batch pair pass),
-and, in ``similarity.py``, ``compact_ann_index``. :data:`FAMILIES` is
-the one list of kinds.
+:func:`route_append` (append routing), :func:`batch_against_index` /
+:func:`probe_index_with_rows` (the batch probe), :func:`pairs_from_rows`
+(the in-batch pair pass), and, in ``similarity.py``,
+``compact_ann_index``. :data:`FAMILIES` is the one list of kinds. The
+in-memory near-dup operators are the same code too: each is its
+family's projection at a one-directory geometry (``n_buckets=1``)
+followed by :func:`pairs_from_rows`, so the in-memory, streaming and
+at-rest paths cannot drift apart.
 
 Minhash layout (``write_dedup_index``): one parquet table partitioned
 by ``pb = band · n_buckets + (band_key mod n_buckets)`` — a bounded
@@ -80,7 +84,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import (
-    _intra_bucket_pairs,
+    _check_banding,
     band_key_col,
     jaccard_verify_col,
     minhash_signature_col,
@@ -88,7 +92,6 @@ from .dedup import (
 )
 from .similarity import (
     _commit_index,
-    _require_kind,
     load_ann_meta,
     read_matched_partitions,
 )
@@ -222,13 +225,11 @@ def _banded_rows(
     n_buckets: int,
 ) -> DataFrame:
     """(pb, band, bkey, <id>, sh) rows — bands rows per doc, the shared
-    projection for index build, append routing, and the batch side of
-    the probe. One pass: tokenize/shingle once, signature once."""
+    projection for index build, append routing, the batch side of the
+    probe and the in-memory operator. One pass: tokenize/shingle once,
+    signature once."""
     _require_unreserved(_RESERVED_COLS, "_banded_rows", id_col=id_col)
-    if n_hashes % bands != 0:
-        raise ValueError(
-            f"bands ({bands}) must divide n_hashes ({n_hashes})"
-        )
+    _check_banding(n_hashes, bands)
     rows_per_band = n_hashes // bands
     sig = df.select(
         F.col(id_col),
@@ -276,10 +277,10 @@ def _simhash_rows(
     n_buckets: int,
 ) -> DataFrame:
     """(pb, bucket, <id>, sh) rows — keys_per_doc rows per doc, the
-    shared projection for build, append routing, and the probe's batch
-    side. Fingerprint once, explode the packed keys once. The bucket
-    formula is owned by :func:`~.dedup.simhash_bucket_keys` (byte-
-    identical to the in-memory operator); ``pb`` mixes the packed key
+    shared projection for build, append routing, the probe's batch
+    side and the in-memory operator. Fingerprint once, explode the
+    packed keys once. The bucket formula is owned by
+    :func:`~.dedup.simhash_bucket_keys`; ``pb`` mixes the packed key
     through xxhash64 before the mod because the key's low bits are raw
     chunk bits (a plain mod would route every combo's chunk-value
     residue to the same few directories)."""
@@ -585,12 +586,9 @@ def write_dedup_index(
     # before the auto-sizing count — a reserved id_col must not cost
     # a full corpus scan to discover
     _require_unreserved(_RESERVED_COLS, "write_dedup_index", id_col=id_col)
-    if n_hashes % bands != 0:
-        # validate BEFORE the auto-sizing count — invalid parameters
-        # must not cost a full corpus scan to discover
-        raise ValueError(
-            f"bands ({bands}) must divide n_hashes ({n_hashes})"
-        )
+    # validate BEFORE the auto-sizing count — invalid parameters must
+    # not cost a full corpus scan to discover
+    _check_banding(n_hashes, bands)
     meta = {
         "kind": "minhash",
         "id_col": id_col,
@@ -614,18 +612,46 @@ def batch_against_index(
     path: str,
     *,
     threshold,
-    kind: str | None = None,
     caller: str = "batch_against_index",
     plan_probe: dict | None = None,
 ) -> DataFrame:
-    """The one body of the public ``*_batch_against_index`` probes:
-    load the sidecar (requiring ``kind`` when given), name missing
-    batch columns, resolve/check the threshold against the geometry
-    (:attr:`Family.check_threshold`), pin the batch projection and its
-    bucket set (:func:`pin_rows`) and probe."""
+    """Near-dup pairs between ``batch`` and the indexed corpus, for any
+    near-dup kind — the sidecar decides the family. Returns
+    ``(batch_id, corpus_id, <score_name>)`` with the score passing
+    ``threshold`` (jaccard ≥ for minhash, hamming ≤ for simhash,
+    cosine_sim ≥ for srp, where ``None`` means the sidecar's
+    ``design_threshold``): the cross-set slice of what the kind's
+    in-memory operator emits over corpus ∪ batch at the sidecar's
+    geometry, at O(batch + matched buckets) cost instead of O(corpus).
+    "Fresh" docs for ingest are the batch anti-joined against this
+    result's ``batch_id``.
+
+    Loads the sidecar, names missing batch columns, resolves/checks
+    the threshold against the geometry (:attr:`Family.check_threshold`
+    — a simhash ``max_hamming`` past the pigeonhole guarantee or an
+    srp threshold looser than the design warns), pins the batch
+    projection and its bucket set (:func:`pin_rows`) and probes
+    (:func:`probe_index_with_rows`).
+
+    Batch-size regime (MEASURED, SCALE.md r9 ``--bigprobe``, 1M-doc
+    minhash corpus at the auto 4×256 geometry): a batch of B docs
+    posts ``bands·B`` near-uniform band keys, so the matched-directory
+    fraction is ≈ ``1 − exp(−B/n_buckets)`` — measured 39/1024 dirs at
+    B=10, 323 at B=100, 1002 at B=1000, all 1024 at B=10⁴, walls
+    0.84/1.60/3.58/4.45 s. Partition pruning pays while
+    ``B ≪ n_buckets`` (the daily-increment shape); past
+    :data:`~.similarity.FLAT_READ_CROSSOVER` of the directories the
+    probe reads the index flat (same rows, no per-directory existence
+    check) with a warning naming the regime — split the batch or size
+    ``n_buckets`` above the steady batch size to keep probes pruned.
+    Probe cost stays flat in CORPUS size either way: 100-doc probes
+    measured 1.17/1.32/1.72 s against 5k/150k/1M-doc indexes.
+
+    ``plan_probe`` is a test seam: when a dict is passed, the
+    candidate frame (before the srp vector fetch pins it behind a lazy
+    ``localCheckpoint``) is stored under ``plan_probe["candidates"]``
+    so plan gates can assert the posting scan's ``PartitionFilters``."""
     meta = load_ann_meta(path)
-    if kind is not None:
-        _require_kind(meta, (kind,), caller)
     fam = family(meta, caller)
     _require_columns(batch, meta, "probe")
     threshold = fam.check_threshold(meta, threshold, caller)
@@ -645,51 +671,6 @@ def pin_rows(rows: DataFrame) -> tuple[DataFrame, list[int]]:
 
     pinned, m = observed_checkpoint(rows, "family_rows", pbs=F.collect_set("pb"))
     return pinned, sorted(m["pbs"])
-
-
-def dedup_batch_against_index(
-    spark,
-    batch: DataFrame,
-    path: str,
-    *,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Near-dup pairs between ``batch`` and the indexed corpus.
-
-    Returns ``(batch_id, corpus_id, jaccard)`` with jaccard ≥
-    threshold — the cross-set slice of what
-    :func:`~.dedup.near_duplicate_pairs` would emit over
-    corpus ∪ batch, at O(batch + matched buckets) cost instead of
-    O(corpus). The batch's distinct ``pb`` values (bounded by
-    ``bands × n_buckets``, observed on the projection's pin)
-    become a partition ``isin`` filter, so unmatched corpus
-    directories contribute ZERO I/O. "Fresh" docs for ingest are the
-    batch anti-joined against this result's ``batch_id``.
-
-    Batch-size regime (MEASURED, SCALE.md r9 ``--bigprobe``, 1M-doc
-    corpus at the auto 4×256 geometry): a batch of B docs posts
-    ``bands·B`` near-uniform band keys, so the matched-directory
-    fraction is ≈ ``1 − exp(−B/n_buckets)`` — measured 39/1024 dirs at
-    B=10, 323 at B=100, 1002 at B=1000, all 1024 at B=10⁴, walls
-    0.84/1.60/3.58/4.45 s. Partition pruning pays while
-    ``B ≪ n_buckets`` (the daily-increment shape); at ``B ≳
-    n_buckets`` the probe reads the whole index ONCE — still bounded
-    (4.45 s for 10⁴ docs vs 10⁶-doc corpus here). ENFORCED (r10): past
-    :data:`~.similarity.FLAT_READ_CROSSOVER` of the directories the
-    probe skips the per-directory listing and reads the index flat
-    (same rows, no per-directory existence check) with a warning
-    naming the regime; if that is your steady batch size, split the
-    batch to keep probes pruned or size ``n_buckets`` above the batch
-    size at build time.
-    Probe cost stays flat in CORPUS size either way: 100-doc probes
-    measured 1.17/1.32/1.72 s against 5k/150k/1M-doc indexes (auto
-    geometry growing 4×16 → 4×256 holds rows-behind-matched-dirs
-    bounded).
-    """
-    return batch_against_index(
-        spark, batch, path, threshold=threshold, kind="minhash",
-        caller="dedup_batch_against_index",
-    )
 
 
 def probe_index_with_rows(
@@ -778,7 +759,7 @@ def probe_index_with_rows(
         side(rows, "batch_id", "b")
         .join(side(rel.where(F.col("pb").isin(pbs)), "corpus_id", "c"), list(fam.keys))
         # a re-probed doc whose id already lives in the index would
-        # match its own postings — the in-memory twin over
+        # match its own postings — the in-memory operator over
         # corpus ∪ batch can never emit a self-pair (id_a < id_b), so
         # neither does this probe
         .where(F.col("batch_id") != F.col("corpus_id"))
@@ -798,19 +779,71 @@ def probe_index_with_rows(
     )
 
 
+def _intra_bucket_pairs(
+    rows: DataFrame,
+    bucket_cols: list[str],
+    member_cols: list[str],
+    make_pair,
+    keep,
+) -> DataFrame:
+    """Generate unordered pairs WITHIN hash buckets, bucket-locally.
+
+    ``collect_list`` gathers each bucket's members, sorted by the
+    leading id column, then a nested ``transform`` pairs each member
+    with the members AFTER it — each unordered pair is built and scored
+    once, ``x`` before ``y`` in id order, instead of all m² ordered
+    pairs — and ``keep`` prunes before the explode. Compared to a
+    bucket self-join this computes the upstream (signature) subtree
+    ONCE and shuffles once (measured 8.0s → 2.5s on simhash pairs at
+    sf0.1 — Spark does not share the scan/projection between the two
+    sides of a self-join). Scoring each unordered pair once is what
+    keeps the minhash registry pass, which verifies inside the bucket,
+    at least as fast as the former candidate join + verify re-join:
+    ``near_duplicate_pairs_docs`` at sf0.1, medians over 6 interleaved
+    warm processes on 4 shared cores, 2.88 s for the re-join form,
+    2.81 s over all ordered pairs, 2.55 s over unordered ones.
+
+    Scale note: bucket membership lists must fit in memory — fine for
+    uniform hash buckets; a pathologically hot bucket (mass-duplicated
+    content) should be removed by EXACT dedup first
+    (:func:`~.dedup.exact_dedup_fingerprints`), which collapses
+    identical payloads before any near-dup pass.
+    """
+    ms = F.col("ms")
+    bucketed = rows.groupBy(*bucket_cols).agg(
+        F.sort_array(F.collect_list(F.struct(*member_cols))).alias("ms")
+    )
+    nested = F.filter(
+        F.flatten(
+            F.transform(
+                ms,
+                lambda x, i: F.transform(
+                    F.slice(ms, i + 2, F.size(ms) - i - 1),
+                    lambda y: make_pair(x, y),
+                ),
+            )
+        ),
+        keep,
+    )
+    return (
+        bucketed.select(F.explode(nested).alias("p")).select("p.*").distinct()
+    )
+
+
 def pairs_from_rows(rows: DataFrame, meta: dict, *, threshold) -> DataFrame:
     """Within-set near-dup pairs from a precomputed family projection —
     ``(id_a, id_b, <score_name>)`` with ``id_a < id_b`` and the score
-    passing ``threshold``, identical (as a set) to the kind's in-memory
-    operator over the same docs at the same geometry (pinned by the
-    per-kind index tests): the bucket keys are the same values and the
-    verify is the same score over the same payload, just read from the
-    rows instead of recomputed. This is the streaming ingest loop's
-    in-batch pass (r9): one fingerprint pass feeds in-batch pairing,
-    the index probe, AND the append routing. Verification happens
-    inside the bucket (before the pair explode), so sub-threshold
-    candidates are pruned without a second sets-join. ``meta`` needs
-    only ``kind`` and ``id_col`` (plus ``vec_col`` for srp)."""
+    passing ``threshold``. THE in-batch pair pass of every near-dup
+    kind: the in-memory operators (``dedup.near_duplicate_pairs``,
+    ``dedup.simhash_near_duplicate_pairs``,
+    ``similarity.embedding_near_duplicate_pairs``) are their family's
+    projection at ``n_buckets=1`` followed by this call, and the
+    streaming ingest loop runs it on the micro-batch projection that
+    also feeds the index probe and the append routing (r9: one
+    fingerprint pass). Verification happens inside the bucket (before
+    the pair explode), so sub-threshold candidates are pruned without
+    a second sets-join. ``meta`` needs only ``kind`` and ``id_col``
+    (plus ``vec_col`` for srp)."""
     fam = family(meta)
     id_col = meta["id_col"]
     members = fam.members(meta)
@@ -885,24 +918,3 @@ def write_simhash_index(
     meta["n_buckets"] = int(n_buckets)
     _commit_index(SIMHASH.project(docs, meta), path, meta, files_per_partition)
 
-
-def simhash_batch_against_index(
-    spark,
-    batch: DataFrame,
-    path: str,
-    *,
-    max_hamming: int = 8,
-) -> DataFrame:
-    """Near-dup pairs between ``batch`` and the indexed corpus under
-    Hamming distance — ``(batch_id, corpus_id, hamming)`` with
-    hamming ≤ max_hamming, the cross-set slice of what
-    :func:`~.dedup.simhash_near_duplicate_pairs` emits over
-    corpus ∪ batch (pinned bit-equal), at O(batch + matched buckets)
-    cost. Same partition-pruned matched-directories read, bounded
-    driver collect, self-pair filter, and per-pair dedup as the
-    minhash probe. A ``max_hamming`` beyond the geometry's pigeonhole
-    guarantee warns (pairs past it may be missed by banding)."""
-    return batch_against_index(
-        spark, batch, path, threshold=max_hamming, kind="simhash",
-        caller="simhash_batch_against_index",
-    )

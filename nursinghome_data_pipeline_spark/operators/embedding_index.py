@@ -37,13 +37,25 @@ carry the payload inline — a delta is small and transient, and
 inlining keeps the append a single atomic file; compaction splits it
 into the two roles (:func:`split_row_roles`).
 
-Probe (:func:`embedding_batch_against_index`): bit-identical, as a
-set, to running the in-memory operator over corpus ∪ batch at the
-same (n_planes, n_tables, seed) geometry and keeping the cross pairs
-(pinned by ``tests/test_srp_index.py``) — same
-:func:`~.similarity.lsh_bucket_col` bucket ids, same
+The in-memory operator :func:`~.similarity.embedding_near_duplicate_pairs`
+is this family's projection at a one-directory geometry
+(``n_buckets=1``) followed by the shared in-batch pass
+(``dedup_index.pairs_from_rows``).
+
+Probe (``dedup_index.batch_against_index`` on an srp sidecar):
+bit-identical, as a set, to running the in-memory operator over
+corpus ∪ batch at the same (n_planes, n_tables, seed) geometry and
+keeping the cross pairs (pinned by ``tests/test_srp_index.py``) —
+same :func:`~.similarity.lsh_bucket_structs_col` bucket ids, same
 :func:`~.similarity._cosine_with_norms` verify over the same float32
-arrays and float64 norms.
+arrays and float64 norms. ``threshold=None`` probes at the sidecar's
+``design_threshold``. Batch-size regime (same law as the minhash
+probe, measured in SCALE.md's r9 srp table): a batch of B vectors
+posts ``n_tables·B`` near-uniform keys, so the matched-directory
+fraction per table is ≈ ``1 − exp(−B/n_buckets)`` — at the
+1M-vector auto geometry (256 buckets) a 100-vector batch matched
+813/2,560 dirs, and probe cost stays flat in corpus size (11.2 s at
+1M vs the 969 s in-memory re-bucketing pass it replaces).
 
 Recall contract: the geometry is sized at BUILD time for
 ``design_threshold`` (``n_tables = auto_lsh_tables(n_planes,
@@ -80,7 +92,6 @@ from .dedup_index import (
     Family,
     _require_columns,
     _require_unreserved,
-    batch_against_index,
     side_col,
 )
 from .. import fs
@@ -165,44 +176,31 @@ def _srp_rows(
     n_buckets: int,
 ) -> DataFrame:
     """(pb, tbl, bucket, <id>, <vec>, nrm) rows — ``n_tables`` rows per
-    vector, the shared projection for index build, append routing, and
-    the batch side of the probe. One scan computes every table's
-    bucket id and the norm, then a generator fans each row out to its
-    (tbl, bucket) keys — the same one-scan shape (and the same
-    seed-per-table bucket ids) as the in-memory operator's multi-table
-    path, so index and query always agree on routing."""
+    vector, the shared projection for index build, append routing, the
+    batch side of the probe, and the in-memory operator. One scan
+    computes every table's bucket id (ONE
+    :func:`~.similarity.lsh_bucket_structs_col` expression) and the
+    norm, then a generator fans each row out to its (tbl, bucket)
+    keys."""
     _require_unreserved(_RESERVED_COLS, "_srp_rows", id_col=id_col, vec_col=vec_col)
-    # ALL tables' (tbl, bucket) structs in ONE HOF expression over a
-    # single parsed plane-matrix literal (r13): same bucket ids
-    # bit-for-bit as the former per-table lsh_bucket_col fan-out
-    # (pinned by tests/test_srp_properties.py), ~2x cheaper to
-    # construct and 2-3x cheaper to execute at probe geometry — see
-    # lsh_bucket_structs_col.
     bucket_structs = lsh_bucket_structs_col(
         vec_col, dim=dim, n_planes=n_planes, n_tables=n_tables, seed=seed
     )
     # generator and struct-field access cannot share one select —
-    # explode first, then project the fields (withColumn seam)
-    exploded = (
-        df.select(
-            F.col(id_col),
-            F.col(vec_col),
-            l2_norm_col(vec_col).alias("nrm"),
-            F.explode(bucket_structs).alias("__tb"),
-        )
-        .withColumn("tbl", F.col("__tb.tbl"))
-        .withColumn("bucket", F.col("__tb.bucket"))
-        .drop("__tb")
+    # explode first, then project the fields
+    exploded = df.select(
+        F.col(id_col),
+        F.col(vec_col),
+        l2_norm_col(vec_col).alias("nrm"),
+        F.explode(bucket_structs).alias("__tb"),
     )
+    tbl, bucket = F.col("__tb.tbl"), F.col("__tb.bucket")
     return exploded.select(
-        (
-            F.col("tbl") * n_buckets
-            + F.pmod(F.xxhash64(F.col("bucket")), F.lit(n_buckets))
-        )
+        (tbl * n_buckets + F.pmod(F.xxhash64(bucket), F.lit(n_buckets)))
         .cast("int")
         .alias("pb"),
-        "tbl",
-        "bucket",
+        tbl.alias("tbl"),
+        bucket.alias("bucket"),
         id_col,
         vec_col,
         "nrm",
@@ -315,11 +313,12 @@ def write_srp_index(
     # vector rows have the same rows-per-directory target as one
     # table's postings, so the same formula sizes their directories
     meta["n_buckets"] = meta["n_vec_buckets"] = int(n_buckets)
+    postings = SRP.project(df, meta)
     vectors = df.select(
         F.col(id_col), F.col(vec_col), l2_norm_col(vec_col).alias("nrm")
     )
     _commit_index(
-        _two_roles(SRP.project(df, meta), vectors, meta, int(n_buckets)),
+        _two_roles(postings, vectors, meta, int(n_buckets)),
         path, meta, files_per_partition,
     )
 
@@ -527,52 +526,3 @@ SRP = Family(
     fetch=_fetch_vectors,
 )
 
-
-def embedding_batch_against_index(
-    spark,
-    batch: DataFrame,
-    path: str,
-    *,
-    threshold: float | None = None,
-    plan_probe: dict | None = None,
-) -> DataFrame:
-    """Near-dup pairs between ``batch`` and the indexed corpus under
-    cosine similarity — ``(batch_id, corpus_id, cosine_sim)`` with
-    cosine ≥ threshold, the cross-set slice of what
-    :func:`~.similarity.embedding_near_duplicate_pairs` emits over
-    corpus ∪ batch at the sidecar's geometry (pinned, as a set), at
-    O(batch + matched buckets) cost instead of O(corpus).
-    ``threshold=None`` probes at the sidecar's ``design_threshold``
-    (the boundary the geometry's recall was sized for); an explicit
-    looser threshold warns (see module docstring). Same
-    partition-pruned matched-directories read, bounded driver collect,
-    self-pair filter, and per-pair dedup as the minhash/simhash
-    probes — and the same decontamination-at-rest usage: index the
-    training embeddings once, probe with the benchmark set.
-
-    Batch-size regime (same law as the minhash probe, MEASURED in
-    SCALE.md's r9 srp table): a batch of B vectors posts ``n_tables·B``
-    near-uniform keys, so the matched-directory fraction per table is
-    ≈ ``1 − exp(−B/n_buckets)`` — at the 1M-vector auto geometry
-    (256 buckets) a 100-vector batch matched 813/2,560 dirs; at the
-    100k geometry (32 buckets) the same batch matched 211/224 (pruning
-    gone, probe still bounded at 6.8 s). Probe cost stays flat in
-    CORPUS size either way (11.2 s at 1M vs the 969 s in-memory
-    re-bucketing pass it replaces). ENFORCED (r10): past
-    :data:`~.similarity.FLAT_READ_CROSSOVER` of the directories the
-    probe reads the index flat instead of listing matched dirs (same
-    rows, no per-directory existence check) and warns; split very large batches
-    or size ``n_buckets`` above the steady batch size to keep probes
-    pruned.
-
-    ``plan_probe`` is a test seam: when a dict is passed, the
-    UN-checkpointed candidate frame is stored under
-    ``plan_probe["candidates"]`` so plan gates can assert the posting
-    scan's ``PartitionFilters`` — the candidate-driven fetch pins the
-    bucket join behind a lazy ``localCheckpoint`` (one execution
-    shared by the vec-pb collect and the pair plan), which hides that
-    scan from the FINAL plan."""
-    return batch_against_index(
-        spark, batch, path, threshold=threshold, kind="srp",
-        caller="embedding_batch_against_index", plan_probe=plan_probe,
-    )

@@ -107,7 +107,7 @@ def _cosine_lit(a: Column | str, vals) -> Column:
     for v in fv:
         bb = bb + v * v
     # one parsed array literal (one py4j call), not dim F.lit calls —
-    # same values (the construction-cost pathology lsh_bucket_col
+    # same values (the construction-cost pathology the LSH bucket DSL
     # measured at 5.7 s per 77 folds; an ivf_cell_col over 16 seeds
     # builds 16 of these per call)
     num = dot_product_col(a, F.expr(double_array_sql(fv)))
@@ -161,159 +161,90 @@ def random_projection_buckets(
     probability. ANN query = compute the query's bucket, scan only that
     bucket (+ optional neighboring buckets by Hamming distance) — at
     100 TB this prunes the scan by ~2^n_planes with bucket-partitioned
-    storage.
+    storage. The bucket is table 0 of :func:`lsh_bucket_structs_col`,
+    so a kNN index and a one-table srp index route identically.
     """
-    return df.withColumn(
-        "bucket", lsh_bucket_col(vec_col, dim=dim, n_planes=n_planes, seed=seed)
+    structs = lsh_bucket_structs_col(
+        vec_col, dim=dim, n_planes=n_planes, n_tables=1, seed=seed
     )
-
-
-def lsh_bucket_col(
-    vec_col: str, *, dim: int, n_planes: int, seed: int = 42
-) -> Column:
-    """The sign-projection bucket id as a bare column expression —
-    single owner of the literal-planes fold, shared by
-    :func:`random_projection_buckets`, the multi-table path in
-    :func:`embedding_near_duplicate_pairs`, and the at-rest srp index
-    (``embedding_index._srp_rows``).
-
-    Built as ONE ``F.expr`` SQL parse, not per-plane Column DSL calls:
-    the Catalyst tree is identical (same zip_with/aggregate/CASE
-    nodes, plane values embedded as exact ``repr`` double literals —
-    bit-equality across geometries is pinned by the recall batteries
-    and ``tests/test_srp_properties.py``'s independent reference), but
-    construction cost collapses from one py4j round-trip per
-    sub-expression to one parse. Measured (r9, srp probe profile): a
-    7-table × 11-plane bucket projection cost **5.7 s to CONSTRUCT**
-    through the DSL — the dominant term of the 100-vector index
-    probe's wall, dwarfing the 1.2 s execution — vs **0.01 s** as SQL
-    text. Earlier rejected shapes, measured at the same scale: a
-    fused struct-accumulator fold (InternalRow per element per row)
-    1.9× worse at runtime; fully unrolled getItem·literal chains 4.6×
-    worse at plan time.
-
-    Because the column name is interpolated into SQL text, names
-    containing a backtick are rejected (a backtick would terminate the
-    quoting and corrupt — or inject into — the parsed expression).
-    ``n_planes == 0`` returns a literal 0 bucket (everything in one
-    bucket) rather than emitting an unparseable dangling ``+``."""
-    if "`" in vec_col:
-        raise ValueError(
-            "lsh_bucket_col: vec_col may not contain a backtick "
-            f"(got {vec_col!r}); the name is embedded in SQL text"
-        )
-    if n_planes == 0:
-        return F.lit(0).cast("long")
-    planes = lsh_planes(n_planes, dim, seed)
-    terms = []
-    for i in range(n_planes):
-        # repr() is the shortest round-trip-exact form of an IEEE
-        # double, so the parsed literal is bit-identical to F.lit
-        arr = ", ".join(f"{float(v)!r}D" for v in planes[i])
-        proj = (
-            f"aggregate(zip_with(`{vec_col}`, array({arr}), "
-            f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            f"0.0D, (acc, v) -> acc + v)"
-        )
-        terms.append(f"(CASE WHEN {proj} >= 0 THEN {1 << i}L ELSE 0L END)")
-    return F.expr("CAST(0 AS BIGINT) + " + " + ".join(terms))
+    return df.withColumn("bucket", structs[0]["bucket"])
 
 
 def lsh_bucket_structs_col(
-    vec_col: str,
-    *,
-    dim: int,
-    n_planes: int,
-    n_tables: int,
-    seed: int = 42,
-    tbl_alias: str = "tbl",
+    vec_col: str, *, dim: int, n_planes: int, n_tables: int, seed: int = 42
 ) -> Column:
     """ALL tables' ``(tbl, bucket)`` structs as ONE array expression —
-    the multi-table fan-out's bucket math collapsed into a single
-    higher-order-function tree over one parsed hyperplane-matrix
-    literal (r13, r12 verdict #3).
+    the single owner of the sign-projection bucket math, shared by
+    :func:`random_projection_buckets` (table 0), the in-memory and
+    at-rest srp family (``embedding_index._srp_rows``). Table ``j``
+    uses the planes ``lsh_planes(n_planes, dim, seed + j)``; bucket
+    bit ``i`` is set when the vector's sequential double dot product
+    with plane ``i`` is ``>= 0``.
 
-    The former shape — ``array(struct(j, lsh_bucket_col(seed+j)) for
-    j)`` — built ``n_tables`` independent expression trees, each
-    ``n_planes`` aggregate/zip_with folds plus a CASE-sum chain. At
-    the 10M-probe geometry (15 tables × 18 planes × 64 dims) that tree
-    dominated the probe's fixed cost: measured on this box (warm JVM,
-    2000-row exec), per-table-exprs construct (build+analyze) 1.7-2.9 s
-    and noop-exec 0.6-0.9 s vs **0.1 s build + ~1.1 s analyze and
-    0.27 s exec** for this form — the plane values parse once as one
-    ``array(array(array(...)))`` literal (the same repr-exact doubles),
-    and one ``transform × zip_with × aggregate`` tree walks it.
+    Built as ONE ``F.expr`` SQL parse: the plane values parse once as
+    one ``array(array(array(...)))`` literal of ``repr``-exact doubles
+    (shortest round-trip form, so each parsed literal is bit-identical
+    to ``F.lit``) and one ``transform × zip_with × aggregate`` tree
+    walks it. Construction cost is what decides the shape, measured
+    on the srp probe: per-plane Column DSL trees cost 5.7 s to
+    CONSTRUCT a 7-table × 11-plane projection (r9) and 1.7-2.9 s at
+    15 tables × 18 planes (r13), against ~0.1 s for one parse. A
+    Python-lambda DSL tree over the parsed plane literal still cost
+    0.27 s to build and physically plan at 6 planes × 1 table over the
+    sf0.1 embeddings, against 0.12 s as SQL text (warm, median of 10
+    on 4 shared cores); at 18 planes × 15 tables the two forms
+    measured alike (1.8-2.3 s, dominated by the literal itself).
     (A nested ``F.lit`` was measured 10-14 s to BUILD — PySpark
-    recurses element-wise through py4j — and a 3-D numpy literal is
-    unsupported; the parsed text is the fast path.)
+    recurses element-wise through py4j. Rejected runtime shapes: a
+    fused struct-accumulator fold, 1.9× worse; fully unrolled
+    getItem·literal chains, 4.6× worse at plan time.) Bucket ids are
+    pinned against a pure-Python reference by
+    ``tests/test_srp_properties.py``.
 
-    Bit-equality with the per-table form (exceptAll == 0 both ways,
-    pinned by ``tests/test_srp_properties.py``): identical plane
-    literals (repr round-trip), identical sequential zip_with/aggregate
-    dot fold, identical ``>= 0`` sign rule and ``2^i`` weights summed
-    left-to-right as longs — so indexes built under either expression
-    probe identically under the other.
-
-    ``n_planes == 0`` keeps :func:`lsh_bucket_col`'s contract (bucket
-    0 for every table). Like that function, the plane values live in
-    SQL text; ``vec_col`` does NOT (it resolves via ``F.col``), so any
-    column name is safe here.
-    """
-    if n_planes == 0:
-        return F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias(tbl_alias),
-                    F.lit(0).cast("long").alias("bucket"),
-                )
-                for j in range(n_tables)
-            ]
+    Because the column name is interpolated into SQL text, names
+    containing a backtick are rejected (a backtick would terminate the
+    quoting and corrupt — or inject into — the parsed expression); the
+    lambda variables carry a ``__lsh_`` prefix so no plausible column
+    name is shadowed by them. ``n_planes == 0`` gives bucket 0 in
+    every table (everything in one bucket) rather than an unparseable
+    empty plane literal; ``n_tables < 1`` is rejected, as it would
+    explode an empty key array and silently drop every row."""
+    if "`" in vec_col:
+        raise ValueError(
+            "lsh_bucket_structs_col: vec_col may not contain a backtick "
+            f"(got {vec_col!r}); the name is embedded in SQL text"
         )
-    p3 = [lsh_planes(n_planes, dim, seed + j) for j in range(n_tables)]
-    lit3 = F.expr(
+    if n_tables < 1:
+        raise ValueError(
+            f"n_tables must be >= 1 (got {n_tables}); an empty table set "
+            "would drop every row"
+        )
+    if n_planes == 0:
+        zero = (f"named_struct('tbl', {j}, 'bucket', 0L)" for j in range(n_tables))
+        return F.expr(f"array({', '.join(zero)})")
+    planes = ", ".join(
         "array("
         + ", ".join(
-            "array("
-            + ", ".join(
-                "array("
-                + ", ".join(f"{float(v)!r}D" for v in plane)
-                + ")"
-                for plane in tp
-            )
-            + ")"
-            for tp in p3
+            "array(" + ", ".join(f"{float(v)!r}D" for v in plane) + ")"
+            for plane in lsh_planes(n_planes, dim, seed + j)
         )
         + ")"
+        for j in range(n_tables)
     )
-    weights = F.lit([1 << i for i in range(n_planes)]).cast("array<bigint>")
-    v = F.col(vec_col)
-
-    def dot(plane: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(
-                v, plane, lambda x, y: x.cast("double") * y.cast("double")
-            ),
-            F.lit(0.0),
-            lambda acc, val: acc + val,
-        )
-
-    def bucket(tp: Column) -> Column:
-        terms = F.zip_with(
-            tp,
-            weights,
-            lambda plane, w: F.when(dot(plane) >= 0, w).otherwise(
-                F.lit(0).cast("long")
-            ),
-        )
-        return F.aggregate(
-            terms, F.lit(0).cast("long"), lambda acc, val: acc + val
-        )
-
-    return F.transform(
-        lit3,
-        lambda tp, j: F.struct(
-            j.alias(tbl_alias), bucket(tp).alias("bucket")
-        ),
+    weights = ", ".join(f"{1 << i}L" for i in range(n_planes))
+    dot = (
+        f"aggregate(zip_with(`{vec_col}`, __lsh_p, "
+        "(__lsh_x, __lsh_y) -> CAST(__lsh_x AS DOUBLE) * CAST(__lsh_y AS DOUBLE)), "
+        "0.0D, (__lsh_acc, __lsh_v) -> __lsh_acc + __lsh_v)"
+    )
+    bucket = (
+        f"aggregate(zip_with(__lsh_tp, array({weights}), "
+        f"(__lsh_p, __lsh_w) -> CASE WHEN {dot} >= 0 THEN __lsh_w ELSE 0L END), "
+        "0L, (__lsh_acc, __lsh_v) -> __lsh_acc + __lsh_v)"
+    )
+    return F.expr(
+        f"transform(array({planes}), (__lsh_tp, __lsh_j) -> "
+        f"named_struct('tbl', __lsh_j, 'bucket', {bucket}))"
     )
 
 
@@ -392,11 +323,11 @@ def embedding_near_duplicate_pairs(
     n_rows: int | None = None,
     seed: int = 42,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs via LSH bucket self-join.
+    """Embedding-cosine near-dup pairs via sign-projection LSH buckets.
 
     Vectors in the same sign-projection bucket are scored exactly;
-    pairs with cosine >= threshold survive. The self-join shuffles on
-    the bucket id (2^n_planes uniform buckets), never all-pairs.
+    pairs with cosine >= threshold survive. The one shuffle is on the
+    bucket id (2^n_planes uniform buckets), never all-pairs.
 
     ``n_planes="auto"`` sizes the bucket space from the corpus size
     (:func:`auto_lsh_planes`: one plane per doubling past
@@ -419,85 +350,40 @@ def embedding_near_duplicate_pairs(
     measured against a planted ground truth in
     ``tests/test_embedding_recall.py`` and tabulated in SCALE.md.
 
-    ``n_tables=1`` (default) is bit-identical to the historical
-    single-table plan — the frozen registry oracle twin pins that path.
-    Multi-table computes all ``t`` bucket ids in ONE projection over a
-    single scan, explodes to (table, bucket) keys, and pairs within
-    them; cross-table duplicate candidates collapse in the existing
-    pair-level ``.distinct()`` (identical (id_a, id_b, cosine) rows —
-    same deterministic expression on the same inputs).
+    The pass is the srp index family's: ``SRP.project`` at a
+    one-directory geometry (``n_buckets=1``) routes every vector to its
+    ``t`` (table, bucket) keys in ONE projection over a single scan,
+    with the norm folded once per vector, and
+    ``dedup_index.pairs_from_rows`` scores each co-bucketed pair inside
+    its bucket — the same rows and the same verify the at-rest index
+    and the streaming ingest use. Cross-table duplicate candidates
+    collapse in its pair-level ``.distinct()`` (identical
+    (id_a, id_b, cosine) rows — same deterministic expression on the
+    same inputs).
     """
-    from .dedup import _intra_bucket_pairs
+    from .dedup_index import pairs_from_rows
+    from .embedding_index import SRP
 
     if n_planes == "auto" or n_tables == "auto":
         if n_rows is None:
             n_rows = df.count()
     if n_planes == "auto":
         n_planes = auto_lsh_planes(n_rows, target_bucket_pop=target_bucket_pop)
-    n_planes = int(n_planes)
     if n_tables == "auto":
         n_tables = auto_lsh_tables(
-            n_planes, threshold, recall_target=recall_target
+            int(n_planes), threshold, recall_target=recall_target
         )
-    n_tables = int(n_tables)
-
-    # norms fold once per MEMBER here, before collect_list — inside
-    # make_pair they'd fold once per PAIR (O(m²) per bucket)
-    if n_tables == 1:
-        bucketed = random_projection_buckets(
-            df, vec_col=vec_col, dim=dim, n_planes=n_planes, seed=seed
-        ).select(
-            F.col(id_col),
-            F.col(vec_col),
-            l2_norm_col(vec_col).alias("__nrm"),
-            F.col("bucket"),
-        )
-        keys = ["bucket"]
-    else:
-        # one scan computes every table's bucket id, then a generator
-        # fans each row out to its t (table, bucket) keys — the
-        # upstream scan/norm is shared across tables, unlike a
-        # t-way union of per-table projections. All tables' structs
-        # come from ONE HOF expression over a single parsed plane
-        # literal (r13, bit-equal to the per-table fan-out — see
-        # lsh_bucket_structs_col), so this stays in lockstep with the
-        # at-rest index's _srp_rows routing.
-        bucket_structs = lsh_bucket_structs_col(
-            vec_col,
-            dim=dim,
-            n_planes=n_planes,
-            n_tables=n_tables,
-            seed=seed,
-            tbl_alias="__tbl",
-        )
-        # generator and struct-field access cannot share one select —
-        # explode first, then project the fields (withColumn seam)
-        bucketed = (
-            df.select(
-                F.col(id_col),
-                F.col(vec_col),
-                l2_norm_col(vec_col).alias("__nrm"),
-                F.explode(bucket_structs).alias("__tb"),
-            )
-            .withColumn("__tbl", F.col("__tb.__tbl"))
-            .withColumn("bucket", F.col("__tb.bucket"))
-            .drop("__tb")
-        )
-        keys = ["__tbl", "bucket"]
-    pairs = _intra_bucket_pairs(
-        bucketed,
-        keys,
-        [id_col, vec_col, "__nrm"],
-        lambda x, y: F.struct(
-            x[id_col].alias("id_a"),
-            y[id_col].alias("id_b"),
-            _cosine_with_norms(
-                x[vec_col], y[vec_col], x["__nrm"], y["__nrm"]
-            ).alias("cosine_sim"),
-        ),
-        lambda p: p["id_a"] < p["id_b"],
-    )
-    return pairs.where(F.col("cosine_sim") >= threshold)
+    meta = {
+        "kind": "srp",
+        "id_col": id_col,
+        "vec_col": vec_col,
+        "dim": dim,
+        "n_planes": int(n_planes),
+        "n_tables": int(n_tables),
+        "seed": seed,
+        "n_buckets": 1,
+    }
+    return pairs_from_rows(SRP.project(df, meta), meta, threshold=threshold)
 
 
 def fixed_ivf_seeds(

@@ -191,8 +191,8 @@ def streaming_dedup_ingest(
     def _payload_col(meta: dict) -> str:
         col = meta[family(meta).payload_key]
         if "`" in col:
-            # the srp zero-norm bypass (and lsh_bucket_col beneath the
-            # projection) embed the column name in SQL text
+            # the srp zero-norm bypass (and lsh_bucket_structs_col
+            # beneath the projection) embed the column name in SQL text
             raise ValueError(
                 "streaming_dedup_ingest: the sidecar's payload column "
                 f"may not contain a backtick (got {col!r})"

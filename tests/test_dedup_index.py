@@ -1,5 +1,5 @@
 """At-rest near-dup index (operators/dedup_index.py): the batch probe
-must be BIT-IDENTICAL to the in-memory near_duplicate_pairs run over
+must be BIT-IDENTICAL to an in-memory near-dup pass run over
 corpus ∪ batch restricted to cross pairs; the scan must prune at file
 level; and the minhash kind must ride the shared append/compact
 lifecycle exactly like the ANN kinds."""
@@ -13,7 +13,7 @@ from nursinghome_data_pipeline_spark.operators.dedup import (
     near_duplicate_pairs,
 )
 from nursinghome_data_pipeline_spark.operators.dedup_index import (
-    dedup_batch_against_index,
+    batch_against_index,
     write_dedup_index,
 )
 from nursinghome_data_pipeline_spark.operators.similarity import (
@@ -23,6 +23,8 @@ from nursinghome_data_pipeline_spark.operators.similarity import (
     load_ann_meta,
 )
 from nursinghome_data_pipeline_spark.sources.tpch import load_tables
+
+from .near_dup_oracles import minhash_pairs
 
 #: loose threshold so the synthetic corpus yields a non-empty verify —
 #: the docs table has templated text with plenty of moderate overlaps
@@ -42,9 +44,9 @@ def _split(docs):
 
 
 def _cross_twin(docs, threshold):
-    """In-memory oracle: near_duplicate_pairs over ALL docs, keep only
-    (corpus, batch) pairs, normalized to (batch_id, corpus_id)."""
-    pairs = near_duplicate_pairs(docs, threshold=threshold)
+    """In-memory oracle: the test-side minhash pass over ALL docs, keep
+    only (corpus, batch) pairs, normalized to (batch_id, corpus_id)."""
+    pairs = minhash_pairs(docs, threshold=threshold)
     a_is_batch = F.col("id_a") % 10 == 9
     b_is_batch = F.col("id_b") % 10 == 9
     return (
@@ -71,8 +73,9 @@ def test_pairs_from_banded_rows_equals_in_memory_operator(spark, sf_dir):
     """r9 shared-projection pin: the ingest loop's in-batch pass reads
     a precomputed ``_banded_rows`` projection instead of re-
     fingerprinting; its pair set (ids AND bit-equal jaccard doubles)
-    must be IDENTICAL to ``near_duplicate_pairs`` over the same docs
-    at the same geometry."""
+    must be IDENTICAL to the test-side oracle's over the same docs at
+    the same geometry — and so must ``near_duplicate_pairs``, which is
+    that pass over a one-directory projection."""
     from nursinghome_data_pipeline_spark.operators.dedup_index import (
         _banded_rows,
         pairs_from_rows,
@@ -91,10 +94,14 @@ def test_pairs_from_banded_rows_equals_in_memory_operator(spark, sf_dir):
     )
     want = sorted(
         (r["id_a"], r["id_b"], r["jaccard"])
-        for r in near_duplicate_pairs(docs, threshold=THRESHOLD).collect()
+        for r in minhash_pairs(docs, threshold=THRESHOLD).collect()
     )
     assert got == want
     assert got, "empty pair set proves nothing — lower THRESHOLD"
+    assert sorted(
+        (r["id_a"], r["id_b"], r["jaccard"])
+        for r in near_duplicate_pairs(docs, threshold=THRESHOLD).collect()
+    ) == want
 
 
 def test_probe_equals_in_memory_cross_pairs(spark, sf_dir, tmp_path):
@@ -104,7 +111,7 @@ def test_probe_equals_in_memory_cross_pairs(spark, sf_dir, tmp_path):
     corpus, batch = _split(docs)
     path = str(tmp_path / "dedup_index")
     write_dedup_index(corpus, path)
-    got = dedup_batch_against_index(spark, batch, path, threshold=THRESHOLD)
+    got = batch_against_index(spark, batch, path, threshold=THRESHOLD)
     want = _cross_twin(docs, THRESHOLD)
     gr, wr = _rows(got), _rows(want)
     assert gr == wr
@@ -127,7 +134,7 @@ def test_probe_prunes_at_file_level(spark, sf_dir, tmp_path):
     batch = docs.where(F.col("doc_id") == 9)
     path = str(tmp_path / "dedup_index")
     write_dedup_index(corpus, path)
-    out = dedup_batch_against_index(spark, batch, path, threshold=0.0)
+    out = batch_against_index(spark, batch, path, threshold=0.0)
     plan = formatted_plan(out)
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert pf and "pb" in pf[0], plan
@@ -172,8 +179,8 @@ def test_append_equals_full_rebuild(spark, sf_dir, tmp_path):
     write_dedup_index(first, inc)
     append_to_ann_index(second, inc)
     write_dedup_index(corpus, full)
-    got = _rows(dedup_batch_against_index(spark, batch, inc, threshold=THRESHOLD))
-    want = _rows(dedup_batch_against_index(spark, batch, full, threshold=THRESHOLD))
+    got = _rows(batch_against_index(spark, batch, inc, threshold=THRESHOLD))
+    want = _rows(batch_against_index(spark, batch, full, threshold=THRESHOLD))
     assert got == want and got
 
 
@@ -228,14 +235,14 @@ def test_compact_preserves_probe_and_sidecar(spark, sf_dir, tmp_path):
     write_dedup_index(corpus, path)
     append_to_ann_index(batch.limit(0), path)  # no-op append is legal
     before = _rows(
-        dedup_batch_against_index(spark, batch, path, threshold=THRESHOLD)
+        batch_against_index(spark, batch, path, threshold=THRESHOLD)
     )
     meta_before = load_ann_meta(path)
     n_files = compact_ann_index(spark, path, files_per_partition=1)
     assert n_files > 0
     assert load_ann_meta(path) == meta_before
     after = _rows(
-        dedup_batch_against_index(spark, batch, path, threshold=THRESHOLD)
+        batch_against_index(spark, batch, path, threshold=THRESHOLD)
     )
     assert before == after and before
 
@@ -249,7 +256,7 @@ def test_reprobe_of_indexed_doc_emits_no_self_pair(spark, sf_dir, tmp_path):
     path = str(tmp_path / "dedup_index")
     write_dedup_index(corpus, path)
     reprobe = corpus.limit(5)
-    pairs = dedup_batch_against_index(spark, reprobe, path, threshold=0.99)
+    pairs = batch_against_index(spark, reprobe, path, threshold=0.99)
     assert all(r["batch_id"] != r["corpus_id"] for r in pairs.collect())
 
 
@@ -278,10 +285,10 @@ def test_auto_bucket_sizing_pinned_and_equals_explicit(spark, sf_dir, tmp_path):
     write_dedup_index(corpus, p_docs, n_docs=n)
     write_dedup_index(corpus, p_expl, n_buckets=auto_dedup_buckets(n))
     assert load_ann_meta(p_auto) == load_ann_meta(p_expl) == load_ann_meta(p_docs)
-    want = _rows(dedup_batch_against_index(spark, batch, p_expl, threshold=THRESHOLD))
+    want = _rows(batch_against_index(spark, batch, p_expl, threshold=THRESHOLD))
     assert want
     for p in (p_auto, p_docs):
-        assert _rows(dedup_batch_against_index(spark, batch, p, threshold=THRESHOLD)) == want
+        assert _rows(batch_against_index(spark, batch, p, threshold=THRESHOLD)) == want
 
 
 def test_probe_kind_mismatch_names_the_right_probe(spark, sf_dir, tmp_path):
@@ -294,8 +301,8 @@ def test_probe_kind_mismatch_names_the_right_probe(spark, sf_dir, tmp_path):
     path = str(tmp_path / "ivf")
     write_ivf_index(emb, path, fixed_ivf_seeds(emb, n_seeds=4))
     docs = _docs(spark, sf_dir)
-    with pytest.raises(ValueError, match="minhash.*kind='ivf'"):
-        dedup_batch_against_index(spark, docs.limit(1), path)
+    with pytest.raises(ValueError, match="kind='ivf'.*'minhash'"):
+        batch_against_index(spark, docs.limit(1), path, threshold=0.8)
 
 
 def test_reserved_id_col_rejected(spark):
@@ -411,13 +418,13 @@ def test_regeometry_compaction_matches_fresh_rebuild(spark, sf_dir, tmp_path):
 
     pk = lambda r: (r["batch_id"], r["corpus_id"], r["jaccard"])  # noqa: E731
     got = sorted(
-        dedup_batch_against_index(
+        batch_against_index(
             spark, batch, grown, threshold=THRESHOLD
         ).collect(),
         key=pk,
     )
     want = sorted(
-        dedup_batch_against_index(
+        batch_against_index(
             spark, batch, fresh, threshold=THRESHOLD
         ).collect(),
         key=pk,
@@ -455,7 +462,7 @@ def test_flat_read_crossover_both_sides(spark, sf_dir, tmp_path):
     write_dedup_index(corpus, path, n_buckets=2)
     with pytest.warns(UserWarning, match="pruning crossover"):
         flat = _rows(
-            dedup_batch_against_index(spark, batch, path, threshold=THRESHOLD)
+            batch_against_index(spark, batch, path, threshold=THRESHOLD)
         )
     assert flat == _rows(_cross_twin(docs, THRESHOLD))
     # big geometry: same corpus, 4 x 4096 dirs — a one-doc batch
@@ -465,7 +472,7 @@ def test_flat_read_crossover_both_sides(spark, sf_dir, tmp_path):
     one = batch.orderBy("doc_id").limit(1)
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        dedup_batch_against_index(
+        batch_against_index(
             spark, one, wide, threshold=THRESHOLD
         ).collect()
 
@@ -584,7 +591,7 @@ def test_empty_batch_probe_returns_typed_empty_frame(spark, tmp_path):
     path = str(tmp_path / "idx")
     write_dedup_index(corpus, path, n_buckets=4)
     empty = spark.createDataFrame([], "doc_id long, text string")
-    out = dedup_batch_against_index(spark, empty, path, threshold=0.5)
+    out = batch_against_index(spark, empty, path, threshold=0.5)
     assert out.schema.simpleString() == (
         "struct<batch_id:bigint,corpus_id:bigint,jaccard:double>"
     )

@@ -268,18 +268,23 @@ def test_prefix_filter_join_equals_all_pairs_jaccard(spark):
 
 @pytest.mark.xfail(
     strict=True,
-    reason="two NULL texts share the all-zero shingle hash and pair at "
-    "J = 1.0; the DuckDB oracle gives them empty sets and no pair",
+    reason="two NULL texts, or two empty texts, share the all-zero "
+    "shingle hash (and the same fingerprint) and pair at J = 1.0 / "
+    "Hamming 0; the DuckDB oracle gives them empty sets and no pair",
 )
-def test_null_texts_do_not_pair(spark):
-    from nursinghome_data_pipeline_spark.operators.dedup import (
-        jaccard_pair_join,
-    )
+@pytest.mark.parametrize("text", [None, ""], ids=["null", "empty"])
+@pytest.mark.parametrize(
+    "operator",
+    ["jaccard_pair_join", "near_duplicate_pairs", "simhash_near_duplicate_pairs"],
+)
+def test_null_texts_do_not_pair(spark, operator, text):
+    from nursinghome_data_pipeline_spark.operators import dedup
 
     docs = spark.createDataFrame(
-        [(1, None), (2, None), (3, "a b c")], "doc_id long, text string"
+        [(1, text), (2, text), (3, "a b c")], "doc_id long, text string"
     )
-    assert jaccard_pair_join(docs, threshold=0.5).count() == 0
+    kwargs = {} if operator == "simhash_near_duplicate_pairs" else {"threshold": 0.5}
+    assert getattr(dedup, operator)(docs, **kwargs).count() == 0
 
 
 def test_simhash_pair_chunk_keys_match_single_chunk_at_shared_guarantee(spark):

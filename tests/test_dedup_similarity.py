@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from nursinghome_data_pipeline_spark.operators.dedup import (
     exact_dedup,
     exact_dedup_fingerprints,
-    minhash_lsh_candidate_pairs,
     near_duplicate_pairs,
 )
 from nursinghome_data_pipeline_spark.operators.similarity import (
@@ -17,6 +16,8 @@ from nursinghome_data_pipeline_spark.operators.similarity import (
     knn_brute_force,
     knn_lsh,
 )
+
+from .near_dup_oracles import minhash_candidate_pairs
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -49,7 +50,7 @@ def test_exact_dedup(docs):
 def test_lsh_candidates_and_verify(docs):
     cands = {
         (r.id_a, r.id_b)
-        for r in minhash_lsh_candidate_pairs(docs).collect()
+        for r in minhash_candidate_pairs(docs).collect()
     }
     assert (0, 1) in cands  # exact dup always collides
     verified = {
@@ -499,15 +500,20 @@ def test_star_cc_matches_label_propagation_on_clusters(spark):
 
 
 def test_lsh_bands_must_divide_n_hashes(spark):
-    import pytest
-
-    from nursinghome_data_pipeline_spark.operators.dedup import (
-        minhash_lsh_candidate_pairs,
+    from nursinghome_data_pipeline_spark.operators.dedup_index import (
+        write_dedup_index,
     )
 
     docs = spark.createDataFrame([(1, "a b c"), (2, "a b c")], "doc_id long, text string")
     with pytest.raises(ValueError, match="must divide n_hashes"):
-        minhash_lsh_candidate_pairs(docs, n_hashes=16, bands=5)
+        near_duplicate_pairs(docs, n_hashes=16, bands=5)
+    # a non-positive band count is named, not a ZeroDivisionError from
+    # the divisibility check
+    for bands in (0, -4):
+        with pytest.raises(ValueError, match="bands must be >= 1"):
+            near_duplicate_pairs(docs, n_hashes=16, bands=bands)
+        with pytest.raises(ValueError, match="bands must be >= 1"):
+            write_dedup_index(docs, "/tmp/never-written", bands=bands)
 
 
 def test_zero_norm_embedding_scores_null_not_nan(spark):
@@ -682,20 +688,26 @@ def test_knn_lsh_dataframe_query_contract_lazy_path(spark, sf_dir):
     assert knn_lsh(emb, empty, k=3, dim=64, n_planes=3).count() == 0
 
 
-def test_lsh_bucket_col_backtick_rejected_and_zero_planes_literal(spark):
+def test_lsh_bucket_structs_col_backtick_rejected_and_zero_planes_literal(spark):
     """r10 (ADVICE): the bucket expression embeds vec_col in SQL text,
     so backticked names must reject (injection/corruption guard), and
-    n_planes=0 must return a literal 0 bucket instead of emitting an
-    unparseable dangling '+'."""
+    n_planes=0 must return a literal 0 bucket instead of an unparseable
+    empty plane literal."""
     from nursinghome_data_pipeline_spark.operators.similarity import (
-        lsh_bucket_col,
+        lsh_bucket_structs_col,
+        random_projection_buckets,
     )
 
     with pytest.raises(ValueError, match="backtick"):
-        lsh_bucket_col("emb`x", dim=4, n_planes=2)
-    df = spark.createDataFrame(
-        [(1, [1.0, -2.0]), (2, [0.5, 3.0])], "id long, emb array<double>"
-    ).withColumn("bucket", lsh_bucket_col("emb", dim=2, n_planes=0))
+        lsh_bucket_structs_col("emb`x", dim=4, n_planes=2, n_tables=1)
+    df = random_projection_buckets(
+        spark.createDataFrame(
+            [(1, [1.0, -2.0]), (2, [0.5, 3.0])], "id long, emb array<double>"
+        ),
+        vec_col="emb",
+        dim=2,
+        n_planes=0,
+    )
     rows = df.select("id", "bucket").collect()
     assert {(r["id"], r["bucket"]) for r in rows} == {(1, 0), (2, 0)}
     assert dict(df.dtypes)["bucket"] == "bigint"

@@ -102,8 +102,10 @@ def test_index_lifecycle_over_file_uri(spark, sf_dir, tmp_path, kind):
     if kind == "srp":
         import numpy as np
 
+        from nursinghome_data_pipeline_spark.operators.dedup_index import (
+            batch_against_index,
+        )
         from nursinghome_data_pipeline_spark.operators.embedding_index import (
-            embedding_batch_against_index,
             write_srp_index,
         )
 
@@ -154,7 +156,7 @@ def test_index_lifecycle_over_file_uri(spark, sf_dir, tmp_path, kind):
         def run_probe(path):
             return {
                 (r["batch_id"], r["corpus_id"], r["cosine_sim"])
-                for r in embedding_batch_against_index(
+                for r in batch_against_index(
                     spark, probe, path, threshold=0.9
                 ).collect()
             }
@@ -164,7 +166,7 @@ def test_index_lifecycle_over_file_uri(spark, sf_dir, tmp_path, kind):
         corpus, appended, probe = _split3(docs)
         if kind == "minhash":
             from nursinghome_data_pipeline_spark.operators.dedup_index import (
-                dedup_batch_against_index,
+                batch_against_index,
                 write_dedup_index,
             )
 
@@ -174,14 +176,14 @@ def test_index_lifecycle_over_file_uri(spark, sf_dir, tmp_path, kind):
             def run_probe(path):
                 return {
                     (r["batch_id"], r["corpus_id"], r["jaccard"])
-                    for r in dedup_batch_against_index(
+                    for r in batch_against_index(
                         spark, probe, path, threshold=0.35
                     ).collect()
                 }
 
         else:
             from nursinghome_data_pipeline_spark.operators.dedup_index import (
-                simhash_batch_against_index,
+                batch_against_index,
                 write_simhash_index,
             )
 
@@ -193,8 +195,8 @@ def test_index_lifecycle_over_file_uri(spark, sf_dir, tmp_path, kind):
             def run_probe(path):
                 return {
                     (r["batch_id"], r["corpus_id"], r["hamming"])
-                    for r in simhash_batch_against_index(
-                        spark, probe, path, max_hamming=20
+                    for r in batch_against_index(
+                        spark, probe, path, threshold=20
                     ).collect()
                 }
 

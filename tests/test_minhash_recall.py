@@ -5,7 +5,7 @@ proved the all-bands-miss edge is real (a 0.9-Jaccard variant can
 deterministically miss all 4 bands at 16 hashes). Here recall is
 MEASURED over planted pairs with analytically exact Jaccard — for both
 the in-memory operator (``near_duplicate_pairs``) and the at-rest
-index probe (``dedup_batch_against_index``) — and pinned against
+index probe (``batch_against_index``) — and pinned against
 ``banding_detection_prob`` within binomial sampling tolerance, the
 mirror of ``test_embedding_recall.test_planted_recall_matches_srp_prediction``."""
 
@@ -23,7 +23,7 @@ from nursinghome_data_pipeline_spark.operators.dedup import (
     shingle_hash_col,
 )
 from nursinghome_data_pipeline_spark.operators.dedup_index import (
-    dedup_batch_against_index,
+    batch_against_index,
     write_dedup_index,
 )
 
@@ -152,7 +152,7 @@ def test_index_probe_recall_equals_in_memory(spark, tmp_path):
     write_dedup_index(bases, path, n_hashes=16, bands=4)
     probe = {
         (min(r["batch_id"], r["corpus_id"]), max(r["batch_id"], r["corpus_id"]))
-        for r in dedup_batch_against_index(
+        for r in batch_against_index(
             spark, variants, path, threshold=_THRESHOLD
         ).collect()
     }

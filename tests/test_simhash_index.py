@@ -1,5 +1,5 @@
 """At-rest SimHash index (r8): the batch probe must be BIT-IDENTICAL
-to the in-memory simhash_near_duplicate_pairs run over corpus ∪ batch
+to an in-memory simhash pair pass run over corpus ∪ batch
 restricted to cross pairs; it must ride the shared
 append/compact/regeometry lifecycle; and the scan must prune at file
 level — the same contract battery the minhash index carries."""
@@ -13,7 +13,7 @@ from nursinghome_data_pipeline_spark.operators.dedup import (
     simhash_near_duplicate_pairs,
 )
 from nursinghome_data_pipeline_spark.operators.dedup_index import (
-    simhash_batch_against_index,
+    batch_against_index,
     simhash_keys_per_doc,
     write_simhash_index,
 )
@@ -24,6 +24,8 @@ from nursinghome_data_pipeline_spark.operators.similarity import (
     load_ann_meta,
 )
 from nursinghome_data_pipeline_spark.sources.tpch import load_tables
+
+from .near_dup_oracles import simhash_pairs
 
 #: loose enough that the templated synthetic docs yield cross matches
 MAX_HAMMING = 20
@@ -46,7 +48,7 @@ def _split(docs):
 
 
 def _cross_twin(docs):
-    pairs = simhash_near_duplicate_pairs(
+    pairs = simhash_pairs(
         docs, max_hamming=MAX_HAMMING, **GEO
     )
     a_is_batch = F.col("id_a") % 10 == 9
@@ -80,11 +82,11 @@ def test_batch_probe_warns_beyond_pigeonhole_guarantee(spark, tmp_path):
     path = str(tmp_path / "sh")
     write_simhash_index(docs, path, n_buckets=16, **GEO)
     with pytest.warns(UserWarning, match="pigeonhole guarantee"):
-        simhash_batch_against_index(spark, docs, path, max_hamming=8)
+        batch_against_index(spark, docs, path, threshold=8)
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         warnings.filterwarnings("ignore", message=".*pruning crossover.*")
-        simhash_batch_against_index(spark, docs, path, max_hamming=3)
+        batch_against_index(spark, docs, path, threshold=3)
 
 
 def test_probe_equals_in_memory_cross_pairs(spark, sf_dir, tmp_path):
@@ -93,8 +95,8 @@ def test_probe_equals_in_memory_cross_pairs(spark, sf_dir, tmp_path):
     path = str(tmp_path / "sh_idx")
     write_simhash_index(corpus, path, **GEO)
     got = _pairs(
-        simhash_batch_against_index(
-            spark, batch, path, max_hamming=MAX_HAMMING
+        batch_against_index(
+            spark, batch, path, threshold=MAX_HAMMING
         )
     )
     want = _pairs(_cross_twin(docs))
@@ -105,8 +107,9 @@ def test_probe_equals_in_memory_cross_pairs(spark, sf_dir, tmp_path):
 def test_pairs_from_simhash_rows_equals_in_memory_operator(spark, sf_dir):
     """r9 shared-projection pin (Hamming twin of the minhash test):
     pairing a precomputed ``_simhash_rows`` projection must emit the
-    SAME pair set as ``simhash_near_duplicate_pairs`` at the same
-    geometry."""
+    SAME pair set as the test-side oracle at the same geometry — and so
+    must ``simhash_near_duplicate_pairs``, which is that pass over a
+    one-directory projection."""
     from nursinghome_data_pipeline_spark.operators.dedup_index import (
         _simhash_rows,
         pairs_from_rows,
@@ -125,12 +128,16 @@ def test_pairs_from_simhash_rows_equals_in_memory_operator(spark, sf_dir):
     )
     want = sorted(
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in simhash_near_duplicate_pairs(
-            docs, max_hamming=MAX_HAMMING, **GEO
-        ).collect()
+        for r in simhash_pairs(docs, max_hamming=MAX_HAMMING, **GEO).collect()
     )
     assert got == want
     assert got, "empty pair set proves nothing at this SF"
+    assert sorted(
+        (r["id_a"], r["id_b"], r["hamming"])
+        for r in simhash_near_duplicate_pairs(
+            docs, max_hamming=MAX_HAMMING, **GEO
+        ).collect()
+    ) == want
 
 
 def test_single_chunk_geometry_also_matches(spark, sf_dir, tmp_path):
@@ -143,11 +150,11 @@ def test_single_chunk_geometry_also_matches(spark, sf_dir, tmp_path):
         corpus, path, n_chunks=4, chunks_per_key=1, n_buckets=32
     )
     got = _pairs(
-        simhash_batch_against_index(
-            spark, batch, path, max_hamming=MAX_HAMMING
+        batch_against_index(
+            spark, batch, path, threshold=MAX_HAMMING
         )
     )
-    pairs = simhash_near_duplicate_pairs(
+    pairs = simhash_pairs(
         docs, max_hamming=MAX_HAMMING, n_chunks=4, chunks_per_key=1
     )
     a_is_batch = F.col("id_a") % 10 == 9
@@ -180,13 +187,13 @@ def test_append_then_probe_equals_full_rebuild(spark, sf_dir, tmp_path):
     full = str(tmp_path / "full")
     write_simhash_index(corpus, full, **GEO)
     g = _pairs(
-        simhash_batch_against_index(
-            spark, batch, grown, max_hamming=MAX_HAMMING
+        batch_against_index(
+            spark, batch, grown, threshold=MAX_HAMMING
         )
     )
     f = _pairs(
-        simhash_batch_against_index(
-            spark, batch, full, max_hamming=MAX_HAMMING
+        batch_against_index(
+            spark, batch, full, threshold=MAX_HAMMING
         )
     )
     assert g == f and g
@@ -218,13 +225,13 @@ def test_regeometry_compaction_matches_fresh_rebuild(spark, sf_dir, tmp_path):
     )
     assert rows(grown) == rows(fresh)
     g = _pairs(
-        simhash_batch_against_index(
-            spark, batch, grown, max_hamming=MAX_HAMMING
+        batch_against_index(
+            spark, batch, grown, threshold=MAX_HAMMING
         )
     )
     f = _pairs(
-        simhash_batch_against_index(
-            spark, batch, fresh, max_hamming=MAX_HAMMING
+        batch_against_index(
+            spark, batch, fresh, threshold=MAX_HAMMING
         )
     )
     assert g == f
@@ -239,8 +246,8 @@ def test_partition_pruning_plan_gate(spark, sf_dir, tmp_path):
     corpus, batch = _split(docs)
     path = str(tmp_path / "sh_gate")
     write_simhash_index(corpus, path, **GEO)
-    out = simhash_batch_against_index(
-        spark, batch.limit(3), path, max_hamming=MAX_HAMMING
+    out = batch_against_index(
+        spark, batch.limit(3), path, threshold=MAX_HAMMING
     )
     plan = formatted_plan(out)
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
@@ -288,6 +295,6 @@ def test_probe_on_empty_match_returns_typed_empty(spark, tmp_path):
         [(9, "totally different words entirely unrelated content")],
         "doc_id long, text string",
     )
-    out = simhash_batch_against_index(spark, batch, path)
+    out = batch_against_index(spark, batch, path, threshold=8)
     assert out.columns == ["batch_id", "corpus_id", "hamming"]
     assert out.count() == 0

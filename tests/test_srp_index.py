@@ -1,6 +1,6 @@
 """At-rest SRP embedding near-dup index (r9): the batch probe must be
-identical, as a set, to the in-memory
-``embedding_near_duplicate_pairs`` run over corpus ∪ batch restricted
+identical, as a set, to an in-memory cosine pair pass run over
+corpus ∪ batch restricted
 to cross pairs; it must ride the shared append/compact/regeometry
 lifecycle (LSM delta appends included); and the scan must prune at
 file level — the same contract battery the minhash/simhash indexes
@@ -14,11 +14,13 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from nursinghome_data_pipeline_spark.operators.dedup_index import (
+    batch_against_index,
+    pairs_from_rows,
+)
 from nursinghome_data_pipeline_spark.operators.embedding_index import (
-    embedding_batch_against_index,
     write_srp_index,
 )
-from nursinghome_data_pipeline_spark.operators.dedup_index import pairs_from_rows
 from nursinghome_data_pipeline_spark.operators.similarity import (
     active_data_root,
     append_to_ann_index,
@@ -27,6 +29,8 @@ from nursinghome_data_pipeline_spark.operators.similarity import (
     embedding_near_duplicate_pairs,
     load_ann_meta,
 )
+
+from .near_dup_oracles import embedding_pairs
 
 _DIM = 64
 #: small explicit geometry both sides band with — the probe reads it
@@ -87,7 +91,7 @@ def _corpus_and_batch(spark, sf_dir):
 
 def _cross_twin(corpus, batch, threshold=THR, **geo):
     geo = geo or GEO  # default to the geometry the indexes band with
-    pairs = embedding_near_duplicate_pairs(
+    pairs = embedding_pairs(
         corpus.unionByName(batch), dim=_DIM, threshold=threshold, **geo
     )
     a_is_batch = F.col("id_a") >= _BATCH_BASE
@@ -117,7 +121,7 @@ def test_probe_equals_in_memory_cross_pairs(spark, sf_dir, tmp_path):
         corpus, path, dim=_DIM, design_threshold=THR, n_buckets=32, **GEO
     )
     got = _pairs(
-        embedding_batch_against_index(spark, batch, path, threshold=THR)
+        batch_against_index(spark, batch, path, threshold=THR)
     )
     want = _pairs(_cross_twin(corpus, batch))
     assert got == want
@@ -129,8 +133,9 @@ def test_probe_equals_in_memory_cross_pairs(spark, sf_dir, tmp_path):
 def test_pairs_from_srp_rows_equals_in_memory_operator(spark, sf_dir):
     """Shared-projection pin (cosine twin of the minhash/simhash
     tests): pairing a precomputed ``_srp_rows`` projection must emit
-    the SAME pair set as ``embedding_near_duplicate_pairs`` at the
-    same geometry."""
+    the SAME pair set as the test-side oracle at the same geometry —
+    and so must ``embedding_near_duplicate_pairs``, which is that pass
+    over a one-directory projection."""
     from nursinghome_data_pipeline_spark.operators.embedding_index import (
         _srp_rows,
     )
@@ -150,12 +155,16 @@ def test_pairs_from_srp_rows_equals_in_memory_operator(spark, sf_dir):
     )
     want = sorted(
         (r["id_a"], r["id_b"], r["cosine_sim"])
-        for r in embedding_near_duplicate_pairs(
-            both, dim=_DIM, threshold=THR, **GEO
-        ).collect()
+        for r in embedding_pairs(both, dim=_DIM, threshold=THR, **GEO).collect()
     )
     assert got == want
     assert got, "empty pair set proves nothing"
+    assert sorted(
+        (r["id_a"], r["id_b"], r["cosine_sim"])
+        for r in embedding_near_duplicate_pairs(
+            both, dim=_DIM, threshold=THR, **GEO
+        ).collect()
+    ) == want
 
 
 def test_append_then_probe_equals_full_rebuild(spark, sf_dir, tmp_path):
@@ -180,10 +189,10 @@ def test_append_then_probe_equals_full_rebuild(spark, sf_dir, tmp_path):
         corpus, full, dim=_DIM, design_threshold=THR, n_buckets=32, **GEO
     )
     g = _pairs(
-        embedding_batch_against_index(spark, batch, grown, threshold=THR)
+        batch_against_index(spark, batch, grown, threshold=THR)
     )
     f = _pairs(
-        embedding_batch_against_index(spark, batch, full, threshold=THR)
+        batch_against_index(spark, batch, full, threshold=THR)
     )
     assert g == f and g
     # compaction folds the delta; probe unchanged
@@ -191,7 +200,7 @@ def test_append_then_probe_equals_full_rebuild(spark, sf_dir, tmp_path):
     assert not os.path.isdir(os.path.join(active_data_root(grown), "pb=-1"))
     assert (
         _pairs(
-            embedding_batch_against_index(
+            batch_against_index(
                 spark, batch, grown, threshold=THR
             )
         )
@@ -240,10 +249,10 @@ def test_regeometry_compaction_matches_fresh_rebuild(
     )
     assert rows(grown) == rows(fresh)
     g = _pairs(
-        embedding_batch_against_index(spark, batch, grown, threshold=THR)
+        batch_against_index(spark, batch, grown, threshold=THR)
     )
     f = _pairs(
-        embedding_batch_against_index(spark, batch, fresh, threshold=THR)
+        batch_against_index(spark, batch, fresh, threshold=THR)
     )
     assert g == f
 
@@ -263,7 +272,7 @@ def test_partition_pruning_plan_gate(spark, sf_dir, tmp_path):
         corpus, path, dim=_DIM, design_threshold=THR, n_buckets=32, **GEO
     )
     seam: dict = {}
-    out = embedding_batch_against_index(
+    out = batch_against_index(
         spark, batch.limit(3), path, threshold=THR, plan_probe=seam
     )
     cand_plan = formatted_plan(seam["candidates"])
@@ -294,7 +303,7 @@ def test_probe_on_empty_match_returns_typed_empty(spark, tmp_path):
     )
     for d in glob.glob(f"{active_data_root(path)}/pb=*"):
         shutil.rmtree(d)
-    out = embedding_batch_against_index(spark, corpus, path, threshold=THR)
+    out = batch_against_index(spark, corpus, path, threshold=THR)
     assert out.columns == ["batch_id", "corpus_id", "cosine_sim"]
     assert out.count() == 0
 
@@ -329,20 +338,31 @@ def test_guards_and_design_threshold_warning(spark, sf_dir, tmp_path):
         write_srp_index(
             corpus, "/tmp/never-written", dim=_DIM, n_planes=4, n_tables=0
         )
+    with pytest.raises(ValueError, match="backtick"):
+        # the bucket expression embeds vec_col in SQL text
+        write_srp_index(
+            corpus.select("vec_id", F.col("embedding").alias("e`x")),
+            "/tmp/never-written", vec_col="e`x", dim=_DIM, n_buckets=4,
+            **GEO,
+        )
+    with pytest.raises(ValueError, match="n_tables must be >= 1"):
+        # the in-memory operator names it too (the empty plane literal
+        # used to surface as a raw AnalysisException)
+        embedding_near_duplicate_pairs(corpus, dim=_DIM, n_planes=4, n_tables=0)
     path = str(tmp_path / "warn")
     write_srp_index(
         corpus, path, dim=_DIM, design_threshold=0.95, n_buckets=16, **GEO
     )
     with pytest.warns(UserWarning, match="looser than the index's"):
-        embedding_batch_against_index(spark, batch, path, threshold=0.5)
+        batch_against_index(spark, batch, path, threshold=0.5)
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         # the tiny 4x16 test geometry legitimately trips the r10
         # flat-read crossover warning — not the subject of this test
         warnings.filterwarnings("ignore", message=".*pruning crossover.*")
         # at the design threshold (the None default) and above: silent
-        embedding_batch_against_index(spark, batch, path)
-        embedding_batch_against_index(spark, batch, path, threshold=0.99)
+        batch_against_index(spark, batch, path, threshold=None)
+        batch_against_index(spark, batch, path, threshold=0.99)
 
 
 def test_auto_geometry_matches_formulas(spark, sf_dir, tmp_path):
@@ -407,8 +427,6 @@ def test_probe_missing_batch_columns_named_error(spark, sf_dir, tmp_path):
     routing), not a raw AnalysisException from the projection — for
     every near-dup kind, since all three probes share one body."""
     from nursinghome_data_pipeline_spark.operators.dedup_index import (
-        dedup_batch_against_index,
-        simhash_batch_against_index,
         write_dedup_index,
         write_simhash_index,
     )
@@ -422,19 +440,16 @@ def test_probe_missing_batch_columns_named_error(spark, sf_dir, tmp_path):
         F.col("vec_id").alias("doc_id"), F.col("embedding").alias("vec")
     )
     with pytest.raises(ValueError, match=r"lacks column\(s\).*vec_id"):
-        embedding_batch_against_index(spark, bad, path)
+        batch_against_index(spark, bad, path, threshold=None)
     docs = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "a b c d e g")], "doc_id long, text string"
     )
     no_text = docs.select("doc_id", F.col("text").alias("body"))
-    for write, probe in (
-        (write_dedup_index, dedup_batch_against_index),
-        (write_simhash_index, simhash_batch_against_index),
-    ):
+    for write, threshold in ((write_dedup_index, 0.8), (write_simhash_index, 8)):
         p = str(tmp_path / write.__name__)
         write(docs, p, n_buckets=16)
         with pytest.raises(ValueError, match=r"lacks column\(s\).*'text'"):
-            probe(spark, no_text, p)
+            batch_against_index(spark, no_text, p, threshold=threshold)
 
 
 def test_probe_without_design_threshold_named_error(spark, sf_dir, tmp_path):
@@ -454,7 +469,7 @@ def test_probe_without_design_threshold_named_error(spark, sf_dir, tmp_path):
         meta = json.load(f)
     expected = {
         tuple(r)
-        for r in embedding_batch_against_index(spark, batch, path)
+        for r in batch_against_index(spark, batch, path, threshold=None)
         .select("batch_id", "corpus_id")
         .collect()
     }
@@ -462,10 +477,10 @@ def test_probe_without_design_threshold_named_error(spark, sf_dir, tmp_path):
     with open(meta_path, "w", encoding="utf-8") as f:
         json.dump(meta, f)
     with pytest.raises(ValueError, match="design_threshold"):
-        embedding_batch_against_index(spark, batch, path)
+        batch_against_index(spark, batch, path, threshold=None)
     got = {
         tuple(r)
-        for r in embedding_batch_against_index(
+        for r in batch_against_index(
             spark, batch, path, threshold=THR
         )
         .select("batch_id", "corpus_id")
@@ -495,7 +510,7 @@ def test_layoutless_sidecar_named_error(spark, sf_dir, tmp_path):
     with open(meta_path, "w", encoding="utf-8") as f:
         json.dump(meta, f)
     with pytest.raises(ValueError, match="layout='normalized'"):
-        embedding_batch_against_index(spark, small, path)
+        batch_against_index(spark, small, path, threshold=None)
     with pytest.raises(ValueError, match="layout='normalized'"):
         compact_ann_index(spark, path)
 
@@ -548,7 +563,7 @@ def test_normalized_layout_pins(spark, sf_dir, tmp_path):
     )
     assert delta.where(F.col("embedding").isNull()).count() == 0
     want = _pairs(
-        embedding_batch_against_index(spark, batch, path, threshold=THR)
+        batch_against_index(spark, batch, path, threshold=THR)
     )
     # compaction splits the delta: postings lose the payload, every
     # appended id gains exactly one vector row, probe unchanged
@@ -562,7 +577,7 @@ def test_normalized_layout_pins(spark, sf_dir, tmp_path):
         idx.where(F.col("tbl").isNull()).count() == corpus.count()
     )
     got = _pairs(
-        embedding_batch_against_index(spark, batch, path, threshold=THR)
+        batch_against_index(spark, batch, path, threshold=THR)
     )
     assert got == want and got
 
@@ -584,7 +599,7 @@ def test_fetch_regimes_emit_identical_pairs(spark, sf_dir, tmp_path):
 
     def pairs():
         return _pairs(
-            embedding_batch_against_index(spark, batch, path, threshold=THR)
+            batch_against_index(spark, batch, path, threshold=THR)
         )
 
     natural = pairs()

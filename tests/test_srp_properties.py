@@ -19,8 +19,10 @@ import random
 
 import numpy as np
 
+from nursinghome_data_pipeline_spark.operators.dedup_index import (
+    batch_against_index,
+)
 from nursinghome_data_pipeline_spark.operators.embedding_index import (
-    embedding_batch_against_index,
     write_srp_index,
 )
 from nursinghome_data_pipeline_spark.operators.similarity import lsh_planes
@@ -120,7 +122,7 @@ def test_probe_matches_independent_reference(spark, tmp_path):
         )
         got = {
             (r["batch_id"], r["corpus_id"], r["cosine_sim"])
-            for r in embedding_batch_against_index(
+            for r in batch_against_index(
                 spark, bdf, path, threshold=thr
             ).collect()
         }
@@ -139,19 +141,18 @@ def test_probe_matches_independent_reference(spark, tmp_path):
 
 
 def test_bucket_structs_col_bit_equal_to_per_table_form(spark):
-    """r13 (r12 verdict #3): the single-expression multi-table bucket
-    builder must reproduce the former per-table lsh_bucket_col fan-out
-    BIT-FOR-BIT — indexes built under either expression must probe
-    identically under the other. exceptAll both ways over random
-    vectors (including a zero vector and negative components) is the
-    strongest engine-side pin; the independent-reference probe test
-    above covers the semantics."""
+    """The single-expression multi-table bucket column must reproduce
+    the per-table sign-projection buckets BIT-FOR-BIT: table ``j`` of
+    every vector against :func:`_ref_bucket` over
+    ``lsh_planes(n_planes, dim, seed + j)``, over random vectors
+    including a zero vector and negative components. Table 0 is also
+    what ``random_projection_buckets`` (the kNN LSH routing) emits."""
     import numpy as _np
     from pyspark.sql import functions as F
 
     from nursinghome_data_pipeline_spark.operators.similarity import (
-        lsh_bucket_col,
         lsh_bucket_structs_col,
+        random_projection_buckets,
     )
 
     dim, n_planes, n_tables, seed = 16, 7, 5, 99
@@ -159,39 +160,34 @@ def test_bucket_structs_col_bit_equal_to_per_table_form(spark):
     rows = [(i, [float(x) for x in rng.normal(size=dim)]) for i in range(200)]
     rows.append((200, [0.0] * dim))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    old = df.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("tbl"),
-                        lsh_bucket_col(
-                            "embedding",
-                            dim=dim,
-                            n_planes=n_planes,
-                            seed=seed + j,
-                        ).alias("bucket"),
-                    )
-                    for j in range(n_tables)
-                ]
-            )
-        ).alias("tb"),
-    ).select("vec_id", "tb.tbl", "tb.bucket")
-    new = df.select(
-        "vec_id",
-        F.explode(
-            lsh_bucket_structs_col(
-                "embedding",
-                dim=dim,
-                n_planes=n_planes,
-                n_tables=n_tables,
-                seed=seed,
-            )
-        ).alias("tb"),
-    ).select("vec_id", "tb.tbl", "tb.bucket")
-    assert old.exceptAll(new).count() == 0
-    assert new.exceptAll(old).count() == 0
+    plane_sets = [lsh_planes(n_planes, dim, seed + j) for j in range(n_tables)]
+    want = {
+        (i, j, _ref_bucket(v, plane_sets[j]))
+        for i, v in rows
+        for j in range(n_tables)
+    }
+    got = {
+        (r.vec_id, r.tbl, r.bucket)
+        for r in df.select(
+            "vec_id",
+            F.explode(
+                lsh_bucket_structs_col(
+                    "embedding",
+                    dim=dim,
+                    n_planes=n_planes,
+                    n_tables=n_tables,
+                    seed=seed,
+                )
+            ).alias("tb"),
+        )
+        .select("vec_id", "tb.tbl", "tb.bucket")
+        .collect()
+    }
+    assert got == want
+    one = random_projection_buckets(df, dim=dim, n_planes=n_planes, seed=seed)
+    assert {(r.vec_id, 0, r.bucket) for r in one.collect()} == {
+        w for w in want if w[1] == 0
+    }
     # n_planes=0 contract: bucket 0 in every table
     z = df.limit(1).select(
         F.explode(

@@ -14,12 +14,14 @@ from pyspark.sql import functions as F
 
 from nursinghome_data_pipeline_spark.fs import active_data_root
 from nursinghome_data_pipeline_spark.operators.dedup_index import (
-    dedup_batch_against_index,
+    batch_against_index,
     write_dedup_index,
 )
 from nursinghome_data_pipeline_spark.streaming.ingest_dedup import (
     streaming_dedup_ingest,
 )
+
+from .near_dup_oracles import minhash_pairs
 
 #: ~30-token texts so a one-token edit keeps Jaccard well above the
 #: 0.6 threshold (k=3 shingles: one mid-token edit flips 3 of ~28)
@@ -128,7 +130,7 @@ def test_stream_dedups_within_and_across_batches(spark, tmp_path):
                                           "just filler words apple bread")],
         "doc_id long, text string",
     )
-    m = dedup_batch_against_index(spark, probe, index, threshold=0.6)
+    m = batch_against_index(spark, probe, index, threshold=0.6)
     got = {(r["batch_id"], r["corpus_id"]) for r in m.collect()}
     assert (900, 11) in got  # near 11 (accepted)
     assert all(c not in (12, 13, 20, 10) for _, c in got)
@@ -298,12 +300,11 @@ def test_accepted_set_matches_composed_in_memory_operators(
     """r9 shared-projection pin, end to end: the loop fingerprints each
     batch ONCE and feeds the same banded rows to the in-batch pass,
     the index probe, and the append — the accepted set must equal
-    composing the standalone operators stage by stage
-    (exact_dedup_fingerprints → near_duplicate_pairs →
-    dedup_batch_against_index) at the sidecar's geometry."""
+    composing standalone stages one by one (exact_dedup_fingerprints →
+    the test-side minhash pair oracle → batch_against_index) at the
+    sidecar's geometry."""
     from nursinghome_data_pipeline_spark.operators.dedup import (
         exact_dedup_fingerprints,
-        near_duplicate_pairs,
     )
 
     corpus = spark.createDataFrame(_corpus_rows(), "doc_id long, text string")
@@ -347,10 +348,10 @@ def test_accepted_set_matches_composed_in_memory_operators(
         batch, text_col="text", id_col="doc_id"
     ).select("doc_id")
     exact = batch.join(winners, "doc_id", "left_semi")
-    pairs = near_duplicate_pairs(exact, threshold=0.6)  # sidecar geometry
+    pairs = minhash_pairs(exact, threshold=0.6)  # sidecar geometry
     drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
     survivors = exact.join(drop, "doc_id", "left_anti")
-    matches = dedup_batch_against_index(
+    matches = batch_against_index(
         spark, survivors, pristine, threshold=0.6
     )
     dup = matches.select(F.col("batch_id").alias("doc_id")).distinct()
@@ -475,7 +476,6 @@ def test_simhash_index_drives_the_same_loop(spark, tmp_path):
     next batch dedups against it — the same three stages, Hamming
     semantics."""
     from nursinghome_data_pipeline_spark.operators.dedup_index import (
-        simhash_batch_against_index,
         write_simhash_index,
     )
 
@@ -524,8 +524,8 @@ def test_simhash_index_drives_the_same_loop(spark, tmp_path):
     )
     got = {
         (r["batch_id"], r["corpus_id"])
-        for r in simhash_batch_against_index(
-            spark, probe, index, max_hamming=12
+        for r in batch_against_index(
+            spark, probe, index, threshold=12
         ).collect()
     }
     assert (900, 11) in got
@@ -543,7 +543,6 @@ def test_srp_index_drives_the_same_loop(spark, tmp_path):
     import numpy as np
 
     from nursinghome_data_pipeline_spark.operators.embedding_index import (
-        embedding_batch_against_index,
         write_srp_index,
     )
 
@@ -640,7 +639,7 @@ def test_srp_index_drives_the_same_loop(spark, tmp_path):
     )
     got = {
         (r["batch_id"], r["corpus_id"])
-        for r in embedding_batch_against_index(
+        for r in batch_against_index(
             spark, probe, index, threshold=0.9
         ).collect()
     }
