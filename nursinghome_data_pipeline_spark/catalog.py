@@ -59,6 +59,15 @@ AUDIT_SCHEMA = (
 )
 
 
+def typed_literals(schema: str, values) -> list[F.Column]:
+    """One literal column per field of the DDL ``schema``, cast to its
+    type. Selected over ``spark.range`` they make rows on the JVM, where
+    ``createDataFrame`` of local rows starts a Python worker to
+    deserialize them. Values go through ``F.lit``, never SQL text."""
+    fields = [f.split(" ", 1) for f in schema.split(", ")]
+    return [F.lit(v).cast(t).alias(n) for (n, t), v in zip(fields, values, strict=True)]
+
+
 def write_audit_row(
     spark: SparkSession,
     *,
@@ -73,10 +82,13 @@ def write_audit_row(
 ) -> None:
     """K3: parameterized audit insert (build.py:49-53; DDL :18-24).
 
-    ``created_at`` uses ``current_timestamp()`` (reference:
-    ``datetime('now')`` default).
+    The row is typed literals over a one-row ``spark.range``, so the
+    append is one JVM-only job; ``notes`` (a JSON sample, quotes and
+    all) is bound as a literal, not spliced into SQL. ``created_at``
+    uses ``current_timestamp()`` (reference: ``datetime('now')``
+    default).
     """
-    row = (
+    values = (
         table_name,
         check_name,
         status,
@@ -85,9 +97,10 @@ def write_audit_row(
         int(sample_rows),
         notes,
     )
-    df = spark.createDataFrame(
-        [row], schema=AUDIT_SCHEMA.replace(", created_at timestamp", "")
-    ).withColumn("created_at", F.current_timestamp())
+    df = spark.range(0, 1, 1, 1).select(
+        *typed_literals(AUDIT_SCHEMA.replace(", created_at timestamp", ""), values),
+        F.current_timestamp().alias("created_at"),
+    )
     with _APPEND_LOCK:
         spark.sql(f"CREATE TABLE IF NOT EXISTS {table} ({AUDIT_SCHEMA}) USING parquet")
         df.write.mode("append").format("parquet").saveAsTable(table)

@@ -12,13 +12,14 @@ Re-expresses the reference's runtime DQ checks:
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import write_audit_row
-from .parallel import map_actions
+from .catalog import typed_literals, write_audit_row
+from .functions.obs import get_metrics
 
 
 @dataclass
@@ -31,18 +32,28 @@ def duplicate_key_check(
     df: DataFrame, keys: list[str] | tuple[str, ...], *, sample_rows: int = 5
 ) -> DupCheckResult:
     """A2: GROUP BY natural key HAVING COUNT(*)>1, with a small JSON
-    sample of offending keys (parity: build.py:39-53 head().to_json())."""
+    sample of offending keys (parity: build.py:39-53 head().to_json()).
+
+    One query: the duplicate count is observed on the sample's
+    top-``sample_rows``-by-key collect, which reads every duplicate row
+    (each partition keeps its own top k), so the count is exact and the
+    sample is the first keys in key order. The input is aggregated once.
+    """
     dups = (
         df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("n"))
         .where(F.col("n") > 1)
     )
-    sample = dups.limit(sample_rows).select(
-        F.to_json(F.struct(*[F.col(k) for k in keys], F.col("n"))).alias("j")
+    # the suffix keeps concurrent checks' listener events apart
+    obs = Observation(f"dup_keys_{uuid.uuid4().hex[:8]}")
+    rows = (
+        dups.observe(obs, F.count(F.lit(1)).alias("n"))
+        .orderBy(*keys)
+        .limit(sample_rows)
+        .select(F.to_json(F.struct(*[F.col(k) for k in keys], F.col("n"))).alias("j"))
+        .collect()
     )
-    # one aggregate job for the count and a limit() job for the sample,
-    # issued concurrently
-    rows, n = map_actions(lambda action: action(), [sample.collect, dups.count])
+    n = get_metrics(obs, fallback=lambda: {"n": dups.count()})["n"]
     return DupCheckResult(
         dup_key_count=n,
         sample_json="[" + ",".join(r.j for r in rows) + "]" if rows else None,
@@ -90,7 +101,9 @@ def completeness_profile(df: DataFrame, *, table_name: str) -> DataFrame:
     a frame without columns (a zero-byte CSV) profiles to no rows."""
     cols = df.columns
     if not cols:
-        return df.sparkSession.createDataFrame([], PROFILE_SCHEMA)
+        return df.sparkSession.range(0, 0, 1, 1).select(
+            *typed_literals(PROFILE_SCHEMA, [None] * 5)
+        )
     agg = df.agg(
         F.count(F.lit(1)).alias("row_count"),
         *[F.count(F.col(c)).alias(f"nn_{i}") for i, c in enumerate(cols)],

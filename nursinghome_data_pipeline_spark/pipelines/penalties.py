@@ -6,13 +6,15 @@ the curated ``fact_penalty`` table and ``v_penalties_by_state`` view.
 
 Execution shape vs the reference: each dataset is one unit — a lazy
 DataFrame chain (read→conform→union) written once, its row count
-observed on that write, then its duplicate-key audit — and the units of
-all datasets run concurrently from driver threads
-(``parallel.map_actions``). The fact CTAS and the view run after
-every unit has finished. The only shuffles are the dup-check and view
-group-bys. The reference's destructive DB rebuild (``ensure_db``,
-build.py:14-25) maps to overwrite-mode writes, which are idempotent per
-table.
+observed on that write, then its duplicate-key audit: one query whose
+duplicate count is observed on the collect of its key-ordered sample,
+and an audit row appended from JVM literals, so the pass starts no
+Python worker — and the units of all datasets run concurrently from
+driver threads (``parallel.map_actions``). The fact CTAS and the view
+run after every unit has finished. The only shuffles are the dup-check
+and view group-bys, one each. The reference's destructive DB rebuild
+(``ensure_db``, build.py:14-25) maps to overwrite-mode writes, which are
+idempotent per table.
 """
 
 from __future__ import annotations

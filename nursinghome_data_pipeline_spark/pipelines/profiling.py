@@ -8,7 +8,8 @@ metrics to ``dq_completeness``.
 Execution shape: the per-file completeness profiles are unioned and
 appended in ONE write, and every file's row count is observed on that
 write (no count job per file). With ``stage_tables`` the per-file
-staging writes run concurrently with it from driver threads.
+staging writes run concurrently with it from driver threads; without
+it the files are read untyped, so no inference pass runs either.
 """
 
 from __future__ import annotations
@@ -35,7 +36,9 @@ def profile_directory(
     spark: SparkSession, directory: str, *, stage_tables: bool = True
 ) -> dict[str, int]:
     """Load + stage + profile every CSV; returns row counts per table."""
-    frames = read_inferred_csvs(spark, directory)
+    # a profile counts non-NULLs, which the inferred types do not change;
+    # only staged tables need them
+    frames = read_inferred_csvs(spark, directory, infer_schema=stage_tables)
     if not frames:
         return {}
     stems = list(frames)

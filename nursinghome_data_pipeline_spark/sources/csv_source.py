@@ -158,13 +158,20 @@ def ingest_dataset(
     return read_csv_conformed(spark, paths, spec)
 
 
-def read_inferred_csvs(spark: SparkSession, directory: str) -> dict[str, DataFrame]:
+def read_inferred_csvs(
+    spark: SparkSession, directory: str, *, infer_schema: bool = True
+) -> dict[str, DataFrame]:
     """Directory scan with schema inference (S2,
     load_nursing_home_data.py:50-51): one DataFrame per CSV, table name
-    from the normalized file stem. The frames (and their inference
-    jobs) are built concurrently. Two files whose stems normalize to
-    the same name raise ``ValueError`` instead of one replacing the
-    other."""
+    from the normalized file stem. The frames (and their header and
+    inference jobs) are built concurrently. Two files whose stems
+    normalize to the same name raise ``ValueError`` instead of one
+    replacing the other.
+
+    ``infer_schema=False`` skips the inference pass over each file: every
+    column reads as a string, named from the header exactly as with
+    inference (a blank name becomes ``_c<i>``, duplicates get a suffix),
+    and a field is NULL in both modes alike."""
     paths: dict[str, str] = {}
     for p in sorted(_glob.glob(os.path.join(directory, "*.csv"))):
         stem = norm_name(os.path.splitext(os.path.basename(p))[0])
@@ -174,7 +181,7 @@ def read_inferred_csvs(spark: SparkSession, directory: str) -> dict[str, DataFra
             )
         paths[stem] = p
     frames = map_actions(
-        lambda p: spark.read.option("header", True).option("inferSchema", True).csv(p),
+        lambda p: spark.read.options(header=True, inferSchema=infer_schema).csv(p),
         paths.values(),
     )
     return dict(zip(paths, frames))

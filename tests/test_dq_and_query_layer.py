@@ -4,11 +4,15 @@ gotchas."""
 
 from __future__ import annotations
 
+import json
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
 from nursinghome_data_pipeline_spark import query_layer as ql
 from nursinghome_data_pipeline_spark.dq import (
+    DupCheckResult,
     completeness_profile,
     duplicate_key_check,
     observe_counts,
@@ -35,6 +39,85 @@ def test_duplicate_key_check(spark):
     res = duplicate_key_check(df, ["k", "v"])
     assert res.dup_key_count == 1
     assert '"k":"a"' in res.sample_json
+
+
+def test_duplicate_key_check_samples_first_keys_in_key_order(spark):
+    # 12 duplicated keys in reverse order across 3 partitions, plus
+    # singletons: the count is exact and the sample is the first 5 keys
+    rows = [(f"k{i:02d}", j) for i in reversed(range(12)) for j in range(i % 3 + 2)]
+    rows += [(f"s{i}", 0) for i in range(20)]
+    df = spark.createDataFrame(rows, "k string, v int").repartition(3)
+    res = duplicate_key_check(df, ["k"])
+    assert res.dup_key_count == 12
+    assert json.loads(res.sample_json) == [
+        {"k": f"k{i:02d}", "n": i % 3 + 2} for i in range(5)
+    ]
+    assert duplicate_key_check(df.where(F.col("k").startswith("s")), ["k"]) == (
+        DupCheckResult(dup_key_count=0, sample_json=None)
+    )
+    # limit(0) plans the observation away: the count falls back to a job
+    assert duplicate_key_check(df, ["k"], sample_rows=0) == (
+        DupCheckResult(dup_key_count=12, sample_json=None)
+    )
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_duplicate_key_check_is_one_query(spark, run_in_job_group, aqe):
+    # a count and a limit() sample run as two queries took 5 jobs (AQE
+    # on); the observed top-k collect takes the aggregate's map stage and
+    # its result
+    df = spark.range(0, 20_000, 1, 4).select((F.col("id") % 9_000).alias("k"))
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        res, launched, _ = run_in_job_group(lambda: duplicate_key_check(df, ["k"]))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert res.dup_key_count == 9_000
+    assert launched <= 2
+
+
+def test_audit_row_types_equal_audit_schema(spark, monkeypatch):
+    from pyspark.sql.readwriter import DataFrameWriter
+    from pyspark.sql.types import _parse_datatype_string
+
+    from nursinghome_data_pipeline_spark.catalog import AUDIT_SCHEMA, write_audit_row
+
+    written = []
+    real = DataFrameWriter.saveAsTable
+
+    def capture(self, name, *args, **kwargs):
+        written.append(self._df)
+        return real(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", capture)
+    table = f"audit_types_{uuid.uuid4().hex[:8]}"
+    write_audit_row(spark, table_name="t", check_name="c", status="ok",
+                    metric_value=3, sample_rows=2, table=table)
+    try:
+        [df] = written
+        expected = _parse_datatype_string(AUDIT_SCHEMA)
+        assert [(f.name, f.dataType) for f in df.schema] == [
+            (f.name, f.dataType) for f in expected
+        ]
+        [row] = spark.table(table).collect()
+        assert (row.metric_value, row.threshold, row.sample_rows, row.notes) == (3.0, 0.0, 2, None)
+        assert row.created_at is not None
+    finally:
+        spark.sql(f"DROP TABLE {table}")
+
+
+def test_audit_notes_round_trip_unchanged(spark):
+    from nursinghome_data_pipeline_spark.catalog import write_audit_row
+
+    notes = '[{"k":"a\'b, \\"c\\"","path":"C:\\x"}] it\'s, "quoted" \\ ${x} --'
+    table = f"audit_notes_{uuid.uuid4().hex[:8]}"
+    write_audit_row(spark, table_name="t", check_name="c", status="warn",
+                    metric_value=1, notes=notes, table=table)
+    try:
+        assert spark.table(table).first().notes == notes
+    finally:
+        spark.sql(f"DROP TABLE {table}")
 
 
 def test_completeness_profile(spark):

@@ -51,8 +51,21 @@ def _profile_csvs(tmp_path):
     (tmp_path / "empty rows.csv").write_text("u\n")
 
 
+#: files whose inferred types differ from all-string reads: a blank and
+#: a duplicate header name, quoted-empty and whitespace-only fields,
+#: NaN, dates, short and long rows, and a zero-byte file
+EDGE_CSVS = {
+    "headers.csv": 'id,,id,note\n1,x,2,""\n2,,3,  \n,,,\n',
+    "numbers.csv": "x,y,d\n1.5,NaN,2024-01-15\n,3,\n2,\"\",2024-02-30\n",
+    "ragged.csv": "a,b,c\n1\n2,3,4,5,6\n\"\",,7\n",
+    "zero.csv": "",
+}
+
+
 def test_staging_mode_does_not_change_counts_or_profile(spark, tmp_path, fresh_database):
     _profile_csvs(tmp_path)
+    for name, text in EDGE_CSVS.items():
+        (tmp_path / name).write_text(text)
     out = {}
     for stage_tables in (True, False):
         with fresh_database(f"profile_mode_{int(stage_tables)}"):
@@ -60,8 +73,27 @@ def test_staging_mode_does_not_change_counts_or_profile(spark, tmp_path, fresh_d
             rows = sorted(tuple(r) for r in spark.table("dq_completeness").collect())
             out[stage_tables] = (counts, rows)
     assert out[True] == out[False]
-    assert out[True][0] == {"empty_rows": 0, "my_facility_data": 2, "other": 1}
-    assert len(out[True][1]) == 5
+    assert out[True][0] == {
+        "empty_rows": 0, "my_facility_data": 2, "other": 1,
+        "headers": 3, "numbers": 3, "ragged": 3, "zero": 0,
+    }
+    assert len(out[True][1]) == 5 + 4 + 3 + 3
+    profile = {(r[0], r[1]): r[3] for r in out[True][1]}
+    assert [profile["headers", c] for c in ("id0", "_c1", "id2", "note")] == [2, 1, 2, 1]
+    assert [profile["numbers", c] for c in ("x", "y", "d")] == [2, 2, 2]
+    assert [profile["ragged", c] for c in ("a", "b", "c")] == [2, 1, 2]
+
+
+def test_profile_without_staging_skips_inference_jobs(spark, tmp_path, fresh_database, run_in_job_group):
+    # with an inference pass per file the 3-file fixture took 10 jobs;
+    # without it, 7 (a header job per file, then the profile append)
+    _profile_csvs(tmp_path)
+    with fresh_database("profile_no_inference"):
+        counts, launched, _ = run_in_job_group(
+            lambda: profile_directory(spark, str(tmp_path), stage_tables=False)
+        )
+    assert counts == {"empty_rows": 0, "my_facility_data": 2, "other": 1}
+    assert launched < 10
 
 
 def test_profile_jobs_stay_in_caller_job_group(spark, tmp_path, fresh_database, run_in_job_group):
