@@ -105,8 +105,8 @@ BENCH_QUERIES = [
     "simhash_docs",
     "whitened_embeddings_by_label",
     "synthetic_docs_quality",
-    # r3: the ex-global-window shapes (now bucket-offset two-phase
-    # plans) — benched so a regression in the new shape is visible
+    # r3: the ex-global-window shapes (now range-partitioned
+    # per-range-offset plans) — benched so a regression is visible
     "pareto_8020_customers",
     "revenue_gini_coefficient",
     # r4 (r3-verdict item #5): the remaining never-benched heavies —

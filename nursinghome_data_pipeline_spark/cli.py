@@ -175,54 +175,29 @@ def _cmd_corpus_build(args: argparse.Namespace) -> int:
     """End-to-end training-corpus materialization: quality filter →
     exact dedup → near-dup component resolution → decontamination →
     deterministic split → parquet partitioned by split + a JSON stage
-    manifest. The CLI twin of the ``corpus_build_docs`` registry query,
-    with the artifacts actually written."""
+    manifest. Runs the ``corpus_build_docs`` registry query's selection
+    chain (``operators.corpus.filter_and_dedup_docs``), with the
+    artifacts actually written."""
     import json
     import os
 
     from pyspark.sql import functions as F
 
-    from .functions.text import (
-        english_stopword_filter,
-        quality_score_col,
-        token_count_col,
-    )
-    from .operators.corpus import decontaminate
-    from .operators.dedup import connected_components, jaccard_pair_join
+    from .functions.text import token_count_col
+    from .operators.corpus import decontaminate, filter_and_dedup_docs
     from .sources.tpch import load_tables
 
     spark = _session(args)
     docs = load_tables(spark, args.sf_dir, ["documents"])["documents"]
     stages: dict[str, int] = {"input": docs.count()}
 
-    # same selection as the corpus_build_docs registry twin: language
-    # heuristic AND quality floor — without the language gate the
-    # written artifact diverges from the oracle-checked query it
-    # claims to mirror
-    filtered = docs.where(
-        english_stopword_filter("text")
-        & (quality_score_col("text") >= args.min_quality)
+    filtered, exact, neardeduped = filter_and_dedup_docs(
+        docs,
+        min_quality=args.min_quality,
+        jaccard_threshold=args.jaccard_threshold,
     )
     stages["quality_filtered"] = filtered.count()
-
-    canon = filtered.groupBy(F.md5(F.col("text")).alias("fp")).agg(
-        F.min("doc_id").alias("doc_id")
-    )
-    # the survivor subtree feeds pair-join (twice), CC seeding, the
-    # near-dedup semi-join, and stage counts — materialize once (same
-    # pattern as the registry twin)
-    exact = filtered.join(
-        canon.select("doc_id"), "doc_id", "left_semi"
-    ).localCheckpoint(eager=False)
     stages["exact_deduped"] = exact.count()
-
-    pairs = jaccard_pair_join(exact, threshold=args.jaccard_threshold)
-    comps = connected_components(exact, pairs)
-    neardeduped = exact.join(
-        comps.where(F.col("doc_id") == F.col("component_id")).select("doc_id"),
-        "doc_id",
-        "left_semi",
-    )
     stages["near_deduped"] = neardeduped.count()
 
     bench = docs.where(F.col("doc_id") % 97 == 0)

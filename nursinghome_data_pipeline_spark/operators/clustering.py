@@ -147,17 +147,26 @@ def kmeans_lloyd(
     (cid, dim, c_val, n_assigned) — the final centroids exploded to
     scalar rows (driver-hashable) plus each cluster's final
     population."""
-    centroids = lloyd_train(
+    rows, last_rows, _ = lloyd_train(
         df, init_centroids, iterations=iterations, vec_col=vec_col, tol=tol
+    )
+    import pandas as pd
+
+    # pandas → Arrow → JVM LocalTableScan: a Python-list relation is
+    # backed by a pickled RDD whose scan pays a Python-worker round
+    # trip on EVERY downstream action — and this frame is the build
+    # side of the output join (measured 1.5 s vs 0.2 s for a small
+    # literal table)
+    centroids = df.sparkSession.createDataFrame(
+        pd.DataFrame(
+            [(c, list(cl)) for c, cl in rows], columns=["cid", "clist"]
+        ),
+        "cid long, clist array<double>",
     )
     # final-iteration assignment (vs the PRE-update centroids of the
     # last round — the same rows the last update aggregated)
     counts = (
-        df.select(
-            centroid_argmin_col(
-                getattr(centroids, "_last_assign_rows"), vec_col
-            ).alias("cid")
-        )
+        df.select(centroid_argmin_col(last_rows, vec_col).alias("cid"))
         .groupBy("cid")
         .agg(F.count(F.lit(1)).alias("n_assigned"))
     )
@@ -195,8 +204,8 @@ def lloyd_train(
     iterations: int,
     vec_col: str = "embedding",
     tol: float | None = None,
-) -> DataFrame:
-    """``iterations`` fused Lloyd steps → (cid, clist) centroids.
+) -> tuple[list, list, int]:
+    """``iterations`` fused Lloyd steps → (cid, clist) centroid literals.
 
     Per iteration: ONE map-side-combined aggregation and ONE job — the
     assignment column is computed inline (:func:`centroid_argmin_col`,
@@ -221,10 +230,10 @@ def lloyd_train(
     ``tol=None`` so their round count stays exactly the unrolled CTE
     depth.
 
-    The returned (cid, clist) DataFrame is a ``createDataFrame`` of
-    the final literals and carries ``_last_assign_rows`` — the final
-    round's PRE-update centroid literals — for callers that need the
-    matching assignment (population counts, IVF cell routing).
+    Returns ``(rows, last_rows, rounds_run)``: the final sorted
+    ``(cid, clist)`` literals, the final round's PRE-update literals
+    (for callers that need the matching assignment — population
+    counts), and the number of rounds run.
     """
     rows = _collect_centroids(init_centroids)
     last_rows = rows
@@ -253,20 +262,4 @@ def lloyd_train(
         rounds_run += 1
         if tol is not None and max_centroid_movement(last_rows, rows) <= tol:
             break
-    import pandas as pd
-
-    # pandas → Arrow → JVM LocalTableScan: a Python-list relation is
-    # backed by a pickled RDD whose scan pays a Python-worker round
-    # trip on EVERY downstream action — and this frame is the build
-    # side of the kmeans output join (operators/skew.py measured the
-    # same swap at 1.5 s vs 0.2 s for a small literal table)
-    centroids = df.sparkSession.createDataFrame(
-        pd.DataFrame(
-            [(c, list(cl)) for c, cl in rows], columns=["cid", "clist"]
-        ),
-        "cid long, clist array<double>",
-    )
-    centroids._last_assign_rows = last_rows
-    centroids._trained_rows = rows
-    centroids._rounds_run = rounds_run
-    return centroids
+    return rows, last_rows, rounds_run

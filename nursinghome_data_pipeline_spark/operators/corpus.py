@@ -19,7 +19,45 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import shingle_hash_col
+from ..functions.text import english_stopword_filter, quality_score_col
+from .dedup import connected_components, jaccard_pair_join, shingle_hash_col
+
+
+def filter_and_dedup_docs(
+    docs: DataFrame,
+    *,
+    min_quality: float,
+    jaccard_threshold: float,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The corpus build's selection chain: language heuristic AND
+    quality floor → md5 exact dedup (min id per fingerprint) → exact
+    Jaccard near-dup pairs → connected components → keep each
+    component's canonical (minimum-id) document.
+
+    Returns ``(filtered, exact, kept)`` so a caller can count each
+    stage. ``exact`` feeds four consumers (both posting sides of the
+    pair join, the component node set, the canonical keep), so it is
+    localCheckpoint'ed once instead of re-running the
+    filter+fingerprint+semi-join subtree per consumer.
+    """
+    filtered = docs.where(
+        english_stopword_filter("text")
+        & (quality_score_col("text") >= min_quality)
+    )
+    canon = filtered.groupBy(F.md5(F.col("text")).alias("fp")).agg(
+        F.min("doc_id").alias("doc_id")
+    )
+    exact = filtered.join(
+        canon.select("doc_id"), "doc_id", "left_semi"
+    ).localCheckpoint(eager=False)
+    pairs = jaccard_pair_join(exact, threshold=jaccard_threshold)
+    comps = connected_components(exact, pairs)
+    kept = exact.join(
+        comps.where(F.col("doc_id") == F.col("component_id")).select("doc_id"),
+        "doc_id",
+        "left_semi",
+    )
+    return filtered, exact, kept
 
 
 def decontaminate(

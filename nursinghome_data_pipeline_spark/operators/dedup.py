@@ -634,7 +634,6 @@ def connected_components(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iter: int = 20,
-    algorithm: str = "label_propagation",
 ) -> DataFrame:
     """Cluster near-duplicate PAIRS into components → canonical ids.
 
@@ -643,7 +642,8 @@ def connected_components(
     the transitive closure: if A≈B and B≈C, keep one of {A,B,C}. Each
     node gets ``component_id`` = the minimum reachable id (its cluster's
     canonical document); singletons map to themselves. The output
-    covers ``nodes`` ∪ every edge endpoint (both algorithms) — an id
+    covers ``nodes`` ∪ every edge endpoint (as does
+    :func:`connected_components_star`) — an id
     appearing only in the edge list still belongs to a component and
     may be its minimum, so it can be neither dropped nor ignored when
     labeling its neighbors.
@@ -656,23 +656,12 @@ def connected_components(
     ``localCheckpoint`` truncates lineage each round — without it the
     plan doubles per iteration and planning time explodes by round 10.
 
-    Scale: for adversarial long-chain graphs pass
-    ``algorithm="star"`` to use the alternating large-star/small-star
-    variant (:func:`connected_components_star`, Kiveris et al.,
-    "Connected Components in MapReduce"), which bounds rounds at
-    O(log n) where label propagation needs O(diameter); near-dup
-    clusters (diameter 2-3) keep the cheaper default.
+    Scale: for adversarial long-chain graphs call the alternating
+    large-star/small-star variant :func:`connected_components_star`
+    (Kiveris et al., "Connected Components in MapReduce"), which bounds
+    rounds at O(log n) where label propagation needs O(diameter);
+    near-dup clusters (diameter 2-3) keep this cheaper one.
     """
-    if algorithm == "star":
-        labels, _ = connected_components_star(
-            nodes,
-            edges,
-            id_col=id_col,
-            src_col=src_col,
-            dst_col=dst_col,
-            max_iter=max_iter,
-        )
-        return labels
     # Symmetrize in ONE pass (fixpoint.both_directions): the (possibly
     # expensive — LSH/Jaccard join) edge subtree runs exactly once. The
     # former union-of-two-references needed its own eager checkpoint of

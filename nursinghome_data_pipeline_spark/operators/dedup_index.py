@@ -103,8 +103,8 @@ from .. import fs
 #: _banded_rows-local; pb/band/bkey/sh persist in the minhash index;
 #: bucket/sh in the simhash index; batch_id/corpus_id/hamming are probe
 #: output aliases). A caller id_col with one of these names would
-#: silently collide or misbind — same guard as
-#: ``skew.bucketed_global_order``'s reserved columns.
+#: silently collide or misbind, so writers and probes refuse it (as
+#: ``skew.bucketed_global_order`` refuses ``__pid`` and its outputs).
 _RESERVED_COLS = frozenset(
     {"pb", "band", "bkey", "sh", "sig", "bucket",
      "batch_id", "corpus_id", "hamming"}

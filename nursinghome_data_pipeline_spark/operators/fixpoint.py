@@ -63,5 +63,5 @@ def fixpoint(
     raise RuntimeError(
         f"{name} did not converge in {max_rounds} rounds (component "
         "diameter exceeds the round budget); raise max_iter, or use "
-        'algorithm="star" for long-chain graphs'
+        "connected_components_star for long-chain graphs"
     )

@@ -47,8 +47,9 @@ That trade is the point: use the twin until one key dominates a TASK,
 then this. The remaining floor is rows sharing one (user, bucket) —
 lower ``bucket_minutes`` to split a burst; equal-timestamp floods are
 the only unsplittable residue (they are one session by definition, but
-must be counted somewhere; the same residue bounds
-``skew.bucketed_global_order``'s point-mass mode).
+must be counted somewhere; the same residue — duplicated
+(value, tiebreak) pairs — bounds ``skew.bucketed_global_order``'s
+range partitioning).
 
 Reference parity note: the reference pipeline (678-line pandas core)
 has no sessionization; this extends the engine-native §2.8 window

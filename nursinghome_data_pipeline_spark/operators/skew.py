@@ -157,354 +157,102 @@ def bucketed_global_order(
     value_col: str,
     tiebreak_col: str,
     q: int = 1 << 20,
-    bucket_width: int | None = None,
-    n_buckets: int = 4096,
     descending: bool = False,
-    debug_stats: dict | None = None,
 ) -> DataFrame:
     """Global rank + running quantized sum WITHOUT a global window.
 
     ``Window.orderBy`` with no partition moves the entire input to ONE
     reducer — fine for a |weeks|-row rollup, a scale-stopper over
     per-customer aggregates (the WindowExec "No Partition Defined"
-    warning). This computes the identical result with the two-phase
-    bucket-offset pattern, fully deterministic (no sampled range
-    boundaries, so stage retries reproduce the same layout —
-    the same reasoning as :func:`_salt_col`):
+    warning). This computes the identical result with one sort plus
+    per-partition offsets:
 
-    1. bucket each row by its quantized value (``floor(value*q) //
-       bucket_width`` — a pure function of the row, monotone in the
-       sort order);
-    2. aggregate per-bucket counts and quantized sums (one narrow
-       shuffle) and COLLECT them — ``domain/bucket_width`` rows, a
-       constant independent of data size — then exclusive-prefix-sum
-       the offsets driver-side in exact integer arithmetic (counts
-       are long, sums DECIMAL(38,0); no window, no extra job, no
-       single-partition exchange anywhere in the plan);
-    3. broadcast the literal offsets back and run the rank/running-sum
-       window PARTITIONED BY bucket: ``i = bucket_count_offset +
-       row_number-within-bucket``, ``cum_q = bucket_sum_offset +
-       running-sum-within-bucket``.
+    1. range-partition on the FULL sort key — (value [DESC if
+       ``descending``], tiebreak ASC) — into the session's
+       ``spark.sql.shuffle.partitions`` ranges, tag each row with its
+       range index ``__pid`` and pin that layout with one eager
+       ``localCheckpoint`` (the range bounds come from a sample, so
+       the layout must be materialized once for the offsets and the
+       window to agree; it also keeps the passes below from replaying
+       ``df``'s subtree);
+    2. collect count and ``sum(floor(value*q))`` per ``__pid`` (at
+       most one row per range) and take exclusive prefix sums on the
+       driver in exact integers (counts are long, sums DECIMAL(38,0));
+    3. run the rank/running-sum window PARTITIONED BY ``__pid`` and add
+       the range's offsets: ``i = cnt_off + row_number``, ``cum_q =
+       sum_off + running sum``.
 
     Output = input columns + ``i`` (global row_number ordered by
-    (value [DESC if ``descending``], tiebreak ASC)), ``n`` (total row
-    count), ``cum_q`` / ``total_q`` (inclusive running / grand total of
-    ``floor(value*q)`` as DECIMAL(38,0) — exact integers, so downstream
-    double casts match a single-window plan bit-for-bit).
+    (value [DESC], tiebreak ASC)), ``n`` (total row count), ``cum_q`` /
+    ``total_q`` (inclusive running / grand total of ``floor(value*q)``
+    as DECIMAL(38,0) — exact integers, so downstream double casts match
+    a single-window plan bit-for-bit).
 
-    Skew bound — ITERATIVE REFINEMENT (adversarial inputs only; ≤
-    ``MAX_REFINE_ROUNDS`` extra rounds, one bounded collect each):
-    after the level-0 bucketing, a per-group stats pass (count + exact
-    min/max of value/quantized value/tiebreak — exact aggregates, so
-    deterministic under stage retry) finds groups over 4× the mean
-    population, and each is split by whichever key still has room,
-    order-preservingly:
+    Skew bound: the range partitioner splits on the whole key, so a
+    point mass of one value (or sub-quantization jitter, or a string
+    tiebreak) spreads over many ranges; the only irreducible residue
+    is a heavy run of duplicated (value, tiebreak) pairs, as in any
+    sort. The window re-shuffles by hash of ``__pid``, so one window
+    task may hold a few ranges: the largest task read 0.13 of a 90 %
+    point mass at 16 ranges and 0.016 at 200. ``value_col`` must be
+    non-null and ``|value*q|`` must fit a long.
 
-    - multiple quantized values → finer VALUE split (64 sub-ranges of
-      the group's own qv span — the "narrow the width" move, applied
-      only where needed so the offset table stays ~``n_buckets``);
-    - one quantized value but multiple raw values → 64-way split of
-      the group's OWN raw span (adaptive — monotone, so order-safe;
-      shrinks the span ~64× per round down to double ulps);
-    - one raw value (a true point mass) → TIEBREAK range split, valid
-      exactly because the sort key ``(value, tiebreak)`` degenerates to
-      the tiebreak inside a single-value group; requires an integral
-      ``tiebreak_col``.
-
-    A point mass needs one tiebreak round after however many VALUE
-    rounds it takes to isolate it: each mode-1 round divides the
-    group's qv span by 64, so the cascade depth is
-    ``log64(bucket_qv_span / neighbor_qv_spacing)`` — typically 1, but
-    a wide domain can put a neighboring quantized value inside the
-    first split's sub-bucket and require a second value round before
-    the tiebreak round (observed at the 4M-row skew probe; a fixed
-    2-round cap left the 90% mass UNSPLIT there, which is exactly why
-    the cap is now the loop's safety net rather than its schedule —
-    the loop exits when no heavy group is splittable, and
-    ``MAX_REFINE_ROUNDS`` only bounds adversarial nesting). Uniform
-    data exits after the first stats pass, which doubles as the
-    offsets aggregate — the well-behaved path costs exactly what the
-    unrefined operator did.
-    Residual irreducible skew: a heavy group of duplicated
-    (value, tiebreak) pairs — like any sort — or a non-integral
-    tiebreak over a point mass.
-    ``value_col`` must be non-null and ``|value*q|`` must fit a long.
-    Pass ``debug_stats={}`` to receive {"rounds", "refined_groups"}.
-
-    ``bucket_width`` defaults to DOMAIN-ADAPTIVE: one exact min/max
-    pass sizes the width so occupied buckets ≈ ``n_buckets`` whatever
-    the value range — a fixed width would make the offset-table size
-    (and its broadcast) depend on the data's domain, exploding on
-    wide-spread values and collapsing to one bucket on narrow ones.
-    min/max is exact aggregation, not sampling, so the layout is
-    deterministic under stage retry like everything else here.
-
-    The operator makes 2-3 passes over ``df`` (width min/max, stats,
-    the final window; +1 per refinement round), so it localCheckpoints
-    ``df`` once and every pass re-reads that materialization instead
-    of replaying ``df``'s subtree — in the rank-the-aggregate shape
-    (a group-by of a much larger fact table) the replay would re-run
-    the group-by per pass.
+    Cost: that hash exchange is a second full shuffle. Measured warm
+    on 4 cores against the former bucket-refinement design (600k
+    rows, default session): a 90 % point mass 4.4–6.3 s / 30 jobs →
+    1.6–2.1 s / 7 jobs; uniform values 1.9–2.4 s / 8 jobs → 2.0–2.7 s
+    / 7 jobs — no gain there, the second shuffle costs about what the
+    min/max and stats passes did.
     """
+    from decimal import Decimal
+
     from pyspark.sql.window import Window
 
-    reserved = {
-        "__bkt", "__cnt", "__sum", "__cnt_off", "__sum_off",
-        "__sub", "__vmin", "__vmax", "__qmin", "__qmax",
-        "__tmin", "__tmax", "__mode", "__base", "__w",
-    }
-    out_cols = {"i", "n", "cum_q", "total_q"}
-    clash = (reserved | out_cols) & set(df.columns)
+    out_cols = {"__pid", "i", "n", "cum_q", "total_q"}
+    clash = out_cols & set(df.columns)
     if clash:
         raise ValueError(
             "bucketed_global_order reserves column names "
-            f"{sorted(reserved | out_cols)}; input already has "
+            f"{sorted(out_cols)}; input already has "
             f"{sorted(clash)} — rename them first"
         )
-    df = df.localCheckpoint(eager=True)
-
-    qv_long = F.floor(F.col(value_col) * q).cast("long")
-    qv_dec = F.floor(F.col(value_col) * q).cast("decimal(38,0)")
-    if bucket_width is None:
-        row = df.agg(
-            F.min(qv_long).alias("lo"), F.max(qv_long).alias("hi")
-        ).first()
-        if row["lo"] is None:  # empty input: any width works
-            bucket_width = 1
-        else:
-            bucket_width = max(1, (row["hi"] - row["lo"]) // n_buckets + 1)
-    bucket = F.floor(qv_long / F.lit(bucket_width)).cast("long")
-    rows = df.withColumn("__bkt", bucket).withColumn(
-        "__sub", F.lit(0).cast("long")
-    )
-
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    tb_integral = isinstance(
-        df.schema[tiebreak_col].dataType,
-        (ByteType, ShortType, IntegerType, LongType),
-    )
-    qtb = F.col(tiebreak_col).cast("long") if tb_integral else F.lit(None)
-
-    # Iterative refinement (see docstring). Each round's stats pass is
-    # the same narrow map-side-combined aggregate the offsets need, so
-    # the final round's stats ARE the offsets input and the no-skew
-    # path costs one stats pass total. Groups bounded by the mean-4x
-    # threshold (≤ occupied/4 heavy groups, collected with an explicit
-    # deterministic cap); locals are hierarchically encoded so one
-    # round's split nests inside the previous order.
-    N_SUB = 64
-    BASE = N_SUB + 2  # locals occupy [0, N_SUB+1]: 0 = null tiebreak
-    sign = -1.0 if descending else 1.0
-    stats_aggs = [
-        F.count(F.lit(1)).alias("__cnt"),
-        F.sum(qv_dec).alias("__sum"),
-        F.min(value_col).alias("__vmin"),
-        F.max(value_col).alias("__vmax"),
-        F.min(qv_long).alias("__qmin"),
-        F.max(qv_long).alias("__qmax"),
-        F.min(qtb).alias("__tmin"),
-        F.max(qtb).alias("__tmax"),
-    ]
-    spark = df.sparkSession
-    per_key_rows = None
-    rounds = 0
-    refined_groups = 0
-    # Safety net, not a schedule: the loop exits as soon as no heavy
-    # group is splittable (uniform data: after ONE stats pass). Each
-    # mode-1 round divides a heavy group's qv span by 64, so the cap
-    # only binds on adversarially nested inputs; 8 levels cover span
-    # ratios of 64^8 ≈ 2.8e14 — wider than any long-valued qv domain
-    # the operator accepts. A fixed cap of 2 was measurably wrong: at
-    # the 4M-row probe the first value split left a neighboring
-    # quantized value inside the mass's sub-bucket, the second (last)
-    # round re-split by value, and the tiebreak round never ran —
-    # max window partition stayed at 90% while rounds/groups looked
-    # healthy. (Caught by measuring realized populations, ADVICE r4.)
-    MAX_REFINE_ROUNDS = 8
-    for round_i in range(MAX_REFINE_ROUNDS + 1):
-        # ONE bounded collect per round: the group-stats table is
-        # ≤ occupied-buckets rows (~n_buckets; ≤ heavy×(N_SUB+2) more
-        # per refinement round) — small enough that the heavy-group
-        # scan, the mean, AND the exclusive prefix sums the offsets
-        # need are all driver-side Python over exact values (counts
-        # are long, sums DECIMAL(38,0), min/max exact), replacing the
-        # former per-round localCheckpoint + two auxiliary jobs + a
-        # single-partition offsets window with zero extra jobs.
-        stats_rows = rows.groupBy("__bkt", "__sub").agg(*stats_aggs).collect()
-        rounds += 1
-        mean_cnt = sum(r["__cnt"] for r in stats_rows) / max(
-            len(stats_rows), 1
-        )
-        heavy = (
-            sorted(
-                (r for r in stats_rows if r["__cnt"] > 4.0 * mean_cnt),
-                key=lambda r: (-r["__cnt"], r["__bkt"], r["__sub"]),
-            )[:1024]  # deterministic cap on the broadcast plan
-            if round_i < MAX_REFINE_ROUNDS
-            else []
-        )
-        plans = []
-        for r in heavy:
-            # mode 1: finer value split over the group's own qv span;
-            # mode 2: single qv, multiple raw values → split the
-            #   group's OWN raw span 64 ways (adaptive, like mode 1 —
-            #   a FIXED extra resolution was measurably wrong: jitter
-            #   below its grid left the mass unsplit while burning
-            #   rounds with zero progress; splitting the observed span
-            #   guarantees ~64× shrink per round down to double ulps);
-            # mode 3: true point mass → tiebreak range split.
-            if r["__qmin"] < r["__qmax"]:
-                base = float(r["__qmax"] if descending else r["__qmin"])
-                w = (r["__qmax"] - r["__qmin"]) // N_SUB + 1
-                plans.append((r["__bkt"], r["__sub"], 1, base, float(w)))
-            elif r["__vmin"] < r["__vmax"]:
-                base = float(r["__vmax"] if descending else r["__vmin"])
-                w = (float(r["__vmax"]) - float(r["__vmin"])) / N_SUB
-                if w > 0.0:  # underflows to 0 only within ~64 ulps
-                    plans.append((r["__bkt"], r["__sub"], 2, base, w))
-            elif (
-                tb_integral
-                and r["__tmax"] is not None
-                and r["__tmin"] is not None
-                and r["__tmax"] > r["__tmin"]
-            ):
-                w = (r["__tmax"] - r["__tmin"]) // N_SUB + 1
-                plans.append(
-                    (r["__bkt"], r["__sub"], 3, float(r["__tmin"]), float(w))
-                )
-            # else: duplicated (value, tiebreak) pairs — irreducible
-        if not plans:
-            per_key_rows = stats_rows
-            break
-        refined_groups += len(plans)
-        import pandas as pd
-
-        # pandas → Arrow → JVM LocalTableScan (see the offsets note:
-        # a list-backed relation would re-pay a Python-worker round
-        # trip on every downstream action that replays this lineage)
-        plan_df = spark.createDataFrame(
-            pd.DataFrame(
-                plans, columns=["__bkt", "__sub", "__mode", "__base", "__w"]
-            ),
-            "__bkt long, __sub long, __mode int, __base double, __w double",
-        )
-        # order-preserving local index per mode; +1 shifts null-tiebreak
-        # rows to 0 so they sort first, matching asc-nulls-first
-        local = (
-            F.when(
-                F.col("__mode") == 1,
-                F.floor(
-                    (qv_long.cast("double") - F.col("__base"))
-                    * F.lit(sign)
-                    / F.col("__w")
-                ),
-            )
-            .when(
-                F.col("__mode") == 2,
-                F.floor(
-                    (F.col(value_col) - F.col("__base"))
-                    * F.lit(sign)
-                    / F.col("__w")
-                ),
-            )
-            .when(
-                F.col("__mode") == 3,
-                F.floor(
-                    (qtb.cast("double") - F.col("__base")) / F.col("__w")
-                ),
-            )
-        )
-        rows = (
-            rows.join(F.broadcast(plan_df), ["__bkt", "__sub"], "left")
-            .withColumn(
-                "__sub",
-                F.col("__sub") * BASE
-                + F.when(F.col("__mode").isNull(), F.lit(0)).otherwise(
-                    F.coalesce(local + 1, F.lit(0)).cast("long")
-                ),
-            )
-            .drop("__mode", "__base", "__w")
-        )
-    if debug_stats is not None:
-        debug_stats["rounds"] = rounds
-        debug_stats["refined_groups"] = refined_groups
-        # REALIZED window-partition bound, measured from the final
-        # round's per-(__bkt,__sub) populations — not a derived
-        # even-split assumption (ADVICE r4): this is exactly the row
-        # count of the largest partition WindowExec will sort.
-        debug_stats["max_partition_rows"] = max(
-            (r["__cnt"] for r in per_key_rows), default=0
-        )
-        debug_stats["total_rows"] = sum(r["__cnt"] for r in per_key_rows)
-
-    keys = ["__bkt", "__sub"]
-    # exclusive prefix sums over the bucket order (__bkt DESC if
-    # descending else ASC; __sub always ASC — locals are direction-
-    # encoded) computed driver-side: exact integer arithmetic over the
-    # bounded collected stats, then shipped back as a literal relation
-    # for the broadcast join — no window, no extra job, and stage
-    # retries replay the same literals by construction.
-    from decimal import Decimal
-
-    ordered = sorted(
-        per_key_rows,
-        key=lambda r: (-r["__bkt"] if descending else r["__bkt"], r["__sub"]),
-    )
-    n_total = sum(r["__cnt"] for r in ordered)
-    q_total = sum(int(r["__sum"]) for r in ordered)
-    off_rows = []
-    cnt_off, sum_off = 0, 0
-    for r in ordered:
-        off_rows.append(
-            (
-                r["__bkt"],
-                r["__sub"],
-                cnt_off,
-                Decimal(sum_off),
-                n_total,
-                Decimal(q_total),
-            )
-        )
-        cnt_off += r["__cnt"]
-        sum_off += int(r["__sum"])
-    off_schema = (
-        "__bkt long, __sub long, __cnt_off long, "
-        "__sum_off decimal(38,0), n long, total_q decimal(38,0)"
-    )
-    if off_rows:
-        import pandas as pd
-
-        # via pandas: Arrow conversion yields a JVM LocalTableScan;
-        # a plain Python list backs the relation with a pickled RDD
-        # whose every evaluation pays a Python-worker round trip
-        # (measured 1.5 s vs 0.2 s on a 2.4k-row offsets table)
-        offsets = spark.createDataFrame(
-            pd.DataFrame(
-                off_rows,
-                columns=[
-                    "__bkt", "__sub", "__cnt_off", "__sum_off",
-                    "n", "total_q",
-                ],
-            ),
-            off_schema,
-        )
-    else:  # empty input
-        offsets = spark.createDataFrame([], off_schema)
-
+    n_ranges = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     vorder = F.desc(value_col) if descending else F.asc(value_col)
-    within = Window.partitionBy(*keys).orderBy(vorder, F.asc(tiebreak_col))
-    running = within.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return (
-        rows.join(F.broadcast(offsets), keys)
-        .select(
-            *df.columns,
-            (F.col("__cnt_off") + F.row_number().over(within)).alias("i"),
-            "n",
-            (F.col("__sum_off") + F.sum(qv_dec).over(running))
-            .cast("decimal(38,0)")
-            .alias("cum_q"),
-            "total_q",
-        )
+    order = [vorder, F.asc(tiebreak_col)]
+    ranged = (
+        df.repartitionByRange(n_ranges, *order)
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
     )
 
+    qv = F.floor(F.col(value_col) * q).cast("decimal(38,0)")
+    stats = {
+        r["__pid"]: (r["cnt"], int(r["qsum"]))
+        for r in ranged.groupBy("__pid")
+        .agg(F.count(F.lit(1)).alias("cnt"), F.sum(qv).alias("qsum"))
+        .collect()
+    }
+    cnt_off, sum_off = [], []
+    n_total = q_total = 0
+    for pid in range(max(stats, default=-1) + 1):
+        cnt_off.append(n_total)
+        sum_off.append(Decimal(q_total))
+        cnt, qsum = stats.get(pid, (0, 0))
+        n_total += cnt
+        q_total += qsum
+
+    def at_pid(values: list, dtype: str) -> Column:
+        arr = F.array(*[F.lit(v) for v in values]).cast(f"array<{dtype}>")
+        return F.element_at(arr, F.col("__pid") + 1)
+
+    within = Window.partitionBy("__pid").orderBy(*order)
+    running = within.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return ranged.select(
+        *df.columns,
+        (at_pid(cnt_off, "bigint") + F.row_number().over(within)).alias("i"),
+        F.lit(n_total).cast("bigint").alias("n"),
+        (at_pid(sum_off, "decimal(38,0)") + F.sum(qv).over(running))
+        .cast("decimal(38,0)")
+        .alias("cum_q"),
+        F.lit(Decimal(q_total)).cast("decimal(38,0)").alias("total_q"),
+    )

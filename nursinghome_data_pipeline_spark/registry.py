@@ -37,7 +37,6 @@ from .functions.exprs import (
 )
 from .functions.text import (
     STOPWORDS_EN,
-    english_stopword_filter,
     normalize_quarter_col,
     oracle_quality_score,
     oracle_sentiment,
@@ -2804,7 +2803,7 @@ def knn_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    trained = lloyd_train(cands, init, iterations=2)._trained_rows
+    trained, _, _ = lloyd_train(cands, init, iterations=2)
     qvec = embeddings.where(F.col("vec_id") == 0).first()["embedding"]
     return knn_ivf_fixed(cands, qvec, trained, k=10, n_probe=4)
 
@@ -3080,30 +3079,11 @@ def _oracle_corpus_build() -> str:
     "recursive-CTE oracle.",
 )
 def corpus_build_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.text import quality_score_col, token_count_col
-    from .operators.dedup import connected_components, jaccard_pair_join
+    from .operators.corpus import filter_and_dedup_docs
 
     (documents,) = _t(spark, sf_dir, "documents")
-    filtered = documents.where(
-        english_stopword_filter("text") & (quality_score_col("text") >= 0.6)
-    )
-    canon = filtered.groupBy(F.md5(F.col("text")).alias("fp")).agg(
-        F.min("doc_id").alias("doc_id")
-    )
-    # survivors feeds FOUR consumers (both posting sides of the pair
-    # join, the CC node set, the canonical keep) — materialize the
-    # filter+fingerprint+semi-join subtree once instead of re-running
-    # it per consumer (same multi-referenced-subtree pattern as the
-    # edge input inside connected_components)
-    survivors = filtered.join(
-        canon.select("doc_id"), "doc_id", "left_semi"
-    ).localCheckpoint(eager=False)
-    pairs = jaccard_pair_join(survivors, threshold=0.5)
-    comps = connected_components(survivors, pairs)
-    kept = survivors.join(
-        comps.where(F.col("doc_id") == F.col("component_id")).select("doc_id"),
-        "doc_id",
-        "left_semi",
+    _, _, kept = filter_and_dedup_docs(
+        documents, min_quality=0.6, jaccard_threshold=0.5
     )
     return kept.select(
         "doc_id",
@@ -8263,9 +8243,9 @@ def cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     "total sums are QUANTIZED window sums (exact integers — a plain "
     "double running sum OVER would drift with frame evaluation "
     "order), so the crossing rank is identical in both engines. The "
-    "rank/running-sum window is the two-phase bucket-offset plan "
-    "(operators/skew.bucketed_global_order): partitioned by value "
-    "bucket + broadcast prefix offsets, never a single-reducer "
+    "rank/running-sum window is operators/skew.bucketed_global_order: "
+    "range-partitioned on (rev, custkey) and partitioned by range id "
+    "plus driver-side per-range offsets, never a single-reducer "
     "global window over the |customers|-row frame. Complements "
     "revenue_gini_coefficient (the integral of this curve).",
 )
@@ -8275,10 +8255,9 @@ def pareto_8020_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orders,) = _t(spark, sf_dir, "orders")
     cust = orders.groupBy("o_custkey").agg(q_sum("o_totalprice", "rev"))
     q = float(1 << 20)
-    # global rank + running sum WITHOUT a global single-reducer window:
-    # the bucket-offset two-phase plan (operators/skew) — bit-identical
-    # to the oracle's one-window form, but the wide window is
-    # partitioned by value bucket
+    # global rank + running sum WITHOUT a global single-reducer window
+    # (operators/skew) — bit-identical to the oracle's one-window form,
+    # but the wide window is partitioned by range id
     ranked = bucketed_global_order(
         cust,
         value_col="rev",
@@ -8863,9 +8842,8 @@ def topk_with_ties_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quantized sums; the rank-weighted and plain totals are sums of "
     "exact integers (order-independent), so one global double "
     "expression produces the identical value in both engines. Ranks "
-    "come from the two-phase bucket-offset plan (operators/skew."
-    "bucketed_global_order) — the wide window is partitioned by value "
-    "bucket; only the bounded bucket table sees a global window.",
+    "come from operators/skew.bucketed_global_order — the wide window "
+    "is partitioned by range id; no window over the frame is global.",
 )
 def revenue_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.skew import bucketed_global_order
@@ -8873,8 +8851,8 @@ def revenue_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orders,) = _t(spark, sf_dir, "orders")
     cust = orders.groupBy("o_custkey").agg(q_sum("o_totalprice", "rev"))
     # the sorted-rank identity needs each row's GLOBAL rank i — computed
-    # via the bucket-offset pattern (operators/skew.bucketed_global_order)
-    # so no single-reducer window touches the |customers|-row frame
+    # by operators/skew.bucketed_global_order so no single-reducer
+    # window touches the |customers|-row frame
     ranked = bucketed_global_order(
         cust,
         value_col="rev",

@@ -81,11 +81,11 @@ def test_tol_stops_early_at_fixed_point(spark):
     )
 
     pts, init = _points(spark), _init(spark)
-    fixed = lloyd_train(pts, init, iterations=5)
-    early = lloyd_train(pts, init, iterations=5, tol=0.0)
-    assert early._trained_rows == fixed._trained_rows
-    assert fixed._rounds_run == 5
-    assert early._rounds_run < 5  # the stop condition actually fired
+    fixed, _, fixed_rounds = lloyd_train(pts, init, iterations=5)
+    early, _, early_rounds = lloyd_train(pts, init, iterations=5, tol=0.0)
+    assert early == fixed
+    assert fixed_rounds == 5
+    assert early_rounds < 5  # the stop condition actually fired
 
 
 def test_max_centroid_movement_edge_cases():

@@ -19,6 +19,19 @@ from nursinghome_data_pipeline_spark.operators.similarity import (
 
 from .near_dup_oracles import minhash_candidate_pairs
 
+
+def _cc_labels(algorithm, nodes, edges, **kw):
+    """(doc_id, component_id) from the named connected-components
+    function: min-label propagation or the large-star/small-star one."""
+    from nursinghome_data_pipeline_spark.operators.dedup import (
+        connected_components,
+        connected_components_star,
+    )
+
+    if algorithm == "star":
+        return connected_components_star(nodes, edges, **kw)[0]
+    return connected_components(nodes, edges, **kw)
+
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
     "from the warm windowsill and the birds sing in the garden outside"
@@ -133,7 +146,7 @@ def test_connected_components_nonconvergence_raises(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    with pytest.raises(RuntimeError, match="star"):
+    with pytest.raises(RuntimeError, match="connected_components_star"):
         connected_components(nodes, chain, max_iter=3)
     # the star variant labels the same chain in O(log n) alternations
     labels, rounds = connected_components_star(nodes, chain, max_iter=10)
@@ -152,7 +165,7 @@ def test_connected_components_nonconvergence_raises(spark):
     chain3 = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
     for algorithm in ("label_propagation", "star"):
         with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(n3, chain3, max_iter=0, algorithm=algorithm)
+            _cc_labels(algorithm, n3, chain3, max_iter=0)
 
 
 def test_connected_components_edge_only_nodes_both_algorithms(spark):
@@ -208,15 +221,11 @@ def test_connected_components_edge_only_nodes_both_algorithms(spark):
 def test_connected_components_edge_inputs(spark, algorithm, node_ids, edge_list, want):
     """Edge inputs pinned for both algorithms: an empty graph, isolated
     nodes, and self-loops, which add no neighbor."""
-    from nursinghome_data_pipeline_spark.operators.dedup import (
-        connected_components,
-    )
-
     nodes = spark.createDataFrame([(i,) for i in node_ids], "doc_id long")
     edges = spark.createDataFrame(edge_list, "id_a long, id_b long")
     got = {
         r.doc_id: r.component_id
-        for r in connected_components(nodes, edges, algorithm=algorithm).collect()
+        for r in _cc_labels(algorithm, nodes, edges).collect()
     }
     assert got == want
 
@@ -457,7 +466,6 @@ def test_star_cc_long_chain_bounded_rounds(spark):
     # large-star/small-star variant must solve it in O(log n) rounds
     # (r2 verdict item #7).
     from nursinghome_data_pipeline_spark.operators.dedup import (
-        connected_components,
         connected_components_star,
     )
 
@@ -470,13 +478,6 @@ def test_star_cc_long_chain_bounded_rounds(spark):
     got = {r.doc_id: r.component_id for r in labels.collect()}
     assert got == {i: 0 for i in range(n)}
     assert rounds <= 12, f"star CC took {rounds} rounds on a 128-chain"
-
-    # the flag on the public entry point routes to the same result
-    via_flag = {
-        r.doc_id: r.component_id
-        for r in connected_components(nodes, edges, algorithm="star").collect()
-    }
-    assert via_flag == got
 
 
 def test_star_cc_matches_label_propagation_on_clusters(spark):
@@ -549,7 +550,6 @@ def test_connected_components_survives_lost_observation(spark, monkeypatch):
     import pyspark.sql
 
     from nursinghome_data_pipeline_spark.functions import obs
-    from nursinghome_data_pipeline_spark.operators import dedup
 
     class _DeafObservation(pyspark.sql.Observation):
         @property
@@ -567,9 +567,7 @@ def test_connected_components_survives_lost_observation(spark, monkeypatch):
     for algorithm in ("label_propagation", "star"):
         comp = {
             r.doc_id: r.component_id
-            for r in dedup.connected_components(
-                nodes, edges, algorithm=algorithm
-            ).collect()
+            for r in _cc_labels(algorithm, nodes, edges).collect()
         }
         assert comp == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3}, algorithm
 

@@ -322,9 +322,10 @@ _BOUNDED_BNLJ = {
 #       map task, never the data;
 #   (b) a final ORDER BY over an already-tiny result (a 1-row max
 #       filter, a 4-row integrity report);
-#   (c) the documented bounded windows: bucket-offset tables of
-#       `bucketed_global_order` (≤ n_buckets ≈ 4096 rows) and the
-#       |weeks|-row wow_growth lag spine.
+#   (c) the documented bounded window: the |weeks|-row wow_growth
+#       lag spine. (`bucketed_global_order`, behind pareto/gini, has
+#       no unpartitioned window: it adds driver-side per-range
+#       offsets to a window partitioned by range id.)
 # A query NOT on this list gaining a SinglePartition exchange is the
 # single-reducer bug class (pre-r3 pareto/gini) — fail loudly.
 _BOUNDED_SINGLE_PARTITION = {
