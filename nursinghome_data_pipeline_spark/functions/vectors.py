@@ -9,6 +9,8 @@ partitioning (Spark's ``aggregate`` HOF is sequential per row).
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -17,25 +19,21 @@ def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def double_sql(v: float) -> str:
-    """SQL text of the double ``v``, bit-exact: ``repr`` round-trips
-    through the parser's ``Double.parseDouble`` (``-0.0`` included),
-    and NaN/±Infinity — which have no literal form — become casts."""
-    v = float(v)
-    if v != v:
-        return "CAST('NaN' AS DOUBLE)"
-    if v in (float("inf"), float("-inf")):
-        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
-    return f"{v!r}D"
+def array_literal(values, ddl_type: str) -> str:
+    """SQL text of the driver-held array ``values`` as ONE typed literal.
 
-
-def double_array_sql(vals) -> str:
-    """SQL text of an ``array<double>`` literal (see :func:`double_sql`).
-
-    Parsed with ``F.expr`` it is one py4j round trip; ``F.lit(list)``
-    is ``array(*[lit(x) ...])``, one round trip per element (a warm
-    16-centroid × 64-dim Lloyd assignment made thousands of them)."""
-    return f"array({', '.join(double_sql(v) for v in vals)})"
+    ``from_json('<json.dumps(values)>', '<ddl_type>')`` is one
+    expression whatever the length; constant folding evaluates it once
+    to a single ``Literal``, so no analyzer or optimizer rule walks a
+    node per element. ``json.dumps`` writes each double in ``repr``
+    form, which Jackson parses back to the same bits (-0.0 and
+    subnormals included), and NaN/±Infinity as the bare tokens Spark's
+    JSON reader accepts by default. FAILFAST makes a value the type
+    cannot hold (a long past 2^63) fail planning instead of folding to
+    NULL. ``values`` holds numbers, lists and dicts (for structs) only:
+    the JSON is spliced into a SQL string literal unescaped. Wrap it in
+    ``F.expr`` for a Column."""
+    return f"from_json('{json.dumps(values)}', '{ddl_type}', map('mode', 'FAILFAST'))"
 
 
 def dot_product_col(a: Column | str, b: Column | str) -> Column:

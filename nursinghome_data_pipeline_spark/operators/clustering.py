@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 
 from ..functions.exprs import q_avg
-from ..functions.vectors import dot_product_col, double_array_sql, double_sql
+from ..functions.vectors import array_literal, dot_product_col
 
 
 def _collect_centroids(centroids: DataFrame) -> list[tuple[int, list[float]]]:
@@ -58,26 +58,27 @@ def centroid_argmin_col(
     input per Lloyd iteration — assignment is now whole-stage-codegen
     with no exchange, the property that matters at 10^9 vectors.
 
-    The k centroids are ONE parsed literal, ``array(named_struct('cid',
-    …, 'c', array(…), 'cc', …), …)``, walked by one ``transform`` with
-    dot(x,x) bound once (:func:`~.dedup._bind`): one py4j call per
-    Lloyd iteration instead of one per centroid element (``F.lit`` of
-    a list is a ``lit`` per element). dot(c,c) is precomputed with the
-    same sequential left-to-right fold as ``dot_product_col`` —
-    bit-equal, and a literal instead of a per-row fold Catalyst may
-    not constant-fold."""
+    The k centroids are ONE folded literal
+    (:func:`~..functions.vectors.array_literal`) of ``(cid, c, cc)``
+    structs, walked by one ``transform`` with dot(x,x) bound once
+    (:func:`~.dedup._bind`). dot(c,c) is precomputed with the same
+    sequential left-to-right fold as ``dot_product_col`` — bit-equal,
+    and a literal instead of a per-row fold Catalyst may not
+    constant-fold."""
     from .dedup import _bind
 
-    def one(cid: int, clist: list[float]) -> str:
+    def one(cid: int, clist: list[float]) -> dict:
         cc = 0.0
         for v in clist:
             cc = cc + v * v
-        return (
-            f"named_struct('cid', {int(cid)}L, 'c', {double_array_sql(clist)}, "
-            f"'cc', {double_sql(cc)})"
-        )
+        return {"cid": int(cid), "c": [float(v) for v in clist], "cc": cc}
 
-    cents = F.expr(f"array({', '.join(one(cid, c) for cid, c in centroid_rows)})")
+    cents = F.expr(
+        array_literal(
+            [one(cid, c) for cid, c in centroid_rows],
+            "array<struct<cid:bigint,c:array<double>,cc:double>>",
+        )
+    )
 
     def nearest(xx: F.Column) -> F.Column:
         return F.array_min(

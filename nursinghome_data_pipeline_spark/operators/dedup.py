@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.vectors import array_literal
 from .fixpoint import both_directions, fixpoint
 
 
@@ -133,13 +134,13 @@ def minhash_signature_col(
     :func:`_bind`). All JVM-side expressions — embarrassingly parallel
     map work at 100 TB, no shuffle.
     """
-    # the constants are ONE parsed array literal walked by ONE
+    # the constants are ONE folded literal walked by ONE
     # transform: n_hashes separate array_min(transform(...)) trees cost
     # n_hashes × (lambda + literal) construction and analysis per call
     # (warm build + analysis of the 16×4 index projection, median of
     # 10 on 4 shared cores: 0.35 s → 0.24 s); the XORs and minima are
     # the same, bit for bit
-    consts = F.expr(f"array({', '.join(f'{c}L' for c in _perm_constants(n_hashes))})")
+    consts = F.expr(array_literal(_perm_constants(n_hashes), "array<bigint>"))
     sh = shingle_hash_col(text, shingle_k)
 
     def mins(arr: Column) -> Column:

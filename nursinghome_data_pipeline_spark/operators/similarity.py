@@ -23,7 +23,7 @@ from .. import fs
 # the generation layout is fs's; re-exported for out-of-API readers of
 # the raw index tree (spark.read.parquet, file counting, scripts)
 from ..fs import active_data_root
-from ..functions.vectors import dot_product_col, l2_norm_col
+from ..functions.vectors import array_literal, dot_product_col, l2_norm_col
 
 
 def lsh_planes(n_planes: int, dim: int, seed: int = 42):
@@ -67,8 +67,6 @@ def _cosine_with_norms(
     vector's norm to preserve the ``sqrt(aa)*sqrt(bb)`` operand
     order. Zero-norm guard preserved: den == 0 → NULL, so all-zero
     vectors still never win a top-k or pass a threshold filter."""
-    from ..functions.vectors import dot_product_col
-
     den = na * nb
     num = dot_product_col(a, b)
     return F.when(den == 0.0, F.lit(None).cast("double")).otherwise(
@@ -76,44 +74,43 @@ def _cosine_with_norms(
     )
 
 
-def _cosine_lit(a: Column | str, vals) -> Column:
-    """Cosine against a PYTHON-LITERAL vector — bit-identical to
-    ``_cosine(a, F.array(*map(F.lit, vals)))``, ~2.5× cheaper measured.
+def _lit_vec(vals) -> tuple[list[float], float]:
+    """A PYTHON-LITERAL vector as doubles plus its L2 norm, folded
+    driver-side.
 
     The higher-order-function folds (``zip_with`` + ``aggregate``) are
-    interpreted per element, so each cosine against a literal pays
-    THREE 64-element folds per row: a·b, a·a, and — pointlessly — the
-    literal's own b·b. Here b·b folds driver-side with the SAME
-    sequential left-to-right double arithmetic as ``dot_product_col``
-    (every step an IEEE-754 round-to-nearest mul/add in both CPython
-    and the JVM), and ``math.sqrt`` / ``Math.sqrt`` are both
-    correctly-rounded, so ``F.lit(math.sqrt(bb))`` is the very double
-    ``F.sqrt(dot_product_col(b, b))`` evaluates to — same trick as
-    ``clustering.centroid_argmin_col``'s dot(c,c) literal, same
-    proof obligation, and verified empirically (512k × 16-seed
-    assignment: ``exceptAll`` == 0 rows vs the three-fold form; DuckDB
-    oracles unchanged — they compute the same correctly-rounded
-    value from the same literal array). The a·a fold stays engine-side
-    (it varies per row) and is shared across seeds by subexpression
-    reuse when the caller evaluates many ``_cosine_lit`` against one
-    row, which is what cuts 16-seed assignment from 48 folds/row to
-    17."""
+    interpreted per element, so a cosine against a literal would pay
+    the literal's own b·b fold on every row. Here b·b folds with the
+    SAME sequential left-to-right double arithmetic as
+    ``dot_product_col`` (every step an IEEE-754 round-to-nearest
+    mul/add in both CPython and the JVM), and ``math.sqrt`` /
+    ``Math.sqrt`` are both correctly-rounded, so the norm is the very
+    double ``F.sqrt(dot_product_col(b, b))`` evaluates to — same trick
+    as ``clustering.centroid_argmin_col``'s dot(c,c), and verified
+    empirically (512k × 16-seed assignment: ``exceptAll`` == 0 rows vs
+    the three-fold form; DuckDB oracles unchanged — they compute the
+    same correctly-rounded value from the same literal array)."""
     import math
-
-    from ..functions.vectors import dot_product_col, double_array_sql
 
     fv = [float(v) for v in vals]
     bb = 0.0
     for v in fv:
         bb = bb + v * v
-    # one parsed array literal (one py4j call), not dim F.lit calls —
-    # same values (the construction-cost pathology the LSH bucket DSL
-    # measured at 5.7 s per 77 folds; an ivf_cell_col over 16 seeds
-    # builds 16 of these per call)
-    num = dot_product_col(a, F.expr(double_array_sql(fv)))
-    den = F.sqrt(dot_product_col(a, a)) * F.lit(math.sqrt(bb))
-    return F.when(den == 0.0, F.lit(None).cast("double")).otherwise(
-        num / den
+    return fv, math.sqrt(bb)
+
+
+def _cosine_lit(a: Column | str, vals) -> Column:
+    """Cosine against a PYTHON-LITERAL vector — bit-identical to
+    ``_cosine(a, F.array(*map(F.lit, vals)))``: the vector is one folded
+    literal (:func:`~..functions.vectors.array_literal`) and its norm a
+    driver-side constant (:func:`_lit_vec`), so each row pays two folds
+    (a·b, a·a) instead of three."""
+    fv, nb = _lit_vec(vals)
+    return _cosine_with_norms(
+        a,
+        F.expr(array_literal(fv, "array<double>")),
+        F.sqrt(dot_product_col(a, a)),
+        F.lit(nb),
     )
 
 
@@ -181,24 +178,19 @@ def lsh_bucket_structs_col(
     bit ``i`` is set when the vector's sequential double dot product
     with plane ``i`` is ``>= 0``.
 
-    Built as ONE ``F.expr`` SQL parse: the plane values parse once as
-    one ``array(array(array(...)))`` literal of ``repr``-exact doubles
-    (shortest round-trip form, so each parsed literal is bit-identical
-    to ``F.lit``) and one ``transform × zip_with × aggregate`` tree
-    walks it. Construction cost is what decides the shape, measured
-    on the srp probe: per-plane Column DSL trees cost 5.7 s to
-    CONSTRUCT a 7-table × 11-plane projection (r9) and 1.7-2.9 s at
-    15 tables × 18 planes (r13), against ~0.1 s for one parse. A
-    Python-lambda DSL tree over the parsed plane literal still cost
-    0.27 s to build and physically plan at 6 planes × 1 table over the
-    sf0.1 embeddings, against 0.12 s as SQL text (warm, median of 10
-    on 4 shared cores); at 18 planes × 15 tables the two forms
-    measured alike (1.8-2.3 s, dominated by the literal itself).
-    (A nested ``F.lit`` was measured 10-14 s to BUILD — PySpark
-    recurses element-wise through py4j. Rejected runtime shapes: a
-    fused struct-accumulator fold, 1.9× worse; fully unrolled
-    getItem·literal chains, 4.6× worse at plan time.) Bucket ids are
-    pinned against a pure-Python reference by
+    Built as ONE ``F.expr`` SQL parse: the planes of every table are
+    one folded ``array<array<array<double>>>`` literal
+    (:func:`~..functions.vectors.array_literal`, ``repr``-exact
+    doubles) and one ``transform × zip_with × aggregate`` tree walks
+    it. Construction cost is what decides the shape: per-plane Column
+    DSL trees cost 5.7 s to CONSTRUCT a 7-table × 11-plane projection
+    (r9) and 1.7-2.9 s at 15 tables × 18 planes (r13); a
+    Python-lambda DSL tree over the plane literal cost 0.27 s to build
+    and physically plan at 6 planes × 1 table over the sf0.1
+    embeddings, against 0.12 s as SQL text (warm, median of 10 on 4
+    shared cores). (Rejected runtime shapes: a fused struct-accumulator fold, 1.9× worse; fully
+    unrolled getItem·literal chains, 4.6× worse at plan time.) Bucket
+    ids are pinned against a pure-Python reference by
     ``tests/test_srp_properties.py``.
 
     Because the column name is interpolated into SQL text, names
@@ -206,9 +198,9 @@ def lsh_bucket_structs_col(
     quoting and corrupt — or inject into — the parsed expression); the
     lambda variables carry a ``__lsh_`` prefix so no plausible column
     name is shadowed by them. ``n_planes == 0`` gives bucket 0 in
-    every table (everything in one bucket) rather than an unparseable
-    empty plane literal; ``n_tables < 1`` is rejected, as it would
-    explode an empty key array and silently drop every row."""
+    every table (everything in one bucket); ``n_tables < 1`` is
+    rejected, as it would explode an empty key array and silently drop
+    every row."""
     if "`" in vec_col:
         raise ValueError(
             "lsh_bucket_structs_col: vec_col may not contain a backtick "
@@ -219,31 +211,23 @@ def lsh_bucket_structs_col(
             f"n_tables must be >= 1 (got {n_tables}); an empty table set "
             "would drop every row"
         )
-    if n_planes == 0:
-        zero = (f"named_struct('tbl', {j}, 'bucket', 0L)" for j in range(n_tables))
-        return F.expr(f"array({', '.join(zero)})")
-    planes = ", ".join(
-        "array("
-        + ", ".join(
-            "array(" + ", ".join(f"{float(v)!r}D" for v in plane) + ")"
-            for plane in lsh_planes(n_planes, dim, seed + j)
-        )
-        + ")"
-        for j in range(n_tables)
+    planes = array_literal(
+        [lsh_planes(n_planes, dim, seed + j).tolist() for j in range(n_tables)],
+        "array<array<array<double>>>",
     )
-    weights = ", ".join(f"{1 << i}L" for i in range(n_planes))
+    weights = array_literal([1 << i for i in range(n_planes)], "array<bigint>")
     dot = (
         f"aggregate(zip_with(`{vec_col}`, __lsh_p, "
         "(__lsh_x, __lsh_y) -> CAST(__lsh_x AS DOUBLE) * CAST(__lsh_y AS DOUBLE)), "
         "0.0D, (__lsh_acc, __lsh_v) -> __lsh_acc + __lsh_v)"
     )
     bucket = (
-        f"aggregate(zip_with(__lsh_tp, array({weights}), "
+        f"aggregate(zip_with(__lsh_tp, {weights}, "
         f"(__lsh_p, __lsh_w) -> CASE WHEN {dot} >= 0 THEN __lsh_w ELSE 0L END), "
         "0L, (__lsh_acc, __lsh_v) -> __lsh_acc + __lsh_v)"
     )
     return F.expr(
-        f"transform(array({planes}), (__lsh_tp, __lsh_j) -> "
+        f"transform({planes}, (__lsh_tp, __lsh_j) -> "
         f"named_struct('tbl', __lsh_j, 'bucket', {bucket}))"
     )
 
@@ -451,19 +435,36 @@ def ivf_cell_col(
     seeds: list[tuple[int, list[float]]], vec_col: str = "embedding"
 ) -> Column:
     """cell = argmax cosine(vector, seed), ties to the smallest seed
-    id — ONE map-only projection (``array_max`` over a struct array of
-    literal seed vectors): no join, no shuffle, at any scale."""
+    id — ONE map-only projection: no join, no shuffle, at any scale.
 
-    cell_choices = F.array(
-        *[
-            F.struct(
-                _cosine_lit(F.col(vec_col), svec).alias("cos"),
-                F.lit(-sid).cast("long").alias("negseed"),
-            )
-            for sid, svec in seeds
-        ]
+    The seeds are one folded literal of ``(sid, s, ss)`` structs
+    (``ss`` = the seed's driver-side norm, :func:`_lit_vec`) walked by
+    one ``transform``, with the row's norm bound once
+    (:func:`~.dedup._bind`); ``array_max`` over ``(cos, -sid)`` structs
+    picks the cell. Each cosine is :func:`_cosine_lit`'s, bit for
+    bit."""
+    from .dedup import _bind
+
+    rows = []
+    for sid, svec in seeds:
+        fv, nb = _lit_vec(svec)
+        rows.append({"sid": int(sid), "s": fv, "ss": nb})
+    lit = F.expr(
+        array_literal(rows, "array<struct<sid:bigint,s:array<double>,ss:double>>")
     )
-    return (-F.array_max(cell_choices)["negseed"]).cast("bigint")
+
+    def best(na: Column) -> Column:
+        return F.array_max(
+            F.transform(
+                lit,
+                lambda k: F.struct(
+                    _cosine_with_norms(vec_col, k["s"], na, k["ss"]).alias("cos"),
+                    (-k["sid"]).alias("negseed"),
+                ),
+            )
+        )["negseed"]
+
+    return (-_bind(F.sqrt(dot_product_col(vec_col, vec_col)), best)).cast("bigint")
 
 
 def knn_ivf_fixed(

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vectors import array_literal
+
 _SALT = "__salt"
 
 
@@ -236,13 +238,13 @@ def bucketed_global_order(
     n_total = q_total = 0
     for pid in range(max(stats, default=-1) + 1):
         cnt_off.append(n_total)
-        sum_off.append(Decimal(q_total))
+        sum_off.append(q_total)
         cnt, qsum = stats.get(pid, (0, 0))
         n_total += cnt
         q_total += qsum
 
-    def at_pid(values: list, dtype: str) -> Column:
-        arr = F.array(*[F.lit(v) for v in values]).cast(f"array<{dtype}>")
+    def at_pid(values: list[int], dtype: str) -> Column:
+        arr = F.expr(array_literal(values, f"array<{dtype}>"))
         return F.element_at(arr, F.col("__pid") + 1)
 
     within = Window.partitionBy("__pid").orderBy(*order)

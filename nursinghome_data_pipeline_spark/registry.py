@@ -1413,10 +1413,10 @@ _PROBE_B = 0.05
     "to the DuckDB twin like knn_cosine_topk.",
 )
 def embedding_linear_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.vectors import dot_product_col
+    from .functions.vectors import array_literal, dot_product_col
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
-    w = F.array(*[F.lit(x) for x in _PROBE_W])
+    w = F.expr(array_literal(_PROBE_W, "array<double>"))
     score = dot_product_col(F.col("embedding"), w) + F.lit(_PROBE_B)
     return embeddings.select(
         "vec_id",
@@ -8920,90 +8920,6 @@ def specs() -> list[QuerySpec]:
     return _ordered_specs()
 
 
-#: Names emitted FIRST by :func:`queries` / :func:`oracle_sql`. The
-#: external driver's correctness gate samples a PREFIX of the registry
-#: in iteration order, so the families whose verification evidence is
-#: still local-only rotate into that prefix each round (r2 verdict
-#: item #1: 139 of 189 queries had never received a driver row).
-#: Round-3 spotlight — never-driver-checked families: the 17-shape
-#: TPC-H battery, all streaming twins, the corpus-prep set,
-#: graph/clustering, CDC/SCD2/snapshot — plus the queries fixed this
-#: round (the two ex-``no_oracle`` sketch rows, now with
-#: cross-engine-computable oracles, and the de-weakened
-#: hard_negative_mining / rolling_7d_active_users /
-#: hierarchy_rollup_users plans), so the fixes get driver rows too.
-_SPOTLIGHT_R3 = [
-    # TPC-H battery (17 shapes, registered r2, never sampled)
-    "shipping_priority_topk",
-    "returned_item_report",
-    "promo_revenue",
-    "large_volume_customers",
-    "late_order_priority_counts",
-    "local_supplier_volume",
-    "forecast_revenue_change",
-    "volume_shipping_binational",
-    "nation_market_share",
-    "profit_by_nation_year",
-    "customer_order_distribution",
-    "top_supplier_revenue",
-    "supplier_count_by_part_attrs",
-    "small_quantity_order_revenue",
-    "bracketed_revenue",
-    "waiting_suppliers",
-    "inactive_customer_balance",
-    # streaming twins (real stream runs ≡ batch oracles)
-    "streaming_hourly_events",
-    "streaming_enriched_events",
-    "streaming_dedup_events",
-    "streaming_click_purchase_join",
-    "streaming_stateful_user_totals",
-    "streaming_sliding_events",
-    # corpus-prep set
-    "dataset_split_docs",
-    "epoch_shuffle_docs",
-    "length_bucket_batches",
-    "stratified_sample_docs",
-    "dataset_mix_sources",
-    "decontaminate_docs",
-    "pack_sequences_docs",
-    "corpus_build_docs",
-    "span_corruption_plan_docs",
-    "chunk_documents_overlap",
-    # graph / clustering
-    "triangle_count_events",
-    "bfs_reachability_events",
-    "kmeans_lloyd_embeddings",
-    # CDC / SCD2 / snapshot
-    "cdc_replay_customers",
-    "scd2_customer_order_history",
-    "merge_upsert_customers",
-    "snapshot_diff_customers",
-    # fixed this round: ex-no_oracle sketches + de-weakened plans
-    "minhash_signatures_docs",
-    "approx_profile_events",
-    "hard_negative_mining",
-    "rolling_7d_active_users",
-    "hierarchy_rollup_users",
-    # never-sampled dedup / join / attribution shapes
-    "geo_radius_join",
-    "passage_dedup_docs",
-    "incremental_ingest_dedup",
-    "windowed_dedup_events",
-    "linear_attribution_clicks",
-    # positions 51+: newly-oracled r3 rows (closed rows-only) — first
-    # in line if the driver samples past 50
-    "simhash_docs",
-    "simhash_near_dup_pairs",
-    "embedding_near_dup_pairs",
-    "knn_lsh_topk",
-    "knn_ivf_fixed_topk",
-    "synthetic_docs_quality",
-    "whitened_embeddings_by_label",
-    "map_functions_battery",
-    "image_resize_plan",
-]
-
-
 def _driver_green_rounds(root: str | None = None) -> dict[str, int]:
     """Map each query name to the LATEST round in which a recorded
     driver gate (``CORRECTNESS_r*.json`` at the repo root) showed it
@@ -9052,43 +8968,37 @@ def _driver_green_names() -> set[str]:
 
 
 def _ordered_specs() -> list[QuerySpec]:
-    by_name = {s.name: s for s in _SPECS}
-    # Membership comes from _driver_green_names() (the patchable seam
-    # tests use to simulate future gates); _driver_green_rounds() only
-    # supplies staleness sort keys, with 0 for a green name the round
-    # map doesn't know (possible under that monkeypatching).
+    """The registry in the order :func:`queries` / :func:`oracle_sql`
+    emit it. The external driver's correctness gate samples a PREFIX of
+    that order, so it is one stable sort:
+
+    1. oracled queries with no green driver row yet, in registration
+       order — local-only evidence gets the sample slots first;
+    2. driver-green queries, STALEST EVIDENCE FIRST: a query whose
+       latest hash-match was recorded against the round-1 tree
+       re-enters the sample window before one checked last round, so
+       each 50-slot driver sample re-proves the 50 stalest greens
+       against the CURRENT tree (the only mechanism that detects a
+       silent regression in an old query once everything has been
+       green at least once);
+    3. oracle-less specs, which can never hash-green (the driver
+       records rows-only for them), at the very back.
+
+    Membership comes from :func:`_driver_green_names` (the patchable
+    seam tests use to simulate future gates); :func:`_driver_green_rounds`
+    only supplies staleness keys, with 0 for a green name the round map
+    doesn't know (possible under that monkeypatching)."""
     green = _driver_green_names()
     green_rounds = _driver_green_rounds()
-    # The curated head is SELF-RETIRING: a spotlight entry keeps its
-    # prefix slot only until some recorded driver gate shows it green
-    # (CORRECTNESS_r*.json), then drops into the normal rotation — so
-    # the round AFTER the spotlight is sampled, its slots hand over to
-    # the next never-checked families automatically instead of burning
-    # the driver's sample on re-verification.
-    head = [by_name[n] for n in _SPOTLIGHT_R3 if n not in green and by_name[n].oracle is not None]
-    seen = {s.name for s in head}
-    rest = [s for s in _SPECS if s.name not in seen]
-    # After the head, rotation is AUTOMATIC: queries with no green
-    # driver row yet precede already-driver-verified ones. Within the
-    # driver-green class, STALEST EVIDENCE FIRST: a query whose latest
-    # hash-match was recorded against the round-1 tree re-enters the
-    # sample window before one checked last round, so each 50-slot
-    # driver sample re-proves the 50 stalest greens against the
-    # CURRENT tree instead of re-burning slots on fresh ones (this is
-    # the only mechanism that detects a silent regression in an old
-    # query once everything has been green at least once). Ties keep
-    # registration order; Python's sort is stable. Oracle-less specs
-    # can never hash-green (the driver records rows-only for them), so
-    # they sink to the very back — behind the already-green set —
-    # instead of permanently burning sample-prefix slots.
-    green_specs = [s for s in rest if s.name in green]
-    green_specs.sort(key=lambda s: green_rounds.get(s.name, 0))
-    return (
-        head
-        + [s for s in rest if s.name not in green and s.oracle is not None]
-        + green_specs
-        + [s for s in rest if s.name not in green and s.oracle is None]
-    )
+
+    def rank(s: QuerySpec) -> tuple[int, int]:
+        if s.oracle is None:
+            return (2, 0)
+        if s.name in green:
+            return (1, green_rounds.get(s.name, 0))
+        return (0, 0)
+
+    return sorted(_SPECS, key=rank)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

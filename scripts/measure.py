@@ -72,9 +72,12 @@ def main() -> None:
             fns[warm](spark, SF_DIR)
 
     summary: dict[str, dict] = {}
-    for name in names:
+    for i, name in enumerate(names):
         fn = fns.get(name) or qs[name]
-        sc.setJobGroup(f"{tag}-{name}", f"{tag} measure: {name}")
+        # one group per call: a name listed twice must not count the
+        # first call's jobs again
+        group = f"{tag}-{name}-{i}"
+        sc.setJobGroup(group, f"{tag} measure: {name}")
         sc.setJobDescription(f"{tag} measure: {name}")
         t0 = time.perf_counter()
         df = fn(spark, SF_DIR)
@@ -91,7 +94,7 @@ def main() -> None:
         t1 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         t_exec = time.perf_counter() - t1
-        jobs = sc.statusTracker().getJobIdsForGroup(f"{tag}-{name}")
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
         with open(
             os.path.join(out_dir, f"{name}_{suffix}.txt"), "w"
         ) as f:

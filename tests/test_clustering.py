@@ -4,6 +4,7 @@ recursive SQL twin)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from nursinghome_data_pipeline_spark.operators.clustering import (
@@ -153,20 +154,72 @@ def test_centroid_argmin_bit_identical_to_per_centroid_form(spark):
     assert len(set(got.values())) > 2
 
 
-def test_double_sql_round_trips_every_double(spark):
-    """The SQL text of a double parses back to the same bits; NaN and
-    ±Infinity never reach SQL as bare ``nan``/``inf``."""
+def test_array_literal_round_trips_every_value(spark):
+    """A folded array literal carries every value bit-exactly: NaN,
+    ±Infinity, -0.0 and subnormals as doubles, the bigint extremes,
+    decimal(38,0) past 2^63, the empty array and a nested struct
+    array; a long past 2^63 fails planning instead of folding to
+    NULL."""
     import struct
+    from decimal import Decimal
 
-    from nursinghome_data_pipeline_spark.functions.vectors import (
-        double_array_sql,
-        double_sql,
+    from nursinghome_data_pipeline_spark.functions.vectors import array_literal
+
+    def bits(xs):
+        return [struct.pack(">d", v) for v in xs]
+
+    def one(values, ddl):
+        return spark.range(1).select(F.expr(array_literal(values, ddl)).alias("a")).first()["a"]
+
+    vals = [0.0, -0.0, 0.1, 1 / 3, -1.5, 1e16, 1e-300, 5e-324, 2.225073858507201e-308,
+            1.7976931348623157e308, float("nan"), float("inf"), float("-inf")]
+    assert bits(one(vals, "array<double>")) == bits(vals)
+    longs = [-(1 << 63), (1 << 63) - 1, 0, -1]
+    assert one(longs, "array<bigint>") == longs
+    decs = [0, (1 << 63) + 1, 10**38 - 1, -(10**38 - 1)]
+    assert one(decs, "array<decimal(38,0)>") == [Decimal(d) for d in decs]
+    assert one([], "array<double>") == []
+    nested = [{"cid": 3, "c": [-0.0, float("nan"), 5e-324], "cc": float("-inf")},
+              {"cid": -(1 << 63), "c": [], "cc": -0.0}]
+    got = one(nested, "array<struct<cid:bigint,c:array<double>,cc:double>>")
+    assert [(r["cid"], bits(r["c"]), bits([r["cc"]])) for r in got] == [
+        (n["cid"], bits(n["c"]), bits([n["cc"]])) for n in nested
+    ]
+    with pytest.raises(Exception, match="MALFORMED_RECORD"):
+        one([1 << 63], "array<bigint>")
+
+
+def test_driver_arrays_fold_to_one_literal(spark):
+    """Each driver-held array enters the analyzed plan as ONE
+    ``from_json`` call and no per-element ``array(...)`` of constants,
+    and constant folding leaves no ``from_json`` in the optimized plan.
+    Shapes: SRP 18 planes × 15 tables, k = 256 centroids, 16 minhash
+    constants, 16 IVF seeds."""
+    import random
+    import re
+
+    from nursinghome_data_pipeline_spark.operators.clustering import centroid_argmin_col
+    from nursinghome_data_pipeline_spark.operators.dedup import minhash_signature_col
+    from nursinghome_data_pipeline_spark.operators.similarity import (
+        ivf_cell_col,
+        lsh_bucket_structs_col,
     )
 
-    vals = [0.0, -0.0, 0.1, 1 / 3, -1.5, 1e16, 1e-300, 5e-324,
-            1.7976931348623157e308, float("nan"), float("inf"), float("-inf")]
-    assert [double_sql(v) for v in vals[-3:]] == [
-        "CAST('NaN' AS DOUBLE)", "CAST('Infinity' AS DOUBLE)", "CAST('-Infinity' AS DOUBLE)"
-    ]
-    got = spark.range(1).select(F.expr(double_array_sql(vals)).alias("a")).first()["a"]
-    assert [struct.pack(">d", v) for v in got] == [struct.pack(">d", v) for v in vals]
+    rnd = random.Random(3)
+    dim = 64
+    cents = [(cid, [rnd.uniform(-1, 1) for _ in range(dim)]) for cid in range(256)]
+    df = spark.createDataFrame(
+        [(1, [0.5] * dim, "a b c d")], "vec_id long, embedding array<double>, text string"
+    )
+    cases = {
+        "srp": (lsh_bucket_structs_col("embedding", dim=dim, n_planes=18, n_tables=15), 2),
+        "centroids": (centroid_argmin_col(cents, "embedding"), 1),
+        "minhash": (minhash_signature_col("text", n_hashes=16), 1),
+        "ivf": (ivf_cell_col(cents[:16], "embedding"), 1),
+    }
+    for name, (col, n_literals) in cases.items():
+        qe = df.select(col.alias("x"))._jdf.queryExecution()
+        analyzed = qe.analyzed().toString()
+        assert analyzed.count("from_json(") == n_literals, name
+        assert not re.search(r"array\(-?\d", analyzed), name
+        assert "from_json" not in qe.optimizedPlan().toString(), name

@@ -61,62 +61,23 @@ def test_query_matches_oracle(spark, sf_dir, duck, spec):
 
 
 
-def test_driver_spotlight_prefix_is_fully_oracled():
-    # The driver samples a prefix of queries() in iteration order; the
-    # spotlight head is SELF-RETIRING — entries keep their prefix slot
-    # only while no recorded driver gate shows them green — and every
-    # head entry must have an oracle (a rows-only query in the window
-    # would burn a sample slot on a weaker check).
-    names = list(registry.queries())
-    assert len(names) == len(set(names))
-    green = registry._driver_green_names()
-    expected_head = [n for n in registry._SPOTLIGHT_R3 if n not in green]
-    assert names[: len(expected_head)] == expected_head
-    osql = registry.oracle_sql()
-    assert all(n in osql for n in expected_head)
-    # before the round-3 gate lands, the full spotlight must still be
-    # in the window; afterwards retired slots hand over automatically
-    if not (set(registry._SPOTLIGHT_R3) & green):
-        assert len(expected_head) >= 50
-
-
-def test_spotlight_retires_once_driver_green(monkeypatch):
-    # Simulate the post-round-3 state: the whole spotlight has green
-    # driver rows. The prefix must then consist of never-checked
-    # queries (the next rotation), with every green query at the back.
-    real_green = registry._driver_green_names()
-    future_green = real_green | set(registry._SPOTLIGHT_R3)
-    monkeypatch.setattr(registry, "_driver_green_names", lambda: future_green)
-    names = list(registry.queries())
-    n_unchecked = sum(
-        1
-        for s in registry._SPECS
-        if s.name not in future_green and s.oracle is not None
-    )
-    assert all(n not in future_green for n in names[:n_unchecked])
-    # after the verifiable-unchecked block: green queries, then the
-    # permanently rows-only stragglers at the very back
-    no_oracle = {s.name for s in registry._SPECS if s.oracle is None}
-    assert all(
-        n in future_green or n in no_oracle for n in names[n_unchecked:]
-    )
-
-
-def test_auto_rotation_orders_unchecked_before_driver_green():
+def test_auto_rotation_orders_unchecked_before_driver_green(monkeypatch):
     # Past-round driver gates (CORRECTNESS_r*.json) demote queries that
-    # already have a green row: after the curated spotlight head, every
-    # never-driver-checked ORACLED query must precede every driver-green
-    # one, so future sample prefixes spend slots on local-only evidence.
+    # already have a green row: every never-driver-checked ORACLED
+    # query must precede every driver-green one, in registration order,
+    # so future sample prefixes spend slots on local-only evidence.
+    # Half the recorded greens are withheld to simulate unchecked ones.
+    real_green = registry._driver_green_names()
+    assert real_green, "recorded driver gates should yield at least one green row"
+    green = set(sorted(real_green)[::2])
+    monkeypatch.setattr(registry, "_driver_green_names", lambda: green)
     names = list(registry.queries())
-    spot = set(registry._SPOTLIGHT_R3)
-    green = registry._driver_green_names()
-    no_oracle = {s.name for s in registry._SPECS if s.oracle is None}
-    assert green, "recorded driver gates should yield at least one green row"
-    tail = [n for n in names if n not in spot]
-    first_green = next((i for i, n in enumerate(tail) if n in green), len(tail))
-    assert all(n in green or n in no_oracle for n in tail[first_green:]), (
+    assert len(names) == len(set(names)) == len(registry._SPECS)
+    unchecked = [s.name for s in registry._SPECS if s.name not in green]
+    assert names[: len(unchecked)] == unchecked, (
         "an unchecked oracled query sits behind driver-green ones in the rotation"
     )
+    assert set(names[len(unchecked):]) == green
 
 
 def test_driver_green_rotation_is_stalest_evidence_first():
