@@ -15,6 +15,7 @@ semantics (upload_to_s3.py's HEAD/skip dance, K8) for free.
 from __future__ import annotations
 
 import threading
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,38 +69,37 @@ def typed_literals(schema: str, values) -> list[F.Column]:
     return [F.lit(v).cast(t).alias(n) for (n, t), v in zip(fields, values, strict=True)]
 
 
-def write_audit_row(
-    spark: SparkSession,
-    *,
-    table_name: str,
-    check_name: str,
-    status: str,
-    metric_value: float,
-    threshold: float = 0.0,
-    sample_rows: int = 0,
-    notes: str | None = None,
-    table: str = AUDIT_TABLE,
+class AuditRow(NamedTuple):
+    """One ``dq_audit`` row, in :data:`AUDIT_SCHEMA` order; ``created_at``
+    is stamped when the row is written."""
+
+    table_name: str
+    check_name: str
+    status: str
+    metric_value: float
+    threshold: float = 0.0
+    sample_rows: int = 0
+    notes: str | None = None
+
+
+def write_audit_rows(
+    spark: SparkSession, rows: list[AuditRow], *, table: str = AUDIT_TABLE
 ) -> None:
     """K3: parameterized audit insert (build.py:49-53; DDL :18-24).
 
-    The row is typed literals over a one-row ``spark.range``, so the
-    append is one JVM-only job; ``notes`` (a JSON sample, quotes and
+    All ``rows`` go in one append: one plan, one job, one commit. They
+    are typed literals inlined over a one-row ``spark.range``, so the
+    append runs on the JVM alone; ``notes`` (a JSON sample, quotes and
     all) is bound as a literal, not spliced into SQL. ``created_at``
     uses ``current_timestamp()`` (reference: ``datetime('now')``
-    default).
+    default), one instant for the whole append. No rows, no write.
     """
-    values = (
-        table_name,
-        check_name,
-        status,
-        float(metric_value),
-        float(threshold),
-        int(sample_rows),
-        notes,
-    )
-    df = spark.range(0, 1, 1, 1).select(
-        *typed_literals(AUDIT_SCHEMA.replace(", created_at timestamp", ""), values),
-        F.current_timestamp().alias("created_at"),
+    if not rows:
+        return
+    fields = AUDIT_SCHEMA.replace(", created_at timestamp", "")
+    structs = [F.struct(*typed_literals(fields, r)) for r in rows]
+    df = spark.range(0, 1, 1, 1).select(F.inline(F.array(*structs))).select(
+        "*", F.current_timestamp().alias("created_at")
     )
     with _APPEND_LOCK:
         spark.sql(f"CREATE TABLE IF NOT EXISTS {table} ({AUDIT_SCHEMA}) USING parquet")

@@ -116,16 +116,15 @@ def _cmd_catalog(args: argparse.Namespace) -> int:
 
     spark = _session(args)
     if args.table is None:
-        for t in spark.catalog.listTables():
-            print(t.name)
+        for r in spark.sql("SHOW TABLES").collect():
+            print(r.tableName)
         return 0
     df = spark.table(args.table)
     print(f"== preview {args.table}")
     preview(df, args.rows).show(truncate=False)
     print(f"== numeric means")
     numeric_means(df).show(truncate=False)
-    tables = {t.name for t in spark.catalog.listTables()}
-    if "dq_completeness" in tables:
+    if spark.catalog.tableExists("dq_completeness"):
         print(f"== completeness")
         from pyspark.sql import functions as F
 

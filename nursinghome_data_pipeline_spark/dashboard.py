@@ -103,22 +103,29 @@ def overview_payload(
 ) -> dict[str, Any]:
     """Catalog overview data: per-table preview, numeric means, and
     completeness — the ``streamlit_app.py`` query set, one entry per
-    catalog table (all precomputed, selector is client-side). The
-    completeness of all tables is one query; each table's preview and
-    means run concurrently with the other tables'."""
+    catalog table (all precomputed, selector is client-side). Tables are
+    listed with ``SHOW TABLES``, which runs no job (``listTables`` runs
+    one, plus one per partition its local iterator fetches). The
+    completeness of all tables is one query, run concurrently with each
+    table's preview and means."""
     from .query_layer import numeric_means, preview
 
-    listed = [t.name for t in spark.catalog.listTables()]
+    listed = [r.tableName for r in spark.sql("SHOW TABLES").collect()]
     names = tables or sorted(n for n in listed if n != "dq_completeness")
-    completeness: dict[str, dict[str, float]] = {name: {} for name in names}
-    if names and "dq_completeness" in listed:
-        for r in (
-            spark.table("dq_completeness")
-            .where(F.col("table_name").isin(names))
-            .select("table_name", "column_name", "pct_not_null")
-            .collect()
-        ):
-            completeness[r.table_name][r.column_name] = r.pct_not_null
+    if not names:
+        return {}
+
+    def completeness() -> dict[str, dict[str, float]]:
+        out: dict[str, dict[str, float]] = {name: {} for name in names}
+        if "dq_completeness" in listed:
+            for r in (
+                spark.table("dq_completeness")
+                .where(F.col("table_name").isin(names))
+                .select("table_name", "column_name", "pct_not_null")
+                .collect()
+            ):
+                out[r.table_name][r.column_name] = r.pct_not_null
+        return out
 
     def entry(name: str) -> dict[str, Any]:
         df = spark.table(name)
@@ -131,10 +138,14 @@ def overview_payload(
             "columns": df.columns,
             "preview": head,
             "numeric_means": means[0].asDict() if means else {},
-            "completeness": completeness[name],
         }
 
-    return dict(zip(names, map_actions(entry, names)))
+    by_table, *entries = map_actions(
+        lambda task: task(), [completeness, *[lambda n=n: entry(n) for n in names]]
+    )
+    return {
+        name: {**e, "completeness": by_table[name]} for name, e in zip(names, entries)
+    }
 
 
 # --------------------------------------------------------------------------

@@ -6,15 +6,18 @@ the curated ``fact_penalty`` table and ``v_penalties_by_state`` view.
 
 Execution shape vs the reference: each dataset is one unit — a lazy
 DataFrame chain (read→conform→union) written once, its row count
-observed on that write, then its duplicate-key audit: one query whose
-duplicate count is observed on the collect of its key-ordered sample,
-and an audit row appended from JVM literals, so the pass starts no
-Python worker — and the units of all datasets run concurrently from
-driver threads (``parallel.map_actions``). The fact CTAS and the view
-run after every unit has finished. The only shuffles are the dup-check
-and view group-bys, one each. The reference's destructive DB rebuild
-(``ensure_db``, build.py:14-25) maps to overwrite-mode writes, which are
-idempotent per table.
+observed on that write — and the units of all datasets run
+concurrently from driver threads (``parallel.map_actions``). As soon as
+a unit's staging table is written, its duplicate-key audit (one query,
+the duplicate count observed on the collect of its key-ordered sample)
+runs, and for ``penalties`` the fact CTAS and the view run beside it
+instead of waiting for every unit. The audit rows of all units go into
+``dq_audit`` in one append from JVM literals after the last unit, so
+the pass starts no Python worker and commits the audit table once; a
+build that raises still appends the rows of the checks that finished.
+The only shuffles are the dup-check and view group-bys, one each. The
+reference's destructive DB rebuild (``ensure_db``, build.py:14-25)
+maps to overwrite-mode writes, which are idempotent per table.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ import logging
 
 from pyspark.sql import SparkSession
 
-from ..catalog import create_table_as, create_view, stage_overwrite
+from ..catalog import AuditRow, create_table_as, create_view, stage_overwrite, write_audit_rows
 from ..config import DatasetSpec, load_config
 from ..dq import audit_duplicate_keys, observe_counts
 from ..functions.obs import get_metrics
@@ -80,23 +83,29 @@ def run_build(
             present[name] = spec
         else:
             log.warning("no files for dataset %s", name)
-    counts = map_actions(lambda spec: _stage_dataset(spark, spec, csv_dir), present.values())
-    staged = dict(zip(present, counts))
-    if "penalties" in specs and "penalties" in staged:
-        create_table_as(
-            spark,
-            "fact_penalty",
-            FACT_PENALTY_SQL.format(
-                staging_table=specs["penalties"].staging_table
-            ),
+    audits: dict[str, AuditRow] = {}
+    try:
+        counts = map_actions(
+            lambda item: _stage_dataset(spark, *item, csv_dir, audits), present.items()
         )
-        create_view(spark, "v_penalties_by_state", PENALTIES_BY_STATE_SQL)
-    return staged
+    finally:
+        # one append, also when a unit raised: the finished checks' rows
+        write_audit_rows(spark, [audits[name] for name in present if name in audits])
+    return dict(zip(present, counts))
 
 
-def _stage_dataset(spark: SparkSession, spec: DatasetSpec, csv_dir: str) -> int:
-    """One dataset's unit: ingest → stage → duplicate-key audit; returns
-    the staged row count, observed on the staging write."""
+def _stage_dataset(
+    spark: SparkSession,
+    name: str,
+    spec: DatasetSpec,
+    csv_dir: str,
+    audits: dict[str, AuditRow],
+) -> int:
+    """One dataset's unit: ingest → stage, then side by side its
+    duplicate-key check, whose audit row goes into ``audits[name]``,
+    and, for ``penalties``, the fact CTAS and view over the table just
+    written. Returns the staged row count, observed on the staging
+    write."""
     df, obs = observe_counts(
         ingest_dataset(spark, spec, csv_dir), f"staged_{spec.staging_table}"
     )
@@ -104,12 +113,24 @@ def _stage_dataset(spark: SparkSession, spec: DatasetSpec, csv_dir: str) -> int:
     rows = get_metrics(
         obs, fallback=lambda: {"rows": spark.table(spec.staging_table).count()}
     )["rows"]
-    if spec.natural_key:
-        audit_duplicate_keys(
-            spark,
+    log.info("loaded %s -> %s rows=%d", spec.name, spec.staging_table, rows)
+
+    def audit() -> None:
+        audits[name] = audit_duplicate_keys(
             spark.table(spec.staging_table),
             spec.natural_key,
             table_name=spec.staging_table,
         )
-    log.info("loaded %s -> %s rows=%d", spec.name, spec.staging_table, rows)
+
+    steps = [audit] if spec.natural_key else []
+    if name == "penalties":
+        steps.append(lambda: _curate_penalties(spark, spec.staging_table))
+    map_actions(lambda step: step(), steps)
     return rows
+
+
+def _curate_penalties(spark: SparkSession, staging_table: str) -> None:
+    create_table_as(
+        spark, "fact_penalty", FACT_PENALTY_SQL.format(staging_table=staging_table)
+    )
+    create_view(spark, "v_penalties_by_state", PENALTIES_BY_STATE_SQL)

@@ -5,11 +5,15 @@ every CSV in a directory with schema inference, stage each as a table
 named from its normalized file stem, and append per-column completeness
 metrics to ``dq_completeness``.
 
-Execution shape: the per-file completeness profiles are unioned and
-appended in ONE write, and every file's row count is observed on that
-write (no count job per file). With ``stage_tables`` the per-file
-staging writes run concurrently with it from driver threads; without
-it the files are read untyped, so no inference pass runs either.
+Execution shape: the per-file completeness profiles are built
+concurrently, unioned and appended in ONE write, and every file's row
+count is observed on that write (no count job per file). With
+``stage_tables`` the per-file staging writes run concurrently with it
+from driver threads; without it the files are read as strings, named
+from the driver's read of each header line, so no header or inference
+job runs before that append. The append plans one global aggregate per
+CSV; stacking them into one grouped aggregate halves its jobs but
+measured slower on a cold JVM (SCALE.md, "The nh_etl cold pass").
 """
 
 from __future__ import annotations
@@ -42,9 +46,14 @@ def profile_directory(
     if not frames:
         return {}
     stems = list(frames)
+    # each profile frame's analysis is a driver round trip to the JVM;
+    # built concurrently they overlap instead of queueing
     profile = reduce(
         DataFrame.unionByName,
-        [completeness_profile(df, table_name=stem) for stem, df in frames.items()],
+        map_actions(
+            lambda item: completeness_profile(item[1], table_name=item[0]),
+            frames.items(),
+        ),
     )
     # a file's row count is the row_count of any of its profile rows; a
     # file without columns has no profile rows and counts 0

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_quarter_col
-from ..sources.csv_source import files_with_columns, sniff_header
+from ..sources.csv_source import files_with_columns, sniff_header, string_schema
 
 log = logging.getLogger(__name__)
 
@@ -104,8 +104,7 @@ def load_staffing_data(
         )
     frames: list[tuple[str, DataFrame]] = []
     for p in qualifying:
-        header = sniff_header(p)
-        schema = ", ".join(f"`{h}` STRING" for h in header)
+        schema = string_schema(sniff_header(p))
         frames.append(
             (
                 os.path.basename(p),
@@ -235,14 +234,15 @@ def run_staffing_metrics(
     merged = load_staffing_data(spark, data_dir, report)
     cleaned, clean_obs = clean_and_prepare(merged)
     metrics, calc_obs = calculate_metrics(cleaned)
-    # cache in BOTH branches: the CSV write is one action, but the
-    # returned frame is consumed again by every caller (the CLI counts
-    # it) — without the cache the --out path re-executed the whole
-    # multi-file scan + join + aggregate a second time
-    metrics = metrics.cache()
+    # the returned frame is consumed again by every caller (the CLI
+    # counts it), so it must not re-run the multi-file scan + join +
+    # aggregate: with out_dir it is the written CSV read back with the
+    # plan's own schema (nothing held in memory), else a cached result
     if out_dir is not None:
         write_metrics_csv(metrics, out_dir)
+        metrics = spark.read.schema(metrics.schema).option("header", True).csv(out_dir)
     else:
+        metrics = metrics.cache()
         metrics.count()
     from ..functions.obs import get_metrics
 

@@ -26,9 +26,11 @@ from __future__ import annotations
 import glob as _glob
 import os
 import re
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..config import ColumnSpec, DatasetSpec
 from ..parallel import map_actions
@@ -66,16 +68,77 @@ def cast_expr(c: F.Column, typ: str) -> F.Column:
 
 
 def sniff_header(path: str) -> tuple[str, ...]:
-    """Read just the first line of a CSV (driver-side, bounded cost).
+    """Read just the header line of a CSV (driver-side, bounded cost),
+    split as Spark's CSV reader splits it by default.
 
-    A zero-byte file (partial download, touch placeholder) returns an
-    empty header instead of leaking the iterator's bare StopIteration
-    through the whole ingest run — callers treat () as
-    matches-no-schema and skip the file."""
-    import csv
-
+    Like Spark, leading blank and whitespace-only lines are skipped and
+    the header is the first line with content. A file with none (zero
+    bytes, a partial download, a touch placeholder) returns an empty
+    header; callers treat () as matches-no-schema and skip the file."""
     with open(path, newline="", encoding="utf-8-sig") as f:
-        return tuple(next(csv.reader(f), ()))
+        line = next((ln for ln in f if ln.strip()), "")
+    return tuple(_split_csv_line(line.rstrip("\r\n"))) if line else ()
+
+
+def _split_csv_line(line: str) -> list[str]:
+    """Fields of one CSV line under Spark's default dialect (``,``
+    separator, ``"`` quote, ``\\`` escape, an unescaped quote inside a
+    quoted field keeping the field's raw text up to the next
+    separator), which differs from RFC 4180: ``"a""b"`` stays
+    ``"a""b"`` and ``"a\\"b"`` reads ``a"b``."""
+    fields, i, n = [], 0, len(line)
+    while True:
+        if i < n and line[i] == '"':
+            value, i = [], i + 1
+            while i < n:
+                c = line[i]
+                if c == "\\" and i + 1 < n and line[i + 1] in '"\\':
+                    value.append(line[i + 1])
+                    i += 2
+                elif c == '"':
+                    j = i + 1
+                    while j < n and line[j] in " \t":
+                        j += 1
+                    if j == n or line[j] == ",":
+                        i = j
+                        break
+                    # an unescaped quote: the field is its raw text
+                    end = line.find(",", i)
+                    end = n if end < 0 else end
+                    value = ['"', *value, line[i:end]]
+                    i = end
+                    break
+                else:
+                    value.append(c)
+                    i += 1
+            fields.append("".join(value))
+        else:
+            end = line.find(",", i)
+            end = n if end < 0 else end
+            fields.append(line[i:end])
+            i = end
+        if i >= n:
+            return fields
+        i += 1  # past the separator
+
+
+def safe_header(header: tuple[str, ...], *, case_sensitive: bool = False) -> list[str]:
+    """The column names Spark's CSV reader gives ``header``
+    (``CSVUtils.makeSafeHeader``): a blank name becomes ``_c<i>``, and a
+    name that occurs more than once, compared case-insensitively unless
+    ``case_sensitive``, becomes ``<name><i>``, ``i`` its position."""
+    key = (lambda h: h) if case_sensitive else str.lower
+    seen = Counter(key(h) for h in header if h)
+    return [
+        f"_c{i}" if not h else f"{h}{i}" if seen[key(h)] > 1 else h
+        for i, h in enumerate(header)
+    ]
+
+
+def string_schema(names) -> StructType:
+    """An all-string read schema with ``names`` verbatim (no DDL text,
+    so a name may hold any character)."""
+    return StructType([StructField(n, StringType()) for n in names])
 
 
 def list_matching_files(base_dir: str, pattern: str) -> list[str]:
@@ -111,9 +174,8 @@ def read_csv_conformed(
     frames: list[DataFrame] = []
     for header, group_paths in group_by_header(paths).items():
         normed = [norm_name(h) for h in header]
-        schema = ", ".join(f"`{h}` STRING" for h in header)
         raw = (
-            spark.read.schema(schema)
+            spark.read.schema(string_schema(header))
             .option("header", True)
             .option("mode", "PERMISSIVE")
             .csv(group_paths)
@@ -168,10 +230,10 @@ def read_inferred_csvs(
     normalize to the same name raise ``ValueError`` instead of one
     replacing the other.
 
-    ``infer_schema=False`` skips the inference pass over each file: every
-    column reads as a string, named from the header exactly as with
-    inference (a blank name becomes ``_c<i>``, duplicates get a suffix),
-    and a field is NULL in both modes alike."""
+    ``infer_schema=False`` reads every column as a string and runs no
+    job: the names come from :func:`sniff_header` through
+    :func:`safe_header`, so they are the names Spark's own header pass
+    would give, and a field is NULL in both modes alike."""
     paths: dict[str, str] = {}
     for p in sorted(_glob.glob(os.path.join(directory, "*.csv"))):
         stem = norm_name(os.path.splitext(os.path.basename(p))[0])
@@ -180,8 +242,13 @@ def read_inferred_csvs(
                 f"{paths[stem]!r} and {p!r} both map to table name {stem!r}"
             )
         paths[stem] = p
-    frames = map_actions(
-        lambda p: spark.read.options(header=True, inferSchema=infer_schema).csv(p),
-        paths.values(),
-    )
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+
+    def read(p: str) -> DataFrame:
+        if infer_schema:
+            return spark.read.options(header=True, inferSchema=True).csv(p)
+        names = safe_header(sniff_header(p), case_sensitive=case_sensitive)
+        return spark.read.schema(string_schema(names)).option("header", True).csv(p)
+
+    frames = map_actions(read, paths.values())
     return dict(zip(paths, frames))

@@ -286,7 +286,7 @@ def sync(
     fresh = checksum_files(spark, paths)
     existing = None
     if manifest_table is not None:
-        if any(t.name == manifest_table for t in spark.catalog.listTables()):
+        if spark.catalog.tableExists(manifest_table):
             existing = spark.table(manifest_table)
     todo = plan_sync(fresh, existing)
     if dry_run:

@@ -204,3 +204,18 @@ def test_overview_jobs_stay_in_caller_job_group(spark, fresh_database, run_in_jo
     assert p["t_one"]["completeness"] == {"name": 50.0}
     assert p["t_two"]["numeric_means"] == {"v": 1.5}
     assert launched > 0 and in_group == launched
+
+
+def test_overview_launches_no_catalog_iterator_job(spark, fresh_database, last_job_id):
+    # spark.catalog.listTables() collects through a local iterator: a
+    # listTables job, then a hasNext job per partition it fetches
+    with fresh_database("overview_no_iterator"):
+        spark.range(3).write.saveAsTable("t_one")
+        before = last_job_id()
+        p = dash.overview_payload(spark)
+        last_job_id()  # drains the listener bus
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    names = [jobs.apply(i).name() for i in range(jobs.size()) if jobs.apply(i).jobId() > before]
+    assert list(p) == ["t_one"]
+    assert names
+    assert not [n for n in names if n.split(" at ")[0] in ("listTables", "hasNext", "toLocalIterator")]

@@ -81,7 +81,7 @@ def test_audit_row_types_equal_audit_schema(spark, monkeypatch):
     from pyspark.sql.readwriter import DataFrameWriter
     from pyspark.sql.types import _parse_datatype_string
 
-    from nursinghome_data_pipeline_spark.catalog import AUDIT_SCHEMA, write_audit_row
+    from nursinghome_data_pipeline_spark.catalog import AUDIT_SCHEMA, AuditRow, write_audit_rows
 
     written = []
     real = DataFrameWriter.saveAsTable
@@ -92,8 +92,8 @@ def test_audit_row_types_equal_audit_schema(spark, monkeypatch):
 
     monkeypatch.setattr(DataFrameWriter, "saveAsTable", capture)
     table = f"audit_types_{uuid.uuid4().hex[:8]}"
-    write_audit_row(spark, table_name="t", check_name="c", status="ok",
-                    metric_value=3, sample_rows=2, table=table)
+    write_audit_rows(spark, [AuditRow(table_name="t", check_name="c", status="ok",
+                                      metric_value=3, sample_rows=2)], table=table)
     try:
         [df] = written
         expected = _parse_datatype_string(AUDIT_SCHEMA)
@@ -108,12 +108,12 @@ def test_audit_row_types_equal_audit_schema(spark, monkeypatch):
 
 
 def test_audit_notes_round_trip_unchanged(spark):
-    from nursinghome_data_pipeline_spark.catalog import write_audit_row
+    from nursinghome_data_pipeline_spark.catalog import AuditRow, write_audit_rows
 
     notes = '[{"k":"a\'b, \\"c\\"","path":"C:\\x"}] it\'s, "quoted" \\ ${x} --'
     table = f"audit_notes_{uuid.uuid4().hex[:8]}"
-    write_audit_row(spark, table_name="t", check_name="c", status="warn",
-                    metric_value=1, notes=notes, table=table)
+    write_audit_rows(spark, [AuditRow(table_name="t", check_name="c", status="warn",
+                                      metric_value=1, notes=notes)], table=table)
     try:
         assert spark.table(table).first().notes == notes
     finally:
@@ -130,6 +130,16 @@ def test_completeness_profile(spark):
     assert prof["b"].pct_not_null == 50.0
     assert prof["a"].row_count == 4
 
+
+
+def test_completeness_profile_names_keep_backslashes_and_quotes(spark):
+    # a raw CSV header is profiled before normalization, so its name is
+    # kept verbatim: backslashes and quotes included
+    names = ["x\\y", "it's \"q\"", "a\\'b"]
+    df = spark.range(2).select(*[F.lit(i).alias(n) for i, n in enumerate(names)])
+    prof = completeness_profile(df, table_name="t").collect()
+    assert [r.column_name for r in prof] == names
+    assert [r.non_null_count for r in prof] == [2, 2, 2]
 
 def test_completeness_profile_empty(spark):
     df = spark.createDataFrame([], "a int, b string")
@@ -228,15 +238,15 @@ def test_concurrent_audit_rows_all_land(spark):
     import threading
     import uuid
 
-    from nursinghome_data_pipeline_spark.catalog import write_audit_row
+    from nursinghome_data_pipeline_spark.catalog import AuditRow, write_audit_rows
 
     table = f"audit_race_{uuid.uuid4().hex[:8]}"
     start = threading.Barrier(8, timeout=60)
 
     def write(i: int) -> None:
         start.wait()
-        write_audit_row(spark, table_name=f"t{i}", check_name="race",
-                        status="ok", metric_value=i, table=table)
+        write_audit_rows(spark, [AuditRow(table_name=f"t{i}", check_name="race",
+                                          status="ok", metric_value=i)], table=table)
 
     threads = [threading.Thread(target=write, args=(i,)) for i in range(8)]
     interval = sys.getswitchinterval()

@@ -140,6 +140,34 @@ def _two_dataset_config() -> dict:
     }
 
 
+def test_build_appends_its_audit_rows_in_one_write(spark, tmp_path, monkeypatch, fresh_database):
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    (tmp_path / "NH_Penalties_a.csv").write_text(FILE_A)
+    (tmp_path / "NH_Penalties_b.csv").write_text(FILE_B)
+    written = []
+    real = DataFrameWriter.saveAsTable
+
+    def capture(self, name, *args, **kwargs):
+        written.append(name)
+        return real(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", capture)
+    with fresh_database("build_one_audit_append"):
+        staged = run_build(spark, specs=specs_from_dict(_two_dataset_config()), csv_dir=str(tmp_path))
+        audit = spark.table("dq_audit").collect()
+    assert staged == {"a": 5, "b": 1}
+    assert written.count("dq_audit") == 1
+    check = "dup_cms_certification_number_ccn_penalty_date_penalty_type"
+    sample = ('[{"cms_certification_number_ccn":"015009","penalty_date":"2024-01-15",'
+              '"penalty_type":"Fine","n":2}]')
+    assert sorted(tuple(r)[:-1] for r in audit) == [
+        ("staging_a", check, "warn", 1.0, 0.0, 1, sample),
+        ("staging_b", check, "ok", 0.0, 0.0, 0, None),
+    ]
+    assert len({r.created_at for r in audit}) == 1
+
+
 def test_build_failure_in_one_dataset_lets_the_other_finish(spark, tmp_path, monkeypatch, fresh_database):
     from nursinghome_data_pipeline_spark.pipelines import penalties
 

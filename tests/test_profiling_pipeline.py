@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nursinghome_data_pipeline_spark.pipelines.profiling import profile_directory
+from nursinghome_data_pipeline_spark.sources.csv_source import safe_header, sniff_header
 
 
 def test_profile_directory(spark, tmp_path):
@@ -84,16 +85,25 @@ def test_staging_mode_does_not_change_counts_or_profile(spark, tmp_path, fresh_d
     assert [profile["ragged", c] for c in ("a", "b", "c")] == [2, 1, 2]
 
 
-def test_profile_without_staging_skips_inference_jobs(spark, tmp_path, fresh_database, run_in_job_group):
-    # with an inference pass per file the 3-file fixture took 10 jobs;
-    # without it, 7 (a header job per file, then the profile append)
+def test_profile_without_staging_skips_inference_jobs(spark, tmp_path, fresh_database, last_job_id, monkeypatch):
+    # names come from the driver's read of each header line, so neither
+    # a header job nor an inference job runs before the profile append
+    from nursinghome_data_pipeline_spark.pipelines import profiling
+
     _profile_csvs(tmp_path)
+    real = profiling.stage_append
+    at_append = []
+
+    def append(df, table):
+        at_append.append(last_job_id())
+        real(df, table)
+
+    monkeypatch.setattr(profiling, "stage_append", append)
     with fresh_database("profile_no_inference"):
-        counts, launched, _ = run_in_job_group(
-            lambda: profile_directory(spark, str(tmp_path), stage_tables=False)
-        )
+        before = last_job_id()
+        counts = profile_directory(spark, str(tmp_path), stage_tables=False)
     assert counts == {"empty_rows": 0, "my_facility_data": 2, "other": 1}
-    assert launched < 10
+    assert at_append == [before]
 
 
 def test_profile_jobs_stay_in_caller_job_group(spark, tmp_path, fresh_database, run_in_job_group):
@@ -104,3 +114,33 @@ def test_profile_jobs_stay_in_caller_job_group(spark, tmp_path, fresh_database, 
         )
     assert counts["other"] == 1
     assert launched > 0 and in_group == launched
+
+
+#: header lines Spark names by its own rules: case-insensitive
+#: duplicates, a byte-order mark, backslashes and quotes, padded names,
+#: leading blank lines, and quoting outside RFC 4180
+HEADER_CSVS = {
+    "case_dup.csv": "Id,id\n1,2\n",
+    "bom.csv": "\ufeffa,b\n1,2\n",
+    "backslash.csv": "x\\y,q'r\n1,2\n",
+    "padded.csv": " a , b,c \n1,2,3\n",
+    "blank_lines.csv": "\n  \nh1,h2\n1,2\n",
+    "quoted.csv": '"a,b","c\\"d","e""f",g"h,"i" ,""\n1,2,3,4,5,6\n',
+}
+
+
+@pytest.mark.parametrize("case_sensitive", [False, True])
+def test_driver_header_names_equal_spark_header_pass(spark, tmp_path, case_sensitive):
+    for name, text in {**EDGE_CSVS, **HEADER_CSVS}.items():
+        (tmp_path / name).write_text(text, encoding="utf-8")
+    prev = spark.conf.get("spark.sql.caseSensitive")
+    spark.conf.set("spark.sql.caseSensitive", str(case_sensitive).lower())
+    try:
+        for p in sorted(map(str, tmp_path.iterdir())):
+            spark_names = spark.read.option("header", True).csv(p).columns
+            assert safe_header(sniff_header(p), case_sensitive=case_sensitive) == spark_names, p
+    finally:
+        spark.conf.set("spark.sql.caseSensitive", prev)
+    assert safe_header(("Id", "id"), case_sensitive=case_sensitive) == (
+        ["Id", "id"] if case_sensitive else ["Id0", "id1"]
+    )

@@ -117,3 +117,19 @@ def test_no_qualifying_files_fails(spark, tmp_path):
     (tmp_path / "decoy.csv").write_text(DECOY)
     with pytest.raises(FileNotFoundError):
         run_staffing_metrics(spark, str(tmp_path))
+
+
+def test_written_metrics_are_returned_read_back_not_cached(spark, tmp_path, result):
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "pbj_daily.csv").write_text(DAILY)
+    (d / "pbj_ctr_emp.csv").write_text(CTR_EMP)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    metrics, report = run_staffing_metrics(spark, str(d), out_dir=str(tmp_path / "out"))
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    cached, cached_report = result
+    assert metrics.schema == cached.schema
+    assert sorted(metrics.collect()) == sorted(cached.collect())
+    fields = ("empty_merges", "zero_blanked_rows", "dropped_missing_critical",
+              "dropped_bad_denominator")
+    assert [getattr(report, f) for f in fields] == [getattr(cached_report, f) for f in fields]
