@@ -45,7 +45,8 @@ The simhash layout is the same table partitioned by
 chunk-bucket key and the full 64-bit fingerprint.
 
 Probe: the batch's routing keys pick the ``pb`` partitions to read —
-at the default 4×64 geometry a small batch touches a bounded set of
+once the corpus outgrows one directory per band
+(:func:`auto_dedup_buckets`) a small batch touches a bounded set of
 directories and the scan's ``PartitionFilters`` prune everything else
 at FILE level (same mechanism, and the same plan gate in tests, as the
 IVF/LSH ANN indexes). Candidates then verify with the exact same score
@@ -483,29 +484,29 @@ def auto_dedup_buckets(
     n_docs: int,
     *,
     target_docs_per_dir: int = 4096,
-    lo: int = 16,
     hi: int = 4096,
 ) -> int:
-    """Corpus-size-adaptive ``n_buckets``: hold directory payload
-    constant as the corpus grows — the same sizing logic as
+    """Payload-sized ``n_buckets``: hold directory payload constant as
+    the corpus grows — the same sizing logic as
     :func:`~.similarity.auto_lsh_planes`, applied to the dedup index's
     partition geometry. Each fan-out group (band / srp table) spreads
     its ``n_docs`` rows over ``n_buckets`` directories, so
-    ``n_buckets ≈ n_docs / target_docs_per_dir`` keeps one directory a
-    comfortable scan-task unit at any corpus size (the fixed 64-bucket
-    default reads 15M rows/dir at a 10⁹-doc corpus); callers pass rows
-    per group (:meth:`Family.auto_buckets`). Rounded up to a power of
-    two so bucket populations stay uniform under the pmod; clamped:
-    below ``lo`` the probe reads most of the index anyway, above
-    ``hi`` (4 096 dirs ≈ the measured discovery-tax regime the
-    matched-dirs read already absorbs) size by hand. Pure driver
-    arithmetic — pin-testable."""
-    import math
-
-    if n_docs <= 0:
-        return lo
-    want = math.ceil(n_docs / target_docs_per_dir)
-    return max(lo, min(hi, 1 << max(0, (want - 1).bit_length())))
+    ``n_buckets`` is the next power of two of ``n_docs /
+    target_docs_per_dir`` (floor 1): one directory stays a comfortable
+    scan-task unit at any corpus size (the fixed 64-bucket default
+    reads 15M rows/dir at a 10⁹-doc corpus); callers pass rows per
+    group (:meth:`Family.auto_buckets`). A power of two keeps bucket
+    populations uniform under the pmod. A small index is ONE directory
+    per group: below the target the probe reads most of the index
+    anyway, and every extra directory is a write-time file plus, on a
+    local FS without native IO, a ``chmod`` fork per file — MEASURED
+    (SCALE.md "Near-dup index geometry, payload-sized"): a 100-doc
+    build 1.30 s at the former 16-bucket floor vs 0.58 s at 1, and the
+    probe no slower at 1 up to 20k docs. Above ``hi`` (4 096 dirs ≈
+    the measured discovery-tax regime the matched-dirs read already
+    absorbs) size by hand. Pure driver arithmetic — pin-testable."""
+    want = max(1, -(-n_docs // target_docs_per_dir))
+    return min(hi, 1 << (want - 1).bit_length())
 
 
 def route_append(df: DataFrame, meta: dict) -> DataFrame:
@@ -547,10 +548,14 @@ def write_dedup_index(
     ``bands × n_buckets`` directories total, and a probe reads the
     batch's matched buckets only — size it so one directory's postings
     fit comfortably in a scan task (the same dial as the ANN indexes'
-    cell/bucket count). The default ``"auto"`` derives it from the
-    corpus size (:func:`auto_dedup_buckets`; pass ``n_docs`` to skip
-    the internal count), so the geometry tracks corpus growth the way
-    ``n_planes="auto"`` does for the embedding LSH.
+    cell/bucket count). The default ``"auto"`` sizes it from the
+    payload alone (:func:`auto_dedup_buckets`; pass ``n_docs`` to skip
+    the internal count): a corpus under ~4k docs is ONE directory per
+    band, read flat by every probe, and the geometry doubles with the
+    corpus the way ``n_planes="auto"`` does for the embedding LSH
+    (``compact_ann_index(regeometry=True)`` re-sizes a grown index).
+    An explicit ``n_buckets`` builds any geometry; answers never
+    depend on it, since the bucket is a function of the band key.
 
     ``(n_hashes, bands)`` set the recall curve, and the curve is
     MEASURED, not assumed (tests/test_minhash_recall.py + SCALE.md
@@ -642,8 +647,8 @@ def batch_against_index(
     ``B ≪ n_buckets`` (the daily-increment shape); past
     :data:`~.similarity.FLAT_READ_CROSSOVER` of the directories the
     probe reads the index flat (same rows, no per-directory existence
-    check) with a warning naming the regime — split the batch or size
-    ``n_buckets`` above the steady batch size to keep probes pruned.
+    check) with a warning naming the regime — the designed read of a
+    payload-sized index below ~4k docs per band (one directory each).
     Probe cost stays flat in CORPUS size either way: 100-doc probes
     measured 1.17/1.32/1.72 s against 5k/150k/1M-doc indexes.
 
@@ -718,11 +723,17 @@ def probe_index_with_rows(
     # below still lands in PartitionFilters (plan-gated) as a guard.
     # total_partitions arms the flat-read crossover (r9 verdict #3):
     # a batch matching > half the directories reads the index flat
-    # instead of listing ~every directory explicitly.
+    # instead of listing ~every directory explicitly; one bucket per
+    # group cannot prune, so that flat read is not warned.
     rel = None
     if pbs:
         rel = read_matched_partitions(
-            spark, droot, "pb", pbs, total_partitions=fam.dirs(meta)
+            spark,
+            droot,
+            "pb",
+            pbs,
+            total_partitions=fam.dirs(meta),
+            prunable=int(meta["n_buckets"]) > 1,
         )
 
     def side(df: DataFrame, id_alias: str, s: str) -> DataFrame:

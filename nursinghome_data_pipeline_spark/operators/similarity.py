@@ -628,7 +628,13 @@ def crossover_flat_read(values, total_partitions: int | None) -> bool:
 
 
 def read_matched_partitions(
-    spark, path: str, part_col: str, values, *, total_partitions: int | None = None
+    spark,
+    path: str,
+    part_col: str,
+    values,
+    *,
+    total_partitions: int | None = None,
+    prunable: bool = True,
 ):
     """Scan ONLY the probed partition directories of an at-rest index.
 
@@ -651,11 +657,14 @@ def read_matched_partitions(
     (the large-batch regime, ``B ≳ n_buckets``), the matched-dirs
     listing is SKIPPED and the whole index is read flat — identical
     rows (the caller's ``isin`` still applies), no per-directory
-    existence check, and a warning names the regime so operators know
-    to split the batch or rebuild with more buckets if this is their
-    steady state. Reserved partitions (negative values — the LSM delta
-    ``pb=-1`` and the normalized-srp vector directories ``pb<=-2``)
-    do NOT count toward the crossover: every probe touches them
+    existence check, and a warning names the regime. ``prunable=False``
+    says the geometry has one directory per fan-out group (an index at
+    its payload size below ~4k docs per group,
+    ``dedup_index.auto_dedup_buckets``): every probe reads every
+    directory, the flat read IS the designed read, and nothing is
+    warned. Reserved partitions
+    (negative values — the LSM delta ``pb=-1`` and the normalized-srp
+    vector directories ``pb<=-2``) do NOT count toward the crossover: every probe touches them
     regardless of batch size, so counting them made small-geometry
     indexes (n_buckets of a few units) trip the flat read on virtually
     every probe (ADVICE r10). The warning fires once per index path
@@ -675,7 +684,7 @@ def read_matched_partitions(
             parts = []
         if not parts:
             return None
-        if path not in _FLAT_READ_WARNED:
+        if prunable and path not in _FLAT_READ_WARNED:
             import warnings
 
             _FLAT_READ_WARNED.add(path)
@@ -684,9 +693,7 @@ def read_matched_partitions(
                 f"~{total_partitions} partition directories (> "
                 f"{FLAT_READ_CROSSOVER:.0%}) — past the pruning crossover; "
                 "reading the index flat (same rows, no per-directory "
-                "existence check). If this is your steady batch size, "
-                "split the batch or rebuild the index with n_buckets above it. "
-                "(Warned once per index path.)",
+                "existence check). (Warned once per index path.)",
                 UserWarning,
                 stacklevel=2,
             )

@@ -5785,12 +5785,13 @@ def reservoir_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Bounded BFS (operators/graph.py:bfs_hops) over the same user "
     "co-activity graph as triangle_count_events: min-hop distance (≤3) "
     "from seed users (node %% 97 == 0) — the k-hop neighborhood "
-    "primitive under graph feature extraction. Frontier expansion "
-    "shuffles only the current frontier per round, anti-joins the "
-    "visited set so no node re-expands, and localCheckpoints each "
-    "frontier to keep the plan O(max_hops). Exact integer arithmetic "
-    "mirrored by the DuckDB recursive CTE (UNION-dedup bounds its "
-    "revisit blow-up).",
+    "primitive under graph feature extraction. One unrolled plan: the "
+    "adjacency is checkpointed once, level k is the distinct end nodes "
+    "of level k-1 joined to it, and the answer is min(hops) over the "
+    "union of levels; later levels share each level's exchange, so the "
+    "logical plan is O(max_hops²) and execution O(max_hops). Exact "
+    "integer arithmetic mirrored by the DuckDB recursive CTE "
+    "(UNION-dedup bounds its revisit blow-up).",
 )
 def bfs_reachability_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.graph import bfs_hops, cooccurrence_edges

@@ -58,6 +58,17 @@ def build_session(
         # with the one-line JSON contract (observed in BENCH_r01's
         # unparseable tail), so keep them off unconditionally.
         .config("spark.ui.showConsoleProgress", "false")
+        # JVM-wide generated-class cache (static; Spark's default 100).
+        # It pays when one JVM repeats a workload's plans: a long-lived
+        # session re-running a pipeline, or nhbench's closed loop once
+        # --seconds spans more than one op.
+        # Sized from the largest single working set, counted with an
+        # unbounded cache: one corpus_iterative set-up and op compile
+        # 246 distinct classes, an nh_etl pass 135. At 100 every
+        # repeated corpus_iterative op recompiled 190-222 of them; at
+        # 256, the next power of two above 246, 2 (nhbench op_p50_s
+        # with repeated ops: SCALE.md "Code generation cache").
+        .config("spark.sql.codegen.cache.maxEntries", "256")
     )
     for k, v in (extra or {}).items():
         builder = builder.config(k, v)

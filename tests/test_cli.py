@@ -364,6 +364,9 @@ def test_cli_ann_index_srp_append_and_regeometry(tmp_path, spark, capsys):
     the bucket count, printing the tables×buckets geometry."""
     import os as _os
 
+    from nursinghome_data_pipeline_spark.operators.dedup_index import (
+        auto_dedup_buckets,
+    )
     from nursinghome_data_pipeline_spark.operators.similarity import (
         load_ann_meta,
     )
@@ -386,7 +389,7 @@ def test_cli_ann_index_srp_append_and_regeometry(tmp_path, spark, capsys):
     assert "regeometry ->" in out
     assert not _os.path.isdir(_os.path.join(active_data_root(path), "pb=-1"))
     meta = load_ann_meta(path)
-    # 500 testdata vectors (+ the appended copy) -> the auto floor, not
-    # the stale 64
-    assert meta["n_buckets"] == 16
-    assert f"{meta['n_tables']}x16" in out
+    # 500 testdata vectors (+ the appended copy) -> one directory per
+    # table (the payload size), not the stale 64
+    assert meta["n_buckets"] == auto_dedup_buckets(500) == 1
+    assert f"{meta['n_tables']}x1 " in out

@@ -130,10 +130,11 @@ def test_probe_prunes_at_file_level(spark, sf_dir, tmp_path):
 
     docs = _docs(spark, sf_dir)
     corpus, _ = _split(docs)
-    # one tiny batch -> few pb values -> real pruning headroom
+    # one tiny batch -> few pb values -> real pruning headroom (an
+    # explicit geometry: the auto one is a single directory per band)
     batch = docs.where(F.col("doc_id") == 9)
     path = str(tmp_path / "dedup_index")
-    write_dedup_index(corpus, path)
+    write_dedup_index(corpus, path, n_buckets=16)
     out = batch_against_index(spark, batch, path, threshold=0.0)
     plan = formatted_plan(out)
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
@@ -269,8 +270,9 @@ def test_auto_bucket_sizing_pinned_and_equals_explicit(spark, sf_dir, tmp_path):
         auto_dedup_buckets,
     )
 
-    assert auto_dedup_buckets(0) == 16
-    assert auto_dedup_buckets(4096) == 16  # lo clamp
+    assert auto_dedup_buckets(0) == 1
+    assert auto_dedup_buckets(4096) == 1  # one directory per group
+    assert auto_dedup_buckets(4097) == 2
     assert auto_dedup_buckets(100_000) == 32  # ceil(24.4) -> 25 -> 32
     assert auto_dedup_buckets(1_000_000) == 256  # 245 -> 256
     assert auto_dedup_buckets(10**9) == 4096  # hi clamp
@@ -289,6 +291,64 @@ def test_auto_bucket_sizing_pinned_and_equals_explicit(spark, sf_dir, tmp_path):
     assert want
     for p in (p_auto, p_docs):
         assert _rows(batch_against_index(spark, batch, p, threshold=THRESHOLD)) == want
+
+
+@pytest.mark.parametrize("kind", ["minhash", "simhash", "srp"])
+def test_small_auto_index_is_one_directory_per_group(spark, sf_dir, tmp_path, kind):
+    """A 100-doc corpus is far under one directory's payload, so the
+    auto geometry is ONE directory per fan-out group (``bands`` of
+    them for minhash), and its probe pairs equal an explicit
+    16-bucket build's: the bucket is a function of the routing key.
+    Its probe reads every directory by design, so it warns nothing."""
+    import os
+    import warnings
+
+    from nursinghome_data_pipeline_spark.operators.dedup_index import (
+        family,
+        write_simhash_index,
+    )
+    from nursinghome_data_pipeline_spark.operators.embedding_index import (
+        write_srp_index,
+    )
+
+    if kind == "srp":
+        rows = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+            F.col("vec_id").alias("doc_id"), "embedding"
+        )
+        def write(df, p, n_buckets):
+            write_srp_index(
+                df, p, id_col="doc_id", dim=64, design_threshold=0.3,
+                n_planes=4, n_tables=4, n_buckets=n_buckets,
+            )
+        threshold = 0.3
+    elif kind == "simhash":
+        rows, write, threshold = _docs(spark, sf_dir), write_simhash_index, 3
+    else:
+        rows, write, threshold = _docs(spark, sf_dir), write_dedup_index, THRESHOLD
+    corpus = rows.where((F.col("doc_id") < 125) & (F.col("doc_id") % 5 != 4))
+    batch = rows.where(F.col("doc_id") % 5 == 4)
+    auto, wide = str(tmp_path / "auto"), str(tmp_path / "wide")
+    write(corpus, auto, n_buckets="auto")
+    write(corpus, wide, n_buckets=16)
+    meta = load_ann_meta(auto)
+    assert meta["n_buckets"] == 1
+    dirs = [e for e in os.listdir(active_data_root(auto)) if e.startswith("pb=")]
+    assert len(dirs) == family(meta).dirs(meta) + meta.get("n_vec_buckets", 0)
+    if kind == "minhash":
+        assert len(dirs) == meta["bands"]
+
+    def pairs(p):
+        return sorted(
+            tuple(r) for r in batch_against_index(
+                spark, batch, p, threshold=threshold
+            ).collect()
+        )
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = pairs(auto)
+    assert got, "empty probe proves nothing — lower the threshold"
+    assert got == pairs(wide)
 
 
 def test_probe_kind_mismatch_names_the_right_probe(spark, sf_dir, tmp_path):
@@ -393,7 +453,7 @@ def test_regeometry_compaction_matches_fresh_rebuild(spark, sf_dir, tmp_path):
     rest = corpus.where(F.col("doc_id") % 7 != 0)
     grown = str(tmp_path / "grown")
     # deliberately outgrown geometry: 64 buckets where auto for the
-    # full corpus resolves to the lo-clamp (16 at this SF)
+    # full corpus resolves to one directory per band at this SF
     write_dedup_index(small, grown, n_buckets=64)
     append_to_ann_index(rest.select("doc_id", "text"), grown)
     fresh = str(tmp_path / "fresh")

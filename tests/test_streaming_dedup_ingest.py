@@ -231,6 +231,9 @@ def test_cadence_compaction_preserves_results_and_bounds_files(
     sidecar geometry auto-derived (every cadence compaction regeometries)."""
     import glob
 
+    from nursinghome_data_pipeline_spark.operators.dedup_index import (
+        auto_dedup_buckets,
+    )
     from nursinghome_data_pipeline_spark.operators.similarity import (
         load_ann_meta,
     )
@@ -291,7 +294,7 @@ def test_cadence_compaction_preserves_results_and_bounds_files(
     # form — not one file per matched directory per append)
     assert files_c <= 64
     assert files_n <= 64 + 6
-    assert load_ann_meta(idx_c)["n_buckets"] == 16  # auto lo-clamp here
+    assert nb == auto_dedup_buckets(len({r["doc_id"] for r in rows_c}))
 
 
 def test_accepted_set_matches_composed_in_memory_operators(
